@@ -52,19 +52,27 @@ object Geo {
 
   /** Spherical ring area (signed) — Chamberlain–Duquette approximation
     * on the WGS84 sphere; same semantics as Mapbox geojson-area
-    * (malformed points propagate NaN, as JS undefined does). */
+    * (malformed points propagate NaN, as JS undefined does). One pass
+    * over the ring's iterator, so it is O(v) for any `Seq` (Spark hands
+    * UDFs `List`s, whose `apply(i)` is O(i)); each vertex's sine is
+    * computed once and reused for both edges that touch it. */
   def ringArea(ring: Seq[Seq[Double]]): Double = {
-    val n = ring.length
-    if (n <= 2) return 0.0
+    if (ring.length <= 2) return 0.0
+    val it = ring.iterator
+    val first = it.next()
+    val x0 = coord(first, 0)
+    val sin0 = math.sin(rad(coord(first, 1)))
     var area = 0.0
-    var i = 0
-    while (i < n) {
-      val p1 = ring(i)
-      val p2 = ring((i + 1) % n)
-      area += (rad(coord(p2, 0)) - rad(coord(p1, 0))) *
-        (2 + math.sin(rad(coord(p1, 1))) + math.sin(rad(coord(p2, 1))))
-      i += 1
+    var px = x0
+    var pSin = sin0
+    while (it.hasNext) {
+      val p = it.next()
+      val x = coord(p, 0)
+      val pointSin = math.sin(rad(coord(p, 1)))
+      area += (rad(x) - rad(px)) * (2 + pSin + pointSin)
+      px = x; pSin = pointSin
     }
+    area += (rad(x0) - rad(px)) * (2 + pSin + sin0) // closing edge back to the first point
     area * WGS84Radius * WGS84Radius / 2.0
   }
 
@@ -92,29 +100,46 @@ object Geo {
   def allCoordsValid(coordinates: Seq[Seq[Seq[Double]]]): Boolean =
     coordinates.forall(_.forall(p => coordValid(coord(p, 0), coord(p, 1))))
 
+  /** A ring's coordinates as primitive x/y arrays, read in one pass
+    * through [[coord]] (malformed and null points become NaN). The kink
+    * check indexes these arrays instead of the ring itself: Spark hands
+    * UDFs `List`s, whose `apply(i)` is O(i), so indexing the ring
+    * directly turned the O(v²) check into O(v³). */
+  private def ringXY(ring: Seq[Seq[Double]]): (Array[Double], Array[Double]) = {
+    val n = ring.length
+    val xs = new Array[Double](n)
+    val ys = new Array[Double](n)
+    val it = ring.iterator
+    var i = 0
+    while (i < n) {
+      val p = it.next()
+      xs(i) = coord(p, 0); ys(i) = coord(p, 1)
+      i += 1
+    }
+    (xs, ys)
+  }
+
   /** Proper-intersection test between segments p1-p2 and p3-p4,
     * including collinear-overlap and endpoint-touch cases, but the
     * caller excludes adjacent segments (which legitimately share an
     * endpoint in a ring). */
-  private def segmentsIntersect(p1: Seq[Double], p2: Seq[Double],
-                                p3: Seq[Double], p4: Seq[Double]): Boolean = {
+  private def segmentsIntersect(x1: Double, y1: Double, x2: Double, y2: Double,
+                                x3: Double, y3: Double, x4: Double, y4: Double): Boolean = {
     def cross(ox: Double, oy: Double, ax: Double, ay: Double, bx: Double, by: Double): Double =
       (ax - ox) * (by - oy) - (ay - oy) * (bx - ox)
-    def x(p: Seq[Double]) = coord(p, 0)
-    def y(p: Seq[Double]) = coord(p, 1)
-    val d1 = cross(x(p3), y(p3), x(p4), y(p4), x(p1), y(p1))
-    val d2 = cross(x(p3), y(p3), x(p4), y(p4), x(p2), y(p2))
-    val d3 = cross(x(p1), y(p1), x(p2), y(p2), x(p3), y(p3))
-    val d4 = cross(x(p1), y(p1), x(p2), y(p2), x(p4), y(p4))
+    val d1 = cross(x3, y3, x4, y4, x1, y1)
+    val d2 = cross(x3, y3, x4, y4, x2, y2)
+    val d3 = cross(x1, y1, x2, y2, x3, y3)
+    val d4 = cross(x1, y1, x2, y2, x4, y4)
     if (((d1 > 0 && d2 < 0) || (d1 < 0 && d2 > 0)) &&
         ((d3 > 0 && d4 < 0) || (d3 < 0 && d4 > 0))) return true
     def onSeg(ax: Double, ay: Double, bx: Double, by: Double, px: Double, py: Double): Boolean =
       math.min(ax, bx) <= px && px <= math.max(ax, bx) &&
       math.min(ay, by) <= py && py <= math.max(ay, by)
-    (d1 == 0 && onSeg(x(p3), y(p3), x(p4), y(p4), x(p1), y(p1))) ||
-    (d2 == 0 && onSeg(x(p3), y(p3), x(p4), y(p4), x(p2), y(p2))) ||
-    (d3 == 0 && onSeg(x(p1), y(p1), x(p2), y(p2), x(p3), y(p3))) ||
-    (d4 == 0 && onSeg(x(p1), y(p1), x(p2), y(p2), x(p4), y(p4)))
+    (d1 == 0 && onSeg(x3, y3, x4, y4, x1, y1)) ||
+    (d2 == 0 && onSeg(x3, y3, x4, y4, x2, y2)) ||
+    (d3 == 0 && onSeg(x1, y1, x2, y2, x3, y3)) ||
+    (d4 == 0 && onSeg(x1, y1, x2, y2, x4, y4))
   }
 
   /** Count of self-intersection features, turf.kinks semantics: turf
@@ -122,18 +147,21 @@ object Geo {
     * /root/reference/package.json:23 → @turf/kinks), so each crossing
     * contributes 2 features — the reference's log message embeds that
     * feature count, hence the ×2 here. Adjacent segments (sharing a
-    * ring vertex) and the ring-closing adjacency are skipped. */
+    * ring vertex) and the ring-closing adjacency are skipped. O(v²)
+    * per ring of v vertices, whatever `Seq` the ring arrives as. */
   def selfIntersections(coordinates: Seq[Seq[Seq[Double]]]): Int = {
     var count = 0
     for (ring <- coordinates) {
-      val n = ring.length - 1 // closed ring: last point == first
+      val (xs, ys) = ringXY(ring)
+      val n = xs.length - 1 // closed ring: last point == first
       var i = 0
       while (i < n) {
         var j = i + 2
         while (j < n) {
           val adjacentViaClosure = i == 0 && j == n - 1
           if (!adjacentViaClosure &&
-              segmentsIntersect(ring(i), ring(i + 1), ring(j), ring(j + 1)))
+              segmentsIntersect(xs(i), ys(i), xs(i + 1), ys(i + 1),
+                                xs(j), ys(j), xs(j + 1), ys(j + 1)))
             count += 2 // one kink feature per segment ordering
           j += 1
         }

@@ -9,7 +9,9 @@ import graft.model.{Geometry, MaskTransformResult}
 /** Column-level wrappers over the pure geo functions (SURVEY §2.6 A2,
   * F11, F12). Scalar UDFs for the genuinely custom math; everything
   * simpler (bounds checks, counts) stays as built-in expressions in
-  * Validate so it remains inside whole-stage codegen. */
+  * Validate so it remains inside whole-stage codegen. Each UDF carries
+  * a name (`kinks`, `area_m2`, `mask_to_geometry`), so plans and plan
+  * tests can tell them apart. */
 object GeoUdfs {
 
   /** Geodesic WGS84 area in m², rounded to whole m²
@@ -25,13 +27,14 @@ object GeoUdfs {
       else {
         val a = Geo.polygonArea(coords)
         if (a.isNaN) null else java.lang.Long.valueOf(math.round(a))
-      })
+      }).withName("area_m2")
 
   /** Count of polygon self-intersections (turf.kinks semantics,
     * /root/reference/mapwarper.js:250-257). */
   val kinksUdf: UserDefinedFunction =
     udf((coords: Seq[Seq[Seq[Double]]]) =>
       if (coords == null) null else Integer.valueOf(Geo.selfIntersections(coords)))
+      .withName("kinks")
 
   /** F12: pixel mask + GCPs → lon/lat GeoJSON Polygon via the GCP
     * transform the map's transform_options requests — the GDAL-free
@@ -43,7 +46,7 @@ object GeoUdfs {
     * returned in-band (maskError channel), never thrown. */
   val maskToGeometryUdf: UserDefinedFunction =
     udf((mask: String, gcps: Seq[Seq[Double]], transform: String) =>
-      maskToGeometry(mask, gcps, transform))
+      maskToGeometry(mask, gcps, transform)).withName("mask_to_geometry")
 
   /** transform_options spec → fit arity: Right(order 1/2/3), Right(0)
     * for TPS, Left(error) for anything unrecognized. The accepted

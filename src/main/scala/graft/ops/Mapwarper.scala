@@ -9,15 +9,21 @@ import graft.model.Schemas
 /** The mapwarper transform pipeline — the reference's flagship surface
   * (SURVEY §3.2), Spark-first:
   *
-  *   read NDJSON (declared schema) → dispatch by record type →
-  *   eligibility filter (P2) → validation rule chain (§2.7 getLogs) →
-  *   dead-letter routing → st:Map object projection (P6/P7) +
-  *   st:in relation explosion (J2) → tagged union output.
+  *   read NDJSON (declared schema) → eligibility flag (P2) → mask
+  *   enrichment (F12) and validation rule chain (§2.7 getLogs) on
+  *   eligible maps → one generator emitting every record's outputs:
+  *   st:Map object or dead-letter log (P6, §2.7 routing), st:in
+  *   relations (J2), layer_error logs, layer objects (P7).
   *
-  * One computed frame feeds both routing branches (cache ⇒ the O(n²)
-  * kink check runs once per row, SURVEY §7.4). All validation rules are
-  * codegen'd column expressions except the two genuinely custom scalar
-  * functions (geodesic area, kink count) which are scalar UDFs.
+  * One scan, one projection: like the reference's single dispatch
+  * stream, each record is parsed once and all its outputs come from
+  * one `inline` over an array of tagged structs — no union of branches
+  * re-reading the input, and no cache or checkpoint to make the
+  * validation run once (SURVEY §7.4). Each expensive value (fitted
+  * mask, kink count, logs array) is projected once as its own column
+  * and read by reference. All validation rules are codegen'd column
+  * expressions except the genuinely custom scalar functions (geodesic
+  * area, kink count, mask fit), which are named scalar UDFs.
   *
   * Reference behavior citations: /root/reference/mapwarper.js —
   * eligibility 354-356, getLogs 221-321, routing 358-361, map object
@@ -67,7 +73,11 @@ object Mapwarper {
   /** The 9-rule validation chain (§2.7) as one `logs` array column.
     * Rules evaluate in the reference's order; the mask_missing fallback
     * fires only when no other rule did and no mask geometry exists. */
-  def withLogs(maps: DataFrame): DataFrame = {
+  def withLogs(maps: DataFrame): DataFrame = validate(maps, lit(true))
+
+  /** [[withLogs]] for the rows where `gate` holds; `logs` is null on
+    * the others, and no rule (the kink UDF included) runs for them. */
+  private def validate(maps: DataFrame, gate: Column): DataFrame = {
     val mg = col("maskGeometry")
     val mgc = col("maskGeometry.coordinates")
     val hasGeom = mg.isNotNull && mgc.isNotNull
@@ -86,7 +96,12 @@ object Mapwarper {
     // and the record still dead-letters through the multipolygon rule
     // ("MultiPolygon with 0 polygons") — routed, never fatal.
     val ringLen = size(get(mgc, lit(0)))
-    val kinkCount = when(hasGeom, GeoUdfs.kinks(mgc)).otherwise(lit(null))
+    // The kink count is its own column, computed once per map: the
+    // rule's condition and its message both read it. Inline, each
+    // would call the UDF, since subexpression elimination does not
+    // reach into CASE WHEN branches; Catalyst never collapses a UDF
+    // column read twice back into its reader.
+    val kinkCount = col("_kinks")
     // Each point predicate is coalesced to FALSE: a malformed point
     // (null element, [] or [x] — JS undefined) makes `p[0] >= -180`
     // evaluate to false in the reference (undefined comparisons are
@@ -130,28 +145,23 @@ object Mapwarper {
         array(struct(lit("mask_missing").as("type"), lit("Map is unmasked").as("message"))))
       .otherwise(firing)
 
-    maps.withColumn("logs", logs)
+    maps.withColumn("_kinks", when(gate && hasGeom, GeoUdfs.kinks(mgc)))
+      .withColumn("logs", when(gate, logs))
+      .drop("_kinks")
   }
 
-  // --- output record assembly ---------------------------------------
+  /** The flattened `data` of the map records. */
+  private def mapsOf(records: DataFrame): DataFrame =
+    records.filter(col("type") === "map").select(col("data.*"))
 
-  private def nullS = lit(null).cast("string")
-  private def nullI = lit(null).cast("int")
+  /** P2 over a map's flattened fields: bbox truthy ∧ map_type = 'is_map'. */
+  private def isEligible: Column = truthy(col("bbox")) && col("map_type") === "is_map"
 
-  private def objStruct(id: Column, name: Column, validSince: Column,
-                        data: Column, geometry: Column): Column =
-    struct(
-      id.as("id"), lit("st:Map").as("type"), name.as("name"),
-      validSince.as("validSince"), validSince.as("validUntil"),
-      data.as("data"), geometry.as("geometry"),
-      nullS.as("from"), nullS.as("to"), nullS.as("imageId"),
-      lit(null).cast(s"array<$logEntryType>").as("logs"))
+  private def hasLayerErrors: Column =
+    col("layerErrors").isNotNull && size(col("layerErrors")) > 0
 
-  /** Eligible map records (P2): bbox truthy ∧ map_type = 'is_map'. */
-  def eligibleMaps(records: DataFrame): DataFrame =
-    records.filter(col("type") === "map")
-      .select(col("data.*"))
-      .filter(truthy(col("bbox")) && col("map_type") === "is_map")
+  /** Eligible map records (P2). */
+  def eligibleMaps(records: DataFrame): DataFrame = mapsOf(records).filter(isEligible)
 
   /** J1, offline form (/root/reference/mapwarper.js:57-77): the per-map
     * layer-membership enrichment. The reference makes one API call per
@@ -188,8 +198,11 @@ object Mapwarper {
     * so every transform the warper stores produces a geometry. An
     * unrecognized spec still routes to maskError (→ the mask_to_geojson
     * log) instead of silently fitting the wrong model. */
-  def enrichMasks(maps: DataFrame): DataFrame = {
-    val need = col("maskGeometry").isNull &&
+  def enrichMasks(maps: DataFrame): DataFrame = enrich(maps, lit(true))
+
+  /** [[enrichMasks]] for the rows where `gate` holds. */
+  private def enrich(maps: DataFrame, gate: Column): DataFrame = {
+    val need = gate && col("maskGeometry").isNull &&
       col("mask_status").isin("masked", "masking") &&
       col("mask").isNotNull && col("gcps").isNotNull
     maps
@@ -201,8 +214,32 @@ object Mapwarper {
       .drop("mt")
   }
 
-  /** Clean maps → st:Map objects (P6). */
-  def mapObjects(clean: DataFrame): DataFrame = {
+  // --- output record assembly ---------------------------------------
+  //
+  // Every output row is a tagged struct <type, obj>. `outRecord` is the
+  // one place its layout is defined; each per-kind function below
+  // fills in its fields, and both `pipeline` and the public per-kind
+  // projections build their rows from those functions.
+
+  private def nullS = lit(null).cast("string")
+  private def nullI = lit(null).cast("int")
+
+  private def outRecord(kind: String,
+                        id: Column = nullS, typ: Column = nullS, name: Column = nullS,
+                        validSince: Column = nullI,
+                        data: Column = lit(null).cast(objDataType),
+                        geometry: Column = lit(null).cast(geometryType),
+                        from: Column = nullS, to: Column = nullS, imageId: Column = nullS,
+                        logs: Column = lit(null).cast(s"array<$logEntryType>")): Column =
+    struct(lit(kind).as("type"), struct(
+      id.as("id"), typ.as("type"), name.as("name"),
+      validSince.as("validSince"), validSince.as("validUntil"),
+      data.as("data"), geometry.as("geometry"),
+      from.as("from"), to.as("to"), imageId.as("imageId"),
+      logs.as("logs")).as("obj"))
+
+  /** A clean map's st:Map object (P6). */
+  private def mapObject: Column = {
     val area = GeoUdfs.areaM2(col("maskGeometry.coordinates"))
     val data = struct(
       col("description").as("description"),
@@ -218,65 +255,31 @@ object Mapwarper {
       col("gcps").as("gcps"),
       nullI.as("mapCount"),
       lit(null).cast("array<double>").as("bbox"))
-    clean.select(lit("object").as("type"),
-      objStruct(col("id").cast("string"), col("title"),
-                yearCol(col("depicts_year"), col("issue_year")),
-                data, col("maskGeometry")).as("obj"))
+    outRecord("object", id = col("id").cast("string"), typ = lit("st:Map"),
+      name = col("title"), validSince = yearCol(col("depicts_year"), col("issue_year")),
+      data = data, geometry = col("maskGeometry"))
   }
 
-  /** Clean maps → st:in relations, one per layer membership (J2). */
-  def mapRelations(clean: DataFrame): DataFrame =
-    clean.select(col("id"), explode(col("layerIds")).as("layerId"))
-      .select(lit("relation").as("type"),
-        struct(
-          nullS.as("id"), lit("st:in").as("type"), nullS.as("name"),
-          nullI.as("validSince"), nullI.as("validUntil"),
-          lit(null).cast(objDataType).as("data"),
-          lit(null).cast(geometryType).as("geometry"),
-          col("id").cast("string").as("from"),
-          concat(lit("layer-"), col("layerId").cast("string")).as("to"),
-          nullS.as("imageId"),
-          lit(null).cast(s"array<$logEntryType>").as("logs")).as("obj"))
+  /** A clean map's st:in relations, one per entry of `layerIds` (J2). */
+  private def mapRelationsOf(layerIds: Column): Column =
+    transform(layerIds, layerId => outRecord("relation", typ = lit("st:in"),
+      from = col("id").cast("string"),
+      to = concat(lit("layer-"), layerId.cast("string"))))
 
-  /** Dead-lettered maps → log records (§2.7 routing). */
-  def logRecords(dead: DataFrame): DataFrame =
-    dead.select(lit("log").as("type"),
-      struct(
-        col("id").cast("string").as("id"), nullS.as("type"), nullS.as("name"),
-        nullI.as("validSince"), nullI.as("validUntil"),
-        lit(null).cast(objDataType).as("data"),
-        lit(null).cast(geometryType).as("geometry"),
-        nullS.as("from"), nullS.as("to"),
-        col("nypl_digital_id").as("imageId"),
-        col("logs")).as("obj"))
+  /** A dead-lettered map's log record (§2.7 routing). */
+  private def mapLog: Column =
+    outRecord("log", id = col("id").cast("string"),
+      imageId = col("nypl_digital_id"), logs = col("logs"))
 
-  /** Per-map layer-fetch errors → log records. In the reference these
-    * ride in-band on the map (`layerErrors`,
-    * /root/reference/mapwarper.js:64-69, assembled from {type:'error'}
-    * page records, mapwarper.js:123-129); the transform step never
-    * surfaces them. Here they become first-class `log` records — one
-    * per map, one entry per failed fetch — WITHOUT dead-lettering the
-    * map itself (a layer-fetch failure is provenance, not a validation
-    * failure; the map still projects to an object if clean). */
-  def layerErrorLogs(records: DataFrame): DataFrame =
-    records.filter(col("type") === "map").select(col("data.*"))
-      .filter(col("layerErrors").isNotNull && size(col("layerErrors")) > 0)
-      .select(lit("log").as("type"),
-        struct(
-          col("id").cast("string").as("id"), nullS.as("type"), nullS.as("name"),
-          nullI.as("validSince"), nullI.as("validUntil"),
-          lit(null).cast(objDataType).as("data"),
-          lit(null).cast(geometryType).as("geometry"),
-          nullS.as("from"), nullS.as("to"),
-          col("nypl_digital_id").as("imageId"),
-          expr(s"""transform(layerErrors, le -> named_struct(
-                  |  'type', 'layer_error',
-                  |  'message', concat(le.error, ' (', le.url, ')')))""".stripMargin)
-            .as("logs")).as("obj"))
+  /** A map's layer-fetch errors as one log record. */
+  private def layerErrorLog: Column =
+    outRecord("log", id = col("id").cast("string"), imageId = col("nypl_digital_id"),
+      logs = transform(col("layerErrors"), le => struct(
+        lit("layer_error").as("type"),
+        concat(le("error"), lit(" ("), le("url"), lit(")")).as("message"))))
 
-  /** Layer records → st:Map objects (P7). */
-  def layerObjects(records: DataFrame): DataFrame = {
-    val layers = records.filter(col("type") === "layer").select(col("data.*"))
+  /** A layer's st:Map object (P7). */
+  private def layerObject: Column = {
     val data = struct(
       nullS.as("description"), nullS.as("imageId"), nullS.as("uuid"),
       nullS.as("parentUuid"),
@@ -295,30 +298,64 @@ object Mapwarper {
       // reference's serialized output, not merely safer.
       when(truthy(col("bbox")), split(col("bbox"), ",").try_cast("array<double>"))
         .otherwise(lit(null).cast("array<double>")).as("bbox"))
-    layers.select(lit("object").as("type"),
-      objStruct(concat(lit("layer-"), col("id").cast("string")), col("name"),
-                yearCol(col("depicts_year"), col("issue_year")),
-                data, lit(null).cast(geometryType)).as("obj"))
+    outRecord("object", id = concat(lit("layer-"), col("id").cast("string")),
+      typ = lit("st:Map"), name = col("name"),
+      validSince = yearCol(col("depicts_year"), col("issue_year")), data = data)
   }
 
-  /** The full transform step: tagged union of objects ∪ relations ∪
-    * logs from one validated, cached frame. */
+  /** One output row per input row, from a tagged-struct column. */
+  private def emit(rows: DataFrame, record: Column): DataFrame =
+    rows.select(record.as("out")).select(col("out.type"), col("out.obj"))
+
+  /** Clean maps → st:Map objects (P6). */
+  def mapObjects(clean: DataFrame): DataFrame = emit(clean, mapObject)
+
+  /** Clean maps → st:in relations, one per layer membership (J2). */
+  def mapRelations(clean: DataFrame): DataFrame =
+    clean.select(inline(mapRelationsOf(col("layerIds"))))
+
+  /** Dead-lettered maps → log records (§2.7 routing). */
+  def logRecords(dead: DataFrame): DataFrame = emit(dead, mapLog)
+
+  /** Per-map layer-fetch errors → log records. In the reference these
+    * ride in-band on the map (`layerErrors`,
+    * mapwarper.js:64-69, assembled from {type:'error'}
+    * page records, mapwarper.js:123-129); the transform step never
+    * surfaces them. Here they become first-class `log` records — one
+    * per map, one entry per failed fetch — WITHOUT dead-lettering the
+    * map itself (a layer-fetch failure is provenance, not a validation
+    * failure; the map still projects to an object if clean). */
+  def layerErrorLogs(records: DataFrame): DataFrame =
+    emit(mapsOf(records).filter(hasLayerErrors), layerErrorLog)
+
+  /** Layer records → st:Map objects (P7). */
+  def layerObjects(records: DataFrame): DataFrame =
+    emit(records.filter(col("type") === "layer").select(col("data.*")), layerObject)
+
+  /** The full transform step: the tagged union of objects, relations
+    * and logs, in one pass over `records`. Each record is flattened
+    * once and flagged eligible (P2); enrichment and validation run on
+    * the eligible maps only; then one `inline` over an array of tagged
+    * structs emits everything the record yields — an object or a log
+    * for an eligible map, one st:in relation per `layerIds` entry of a
+    * clean map, a layer_error log for a map with `layerErrors`, an
+    * object for a layer. The plan is a single scan → project →
+    * generate: no union, no cache or checkpoint, one write job. The
+    * rows equal the union of the per-kind projections above. */
   def pipeline(records: DataFrame): DataFrame = {
-    // lazy localCheckpoint, not cache(): both give exactly-once rule
-    // evaluation across the clean/dead branches (§7.4 — kinks is
-    // O(n²), it must not recompute per output), but a cache()
-    // registers in the CacheManager and is never released — one
-    // leaked storage entry PER pipeline() call in a long session;
-    // checkpoint blocks die with the RDD via the ContextCleaner
-    val validated = withLogs(enrichMasks(eligibleMaps(records)))
-      .localCheckpoint(false)
-    val clean = validated.filter(size(col("logs")) === 0)
-    val dead = validated.filter(size(col("logs")) > 0)
-    mapObjects(clean)
-      .unionByName(mapRelations(clean))
-      .unionByName(logRecords(dead))
-      .unionByName(layerErrorLogs(records))
-      .unionByName(layerObjects(records))
+    val isMap = col("_record") === "map"
+    val eligible = col("_eligible")
+    val flagged = records.select(col("type").as("_record"), col("data.*"))
+      .withColumn("_eligible", coalesce(isMap && isEligible, lit(false)))
+    val validated = validate(enrich(flagged, eligible), eligible)
+    val clean = eligible && size(col("logs")) === 0
+    val outputs = concat(
+      array(
+        when(eligible, when(clean, mapObject).otherwise(mapLog)),
+        when(isMap && hasLayerErrors, layerErrorLog),
+        when(col("_record") === "layer", layerObject)),
+      mapRelationsOf(coalesce(when(clean, col("layerIds")), typedLit(Seq.empty[Long]))))
+    validated.select(inline(filter(outputs, _.isNotNull)))
   }
 
   /** Transform from NDJSON files on disk (the reference's step shape:

@@ -173,7 +173,7 @@ class DedupSpec extends AnyFunSuite {
     // DIFFERENTIAL counting against a baseline id set: the session is
     // shared and suites run in parallel, so absolute
     // getPersistentRDDs counts see other suites' caches and lingering
-    // localCheckpoint RDDs (pipeline/q196/q127 hold theirs until GC)
+    // localCheckpoint RDDs (q196/q127 hold theirs until GC)
     // — only RDDs this test CREATED are the leak signal
     def ids: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val baseline = ids

@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.immutable.ArraySeq
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.geo.{Geo, GeoUdfs}
@@ -194,5 +196,56 @@ class GeoSpec extends AnyFunSuite {
     assert(GeoUdfs.maskToGeometry("not,numbers oops", Seq(
       Seq(0.0, 0.0, 40.8, -74.0), Seq(1000.0, 0.0, 40.8, -73.9),
       Seq(1000.0, 800.0, 40.7, -73.9))).error != null)
+  }
+
+  test("kernels give identical results for List, Vector and ArraySeq rings") {
+    // Spark passes Seq UDF arguments in as List, whose apply(i) is O(i);
+    // the kernels must read any Seq the same way, malformed points included
+    type Poly = Seq[Seq[Seq[Double]]]
+    val asList: Poly => Poly = _.map(_.map(p => if (p == null) null else p.toList).toList).toList
+    val asVector: Poly => Poly =
+      _.map(_.map(p => if (p == null) null else p.toVector).toVector).toVector
+    val asArraySeq: Poly => Poly =
+      _.map(_.map(p => if (p == null) null else ArraySeq.from(p)).to(ArraySeq)).to(ArraySeq)
+    val bowtie = Seq(Seq(0.0, 0.0), Seq(1.0, 1.0), Seq(1.0, 0.0), Seq(0.0, 1.0), Seq(0.0, 0.0))
+    val hole = Seq(Seq(-73.98, 40.78), Seq(-73.92, 40.78), Seq(-73.92, 40.72),
+                   Seq(-73.98, 40.72), Seq(-73.98, 40.78))
+    val shortPoint = Seq(Seq(0.0, 0.0), Seq(10.0), Seq(10.0, 10.0), Seq(0.0, 10.0), Seq(0.0, 0.0))
+    val nullPoint = Seq(Seq(0.0, 0.0), null, Seq(10.0, 10.0), Seq(0.0, 10.0), Seq(0.0, 0.0))
+    val polys: Seq[(String, Poly)] = Seq("square" -> Seq(square), "bowtie" -> Seq(bowtie),
+      "hole" -> Seq(square, hole), "shortPoint" -> Seq(shortPoint), "nullPoint" -> Seq(nullPoint))
+    def bits(d: Double): Long = java.lang.Double.doubleToLongBits(d)
+    for ((name, poly) <- polys) {
+      val forms = Seq(asList(poly), asVector(poly), asArraySeq(poly))
+      val kinks = forms.map(Geo.selfIntersections)
+      val rings = forms.map(p => bits(Geo.ringArea(p.head)))
+      val areas = forms.map(p => bits(Geo.polygonArea(p)))
+      assert(kinks.distinct.length == 1, s"$name kinks: $kinks")
+      assert(rings.distinct.length == 1, s"$name ringArea: $rings")
+      assert(areas.distinct.length == 1, s"$name polygonArea: $areas")
+    }
+    // and ringArea is bit-identical to the indexed textbook formula
+    def indexedArea(ring: Seq[Seq[Double]]): Double = {
+      def rad(d: Double) = d * math.Pi / 180.0
+      val r = ring.toVector
+      val sum = r.indices.map { i =>
+        val (p1, p2) = (r(i), r((i + 1) % r.length))
+        (rad(p2(0)) - rad(p1(0))) * (2 + math.sin(rad(p1(1))) + math.sin(rad(p2(1))))
+      }.foldLeft(0.0)(_ + _)
+      sum * Geo.WGS84Radius * Geo.WGS84Radius / 2.0
+    }
+    for (ring <- Seq(square, bowtie, hole))
+      assert(bits(Geo.ringArea(asList(Seq(ring)).head)) == bits(indexedArea(ring)))
+    assert(Geo.selfIntersections(asList(Seq(bowtie))) == 2)
+    assert(Geo.polygonArea(asList(Seq(shortPoint))).isNaN)
+    assert(Geo.polygonArea(asList(Seq(nullPoint))).isNaN)
+
+    // a long List-backed ring: 2,000 seeded random points cross often
+    val rnd = new scala.util.Random(7)
+    val open = Seq.fill(2000)(Seq(rnd.nextDouble(), rnd.nextDouble()))
+    val long: Poly = Seq(open :+ open.head)
+    val listKinks = Geo.selfIntersections(asList(long))
+    assert(listKinks > 0)
+    assert(listKinks == Geo.selfIntersections(asVector(long)))
   }
 }

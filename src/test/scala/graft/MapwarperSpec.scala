@@ -3,6 +3,9 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec, UnionExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -322,5 +325,25 @@ class MapwarperSpec extends AnyFunSuite {
       .select(to_json(col("obj")).as("j")).collect().head.getString(0)
     assert(!sample.contains("\"name\"")) // null fields absent from JSON
     assert(sample.contains("\"from\""))
+  }
+
+  test("pipeline plan: one file scan, no union, no checkpoint scan, one kink UDF") {
+    // the transform parses each record once and routes every output
+    // from one projection, like the reference's single dispatch stream
+    val dir = Files.createTempDirectory("mapwarper-plan")
+    Files.write(dir.resolve("maps.ndjson"), MapwarperFixture.mapLines.mkString("\n").getBytes)
+    Files.write(dir.resolve("layers.ndjson"), MapwarperFixture.layerLines.mkString("\n").getBytes)
+    val tagged = Mapwarper.pipeline(Mapwarper.readRecords(spark,
+      Seq(s"$dir/maps.ndjson", s"$dir/layers.ndjson")))
+    tagged.collect() // settles the adaptive plan
+    object Plans extends AdaptiveSparkPlanHelper
+    val nodes = Plans.collect(tagged.queryExecution.executedPlan) { case p => p }
+    val plan = tagged.queryExecution.executedPlan.toString
+    assert(nodes.count(_.isInstanceOf[FileSourceScanExec]) == 1, s"one file scan:\n$plan")
+    assert(!nodes.exists(_.isInstanceOf[UnionExec]), s"no union:\n$plan")
+    assert(!nodes.exists(_.isInstanceOf[RDDScanExec]), s"no checkpointed-RDD scan:\n$plan")
+    val kinkUdfs = nodes.flatMap(_.expressions).flatMap(_.collect {
+      case u: ScalaUDF if u.udfName.contains("kinks") => u })
+    assert(kinkUdfs.length == 1, s"kink UDF once per map:\n$plan")
   }
 }
