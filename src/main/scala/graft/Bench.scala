@@ -303,11 +303,12 @@ object Bench {
     }
 
     /** Atomic rewrite: tmp file + move, so a kill mid-write can never
-      * leave a truncated (unparseable) artifact on disk. Besides the
-      * contract path, a core-count-suffixed copy is kept so the
-      * driver's scaling run (same default SPARK_GRAFT_BENCH_OUT, lower
-      * SPARK_GRAFT_CPUS) cannot clobber the main run's per-query map —
-      * round 19 lost its 32-CPU map exactly that way. */
+      * leave a truncated (unparseable) artifact on disk. Every run
+      * rewrites the contract path, and also a core-count-suffixed copy
+      * (`<name>_c<cpus>.json`). The copy is a per-core-count backup, not
+      * clobber prevention: a later run at another SPARK_GRAFT_CPUS with
+      * the same SPARK_GRAFT_BENCH_OUT still overwrites the contract
+      * file, so read an earlier run's map from its `_c<cpus>` file. */
     def writeArtifact(complete: Boolean): Unit = {
       val json = buildJson(complete) + "\n"
       val (base, ext) = outFile.lastIndexOf('.') match {

@@ -55,8 +55,11 @@ object Geo {
     * (malformed points propagate NaN, as JS undefined does). One pass
     * over the ring's iterator, so it is O(v) for any `Seq` (Spark hands
     * UDFs `List`s, whose `apply(i)` is O(i)); each vertex's sine is
-    * computed once and reused for both edges that touch it. */
+    * computed once and reused for both edges that touch it. A null
+    * ring has no points to measure and is NaN, like a ring of
+    * malformed points (the reference would throw on it). */
   def ringArea(ring: Seq[Seq[Double]]): Double = {
+    if (ring == null) return Double.NaN
     if (ring.length <= 2) return 0.0
     val it = ring.iterator
     val first = it.next()
@@ -98,14 +101,16 @@ object Geo {
     lon >= -180.0 && lon <= 180.0 && lat >= -90.0 && lat <= 90.0
 
   def allCoordsValid(coordinates: Seq[Seq[Seq[Double]]]): Boolean =
-    coordinates.forall(_.forall(p => coordValid(coord(p, 0), coord(p, 1))))
+    coordinates.forall(r => r != null && r.forall(p => coordValid(coord(p, 0), coord(p, 1))))
 
   /** A ring's coordinates as primitive x/y arrays, read in one pass
     * through [[coord]] (malformed and null points become NaN). The kink
     * check indexes these arrays instead of the ring itself: Spark hands
     * UDFs `List`s, whose `apply(i)` is O(i), so indexing the ring
-    * directly turned the O(v²) check into O(v³). */
+    * directly turned the O(v²) check into O(v³). A null ring yields
+    * empty arrays: like a ring of malformed points, it has no kinks. */
   private def ringXY(ring: Seq[Seq[Double]]): (Array[Double], Array[Double]) = {
+    if (ring == null) return (Array.emptyDoubleArray, Array.emptyDoubleArray)
     val n = ring.length
     val xs = new Array[Double](n)
     val ys = new Array[Double](n)
@@ -171,30 +176,6 @@ object Geo {
     count
   }
 
-  /** First-order polynomial (affine) GCP fit by least squares.
-    * GCPs are rows [pixelX, pixelY, lat, lon] (the reference's gcps
-    * shape, /root/reference/mapwarper.js:95 + mapwarper.dataset.json:123-149).
-    * Returns (a,b,c,d,e,f) with lon = a·x + b·y + c, lat = d·x + e·y + f,
-    * or None when < 3 GCPs or a degenerate (collinear) configuration. */
-  def gcpAffineFit(gcps: Seq[Seq[Double]]): Option[Array[Double]] = {
-    // delegate to the NORMALIZED order-1 polynomial fit and convert
-    // the weights back to raw-pixel affine coefficients: the previous
-    // raw-pixel normal equations re-implemented this solve WITHOUT
-    // the centering/scaling the PolyModel doc calls part of the model
-    // — clustered high-magnitude pixel GCPs conditioned far worse in
-    // the affine path than in the (mathematically identical) order-1
-    // poly path (round-13 review). lon = w0 + w1·(x−xOff)/s +
-    // w2·(y−yOff)/s ⇒ p = w1/s, q = w2/s, r = w0 − (w1·xOff + w2·yOff)/s.
-    gcpPolyFit(gcps, 1).map { m =>
-      def raw(w: Array[Double]): Array[Double] = Array(
-        w(1) / m.scale, w(2) / m.scale,
-        w(0) - (w(1) * m.xOff + w(2) * m.yOff) / m.scale)
-      val lonC = raw(m.lonW)
-      val latC = raw(m.latW)
-      Array(lonC(0), lonC(1), lonC(2), latC(0), latC(1), latC(2))
-    }
-  }
-
   /** Dense Gaussian elimination with partial pivoting; None on a
     * (near-)singular system. Clones its inputs. */
   private[geo] def solveN(a: Array[Array[Double]], b: Array[Double]): Option[Array[Double]] = {
@@ -230,7 +211,7 @@ object Geo {
     Some(x)
   }
 
-  // --- higher-order GCP transforms (GDAL -order 2/3 and -tps) --------
+  // --- GCP transforms (GDAL -order 1/2/3 and -tps) --------------------
 
   /** Monomial count of a 2-D polynomial of `order`: 3 / 6 / 10. */
   def polyTermCount(order: Int): Int = (order + 1) * (order + 2) / 2
@@ -255,11 +236,13 @@ object Geo {
   final case class PolyModel(order: Int, xOff: Double, yOff: Double, scale: Double,
                              lonW: Array[Double], latW: Array[Double])
 
-  /** Polynomial GCP fit of order 1/2/3 by least squares (normal
-    * equations AᵀA w = Aᵀv per target dimension, on normalized
-    * coordinates). GCP rows are [pixelX, pixelY, lat, lon] as in
-    * [[gcpAffineFit]]. None when there are fewer GCPs than terms or
-    * the configuration is degenerate (e.g. collinear points). */
+  /** Polynomial GCP fit of order 1 (affine) / 2 / 3 by least squares
+    * (normal equations AᵀA w = Aᵀv per target dimension, on normalized
+    * coordinates). GCP rows are [pixelX, pixelY, lat, lon] (the
+    * reference's gcps shape, /root/reference/mapwarper.js:95 +
+    * mapwarper.dataset.json:123-149). None when there are fewer GCPs
+    * than terms or the configuration is degenerate (e.g. collinear
+    * points). */
   def gcpPolyFit(gcps: Seq[Seq[Double]], order: Int): Option[PolyModel] = {
     require(order >= 1 && order <= 3, s"polynomial order must be 1..3, got $order")
     val k = polyTermCount(order)
@@ -360,12 +343,4 @@ object Geo {
     pixelRings.map(_.map(p =>
       Seq(eval(model.lonW, p.head, p(1)), eval(model.latW, p.head, p(1)))))
   }
-
-  /** Applies an affine fit to a pixel-space ring set → lon/lat rings. */
-  def applyAffine(fit: Array[Double],
-                  pixelRings: Seq[Seq[Seq[Double]]]): Seq[Seq[Seq[Double]]] =
-    pixelRings.map(_.map { p =>
-      val x = p.head; val y = p(1)
-      Seq(fit(0) * x + fit(1) * y + fit(2), fit(3) * x + fit(4) * y + fit(5))
-    })
 }

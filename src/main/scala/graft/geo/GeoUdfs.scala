@@ -84,7 +84,6 @@ object GeoUdfs {
       val closed = if (pts.head == pts.last) pts else pts :+ pts.head
       val warped: Option[Seq[Seq[Seq[Double]]]] =
         if (spec == 0) Geo.gcpTpsFit(gcps).map(m => Geo.applyTps(m, Seq(closed)))
-        else if (spec == 1) Geo.gcpAffineFit(gcps).map(f => Seq(Geo.applyAffine(f, Seq(closed)).head))
         else Geo.gcpPolyFit(gcps, spec).map(m => Geo.applyPoly(m, Seq(closed)))
       warped match {
         case None => MaskTransformResult(null, "degenerate gcps: transform fit unsolvable")

@@ -10,24 +10,20 @@ import scala.util.{Failure, Success, Try}
   *
   * These run on the DRIVER around page acquisition (an inherently
   * serial, rate-limited courtesy loop); everything after the pages
-  * land is distributed (PagedNdjsonSource plans one partition per
-  * page). Pure functions over an injected fetch so they unit-test
-  * without a network.
+  * land is distributed (`Mapwarper.readRecords` scans the spooled page
+  * files with Spark's JSON source). Pure functions over an injected
+  * fetch so they unit-test without a network.
   */
 object Ingest {
 
-  /** Retry with fixed backoff: up to `retries` re-attempts after the
-    * first failure, sleeping `backoffMs` between attempts. */
-  def withRetry[T](retries: Int, backoffMs: Long = 0L)(f: () => Try[T]): Try[T] = {
+  /** Up to `retries` re-attempts after the first failure. There is no
+    * sleep here: in [[crawlToSpool]] every attempt waits on the
+    * throttle inside its fetch. */
+  def withRetry[T](retries: Int)(f: () => Try[T]): Try[T] = {
     @tailrec
     def loop(left: Int): Try[T] = f() match {
       case s @ Success(_) => s
-      case fail @ Failure(_) =>
-        if (left <= 0) fail
-        else {
-          if (backoffMs > 0) Thread.sleep(backoffMs)
-          loop(left - 1)
-        }
+      case fail @ Failure(_) => if (left <= 0) fail else loop(left - 1)
     }
     loop(retries)
   }
@@ -104,29 +100,28 @@ object Ingest {
     } + "\""
 
   /** The online crawl end-to-end: throttled, retried page fetches
-    * through the injectable transport, spooled to the
-    * [[graft.sources.PagedNdjsonSource]] directory layout
-    * (page-NNNN.ndjson, one file per page ⇒ one Spark InputPartition
-    * per page). A failed page becomes an in-band `{"type":"error"}`
-    * line — the reference's error-record shape
+    * through the injectable transport, each page's items ([[itemLines]])
+    * spooled to its own page-NNNN.ndjson file in `outDir`. Returns the
+    * page files in page order, ready for `Mapwarper.readRecords`. A
+    * failed page becomes an in-band `{"type":"error"}` line — the
+    * reference's error-record shape
     * (/root/reference/mapwarper.js:123-129) — never an exception. */
   def crawlToSpool(outDir: String, perPage: Int, retries: Int,
                    transport: HttpTransport, urlForPage: Int => String,
-                   itemsOf: String => Seq[String] = itemLines,
                    throttle: Option[Throttle] = None): Seq[java.io.File] = {
     val fetch: Int => Try[Seq[String]] = page => {
       throttle.foreach { t =>
         val wait = t.acquireDelay()
         if (wait > 0) Thread.sleep(wait)
       }
-      transport.get(urlForPage(page)).map(itemsOf)
+      transport.get(urlForPage(page)).map(itemLines)
     }
     val dir = new java.io.File(outDir)
     dir.mkdirs()
     // clear STALE pages from a previous crawl into the same spool: a
     // shrunken upstream leaves orphan page-NNNN files past the new
-    // last page, and PagedNdjsonSource would read their deleted
-    // records as live data (round-13 review)
+    // last page, and a scan of the spool directory would read their
+    // deleted records as live data (round-13 review)
     Option(dir.listFiles()).getOrElse(Array.empty)
       .filter(f => f.getName.startsWith("page-") && f.getName.endsWith(".ndjson"))
       .foreach(_.delete())

@@ -111,11 +111,13 @@ object Mapwarper {
     // same class as the r13 `!==` fix below).
     // get() instead of p[i]: ANSI array indexing THROWS on a too-short
     // point, killing the job before routing; get() yields NULL, which
-    // the coalesce maps to the JS false.
+    // the coalesce maps to the JS false. The outer coalesce does the
+    // same for a null ring: flatten() of [[…], null] or [null] is NULL,
+    // and a NULL forall would pass such a mask as clean.
     val allValid = expr(
-      """forall(flatten(maskGeometry.coordinates),
+      """coalesce(forall(flatten(maskGeometry.coordinates),
         | p -> coalesce(get(p, 0) >= -180D AND get(p, 0) <= 180D
-        |               AND get(p, 1) >= -90D AND get(p, 1) <= 90D, false))""".stripMargin)
+        |               AND get(p, 1) >= -90D AND get(p, 1) <= 90D, false)), false)""".stripMargin)
 
     val ruleEntries = array(
       entry(!truthy(col("uuid")), "missing_uuid", lit("Map has no UUID")),

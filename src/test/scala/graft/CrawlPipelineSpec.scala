@@ -5,32 +5,25 @@ import scala.util.{Success, Try}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.model.Schemas
 import graft.ops.{Ingest, Mapwarper, MapwarperFixture}
 
 /** The reference's two steps end-to-end in one test (SURVEY §3.1-3.2):
   * download (paginated crawl through the injectable transport, spooled
-  * one file per page) → transform (paged-source scan + from_json with
-  * the declared schema → validate → route → project). No network, no
-  * temp NDJSON hand-staging — the spool IS the handoff, exactly the
-  * dirs.current → dirs.previous materialization barrier the reference
-  * has between steps (mapwarper.js:152, 424).
+  * one file per page) → transform (`Mapwarper.readRecords` over the
+  * returned page files → validate → route → project). This is the path
+  * the `mapwarper_etl` benchmark times. No network, no temp NDJSON
+  * hand-staging — the spool IS the handoff, exactly the dirs.current →
+  * dirs.previous materialization barrier the reference has between
+  * steps (mapwarper.js:152, 424).
   */
 class CrawlPipelineSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private def dataOf(line: String): String = {
-    // fixture lines are {"type":"map","data":{...}} — the crawl serves
-    // the raw API objects, i.e. just the data payloads
-    val start = line.indexOf("\"data\":") + 7
-    line.substring(start, line.length - 1)
-  }
-
   test("crawl → spool → paged scan → transform produces the golden routing") {
-    val mapItems = MapwarperFixture.mapLines.map(dataOf)
-    val layerItems = MapwarperFixture.layerLines.map(dataOf)
     val perPage = 4
 
+    // serves the fixture's tagged {"type":…,"data":…} lines as page items,
+    // the form the transform step reads
     def pagedTransport(items: Seq[String]): Ingest.HttpTransport =
       new Ingest.HttpTransport {
         def get(url: String): Try[String] = {
@@ -43,20 +36,15 @@ class CrawlPipelineSpec extends AnyFunSuite {
 
     val mapsDir = java.nio.file.Files.createTempDirectory("crawl_maps").toString
     val layersDir = java.nio.file.Files.createTempDirectory("crawl_layers").toString
-    Ingest.crawlToSpool(mapsDir, perPage, retries = 0, pagedTransport(mapItems),
+    val mapFiles = Ingest.crawlToSpool(mapsDir, perPage, retries = 0,
+      pagedTransport(MapwarperFixture.mapLines),
       Ingest.mapsPageUrl("http://maps.nypl.org/warper/", perPage))
-    Ingest.crawlToSpool(layersDir, perPage, retries = 0, pagedTransport(layerItems),
+    val layerFiles = Ingest.crawlToSpool(layersDir, perPage, retries = 0,
+      pagedTransport(MapwarperFixture.layerLines),
       p => s"http://maps.nypl.org/warper/layers.json?per_page=$perPage&page=${p + 1}")
 
-    def readSpool(dir: String, recType: String) =
-      spark.read.format("graft.sources.PagedNdjsonSource")
-        .option("path", dir).load()
-        .filter(col("error").isNull)
-        .select(lit(recType).as("type"),
-                from_json(col("line"), Schemas.dataType).as("data"))
-
-    val records = readSpool(mapsDir, "map").unionByName(readSpool(layersDir, "layer"))
-    val tagged = Mapwarper.pipeline(records)
+    val tagged = Mapwarper.pipeline(
+      Mapwarper.readRecords(spark, (mapFiles ++ layerFiles).map(_.getPath)))
 
     // identical routing to the in-memory fixture parse (the golden path)
     val expected = Mapwarper.pipeline(
@@ -70,6 +58,6 @@ class CrawlPipelineSpec extends AnyFunSuite {
 
     // and the spool really was paginated: 20 maps / 4 per page = 5 full
     // pages + the empty short page that terminates the crawl
-    assert(graft.sources.PagedNdjsonSource.pageFiles(mapsDir).length == 6)
+    assert(mapFiles.length == 6)
   }
 }

@@ -68,6 +68,22 @@ class GeoSpec extends AnyFunSuite {
     assert(!Geo.allCoordsValid(Seq(nullPoint)))
   }
 
+  test("null rings behave like rings of malformed points: NaN area, no kinks, no crash") {
+    // [[…ring…], null] and [null] reach the kernels as Seqs holding a
+    // null ring; both kernels used to call .length on it and throw
+    assert(Geo.polygonArea(Seq(square, null)).isNaN)
+    assert(Geo.polygonArea(Seq(null)).isNaN)
+    assert(Geo.selfIntersections(Seq(square, null)) == 0)
+    assert(Geo.selfIntersections(Seq(null)) == 0)
+    assert(!Geo.allCoordsValid(Seq(square, null)))
+
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val df = Seq[Seq[Seq[Seq[Double]]]](Seq(square, null), Seq(null)).toDF("coords")
+    val out = df.select(GeoUdfs.kinks($"coords"), GeoUdfs.areaM2($"coords")).collect()
+    assert(out.forall(r => r.getInt(0) == 0 && r.isNullAt(1)), out.toSeq)
+  }
+
   test("areaM2 UDF: NaN area surfaces as null, never a silent 0 m2") {
     // JS Math.round(NaN) is NaN (JSON null); Scala math.round(NaN) is
     // 0 — the UDF must catch NaN BEFORE the round (round-14 review)
@@ -88,17 +104,17 @@ class GeoSpec extends AnyFunSuite {
     val gcps = Seq(
       Seq(0.0, 0.0, 40.8, -74.0), Seq(1000.0, 0.0, 40.8, -73.9),
       Seq(1000.0, 800.0, 40.7, -73.9), Seq(0.0, 800.0, 40.7, -74.0))
-    val fit = Geo.gcpAffineFit(gcps).get
-    val out = Geo.applyAffine(fit, Seq(Seq(Seq(500.0, 400.0))))
+    val fit = Geo.gcpPolyFit(gcps, 1).get
+    val out = Geo.applyPoly(fit, Seq(Seq(Seq(500.0, 400.0))))
     assert(math.abs(out.head.head.head - (-73.95)) < 1e-9)
     assert(math.abs(out.head.head(1) - 40.75) < 1e-9)
   }
 
   test("affine fit rejects < 3 or collinear gcps") {
-    assert(Geo.gcpAffineFit(Seq(Seq(0.0, 0.0, 1.0, 1.0), Seq(1.0, 1.0, 2.0, 2.0))).isEmpty)
+    assert(Geo.gcpPolyFit(Seq(Seq(0.0, 0.0, 1.0, 1.0), Seq(1.0, 1.0, 2.0, 2.0)), 1).isEmpty)
     val collinear = Seq(
       Seq(0.0, 0.0, 1.0, 1.0), Seq(1.0, 1.0, 2.0, 2.0), Seq(2.0, 2.0, 3.0, 3.0))
-    assert(Geo.gcpAffineFit(collinear).isEmpty)
+    assert(Geo.gcpPolyFit(collinear, 1).isEmpty)
   }
 
   test("order-2 polynomial fit recovers a planted quadratic exactly") {

@@ -92,6 +92,25 @@ class MapwarperSpec extends AnyFunSuite {
     assert(types.contains("invalid_coordinates"), s"got $types")
   }
 
+  test("a null ring dead-letters with invalid_coordinates, never kills the job") {
+    // [[…ring…], null] and [null]: the kinks and area UDFs threw on the
+    // null ring, and forall(flatten(…)) was NULL, so once the UDFs
+    // survived, [null] passed every rule and shipped as a clean object
+    val spark = TestSpark.spark
+    def mapLine(id: Int, coords: String) =
+      s"""{"type":"map","data":{"id":$id,"uuid":"u-$id","bbox":"-74,40,-73,41",""" +
+        """"map_type":"is_map","status":"warped","mask_status":"masked","maskGeometry":""" +
+        s"""{"type":"Polygon","coordinates":$coords}}}"""
+    val ring = "[[0.0,0.0],[10.0,0.0],[10.0,10.0],[0.0,10.0],[0.0,0.0]]"
+    val out = graft.ops.Mapwarper.pipeline(graft.ops.Mapwarper.parseRecords(spark,
+      Seq(mapLine(104, s"[$ring,null]"), mapLine(105, "[null]")))).collect()
+    assert(!out.exists(_.getAs[String]("type") == "object"), s"no clean object expected: ${out.toSeq}")
+    val logTypes = out.filter(_.getAs[String]("type") == "log").map(_.getAs[Row]("obj")).map(o =>
+      o.getAs[String]("id") -> o.getSeq[Row](o.fieldIndex("logs")).map(_.getAs[String]("type"))).toMap
+    assert(logTypes.keySet == Set("104", "105"), s"both maps must dead-letter: $logTypes")
+    assert(logTypes.values.forall(_.contains("invalid_coordinates")), s"got $logTypes")
+  }
+
   test("ANSI-cast hazards: overflowing year and non-numeric bbox element never kill the job") {
     val spark = TestSpark.spark
     // year digits past Int.MaxValue: JS parseInt returns a double the

@@ -59,7 +59,7 @@ class PropertySpec extends AnyFunSuite {
     d <- Gen.choose(-2.0, 2.0); e <- Gen.choose(-2.0, 2.0); f <- Gen.choose(-100.0, 100.0)
   } yield (a, b, c, d, e, f)
 
-  test("gcpAffineFit recovers an exact affine map from non-collinear gcps") {
+  test("order-1 gcpPolyFit recovers an exact affine map from non-collinear gcps") {
     val pts = Seq((0.0, 0.0), (100.0, 0.0), (0.0, 80.0), (100.0, 80.0), (37.0, 59.0))
     check(Prop.forAll(affineGen) { case (a, b, c, d, e, f) =>
       // degenerate transforms (near-zero determinant) are excluded
@@ -67,8 +67,8 @@ class PropertySpec extends AnyFunSuite {
         val gcps = pts.map { case (x, y) =>
           Seq(x, y, d * x + e * y + f, a * x + b * y + c) // [x, y, lat, lon]
         }
-        Geo.gcpAffineFit(gcps).exists { fit =>
-          val got = Geo.applyAffine(fit, Seq(Seq(Seq(50.0, 40.0)))).head.head
+        Geo.gcpPolyFit(gcps, 1).exists { fit =>
+          val got = Geo.applyPoly(fit, Seq(Seq(Seq(50.0, 40.0)))).head.head
           math.abs(got.head - (a * 50 + b * 40 + c)) < 1e-6 &&
           math.abs(got(1) - (d * 50 + e * 40 + f)) < 1e-6
         }
