@@ -563,15 +563,12 @@ object Dedup {
     * (max path-compression depth, 10 s). */
   val SinglePassMaxPairs = 16000000L
 
-  /** Runtime override for the fast-path ceiling (SPARK_GRAFT_CC_SINGLE_MAX):
-    * lets ScaleSmoke force the distributed propagation path on a corpus
-    * the single-task gate would otherwise absorb — the 100× smoke must
-    * demonstrate the path a real 100 TB graph takes, not the fast path
-    * (round-8 verdict ask #3). Read per call, so tests setting the
-    * parameter explicitly are unaffected. */
-  def singlePassMaxDefault: Long =
-    sys.env.get("SPARK_GRAFT_CC_SINGLE_MAX").map(_.toLong)
-      .getOrElse(SinglePassMaxPairs)
+  /** Round cap of the distributed propagation path: 25 materialized
+    * rounds = diameter ≤ 50 (two relaxations each) — ample for
+    * near-dup cluster graphs; a chain-shaped component deeper than
+    * that (chained version histories) fails the convergence check
+    * instead of returning partial labels. */
+  val PropagationMaxRounds = 25
 
   /** Min-attach union-find over an edge iterator: emits (node, label)
     * for every node seen, label = the component's MINIMUM member id
@@ -658,18 +655,16 @@ object Dedup {
     *              fails loudly in review, not silently at scale.
     * @param pairs undirected edges, columns `src`/`dst` (one row per
     *              pair; both directions are derived here)
-    * @param singlePassMax fast-path ceiling (tests override to force
-    *                      either physical strategy); the default −1
-    *                      resolves to [[singlePassMaxDefault]], which
-    *                      honors the SPARK_GRAFT_CC_SINGLE_MAX env
-    *                      override */
+    * @param singlePassMax fast-path ceiling: at most this many pairs
+    *                      take the single-task union-find, more take
+    *                      label propagation (pass 0 to force the
+    *                      distributed path) */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame,
-                          singlePassMax: Long = -1L): DataFrame = {
-    val gate = if (singlePassMax >= 0) singlePassMax else singlePassMaxDefault
+                          singlePassMax: Long = SinglePassMaxPairs): DataFrame = {
     val p = pairs.select(col("src"), col("dst")).persist()
     val nPairs = p.count()
     val labels =
-      if (nPairs <= gate) singleTaskCC(p) else propagationCC(p)
+      if (nPairs <= singlePassMax) singleTaskCC(p) else propagationCC(p)
     p.unpersist()
     // singleton re-union: nodes ⟕ labels, missing label = own id. The
     // label side covers only edge-incident nodes (for the loop path, a
@@ -742,15 +737,7 @@ object Dedup {
     var prevChk: DataFrame = null
     var changed = 1L
     var rounds = 0
-    // 25 materialized rounds = diameter ≤ 50 (two relaxations each) —
-    // ample for near-dup cluster graphs, but a chain-shaped component
-    // (chained version histories) can exceed it; overridable like the
-    // fast-path ceiling (SPARK_GRAFT_CC_SINGLE_MAX) so a scale run
-    // with a deeper graph raises the cap instead of aborting after
-    // paying for every round
-    val maxRounds = sys.env.get("SPARK_GRAFT_CC_MAX_ROUNDS")
-      .map(_.toInt).getOrElse(25)
-    while (changed > 0 && rounds < maxRounds) {
+    while (changed > 0 && rounds < PropagationMaxRounds) {
       // TWO relaxations per materialized round: labels spread two hops
       // per checkpoint cycle, halving the dominant per-round fixed
       // cost (job scheduling, AQE stage materialization, broadcast) —

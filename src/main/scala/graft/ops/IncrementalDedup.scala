@@ -48,7 +48,8 @@ object IncrementalDedup {
 
   /** Dedupes a new batch against the index: returns (new_id, match_id,
     * est_jaccard) for batch docs whose estimated Jaccard against an
-    * indexed doc reaches `threshold`.
+    * indexed doc reaches `threshold` — one row per (new_id, match_id),
+    * at the highest estimate over the match's indexed signatures.
     *
     * Degenerate index buckets (> `maxBucket` members — measured: the
     * hottest band bucket grows LINEARLY with the corpus, 879 members
@@ -67,8 +68,7 @@ object IncrementalDedup {
                  threshold: Double = 0.8,
                  maxBucket: Int = Dedup.MaxBucket,
                  batchId: Long = NoBatch,
-                 bandsUsed: Int = Dedup.Bands,
-                 rawBatchId: Long = NoBatch): DataFrame = {
+                 bandsUsed: Int = Dedup.Bands): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(bandsUsed >= 1 && bandsUsed <= Dedup.Bands,
       s"bandsUsed must be in [1, ${Dedup.Bands}], got $bandsUsed")
@@ -112,36 +112,13 @@ object IncrementalDedup {
       // hash slices can't produce a self-pair, so the bench is blind
       // to both cases; StreamingDedupSpec's replay-after-append and
       // cross-batch-redelivery tests pin them.
-      //
-      // `rawBatchId` covers the lineage-tag UPGRADE boundary (round-17
-      // advice): index rows written before the tag existed carry RAW
-      // batch ids, so a batch that crashed after appendToIndex and is
-      // replayed post-upgrade computes tag(qid, N) != N and would lose
-      // this exclusion — rewriting its dir EMPTY. The streaming layer
-      // passes the raw id ONLY during a declared upgrade window
-      // (dedupedIngest's lineageUpgrade knob), NOT permanently:
-      // pre-upgrade rows carry no lineage information, so the raw
-      // disjunct cannot distinguish this lineage's crashed batch N
-      // from a DEAD lineage's committed batch N — an index shared
-      // across a checkpoint wipe (fresh outDir, same table: the
-      // blessed remedy) would wrongly skip a redelivered doc's
-      // pre-upgrade entry if the disjunct stayed on (round-17 review;
-      // ensureLineage guards the OUTPUT dir, never this table).
-      // the disjunct only exists when a raw id was actually passed:
-      // defaulting it into the predicate would exclude src_batch ===
-      // NoBatch rows whenever batchId is real — silently breaking the
-      // batch API's later-batch-redelivery match for default appends
       .filter(!(col("new_id") === col("doc_id") &&
-                (if (rawBatchId == NoBatch) col("src_batch") === lit(batchId)
-                 else col("src_batch") === lit(batchId) ||
-                      col("src_batch") === lit(rawBatchId))))
+                col("src_batch") === lit(batchId)))
       // r20 (guide §2.3 — shuffle fewer bytes): score and
       // threshold-filter MAP-SIDE, before the pair-dedup exchange.
-      // est_jaccard is a deterministic function of the pair (both
-      // signatures are functions of the doc texts), so every
-      // cross-band repeat of a pair scores identically and
-      // distinct-after-filter returns exactly the rows the old
-      // dedup-then-score produced — but the exchange now carries
+      // Every cross-band repeat of one (batch sig, index sig) pair
+      // scores identically, so the per-pair aggregation below returns
+      // the rows a dedup-then-score would — but the exchange carries
       // (new_id, match_id, est) scalars for SURVIVING pairs only,
       // instead of two SigLen-slot signature arrays per colliding
       // band. The trade is one sigMatches kernel call per colliding
@@ -152,7 +129,10 @@ object IncrementalDedup {
         round(graft.functions.NativeExprs.sigMatches(col("new_sig"), col("sig"))
           .cast("double") / SigLen, 4).as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
-    cands.distinct()
+    // one row per (new_id, match_id): appendToIndex does not dedupe
+    // doc_ids, so a doc re-appended with changed text holds two
+    // signatures in the index; keep the strongest evidence
+    cands.groupBy("new_id", "match_id").agg(max("est_jaccard").as("est_jaccard"))
   }
 
   /** Appends a batch's signatures to the index (after dedup decisions). */

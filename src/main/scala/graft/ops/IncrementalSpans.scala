@@ -95,8 +95,7 @@ object IncrementalSpans {
     * only appends anti-joined survivors); the within-batch min
     * window partitions by fp over the BATCH only. */
   def probeBatch(spark: SparkSession, batch: DataFrame, table: String,
-                 n: Int = SpanN, batchId: Long = NoBatch,
-                 rawBatchId: Long = NoBatch): DataFrame = {
+                 n: Int = SpanN, batchId: Long = NoBatch): DataFrame = {
     // pre-align the batch to the index's bucket layout: the fp window
     // and the bucket-colocated join then SHARE one exchange — without
     // this the window shuffles to spark.sql.shuffle.partitions and
@@ -116,27 +115,9 @@ object IncrementalSpans {
       .filter(
         // index hit, excluding ONLY the claiming entry this very
         // batch wrote (replay-after-append; see object scaladoc).
-        // `rawBatchId` additionally excludes the PRE-lineage-tag form
-        // of that same entry (raw batch id in src_batch): a batch that
-        // crashed after appendToIndex and replays after the tag
-        // upgrade computes tag != raw and would read its own claim as
-        // 100% staleness. Passed by the streaming layer ONLY during a
-        // declared upgrade window (spanIngest's lineageUpgrade knob):
-        // pre-upgrade rows carry no lineage, so the raw disjunct
-        // cannot tell this lineage's crashed batch N from a dead
-        // lineage's committed batch N — permanent use would under-
-        // report staleness for an index shared across a checkpoint
-        // wipe (round-17 review; ensureLineage guards the output dir,
-        // never this table).
-        // (conditional: defaulting the raw id into the predicate
-        // would exclude src_batch === NoBatch rows whenever batchId
-        // is real — breaking later-batch redelivery for the batch
-        // API's default appends)
         (col("idx_first").isNotNull &&
           !(col("idx_first") === col("doc_id") &&
-            (if (rawBatchId == NoBatch) col("idx_batch") === lit(batchId)
-             else col("idx_batch") === lit(batchId) ||
-                  col("idx_batch") === lit(rawBatchId)))) ||
+            col("idx_batch") === lit(batchId))) ||
         // or duplicated within the batch by an earlier doc
         col("batch_first") < col("doc_id"))
       .select(col("doc_id"), col("pos"))

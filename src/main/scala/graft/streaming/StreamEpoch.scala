@@ -29,116 +29,6 @@ import org.apache.spark.sql.SparkSession
   */
 private[graft] object StreamEpoch {
 
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Operator-visible warning channel for the upgrade window — a var
-    * so specs can capture the text; production stays on the logger. */
-  private[graft] var warnSink: String => Unit = msg => log.warn(msg)
-
-  /** Strict parse of the SPARK_GRAFT_LINEAGE_UPGRADE knob: ONLY "1"
-    * or "true" (case-insensitive, trimmed) enable the window, ONLY
-    * "0" / "false" / "" disable it. A bare presence check would read
-    * `=0` / `=false` — an operator's attempt to DISABLE it — as
-    * enabled, silently leaving the wiped-checkpoint mis-skip hazard
-    * open (round-17 advice); and a strict-but-SILENT parse has the
-    * mirror failure (round-18 advice): the crossing deploy run with a
-    * habitual `=yes` / `=on` would get NO window and NO warning, so
-    * its crashed pre-upgrade batch replays without raw-id
-    * self-exclusion — the exact dropped-survivors hazard the knob
-    * exists to prevent. An unrecognized non-empty spelling therefore
-    * REFUSES loudly instead of guessing either way. */
-  private[graft] def upgradeKnob(v: Option[String]): Boolean =
-    v.map(_.trim) match {
-      case None => false
-      case Some(s) if s == "1" || s.equalsIgnoreCase("true") => true
-      case Some(s) if s == "0" || s.equalsIgnoreCase("false") || s.isEmpty => false
-      case Some(s) => throw new IllegalArgumentException(
-        s"SPARK_GRAFT_LINEAGE_UPGRADE='$s' is not a recognized value. " +
-          "Use 1/true to open the lineage-upgrade window for the one " +
-          "crossing deploy, 0/false (or unset) to keep it closed. " +
-          "Refusing to guess: treating this as ON would leave the window " +
-          "open forever if it was a disable attempt; treating it as OFF " +
-          "would silently drop the raw-id self-exclusion a crossing " +
-          "deploy's crashed-batch replay depends on.")
-    }
-
-  /** The env-derived default for the streams' `lineageUpgrade` knob. */
-  private[graft] def upgradeKnobFromEnv: Boolean =
-    upgradeKnob(sys.env.get("SPARK_GRAFT_LINEAGE_UPGRADE"))
-
-  /** Gate for an ACTIVE lineage-upgrade window (the raw-batch-id
-    * self-exclusion disjunct in the incremental probes). Called once
-    * per micro-batch while the knob is on; enforces that the window
-    * serves exactly ONE lineage per index table:
-    *
-    *   - first knob-on probe writes a `_upgrade_crossing` marker
-    *     (underscore-prefixed, invisible to the table's readers) into
-    *     the index table's storage location recording the crossing
-    *     query id — the index, not the outDir, because the hazard the
-    *     window opens lives in the SHARED index: the blessed
-    *     wipe-remedy is a fresh outDir probing the SAME table, so an
-    *     outDir-side marker would never see the second lineage;
-    *   - the SAME lineage re-enters freely (the crossing deploy may
-    *     restart any number of times inside its window);
-    *   - a SECOND distinct lineage probing under a still-set knob
-    *     REFUSES loudly: its raw batch ids restart at 0 and would
-    *     wrongly self-exclude against pre-upgrade rows a dead
-    *     lineage committed — the exact left-on-forever failure mode
-    *     the one-deploy contract exists to prevent. The remedy is to
-    *     unset the knob (pre-upgrade crashed batches can only belong
-    *     to the lineage that crossed; any later lineage needs no
-    *     window);
-    *   - and EVERY knob-on batch warns loudly, so a forgotten knob is
-    *     visible in the logs long before a wipe makes it dangerous.
-    *
-    * With the knob OFF the marker is inert history: strict
-    * tag-only exclusion resumes regardless of what crossed before.
-    * Marker creation uses the same first-writer-wins + read-back
-    * arbitration as [[ensureLineage]]. A full index REBUILD
-    * (buildIndex's overwrite) deletes the marker along with the
-    * table's files — deliberately correct: a rebuilt index holds no
-    * pre-tag rows, so there is no boundary left to cross and a future
-    * window may legitimately serve whatever lineage then needs one.
-    *
-    * MULTI-WRITER indexes (several ingest streams appending to one
-    * shared table — coherent in the tagged world, where each stream's
-    * batches carry its own lineage tag) get the refusal by DESIGN,
-    * not as a limitation: pre-upgrade rows from two raw-id writers
-    * are indistinguishable (stream A's raw batch 5 and stream B's
-    * collide in src_batch), so a raw-id window can never be sound for
-    * more than one of them — the second writer must take the quiesce
-    * rule (drain its in-flight batches before its upgrade deploy, so
-    * its window never needs to open). */
-  private[graft] def upgradeWindow(spark: SparkSession, indexTable: String,
-                                       queryId: String, sink: String): Unit = {
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(indexTable)).location)
-    val p = new org.apache.hadoop.fs.Path(loc, "_upgrade_crossing")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) writeMarkerAtomic(fs, p, queryId)
-    val prev = readMarker(fs, p, "_upgrade_crossing",
-      "the next knob-on probe rewrites it for its own lineage")
-    if (prev != queryId)
-      throw new IllegalStateException(
-        s"lineage-upgrade window on index $indexTable already served lineage " +
-          s"$prev, but lineage $queryId is probing with " +
-          "SPARK_GRAFT_LINEAGE_UPGRADE still enabled. The window is a " +
-          "ONE-deploy transition: this lineage's raw batch ids restart at 0 " +
-          "and would wrongly self-exclude against pre-upgrade index rows a " +
-          "dead lineage committed (silently under-flagging redelivered " +
-          "docs). Unset SPARK_GRAFT_LINEAGE_UPGRADE — only the lineage that " +
-          "crossed the pre-tag boundary can own crashed pre-tag batches; a " +
-          s"new lineage needs no window. (Marker: $p)")
-    warnSink(s"[$sink] lineage-upgrade window ACTIVE on index $indexTable " +
-      s"(lineage $queryId): raw batch ids are honored for replay " +
-      "self-exclusion this batch. This knob is for the ONE deploy that " +
-      "crosses the pre-lineage-tag boundary — unset " +
-      "SPARK_GRAFT_LINEAGE_UPGRADE after the crossing; left on, a " +
-      "wiped-checkpoint restart would wrongly skip redelivered docs' " +
-      "pre-upgrade index entries.")
-  }
-
   /** The streaming query id recorded in the checkpoint's metadata
     * file — present before the first micro-batch runs (StreamExecution
     * writes it at start). Read per call, NOT cached: a wiped-and-

@@ -57,8 +57,8 @@ object StreamingDedup {
     * converges: index rows carry the batch id that wrote them and
     * probeBatch excludes exactly the SAME-batch self-matches (a batch
     * replayed after its own appendToIndex landed would otherwise
-    * self-match at 1.0 and rewrite its dir EMPTY) and takes distinct
-    * (new_id, match_id) candidates, so doubled index rows change no
+    * self-match at 1.0 and rewrite its dir EMPTY) and returns one row
+    * per (new_id, match_id) candidate, so doubled index rows change no
     * dedup decision — they only waste the replayed rows' space. The
     * batch-scoped exclusion (round-13 advice) keeps the OTHER
     * redelivery mode covered too: an at-least-once source re-sending
@@ -71,40 +71,10 @@ object StreamingDedup {
     * redelivered in a same-numbered batch would skip its own earlier
     * entries and land duplicated; the epoch tag makes it match them
     * and be dropped, the documented redelivery semantics. */
-  /** `lineageUpgrade` is the TRANSITION knob for upgrading a live
-    * stream from pre-lineage-tag binaries (raw batch ids in
-    * `src_batch`): enabled, the replay self-match exclusion also
-    * covers the raw id, so a batch that crashed after appendToIndex
-    * under the OLD binary and replays under this one still
-    * self-excludes instead of rewriting its dir empty. Enable it for
-    * the one deploy that crosses the boundary (env
-    * SPARK_GRAFT_LINEAGE_UPGRADE=1 or the parameter), then turn it
-    * OFF: pre-upgrade rows carry no lineage at all, so the raw
-    * exclusion cannot tell "this lineage's crashed batch N" from "a
-    * dead lineage's committed batch N" — left on permanently, a
-    * wiped-checkpoint restart (fresh outDir, SAME index — the blessed
-    * remedy) would let its raw batch N wrongly skip a redelivered
-    * doc's pre-upgrade entry (round-17 review). The no-knob
-    * alternative is the quiesce rule: drain all in-flight batches
-    * (checkpoint fully committed) before upgrading, and the window
-    * never opens.
-    *
-    * The human failure modes of that contract are mechanically closed
-    * (round-18): the env knob parses STRICTLY (`=0`/`=false` disable —
-    * bare presence does not enable, [[StreamEpoch.upgradeKnob]]);
-    * every knob-on batch logs a loud WARN naming the window; and a
-    * `_upgrade_crossing` marker at the index table pins the window to
-    * the ONE lineage that crossed — a second distinct lineage probing
-    * under a still-set knob refuses loudly instead of silently
-    * mis-skipping ([[StreamEpoch.upgradeWindow]]). Unsetting the knob
-    * after the crossing restores strict tag-only exclusion; the
-    * marker stays behind as inert history. */
   def dedupedIngest(spark: SparkSession, streamingDocs: DataFrame,
                     indexTable: String, outDir: String,
                     threshold: Double = 0.8,
-                    checkpointDir: Option[String] = None,
-                    lineageUpgrade: Boolean =
-                      StreamEpoch.upgradeKnobFromEnv): StreamingQuery = {
+                    checkpointDir: Option[String] = None): StreamingQuery = {
     val cp = checkpointDir.getOrElse(s"$outDir/_checkpoint")
     streamingDocs.writeStream
       .outputMode("append")
@@ -112,18 +82,11 @@ object StreamingDedup {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val qid = StreamEpoch.queryId(spark, cp)
         StreamEpoch.ensureLineage(spark, outDir, qid)
-        if (lineageUpgrade)
-          StreamEpoch.upgradeWindow(spark, indexTable, qid, "StreamingDedup")
         val tag = StreamEpoch.tag(qid, batchId)
         val b = batch.persist()
         try {
           val crossBatchDups = IncrementalDedup
-            // the raw-id disjunct ONLY during the declared upgrade
-            // window — see the lineageUpgrade scaladoc for why it
-            // must not stay on
-            .probeBatch(spark, b, indexTable, threshold, batchId = tag,
-                        rawBatchId =
-                          if (lineageUpgrade) batchId else IncrementalDedup.NoBatch)
+            .probeBatch(spark, b, indexTable, threshold, batchId = tag)
             .select(col("new_id")).distinct()
           val survivors = dropInternalDups(spark,
             b.join(crossBatchDups, b("doc_id") === crossBatchDups("new_id"), "left_anti"),

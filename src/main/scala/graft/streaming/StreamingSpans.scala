@@ -42,19 +42,9 @@ object StreamingSpans {
 
   /** Starts the span-finding stream over `streamingDocs` (documents
     * schema: doc_id, text, ...). */
-  /** `lineageUpgrade`: the one-deploy transition knob for streams
-    * upgrading from pre-lineage-tag binaries — see
-    * [[StreamingDedup.dedupedIngest]] for the full contract (why it
-    * covers the crashed-batch replay window, why leaving it on
-    * permanently re-opens the wiped-checkpoint under-flagging hole
-    * for shared index tables, and how the strict env parse + per-batch
-    * WARN + `_upgrade_crossing` marker close that contract's human
-    * failure modes). */
   def spanIngest(spark: SparkSession, streamingDocs: DataFrame,
                  indexTable: String, outDir: String,
-                 checkpointDir: Option[String] = None,
-                 lineageUpgrade: Boolean =
-                   StreamEpoch.upgradeKnobFromEnv): StreamingQuery = {
+                 checkpointDir: Option[String] = None): StreamingQuery = {
     val cp = checkpointDir.getOrElse(s"$outDir/_checkpoint")
     streamingDocs.writeStream
       .outputMode("append")
@@ -62,17 +52,10 @@ object StreamingSpans {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val qid = StreamEpoch.queryId(spark, cp)
         StreamEpoch.ensureLineage(spark, outDir, qid)
-        if (lineageUpgrade)
-          StreamEpoch.upgradeWindow(spark, indexTable, qid, "StreamingSpans")
         val tag = StreamEpoch.tag(qid, batchId)
         val b = batch.persist()
         try {
-          // the raw-id disjunct ONLY during the declared upgrade
-          // window — see dedupedIngest's lineageUpgrade scaladoc
-          IncrementalSpans.probeBatch(spark, b, indexTable, batchId = tag,
-                                      rawBatchId =
-                                        if (lineageUpgrade) batchId
-                                        else IncrementalSpans.NoBatch)
+          IncrementalSpans.probeBatch(spark, b, indexTable, batchId = tag)
             .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
           IncrementalSpans.appendToIndex(b, indexTable, srcBatch = tag)
           // the StreamingNovelty discipline: foreachBatch binds to a

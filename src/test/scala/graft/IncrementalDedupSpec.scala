@@ -8,14 +8,18 @@ import graft.ops.IncrementalDedup
 class IncrementalDedupSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  test("new batch is deduped against the persisted index; planted dup found") {
-    spark.sql("DROP TABLE IF EXISTS dedup_index")
-    val d = new java.io.File("/tmp/graft-test-warehouse/dedup_index")
+  private def dropIndex(name: String): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS $name")
+    val d = new java.io.File(s"/tmp/graft-test-warehouse/$name")
     if (d.exists()) {
       java.nio.file.Files.walk(d.toPath)
         .sorted(java.util.Comparator.reverseOrder())
         .forEach(p => java.nio.file.Files.delete(p))
     }
+  }
+
+  test("new batch is deduped against the persisted index; planted dup found") {
+    dropIndex("dedup_index")
     val docs = Tables.documents(spark, TestSpark.sf0001).select("doc_id", "text")
     val corpus = docs.filter(col("doc_id") < 400)
     IncrementalDedup.buildIndex(corpus, "dedup_index")
@@ -52,72 +56,47 @@ class IncrementalDedupSpec extends AnyFunSuite {
       .filter(col("new_id") === col("match_id")).count() == 0L)
   }
 
-  test("lineage-tag upgrade boundary: pre-tag raw-id entries still self-exclude via rawBatchId") {
+  test("default-srcBatch appends stay matchable by a later batch redelivering the same doc_id") {
     import spark.implicits._
-    spark.sql("DROP TABLE IF EXISTS dedup_upgrade_idx")
-    val d = new java.io.File("/tmp/graft-test-warehouse/dedup_upgrade_idx")
-    if (d.exists()) {
-      java.nio.file.Files.walk(d.toPath)
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.delete(p))
-    }
-    // index rows appended PRE-upgrade carry the RAW batch id; a batch
-    // replayed post-upgrade probes with tag(qid, N) != N and, without
-    // the rawBatchId disjunct, self-matches at est 1.0 — dedupedIngest
-    // would anti-join every survivor away and rewrite its dir EMPTY
-    // (the round-17 advice's silent-loss case). The streaming layer
-    // passes the raw id only under dedupedIngest's lineageUpgrade
-    // transition knob — permanent use would let a post-wipe lineage's
-    // raw batch N wrongly skip a redelivered doc's pre-upgrade entry
-    // in a SHARED index table (see the probe's comment).
-    val t = (1 to 20).map(i => s"w$i").mkString(" ")
-    IncrementalDedup.buildIndex(
-      Seq((1L, "totally unrelated seed content here with distinct words entirely"))
-        .toDF("doc_id", "text"), "dedup_upgrade_idx")
-    val batch = Seq((9L, t)).toDF("doc_id", "text")
-    val rawId = 7L
-    IncrementalDedup.appendToIndex(batch, "dedup_upgrade_idx", srcBatch = rawId)
-    val tag = 4611686018427387909L // stands in for the SHA-derived tag
-    val broken = IncrementalDedup
-      .probeBatch(spark, batch, "dedup_upgrade_idx", batchId = tag)
-      .filter(col("new_id") === col("match_id")).count()
-    assert(broken > 0,
-      "control: without the raw-id disjunct the replay self-matches its own entry")
-    val fixed = IncrementalDedup
-      .probeBatch(spark, batch, "dedup_upgrade_idx", batchId = tag,
-        rawBatchId = rawId)
-      .filter(col("new_id") === col("match_id")).count()
-    assert(fixed == 0L,
-      "with rawBatchId the pre-upgrade claim is excluded like a same-lineage replay")
-    // default rawBatchId = NoBatch must not disturb batch-API
-    // semantics: rows appended with the DEFAULT srcBatch stay
-    // matchable by a later batch redelivering the same doc_id
-    spark.sql("DROP TABLE IF EXISTS dedup_upgrade_idx2")
-    val d2 = new java.io.File("/tmp/graft-test-warehouse/dedup_upgrade_idx2")
-    if (d2.exists()) {
-      java.nio.file.Files.walk(d2.toPath)
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.delete(p))
-    }
-    IncrementalDedup.buildIndex(batch, "dedup_upgrade_idx2") // default srcBatch
+    dropIndex("dedup_default_src_idx")
+    // rows written with the DEFAULT srcBatch = NoBatch are not any
+    // batch's own rows, so a real batch redelivering the same doc_id
+    // must still match them (the batch API's redelivery semantics)
+    val batch = Seq((9L, (1 to 20).map(i => s"w$i").mkString(" ")))
+      .toDF("doc_id", "text")
+    IncrementalDedup.buildIndex(batch, "dedup_default_src_idx")
     val redelivered = IncrementalDedup
-      .probeBatch(spark, batch, "dedup_upgrade_idx2", batchId = 9L)
+      .probeBatch(spark, batch, "dedup_default_src_idx", batchId = 9L)
       .filter(col("new_id") === col("match_id")).count()
     assert(redelivered > 0,
       "default-append rows must stay matchable by later batches")
-    spark.sql("DROP TABLE IF EXISTS dedup_upgrade_idx")
-    spark.sql("DROP TABLE IF EXISTS dedup_upgrade_idx2")
+    spark.sql("DROP TABLE IF EXISTS dedup_default_src_idx")
+  }
+
+  test("a doc_id re-appended with changed text yields one row per (new_id, match_id), at the max estimate") {
+    import spark.implicits._
+    dropIndex("dedup_reappend_idx")
+    // appendToIndex does not dedupe doc_ids: doc 1 re-appended with one
+    // changed token holds two signatures in the index, and a probe
+    // near both must still report the pair once, at the stronger one
+    val words = (1 to 40).map(i => s"w$i")
+    IncrementalDedup.buildIndex(Seq((1L, words.mkString(" "))).toDF("doc_id", "text"),
+      "dedup_reappend_idx")
+    IncrementalDedup.appendToIndex(
+      Seq((1L, (words.init :+ "x1").mkString(" "))).toDF("doc_id", "text"),
+      "dedup_reappend_idx")
+    val rows = IncrementalDedup
+      .probeBatch(spark, Seq((9L, words.mkString(" "))).toDF("doc_id", "text"),
+        "dedup_reappend_idx", threshold = 0.8)
+      .collect().map(r => (r.getAs[Long]("new_id"), r.getAs[Long]("match_id"),
+        r.getAs[Double]("est_jaccard"))).toSeq
+    assert(rows == Seq((9L, 1L, 1.0)), s"one row per pair at the max estimate: $rows")
+    spark.sql("DROP TABLE IF EXISTS dedup_reappend_idx")
   }
 
   test("degenerate index buckets are skipped at the cap, kept below it") {
     import spark.implicits._
-    spark.sql("DROP TABLE IF EXISTS dedup_cap_idx")
-    val d = new java.io.File("/tmp/graft-test-warehouse/dedup_cap_idx")
-    if (d.exists()) {
-      java.nio.file.Files.walk(d.toPath)
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.delete(p))
-    }
+    dropIndex("dedup_cap_idx")
     // two identical indexed docs: every band bucket has exactly 2 members
     val t = (1 to 20).map(i => s"w$i").mkString(" ")
     IncrementalDedup.buildIndex(
@@ -182,13 +161,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val d = TestSpark.sf0001
     val b = substring(md5(col("doc_id").cast("string")), 1, 2)
     val docs = Tables.documents(spark, d).select(col("doc_id"), col("text"))
-    spark.sql("DROP TABLE IF EXISTS bandwit_idx")
-    val wh = new java.io.File("/tmp/graft-test-warehouse/bandwit_idx")
-    if (wh.exists()) {
-      java.nio.file.Files.walk(wh.toPath)
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.delete(p))
-    }
+    dropIndex("bandwit_idx")
     IncrementalDedup.buildIndex(docs.filter(b < "c0"), "bandwit_idx")
     val batch = docs.filter(b >= "c0")
     def pairs(nBands: Int) = IncrementalDedup

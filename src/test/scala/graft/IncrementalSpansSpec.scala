@@ -153,51 +153,18 @@ class IncrementalSpansSpec extends AnyFunSuite {
       s"cross-batch redelivery must read fully stale, got ${redelivered.toSeq}")
   }
 
-  test("lineage-tag upgrade boundary: pre-tag raw-id claims still self-exclude via rawBatchId") {
-    // rows appended BEFORE the StreamEpoch tag existed carry RAW batch
-    // ids in src_batch. A batch that crashed after appendToIndex and
-    // replays post-upgrade probes with tag(qid, N) != N — without the
-    // rawBatchId disjunct it reads its own claims as 100% staleness
-    // (the round-17 advice's silent-loss case); with it the replay
-    // emits exactly its pre-crash spans. The streaming layer passes
-    // the raw id only under spanIngest's lineageUpgrade transition
-    // knob — permanent use would under-report staleness for an index
-    // shared across a checkpoint wipe (see the probe's comment).
-    freshTable("spans_idx_upgrade")
+  test("default-srcBatch appends stay matchable by a later batch redelivering the same doc_id") {
+    // claims written with the DEFAULT srcBatch = NoBatch are not any
+    // batch's own claims, so a real batch redelivering doc 20 must
+    // still read them as stale (the batch API's redelivery semantics)
+    freshTable("spans_idx_default_src")
     val seed = docsDf(1L -> s"the indexed document contains $Run inside it for later")
-    IncrementalSpans.buildIndex(seed, "spans_idx_upgrade")
+    IncrementalSpans.buildIndex(seed, "spans_idx_default_src")
     val batch = docsDf(
       20L -> s"first arrival says $Run and some unique twenty tail")
-    val rawId = 7L
-    val before = IncrementalSpans
-      .probeBatch(spark, batch, "spans_idx_upgrade", batchId = rawId)
-      .collect().map(_.toString).toSeq
-    // pre-upgrade append: raw id lands in src_batch
-    IncrementalSpans.appendToIndex(batch, "spans_idx_upgrade", srcBatch = rawId)
-    // post-upgrade replay probes with the TAG — StreamEpoch is
-    // private[streaming]; any non-negative value != rawId stands in
-    // (real tags are SHA-256-derived, uniform in [0, 2^63))
-    val tag = 4611686018427387909L
-    assert(tag != rawId)
-    val broken = IncrementalSpans
-      .probeBatch(spark, batch, "spans_idx_upgrade", batchId = tag)
-      .collect().map(_.toString).toSeq
-    assert(broken != before,
-      "control: without the raw-id disjunct the replay reads its own claims as stale")
-    val fixed = IncrementalSpans
-      .probeBatch(spark, batch, "spans_idx_upgrade", batchId = tag,
-        rawBatchId = rawId)
-      .collect().map(_.toString).toSeq
-    assert(fixed == before,
-      s"upgrade-boundary replay must emit its pre-crash spans:\n$fixed\nvs\n$before")
-    // and the default rawBatchId = NoBatch must NOT change batch-API
-    // semantics: a LATER batch redelivering doc 20 against rows
-    // appended with the DEFAULT NoBatch src_batch still matches them
-    freshTable("spans_idx_upgrade2")
-    IncrementalSpans.buildIndex(seed, "spans_idx_upgrade2")
-    IncrementalSpans.appendToIndex(batch, "spans_idx_upgrade2") // srcBatch = NoBatch
+    IncrementalSpans.appendToIndex(batch, "spans_idx_default_src") // srcBatch = NoBatch
     val redelivered = IncrementalSpans
-      .probeBatch(spark, batch, "spans_idx_upgrade2", batchId = 9L)
+      .probeBatch(spark, batch, "spans_idx_default_src", batchId = 9L)
       .collect()
     assert(redelivered.nonEmpty,
       "default-append rows must stay matchable by later batches")

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every declared query runs at sf0.001 and returns rows; entry > 0.
@@ -15,6 +17,28 @@ class SmokeSpec extends AnyFunSuite {
   test("oracleSql keys are a subset of queries keys") {
     val unknown = SparkEntry.oracleSql.keySet.diff(SparkEntry.queries.keySet)
     assert(unknown.isEmpty, s"oracleSql without a query: $unknown")
+  }
+
+  test("operators read no environment: their arguments alone set their behavior") {
+    // deployment settings (paths, CPU counts, output files) stay with
+    // the top-level mains; an operator package reading the environment
+    // fails here
+    val pkgs = Seq("ops", "streaming", "functions", "geo", "plans", "model")
+      .map(p => java.nio.file.Paths.get("src/main/scala/graft", p))
+    val missing = pkgs.filterNot(java.nio.file.Files.isDirectory(_))
+    assert(missing.isEmpty, s"operator packages not found under " +
+      s"${System.getProperty("user.dir")}: ${missing.mkString(", ")}")
+    val reads = pkgs.flatMap { dir =>
+      val files = java.nio.file.Files.walk(dir)
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally files.close()
+    }.flatMap { f =>
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if line.contains("sys.env") || line.contains("System.getenv") =>
+          s"$f:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(reads.isEmpty, s"environment reads in operator code:\n${reads.mkString("\n")}")
   }
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

@@ -144,31 +144,6 @@ class StreamEpochSpec extends AnyFunSuite {
     } // and an attested dir under a LATER wipe still refuses
   }
 
-  test("upgrade knob parses strictly: only 1/true enable, only 0/false/empty disable, anything else refuses loudly") {
-    // an operator 'disabling' the knob with =0 or =false must actually
-    // disable it — bare presence is NOT enablement (round-17 advice #1)
-    assert(StreamEpoch.upgradeKnob(Some("1")))
-    assert(StreamEpoch.upgradeKnob(Some("true")))
-    assert(StreamEpoch.upgradeKnob(Some("TRUE")))
-    assert(StreamEpoch.upgradeKnob(Some(" 1 ")))
-    assert(!StreamEpoch.upgradeKnob(Some("0")))
-    assert(!StreamEpoch.upgradeKnob(Some("false")))
-    assert(!StreamEpoch.upgradeKnob(Some("FALSE")))
-    assert(!StreamEpoch.upgradeKnob(Some("")))
-    assert(!StreamEpoch.upgradeKnob(None))
-    // an UNRECOGNIZED spelling must refuse, not silently pick a side:
-    // `=yes` silently-OFF would strip the crossing deploy's raw-id
-    // self-exclusion with no warning; silently-ON would be the old
-    // presence bug again (round-18 advice, medium)
-    for (bad <- Seq("yes", "on", "enabled", "2", "tru")) {
-      val e = intercept[IllegalArgumentException] {
-        StreamEpoch.upgradeKnob(Some(bad))
-      }
-      assert(e.getMessage.contains(bad)
-        && e.getMessage.contains("SPARK_GRAFT_LINEAGE_UPGRADE"), e.getMessage)
-    }
-  }
-
   test("lineage markers are crash-atomic: an empty (pre-fix-crash) marker fails with a corrupt-marker remedy, and no temp debris survives a commit") {
     // an empty _lineage left by a crash mid-write must not read as a
     // refusal by lineage "" with the wrong remedy (round-18 advice)
@@ -189,74 +164,5 @@ class StreamEpochSpec extends AnyFunSuite {
     assert(!names.exists(_.contains(".tmp-")), s"temp debris left: $names")
     assert(new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(dir, "_lineage")), "UTF-8") == "qid-x")
-    // same corrupt-marker handling on the index-side _upgrade_crossing
-    val tbl = "sepoch_corrupt_idx"
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    spark.sql(s"CREATE TABLE $tbl (bucket BIGINT) USING parquet")
-    val loc = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(tbl)).location.getPath
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(loc, "_upgrade_crossing"), Array.emptyByteArray)
-    val oldWarn = StreamEpoch.warnSink
-    StreamEpoch.warnSink = _ => ()
-    try {
-      val e2 = intercept[IllegalStateException] {
-        StreamEpoch.upgradeWindow(spark, tbl, "lin-X", "TestSink")
-      }
-      assert(e2.getMessage.contains("EMPTY") && e2.getMessage.contains("Delete"),
-        e2.getMessage)
-      java.nio.file.Files.delete(
-        java.nio.file.Paths.get(loc, "_upgrade_crossing"))
-      StreamEpoch.upgradeWindow(spark, tbl, "lin-X", "TestSink") // rewrites
-    } finally StreamEpoch.warnSink = oldWarn
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-  }
-
-  test("upgrade window: WARNs every knob-on batch; a SECOND distinct lineage under a still-set knob refuses") {
-    val tbl = "sepoch_upg_idx"
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    spark.sql(s"CREATE TABLE $tbl (bucket BIGINT) USING parquet")
-    val warns = scala.collection.mutable.Buffer[String]()
-    val old = StreamEpoch.warnSink
-    StreamEpoch.warnSink = warns += _
-    try {
-      // first knob-on probe = THE crossing: marker written, loud WARN
-      StreamEpoch.upgradeWindow(spark, tbl, "lin-A", "TestSink")
-      // the crossing deploy may restart inside its window: same
-      // lineage re-enters, WARNs again (visibility, not one-shot)
-      StreamEpoch.upgradeWindow(spark, tbl, "lin-A", "TestSink")
-      assert(warns.size == 2, s"every knob-on batch must WARN: $warns")
-      assert(warns.forall(w => w.contains("lineage-upgrade window ACTIVE")
-        && w.contains(tbl) && w.contains("lin-A")
-        && w.contains("SPARK_GRAFT_LINEAGE_UPGRADE")), warns.mkString("\n"))
-      // a different lineage probing under the still-set knob: the
-      // left-on-forever failure mode — refuse, naming both lineages
-      // and the remedy
-      val e = intercept[IllegalStateException] {
-        StreamEpoch.upgradeWindow(spark, tbl, "lin-B", "TestSink")
-      }
-      assert(e.getMessage.contains("lin-A") && e.getMessage.contains("lin-B")
-        && e.getMessage.contains("Unset SPARK_GRAFT_LINEAGE_UPGRADE"),
-        e.getMessage)
-    } finally StreamEpoch.warnSink = old
-    // the marker is underscore-prefixed: the table stays readable, and
-    // with the knob OFF (upgradeWindow never called) it is inert —
-    // strict behavior needs no cleanup step
-    assert(spark.table(tbl).count() == 0)
-    // a full index REBUILD deletes the marker with the table's files —
-    // deliberately: a rebuilt index holds no pre-tag rows, so a future
-    // window may legitimately serve a NEW lineage (scaladoc claim, pinned)
-    val oldWarn2 = StreamEpoch.warnSink
-    StreamEpoch.warnSink = _ => ()
-    try {
-      import spark.implicits._
-      graft.ops.Bucketing.writeBucketed(
-        Seq(1L, 2L).toDF("bucket"), tbl, "bucket", 2)
-      StreamEpoch.upgradeWindow(spark, tbl, "lin-C", "TestSink") // fresh crossing
-      intercept[IllegalStateException] {
-        StreamEpoch.upgradeWindow(spark, tbl, "lin-D", "TestSink")
-      }
-    } finally StreamEpoch.warnSink = oldWarn2
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 }

@@ -302,19 +302,13 @@ class WarehouseSoakSpec extends AnyFunSuite {
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
-  test("attest-then-continue: a pre-upgrade ledger+dedup warehouse crosses the tag boundary inside the declared window") {
+  test("attest-then-continue: a marker-less ledger+dedup warehouse refuses, then continues exactly-once after the operator attests") {
     // The OTHER documented remedy (round-17 verdict Next #5): the
     // operator ATTESTS a contentful marker-less warehouse — original
-    // checkpoint intact — by writing the query id to _lineage, with
-    // the rawBatchId upgrade window active, and the crossing must
-    // preserve (a) the ledger's exactly-once watermarks, (b) the
-    // dedup stream's replay self-exclusion for a batch that crashed
-    // after appendToIndex UNDER THE OLD BINARY, (c) during-window
-    // later-batch redelivery matching, and then (d) unsetting the
-    // knob restores strict tag-only behavior while (e) a SECOND
-    // lineage under a still-set knob refuses at the crossing marker.
+    // checkpoint intact — by writing the query id to _lineage, and
+    // the continuation must preserve the ledger's exactly-once
+    // watermarks and the dedup stream's later-batch redelivery match.
     import graft.streaming.StreamEpoch
-    import org.apache.spark.sql.Row
     resetTable("soak_upg_idx")
     import spark.implicits._
 
@@ -323,7 +317,7 @@ class WarehouseSoakSpec extends AnyFunSuite {
     val ledgerDir = s"$root/ledger"
     val t0 = System.currentTimeMillis() - 600000
 
-    // ---- phase 0: a legitimate pre-upgrade warehouse ------------------
+    // ---- phase 0: a legitimate warehouse written before markers ------
     IncrementalDedup.buildIndex(
       docsDF(("a", 0L, "alpha beta gamma delta epsilon zeta"))
         .select("doc_id", "text"), "soak_upg_idx")
@@ -343,36 +337,16 @@ class WarehouseSoakSpec extends AnyFunSuite {
       Seq("word"), Seq("n"), ledgerDir, buckets = 4)
     ql0.processAllAvailable(); ql0.stop()
 
-    // doctor the warehouse to PRE-UPGRADE state: the old binary wrote
-    // no _lineage markers and RAW batch ids into src_batch
+    // drop the _lineage markers: the state a build without lineage
+    // guarding leaves behind
     java.nio.file.Files.delete(java.nio.file.Paths.get(dedupOut, "_lineage"))
     java.nio.file.Files.delete(java.nio.file.Paths.get(ledgerDir, "_lineage"))
-    val idxSchema = spark.table("soak_upg_idx").schema
-    val sbIdx = idxSchema.fieldIndex("src_batch")
-    val rawRows = spark.table("soak_upg_idx").collect().toSeq.map { r =>
-      val vals = r.toSeq.toArray
-      if (r.getLong(sbIdx) >= 0L) vals(sbIdx) = 0L // tag(qid,0) → raw 0
-      Row(vals: _*)
-    }
-    import scala.jdk.CollectionConverters._
-    graft.ops.Bucketing.writeBucketed(
-      spark.createDataFrame(rawRows.asJava, idxSchema), "soak_upg_idx",
-      "bucket", 32)
 
-    // the CRASHED batch: under the old binary, batch 1 (doc 200) wrote
-    // its corpus dir and appended RAW-id rows to the index, then died
-    // before the checkpoint committed
-    val crashed = docsDF(("a", 200L, text200)).select("doc_id", "text")
-    crashed.write.mode("overwrite").parquet(s"$dedupOut/batch_id=1")
-    IncrementalDedup.appendToIndex(crashed, "soak_upg_idx", srcBatch = 1L)
-    docsDF(("a", 200L, text200)).select("doc_id", "text")
-      .coalesce(1).write.parquet(s"$dedupIn/f2") // the batch that replays
-    stamp(s"$dedupIn/f2", t0 + 60000)
-    // and its during-window successor: one fresh doc + one redelivery
-    // of the PRE-UPGRADE doc 100 (must match its raw-0 entry, window on)
+    // the dedup stream's next batch: one fresh doc + one redelivery of
+    // doc 100 (must match its earlier index entry)
     docsDF(("a", 300L, text300), ("a", 301L, text100))
-      .coalesce(1).write.parquet(s"$dedupIn/f3")
-    stamp(s"$dedupIn/f3", t0 + 120000)
+      .coalesce(1).write.parquet(s"$dedupIn/f2")
+    stamp(s"$dedupIn/f2", t0 + 60000)
     // ledger's crashed batch 1: applyBatch landed, commit didn't
     Seq(("b", 1L), ("c", 1L)).toDF("word", "n")
       .coalesce(1).write.parquet(s"$ledgerIn/f2")
@@ -386,8 +360,7 @@ class WarehouseSoakSpec extends AnyFunSuite {
 
     // ---- phase 1: marker-less contentful dirs REFUSE; operator attests
     val qBad = StreamingDedup.dedupedIngest(spark, docStream(dedupIn)
-      .select("doc_id", "text"), "soak_upg_idx", dedupOut,
-      lineageUpgrade = true)
+      .select("doc_id", "text"), "soak_upg_idx", dedupOut)
     val exBad = intercept[Exception] { qBad.processAllAvailable() }
     qBad.stop()
     assert(causeChain(exBad).contains("_lineage"), causeChain(exBad))
@@ -405,83 +378,25 @@ class WarehouseSoakSpec extends AnyFunSuite {
         qid.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
 
-    // ---- phase 2: the crossing — window ON, crashed batch replays ----
-    val warns = scala.collection.mutable.Buffer[String]()
-    val oldSink = StreamEpoch.warnSink
-    StreamEpoch.warnSink = msg => warns.synchronized { warns += msg; () }
-    try {
-      val qUp = StreamingDedup.dedupedIngest(spark, docStream(dedupIn)
-        .select("doc_id", "text"), "soak_upg_idx", dedupOut,
-        lineageUpgrade = true)
-      val qLedUp = StreamingLedger.ledgerSink(spark,
-        spark.readStream.schema(ledgerSchema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$ledgerIn/f*"),
-        Seq("word"), Seq("n"), ledgerDir, buckets = 4)
-      Seq(qUp, qLedUp).foreach(_.processAllAvailable())
-      Seq(qUp, qLedUp).foreach(_.stop())
-    } finally StreamEpoch.warnSink = oldSink
-    assert(warns.size == 2 && warns.forall(_.contains(
-      "lineage-upgrade window ACTIVE")),
-      s"every knob-on batch must WARN (f2 + f3): $warns")
-    // (b) the crashed batch self-excluded via its RAW id — its dir is
-    // rewritten with the survivor, NOT empty
+    // ---- phase 2: the attested lineages continue ---------------------
+    val qUp = StreamingDedup.dedupedIngest(spark, docStream(dedupIn)
+      .select("doc_id", "text"), "soak_upg_idx", dedupOut)
+    val qLedUp = StreamingLedger.ledgerSink(spark,
+      spark.readStream.schema(ledgerSchema)
+        .option("maxFilesPerTrigger", "1").parquet(s"$ledgerIn/f*"),
+      Seq("word"), Seq("n"), ledgerDir, buckets = 4)
+    Seq(qUp, qLedUp).foreach(_.processAllAvailable())
+    Seq(qUp, qLedUp).foreach(_.stop())
     val b1 = spark.read.parquet(s"$dedupOut/batch_id=1")
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(b1 == Set(200L),
-      s"crashed-batch replay inside the window must keep its survivor: $b1")
-    // (c) during-window redelivery of a pre-upgrade doc still MATCHES
-    val b2 = spark.read.parquet(s"$dedupOut/batch_id=2")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(b2 == Set(300L),
-      s"redelivered doc 301(=100's text) must match its raw-0 entry: $b2")
-    // (a) ledger watermarks held through the crossing: the replayed
+    assert(b1 == Set(300L),
+      s"redelivered doc 301(=100's text) must match its earlier entry: $b1")
+    // ledger watermarks held through the attestation: the replayed
     // batch 1 SKIPPED (already applied), batch 2 applied once
     val led = StreamingLedger.readLedger(spark, ledgerDir).collect()
       .map(r => r.getAs[String]("word") -> r.getAs[Long]("n")).toMap
     assert(led == Map("a" -> 1L, "b" -> 2L, "c" -> 2L),
-      s"exactly-once totals through the attested crossing: $led")
-
-    // ---- phase 3: knob OFF restores strict tag-only behavior ---------
-    docsDF(("a", 400L, "completely original fourth wave sentence tokens"),
-           ("a", 401L, text200)) // redelivers the crashed batch's doc
-      .coalesce(1).write.parquet(s"$dedupIn/f4")
-    stamp(s"$dedupIn/f4", t0 + 180000)
-    val qOff = StreamingDedup.dedupedIngest(spark, docStream(dedupIn)
-      .select("doc_id", "text"), "soak_upg_idx", dedupOut,
-      lineageUpgrade = false)
-    qOff.processAllAvailable(); qOff.stop()
-    val b3 = spark.read.parquet(s"$dedupOut/batch_id=3")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(b3 == Set(400L),
-      s"strict mode: 401(=200's text) matches the raw-1 entry as a " +
-        s"plain cross-batch redelivery: $b3")
-
-    // ---- phase 4: a SECOND lineage under a still-set knob refuses ----
-    val out2 = s"$root/dedup_l2"
-    val in2 = tmp("soak_upg_in2")
-    docsDF(("a", 500L, "fifth lineage document with entirely novel words"),
-           ("a", 501L, text100)) // redelivery across lineages
-      .coalesce(1).write.parquet(s"$in2/f1")
-    stamp(s"$in2/f1", t0 + 240000)
-    val qSecond = StreamingDedup.dedupedIngest(spark, docStream(in2)
-      .select("doc_id", "text"), "soak_upg_idx", out2,
-      lineageUpgrade = true)
-    val exSecond = intercept[Exception] { qSecond.processAllAvailable() }
-    qSecond.stop()
-    assert(causeChain(exSecond).contains("lineage-upgrade window"),
-      causeChain(exSecond))
-
-    // ---- phase 5: same fresh lineage with the knob UNSET proceeds,
-    // and the inert crossing marker changes nothing ---------------------
-    val qFresh = StreamingDedup.dedupedIngest(spark, docStream(in2)
-      .select("doc_id", "text"), "soak_upg_idx", out2,
-      lineageUpgrade = false)
-    qFresh.processAllAvailable(); qFresh.stop()
-    val l2 = spark.read.parquet(s"$out2/batch_id=0")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(l2 == Set(500L),
-      s"fresh lineage, knob off: 501(=100's text) must match the " +
-        s"pre-upgrade raw-0 entry and be dropped: $l2")
+      s"exactly-once totals through the attested continuation: $led")
 
     spark.sql("DROP TABLE IF EXISTS soak_upg_idx")
   }
