@@ -77,7 +77,7 @@ object DetAudit {
     * COLUMN join could (round-18 advice); per-element hashing (the
     * advice's stronger option) leaves NO in-band separator to forge —
     * not even a NUL inside an element can move a boundary. Shared by
-    * the main sweep, DetAuditSpec, and SpillSmoke. */
+    * the main sweep and DetAuditSpec. */
   def canonicalHash(df: DataFrame): String = {
     def sha(s: String): String =
       java.security.MessageDigest.getInstance("SHA-256")

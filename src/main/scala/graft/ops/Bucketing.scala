@@ -74,21 +74,11 @@ object Bucketing {
     * exchange-free + sort-free; the oracle is the plain SQL join. */
   def q197BucketedJoin(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    def ensure(prefix: String, file: String,
-               build: String => Unit): String = {
-      val fp = IndexTables.dataFingerprint(s, d, file)
-      val t = IndexTables.tableName(prefix, d, fp)
-      if (!s.catalog.tableExists(t)) {
-        IndexTables.gcTables(s, prefix, d)
-        build(t)
-      }
-      t
-    }
-    val tOrders = ensure("graft_bkt_orders_v1_", "orders.parquet",
+    val tOrders = IndexTables.ensureTable(s, "graft_bkt_orders_v1_", d)(
       t => writeBucketed(
         graft.Tables.orders(s, d).withColumnRenamed("o_custkey", "custkey"),
         t, "custkey", Q197Buckets))
-    val tCust = ensure("graft_bkt_customer_v1_", "customer.parquet",
+    val tCust = IndexTables.ensureTable(s, "graft_bkt_customer_v1_", d)(
       t => writeBucketed(
         graft.Tables.customer(s, d).withColumnRenamed("c_custkey", "custkey"),
         t, "custkey", Q197Buckets))

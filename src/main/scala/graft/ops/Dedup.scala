@@ -556,9 +556,10 @@ object Dedup {
     * while the pair pull to the one task (~16 B/pair) stays ~256 MB.
     * Dup graphs are clique-heavy in practice, so real node counts run
     * far below the 2-per-pair bound. The bound is also MEASURED, not
-    * just derived (round-18, [[graft.UnionFindHeapSmoke]]): the real
-    * [[unionFindLabels]] at exactly 16M pairs completes with correct
-    * labels under `-Xmx2g` at BOTH adversarial shapes — 32M disjoint
+    * just derived (round 18, by a heap-budget rig last present at
+    * commit 36698d3): the real [[unionFindLabels]] at exactly 16M
+    * pairs completes with correct labels under `-Xmx2g` at BOTH
+    * adversarial shapes — 32M disjoint
     * nodes (the 2-per-pair worst case, 44 s) and one 16M-node chain
     * (max path-compression depth, 10 s). */
   val SinglePassMaxPairs = 16000000L

@@ -44,7 +44,8 @@ object Graph {
     * stage that aggregates downstream are PINNED — they cannot evict
     * while execution asks for its first page, so their FOOTPRINT is
     * the working-set floor of the whole query. Measured via the
-    * round-18 suite-wide spill sweep (SpillSmoke all) at sf0.1: with
+    * round-18 suite-wide spill sweep at sf0.1 (its rig was last
+    * present at commit 36698d3): with
     * deserialized default storage q187 aborted loudly below a
     * 140–225 MB unified floor; serialized, the floor drops to
     * 60–75 MB — a 2–3× smaller minimum executor. (It still exceeds

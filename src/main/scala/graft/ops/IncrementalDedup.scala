@@ -173,17 +173,14 @@ object IncrementalDedup {
   private def ensureQ189Index(s: SparkSession, d: String): (DataFrame, String) = {
     import graft.Tables.documents
     import IndexTables.hashBucket
-    val table = IndexTables.tableName(TablePrefix, d,
-      IndexTables.dataFingerprint(s, d))
-    if (!s.catalog.tableExists(table)) {
-      IndexTables.gcTables(s, TablePrefix, d)
+    val table = IndexTables.ensureTable(s, TablePrefix, d) { t =>
       // retired schema generation (pre-src_batch); gcTables is
       // prefix-scoped, so the old family needs its own sweep or a
       // prior session's v1 table leaks warehouse disk forever
       IndexTables.gcTables(s, "graft_dedup_idx_v1_", d)
       buildIndex(documents(s, d)
         .filter(hashBucket(col("doc_id").cast("string")) < "c0")
-        .select(col("doc_id"), col("text")), table)
+        .select(col("doc_id"), col("text")), t)
     }
     val batch = documents(s, d)
       .filter(hashBucket(col("doc_id").cast("string")) >= "c0")

@@ -134,13 +134,9 @@ object IncrementalNovelty {
   def q186NoveltyProbeIndex(s: SparkSession, d: String): DataFrame = {
     import graft.Tables.documents
     import IndexTables.hashBucket
-    val table = IndexTables.tableName(TablePrefix, d,
-      IndexTables.dataFingerprint(s, d))
-    if (!s.catalog.tableExists(table)) {
-      IndexTables.gcTables(s, TablePrefix, d)
+    val table = IndexTables.ensureTable(s, TablePrefix, d)(t =>
       buildIndex(documents(s, d)
-        .filter(hashBucket(col("doc_id").cast("string")) < "c0"), table)
-    }
+        .filter(hashBucket(col("doc_id").cast("string")) < "c0"), t))
     val batch = documents(s, d)
       .filter(hashBucket(col("doc_id").cast("string")) >= "c0")
     screenBatch(s, batch, table).orderBy(col("doc_id"))

@@ -154,14 +154,10 @@ object IncrementalSpans {
   def q198SpanProbeIndex(s: SparkSession, d: String): DataFrame = {
     import graft.Tables.documents
     import IndexTables.hashBucket
-    val table = IndexTables.tableName(TablePrefix, d,
-      IndexTables.dataFingerprint(s, d))
-    if (!s.catalog.tableExists(table)) {
-      IndexTables.gcTables(s, TablePrefix, d)
+    val table = IndexTables.ensureTable(s, TablePrefix, d)(t =>
       buildIndex(documents(s, d)
         .filter(hashBucket(col("doc_id").cast("string")) < "c0")
-        .select(col("doc_id"), col("text")), table)
-    }
+        .select(col("doc_id"), col("text")), t))
     val batch = documents(s, d)
       .filter(hashBucket(col("doc_id").cast("string")) >= "c0")
       .select(col("doc_id"), col("text"))

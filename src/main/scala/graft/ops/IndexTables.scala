@@ -4,9 +4,10 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Shared lifecycle for the persisted-index query families (q78
-  * decontam / q186 novelty / q189 dedup): content-fingerprint the
-  * source data, key the managed table name on (source dir,
-  * fingerprint), and GC superseded generations. Factored from the
+  * decontam / q186 novelty / q189 dedup / q198 spans / q197 bucketed
+  * join): content-fingerprint the source data, key the managed table
+  * name on (source dir, fingerprint), and GC superseded generations
+  * ([[ensureTable]] runs the three in order). Factored from the
   * q78/q186 private copies, which had drifted to byte-identical
   * logic — and both carried the prefix-collision hazard the round-11
   * advice flagged for the IVF dir GC: a bare `startsWith` sweep lets
@@ -112,6 +113,21 @@ private[graft] object IndexTables {
     * (the convention every document-keyed family follows). */
   private[graft] def defaultFileFor(familyPrefix: String): String =
     FamilyFiles.getOrElse(familyPrefix, "documents.parquet")
+
+  /** The build-once step every table-backed family runs before a
+    * probe: fingerprint the family's source file ([[defaultFileFor]]),
+    * key the table name on it, and when that generation is missing GC
+    * the family's older generations for `d` and `build` the new one
+    * under the returned name. */
+  def ensureTable(s: SparkSession, prefix: String, d: String)(
+      build: String => Unit): String = {
+    val table = tableName(prefix, d, dataFingerprint(s, d, defaultFileFor(prefix)))
+    if (!s.catalog.tableExists(table)) {
+      gcTables(s, prefix, d)
+      build(table)
+    }
+    table
+  }
 
   /** Index-family integrity audit — the [[BucketStore.fsck]] analogue
     * for the catalog-table side of the persisted-index families

@@ -141,10 +141,12 @@ object Ingest {
 
   /** Paginated fetch loop with in-band errors: pages are fetched
     * sequentially (rate-limited, like the reference's `series()`);
-    * each result is Right(lines) or Left(error) — a failed page never
-    * aborts the crawl (mirrors {type:'error'} records,
-    * /root/reference/mapwarper.js:123-129). Stops on the first short
-    * page (termination rule, mapwarper.js:138-143). */
+    * each result is Right(lines) or Left(error). A page that still
+    * fails after its retries lands as one in-band Left(error) — which
+    * [[crawlToSpool]] writes as a {type:'error'} record, mirroring
+    * mapwarper.js:123-129 — and the crawl ends there: later pages are
+    * not fetched. Otherwise it stops on the first short page
+    * (termination rule, mapwarper.js:138-143). */
   def fetchAllPages(perPage: Int, retries: Int)(
       fetch: Int => Try[Seq[String]]): Seq[(Int, Either[String, Seq[String]])] = {
     val out = Seq.newBuilder[(Int, Either[String, Seq[String]])]

@@ -41,6 +41,24 @@ class SmokeSpec extends AnyFunSuite {
     assert(reads.isEmpty, s"environment reads in operator code:\n${reads.mkString("\n")}")
   }
 
+  test("entry points are the driver contract: no other file declares a main") {
+    // a one-off diagnostic main leaves src/main once its question is
+    // answered; a new entry point joins this list deliberately
+    val contract = Set("Bench", "DetAudit", "ExplainAudit", "HealthRun", "Verify")
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"src/main/scala not found under ${System.getProperty("user.dir")}")
+    val files = java.nio.file.Files.walk(root)
+    val mains = try files.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(f => java.nio.file.Files.readAllLines(f).asScala.exists(_.contains("def main(")))
+      .map(_.getFileName.toString.stripSuffix(".scala")).toSet
+    finally files.close()
+    assert(mains == contract,
+      s"unexpected mains: ${(mains -- contract).toSeq.sorted.mkString(", ")}; " +
+        s"missing mains: ${(contract -- mains).toSeq.sorted.mkString(", ")}")
+  }
+
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name runs and returns rows at sf0.001") {
       val n = fn(spark, TestSpark.sf0001).count()
