@@ -2,9 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression, UnaryExpression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, IntegerType, LongType, StringType}
@@ -77,6 +77,7 @@ object NativeExprs {
   def pqAdc(code: Column, lut: Array[Array[Double]]): Column =
     toCol(PqAdc(toExpr(code), lut))
   def deflateLen(c: Column): Column = toCol(DeflateLen(toExpr(c)))
+  def runtimeLong(v: Long): Column = toCol(RuntimeLong(v))
 
   def bloomContainsLong(x: Column, filter: org.apache.spark.util.sketch.BloomFilter): Column =
     toCol(BloomContainsLong(toExpr(x), filter))
@@ -1048,4 +1049,31 @@ case class DeflateLen(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(c: Expression): DeflateLen =
     copy(child = c)
+}
+
+/** A BIGINT that is fixed within one query but differs between
+  * otherwise identical queries — a micro-batch id. A `Literal` is
+  * inlined into the generated Java (`7L`), so every new value misses
+  * Spark's compiled-class cache and recompiles each whole-stage class
+  * it appears in, once per batch. This leaf reads the value through
+  * addReferenceObj instead, so plans that differ only in the value
+  * generate identical source and share one compiled class. Not
+  * foldable: ConstantFolding would otherwise turn it back into a
+  * Literal. Deterministic and non-null, so predicates over it plan
+  * like predicates over a literal. */
+case class RuntimeLong(value: Long) extends LeafExpression {
+
+  override def foldable: Boolean = false
+  override def nullable: Boolean = false
+  override def dataType: DataType = LongType
+  override def prettyName: String = "runtime_long"
+
+  override def eval(input: InternalRow): Any = value
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("runtimeLong", java.lang.Long.valueOf(value),
+      "java.lang.Long")
+    ev.copy(code = code"final long ${ev.value} = $ref.longValue();",
+      isNull = FalseLiteral)
+  }
 }

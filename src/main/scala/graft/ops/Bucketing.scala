@@ -24,10 +24,14 @@ object Bucketing {
     * 100 TB sides at read time, the exact cost this module claims is
     * paid once at write. repartition(n, col) and bucketBy share the
     * same murmur3 pmod placement, so task i holds exactly bucket i and
-    * each bucket lands as one sorted file. (Appends to a bucketed
-    * table re-open the multi-file case; appending callers like
-    * IncrementalDedup pin merge-join shape with an explicit hint and
-    * don't rely on the file-level sort.) */
+    * each bucket lands as one sorted file. (Every append to a
+    * bucketed table re-opens the multi-file case. The appending
+    * indexes align the batch to the bucket layout first — by this
+    * repartition (IncrementalDedup) or through the exchange of a merge
+    * anti-join against the index (IncrementalSpans, IncrementalNovelty)
+    * — so an append adds one file per bucket it touches rather than
+    * one per write task and bucket; they pin merge-join shape with an
+    * explicit hint and don't rely on the file-level sort.) */
   def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
     df.repartition(buckets, org.apache.spark.sql.functions.col(key))
       .write

@@ -2,6 +2,9 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
+
+import graft.functions.NativeExprs
 
 /** Incremental near-dedup against a persisted signature index — the
   * shape a 100 TB ingestion pipeline actually runs: signatures are
@@ -11,8 +14,15 @@ import org.apache.spark.sql.functions._
   * Index layout: the exploded (bucket, doc_id, sig) table is written
   * hash-bucketed + sorted on `bucket` (Bucketing.writeBucketed), so
   * the probe join against a batch's buckets is shuffle-free on the
-  * index side — the index (the 100 TB side) never moves; only the
-  * batch (the small side) shuffles into alignment.
+  * index side — the index (the 100 TB side) never moves. Only the
+  * batch (the small side) shuffles: into the probe join's alignment,
+  * and into the bucket layout before an append, so each append adds
+  * one file per bucket it touches, not one per (write task, bucket).
+  *
+  * The batch id enters every plan as [[graft.functions.RuntimeLong]],
+  * not as a literal: streaming ids are unique per trigger, and a
+  * literal would recompile the probe's and the append's whole-stage
+  * classes on every batch.
   *
   * Deliberately NO Bloom sidecar here (unlike IncrementalDecontam):
   * this index is append-MUTABLE (appendToIndex), so a filter built at
@@ -39,7 +49,7 @@ object IncrementalDedup {
   private def explodedSigs(docs: DataFrame, srcBatch: Long): DataFrame =
     withMinhash(docs)
       .select(col("doc_id"), col("sig"), explode(col("bands")).as("bucket"),
-              lit(srcBatch).as("src_batch"))
+              NativeExprs.runtimeLong(srcBatch).as("src_batch"))
 
   /** (Re)builds the persisted index as a bucketed managed table. */
   def buildIndex(docs: DataFrame, table: String, buckets: Int = 32,
@@ -57,13 +67,17 @@ object IncrementalDedup {
     * trade: without the cap the per-bucket candidate join goes
     * quadratic on exactly the boilerplate clusters whose members the
     * index already knows are mutual dups. The count-window runs on
-    * the bucketed+sorted layout, so the guard costs NO exchange and
-    * NO sort — and no second index pass either: scan → window →
-    * filter → merge join is one pipelined consumption of the same
-    * bucketed scan the probe join reads anyway (the window only adds
-    * per-bucket buffering). A persisted per-bucket size digest would
-    * save that buffering but not I/O, and would have to be kept
-    * transactionally consistent with appendToIndex — not worth it. */
+    * the bucketed layout, so the guard costs NO exchange and no
+    * second index pass: scan → window → filter → merge join is one
+    * pipelined consumption of the same bucketed scan the probe join
+    * reads anyway (the window adds per-bucket buffering). It is
+    * sort-free only while every bucket is one file (a fresh
+    * buildIndex); once appendToIndex has added a file to a bucket,
+    * Spark no longer trusts the write-time order and the index side
+    * plans a Sort, which the window and the merge join then share
+    * (BucketingSpec pins that Sort). A persisted per-bucket size
+    * digest would save the buffering but not I/O, and would have to
+    * be kept transactionally consistent with appendToIndex. */
   def probeBatch(spark: SparkSession, batch: DataFrame, table: String,
                  threshold: Double = 0.8,
                  maxBucket: Int = Dedup.MaxBucket,
@@ -113,7 +127,7 @@ object IncrementalDedup {
       // to both cases; StreamingDedupSpec's replay-after-append and
       // cross-batch-redelivery tests pin them.
       .filter(!(col("new_id") === col("doc_id") &&
-                col("src_batch") === lit(batchId)))
+                col("src_batch") === NativeExprs.runtimeLong(batchId)))
       // r20 (guide §2.3 — shuffle fewer bytes): score and
       // threshold-filter MAP-SIDE, before the pair-dedup exchange.
       // Every cross-band repeat of one (batch sig, index sig) pair
@@ -126,7 +140,7 @@ object IncrementalDedup {
       // exactly 1× for q199's bandsUsed = 1) against orders of
       // magnitude less shuffle at index scale.
       .select(col("new_id"), col("doc_id").as("match_id"),
-        round(graft.functions.NativeExprs.sigMatches(col("new_sig"), col("sig"))
+        round(NativeExprs.sigMatches(col("new_sig"), col("sig"))
           .cast("double") / SigLen, 4).as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
     // one row per (new_id, match_id): appendToIndex does not dedupe
@@ -135,11 +149,23 @@ object IncrementalDedup {
     cands.groupBy("new_id", "match_id").agg(max("est_jaccard").as("est_jaccard"))
   }
 
-  /** Appends a batch's signatures to the index (after dedup decisions). */
+  /** Appends a batch's signatures to the index (after dedup decisions).
+    *
+    * The batch is first repartitioned to the table's CURRENT bucket
+    * layout (read on every append, so an index rebuilt with another
+    * count is followed) — the murmur3 pmod placement bucketBy uses,
+    * as in [[Bucketing.writeBucketed]] — so write task i holds
+    * exactly bucket i and the append adds one file per bucket it
+    * touches. Unaligned, each write task emits a file for every
+    * bucket it holds and every later probe opens them all. Only the
+    * batch shuffles; a name with no bucket spec is written as is. */
   def appendToIndex(docs: DataFrame, table: String,
-                    srcBatch: Long = NoBatch): Unit =
-    explodedSigs(docs, srcBatch).write.mode("append")
-      .format("parquet").insertInto(table)
+                    srcBatch: Long = NoBatch): Unit = {
+    val sigs = explodedSigs(docs, srcBatch)
+    PlanBridge.numBuckets(docs.sparkSession, table)
+      .map(b => sigs.repartition(b, col("bucket"))).getOrElse(sigs)
+      .write.mode("append").format("parquet").insertInto(table)
+  }
 
   // ------------------------------------------------- q189 (bench form)
 

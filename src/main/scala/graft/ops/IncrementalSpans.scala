@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.NativeExprs
+
 /** Incremental duplicate-SPAN finding against a persisted shingle-
   * occurrence index — the fourth member of the incremental-index
   * family (q78 contamination, q186 novelty, q189 near-dup, this one
@@ -52,7 +54,10 @@ import org.apache.spark.sql.functions._
   * with the caveat that ids must be unique for the index's lifetime,
   * which raw streaming batch ids are NOT across a checkpoint wipe;
   * the streaming layer therefore passes a checkpoint-lineage tag
-  * ([[graft.streaming.StreamEpoch]]) instead of the raw id. */
+  * ([[graft.streaming.StreamEpoch]]) instead of the raw id. That tag
+  * is unique per trigger, so the id enters the probe and append plans
+  * as [[graft.functions.RuntimeLong]], never as a literal that would
+  * recompile their whole-stage classes on every batch. */
 object IncrementalSpans {
 
   import Dedup.SpanN
@@ -64,7 +69,7 @@ object IncrementalSpans {
     * posexplode kernel (positions matter; no array_distinct). */
   private[graft] def occurrences(docs: DataFrame, n: Int = SpanN): DataFrame =
     docs.select(col("doc_id"),
-      posexplode(graft.functions.NativeExprs.shingleHashes(
+      posexplode(NativeExprs.shingleHashes(
         split(col("text"), " "), n)).as(Seq("pos", "fp")))
 
   /** A corpus reduced to the index layout: one `(fp, first_doc,
@@ -74,7 +79,7 @@ object IncrementalSpans {
   private def fpOwners(docs: DataFrame, n: Int, srcBatch: Long): DataFrame =
     occurrences(docs, n).groupBy(col("fp"))
       .agg(min(col("doc_id")).as("first_doc"))
-      .withColumn("src_batch", lit(srcBatch))
+      .withColumn("src_batch", NativeExprs.runtimeLong(srcBatch))
 
   /** (Re)builds the persisted seen-shingle occurrence index. */
   def buildIndex(docs: DataFrame, table: String, buckets: Int = 32,
@@ -117,7 +122,7 @@ object IncrementalSpans {
         // batch wrote (replay-after-append; see object scaladoc).
         (col("idx_first").isNotNull &&
           !(col("idx_first") === col("doc_id") &&
-            col("idx_batch") === lit(batchId))) ||
+            col("idx_batch") === NativeExprs.runtimeLong(batchId))) ||
         // or duplicated within the batch by an earlier doc
         col("batch_first") < col("doc_id"))
       .select(col("doc_id"), col("pos"))

@@ -14,18 +14,27 @@ import graft.functions.NativeExprs
 class CodegenSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  // The test frames are Seq(...).toDF, i.e. LocalRelations, and
+  // ConvertToLocalRelation evaluates a projection over one at
+  // optimization time through interpreted eval — doGenCode would never
+  // run. Excluding the rule keeps the projection in the executed plan.
   private def withCodegenOnly[T](f: => T): T = {
     val conf = spark.conf
     val prevFactory = conf.getOption("spark.sql.codegen.factoryMode")
     val prevFallback = conf.getOption("spark.sql.codegen.fallback")
+    val prevExcluded = conf.getOption("spark.sql.optimizer.excludedRules")
     conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     conf.set("spark.sql.codegen.fallback", "false")
+    conf.set("spark.sql.optimizer.excludedRules",
+      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
     try f
     finally {
       prevFactory.fold(conf.unset("spark.sql.codegen.factoryMode"))(
         conf.set("spark.sql.codegen.factoryMode", _))
       prevFallback.fold(conf.unset("spark.sql.codegen.fallback"))(
         conf.set("spark.sql.codegen.fallback", _))
+      prevExcluded.fold(conf.unset("spark.sql.optimizer.excludedRules"))(
+        conf.set("spark.sql.optimizer.excludedRules", _))
     }
   }
 
@@ -36,7 +45,7 @@ class CodegenSpec extends AnyFunSuite {
       val df = Seq(
         (Seq(1.0, 2.0), Seq(2.0, 4.0), Seq("a", "b", "c"), Seq(1L, 2L, 3L), Seq(1L, 9L, 3L)))
         .toDF("a", "b", "toks", "sigA", "sigB")
-      val row = df.select(
+      val sel = df.select(
         NativeExprs.cosineSim(col("a"), col("b")).as("cos"),
         NativeExprs.minhashSig(col("toks"), 16).as("mh"),
         NativeExprs.simhash64(col("toks")).as("sh"),
@@ -50,8 +59,15 @@ class CodegenSpec extends AnyFunSuite {
           Array(Array(1.0))).as("pq"),
         NativeExprs.shingleHashes(col("toks"), 2).as("shg"),
         NativeExprs.sampleDistSums(col("a"),
-          Array(Array(Array(1.0, 2.0), Array(4.0, 6.0)), Array(Array(1.0, 6.0)))).as("sds")
-      ).head()
+          Array(Array(Array(1.0, 2.0), Array(4.0, 6.0)), Array(Array(1.0, 6.0)))).as("sds"),
+        NativeExprs.runtimeLong(8123456789L).as("rl")
+      )
+      val row = sel.head()
+      // the projection ran as generated code, which reads the runtime
+      // value by reference instead of inlining it
+      val code = GeneratedSource.of(sel).mkString
+      assert(code.contains("runtimeLong") && !code.contains("8123456789L"),
+        "runtime_long must be generated, reading its value by reference")
       assert(math.abs(row.getAs[Double]("cos") - 1.0) < 1e-12)
       assert(row.getSeq[Long](row.fieldIndex("shg")).length == 2)
       assert(row.getSeq[Long](row.fieldIndex("mh")).length == 16)
@@ -59,6 +75,7 @@ class CodegenSpec extends AnyFunSuite {
       assert(row.getSeq[Long](row.fieldIndex("hp")).length == 1)
       assert(row.getAs[Int]("nc") == 0)
       assert(row.getAs[Int]("sm") == 2)
+      assert(row.getAs[Long]("rl") == 8123456789L)
       assert(math.abs(row.getAs[Double]("ci8") - 1.0) < 1e-3)
       assert(math.abs(row.getAs[Double]("pq") - 1.0) < 1e-12)
       // a=(1,2): cluster 0 = dist 0 + dist 5 = 5; cluster 1 = dist 4
@@ -106,7 +123,8 @@ class CodegenSpec extends AnyFunSuite {
         NativeExprs.pqEncode(col("a"), books).as("pqe"),
         NativeExprs.pqAdc(NativeExprs.pqEncode(col("a"), books), lut).as("pqa"),
         NativeExprs.deflateLen(col("s")).as("dl"),
-        NativeExprs.bloomContainsLong(col("x"), bloom).as("bc"))
+        NativeExprs.bloomContainsLong(col("x"), bloom).as("bc"),
+        (col("x") + NativeExprs.runtimeLong(-7L)).as("rl"))
         .collect().map { r =>
           // render binary columns hex so Row.toString is value-faithful
           (0 until r.length).map { i =>

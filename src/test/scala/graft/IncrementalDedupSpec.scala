@@ -177,4 +177,64 @@ class IncrementalDedupSpec extends AnyFunSuite {
     }
     spark.sql("DROP TABLE IF EXISTS bandwit_idx")
   }
+
+  test("probe and append compile once per stream: batch ids 7 and 8 generate identical source") {
+    // streaming batch ids are unique per trigger; if the id were a
+    // literal inlined into the generated Java, every batch would miss
+    // the compiled-class cache and recompile the probe's and the
+    // append's whole-stage classes
+    dropIndex("dedup_compile_idx")
+    val docs = Tables.documents(spark, TestSpark.sf0001).select("doc_id", "text")
+    IncrementalDedup.buildIndex(docs.filter(col("doc_id") < 200), "dedup_compile_idx", buckets = 4)
+    val batch = docs.filter(col("doc_id") >= 200 && col("doc_id") < 260)
+    def probe(id: Long): Seq[String] = {
+      val p = IncrementalDedup.probeBatch(spark, batch, "dedup_compile_idx", batchId = id)
+      p.collect()
+      GeneratedSource.of(p)
+    }
+    val (p7, p8) = (probe(7L), probe(8L))
+    assert(p7.nonEmpty)
+    GeneratedSource.firstDifference(p7, p8)
+      .foreach(d => fail(s"probe source depends on the batch id:\n$d"))
+    def append(id: Long): Seq[String] = GeneratedSource.ofInsert(spark, "dedup_compile_idx")(
+      IncrementalDedup.appendToIndex(batch, "dedup_compile_idx", srcBatch = id))
+    val (a7, a8) = (append(7L), append(8L))
+    GeneratedSource.firstDifference(a7, a8)
+      .foreach(d => fail(s"append source depends on the batch id:\n$d"))
+    // the ids still reach the rows
+    val tags = spark.table("dedup_compile_idx").select("src_batch").distinct()
+      .collect().map(_.getLong(0)).toSet
+    assert(tags == Set(IncrementalDedup.NoBatch, 7L, 8L), s"src_batch tags: $tags")
+    spark.sql("DROP TABLE IF EXISTS dedup_compile_idx")
+  }
+
+  test("an append adds at most one file per bucket, following a rebuilt index's bucket count") {
+    dropIndex("dedup_files_idx")
+    val dir = new java.io.File("/tmp/graft-test-warehouse/dedup_files_idx")
+    def partFiles(): Int = Option(dir.listFiles()).toSeq.flatten
+      .count(_.getName.startsWith("part-"))
+    val docs = Tables.documents(spark, TestSpark.sf0001).select("doc_id", "text")
+    val corpus = docs.filter(col("doc_id") < 300)
+    // 4 write tasks, each holding rows of every bucket: unaligned, the
+    // append would write 4 x 4 files
+    val batch = docs.filter(col("doc_id") >= 300 && col("doc_id") < 500).repartition(4)
+    IncrementalDedup.buildIndex(corpus, "dedup_files_idx", buckets = 4)
+    val built = partFiles()
+    IncrementalDedup.appendToIndex(batch, "dedup_files_idx")
+    assert(partFiles() - built <= 4, s"4-bucket append added ${partFiles() - built} files")
+
+    // rebuilt with another bucket count: the next append aligns to 8
+    IncrementalDedup.buildIndex(corpus, "dedup_files_idx", buckets = 8)
+    val rebuilt = partFiles()
+    IncrementalDedup.appendToIndex(batch, "dedup_files_idx")
+    assert(partFiles() - rebuilt <= 8, s"8-bucket append added ${partFiles() - rebuilt} files")
+    // and the appended rows are where a probe looks: a renamed copy of
+    // an appended doc matches it at est 1.0
+    val planted = batch.filter(col("doc_id") === 300)
+      .select(lit(99999L).as("doc_id"), col("text"))
+    val hits = IncrementalDedup.probeBatch(spark, planted, "dedup_files_idx")
+      .filter(col("match_id") === 300L && col("est_jaccard") === 1.0).count()
+    assert(hits == 1L, "the planted copy must match the appended doc")
+    spark.sql("DROP TABLE IF EXISTS dedup_files_idx")
+  }
 }

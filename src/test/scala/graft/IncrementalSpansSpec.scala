@@ -200,6 +200,38 @@ class IncrementalSpansSpec extends AnyFunSuite {
       s"index scan must be bucket-aligned:\n$p")
   }
 
+  test("probe and append compile once per stream: batch ids 7 and 8 generate identical source") {
+    // StreamingSpans passes a per-trigger StreamEpoch tag as the batch
+    // id; a literal id would recompile the probe's and the append's
+    // whole-stage classes on every batch
+    freshTable("spans_idx_compile")
+    val docs = Tables.documents(spark, TestSpark.sf0001).select(col("doc_id"), col("text"))
+    IncrementalSpans.buildIndex(docs.filter(col("doc_id") < 200), "spans_idx_compile", buckets = 4)
+    // one earlier append first, so both appends below read the same
+    // multi-file bucket layout (a single-file bucket plans sort-free)
+    IncrementalSpans.appendToIndex(docs.filter(col("doc_id") >= 300), "spans_idx_compile")
+    val batch = docs.filter(col("doc_id") >= 200 && col("doc_id") < 260)
+    def probe(id: Long): Seq[String] = {
+      val p = IncrementalSpans.probeBatch(spark, batch, "spans_idx_compile", batchId = id)
+      p.collect()
+      GeneratedSource.of(p)
+    }
+    val (p7, p8) = (probe(7L), probe(8L))
+    assert(p7.nonEmpty)
+    GeneratedSource.firstDifference(p7, p8)
+      .foreach(d => fail(s"probe source depends on the batch id:\n$d"))
+    def append(id: Long): Seq[String] = GeneratedSource.ofInsert(spark, "spans_idx_compile")(
+      IncrementalSpans.appendToIndex(batch, "spans_idx_compile", srcBatch = id))
+    val (a7, a8) = (append(7L), append(8L))
+    GeneratedSource.firstDifference(a7, a8)
+      .foreach(d => fail(s"append source depends on the batch id:\n$d"))
+    // batch 7 claimed the batch's new fps; batch 8's replay added none
+    val tags = spark.table("spans_idx_compile").select("src_batch").distinct()
+      .collect().map(_.getLong(0)).toSet
+    assert(tags == Set(IncrementalSpans.NoBatch, 7L), s"src_batch tags: $tags")
+    spark.sql("DROP TABLE IF EXISTS spans_idx_compile")
+  }
+
   test("streaming restart on the durable checkpoint continues batch ids instead of replaying") {
     freshTable("spans_idx_restart")
     IncrementalSpans.buildIndex(
