@@ -166,20 +166,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = SparkEntry.envCpus
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
     val deadlineSec = sys.env.get("SPARK_GRAFT_BENCH_DEADLINE_S")
       .map(_.toDouble).getOrElse(DefaultDeadlineSec)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // trust the write-time per-bucket sort (single-file buckets only)
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(cpus)
     // session warmup: exercise codegen, shuffle, and the parquet reader
     // once so the first timed query measures the query, not JVM warmup
     spark.range(1 << 20).selectExpr("sum(id)").collect()

@@ -122,11 +122,8 @@ object DetAudit {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // sweep() sets AQE and the partition count per regime
+    val spark = SparkEntry.session()
     spark.sparkContext.setLogLevel("ERROR")
     val names = SparkEntry.queries.keys.toSeq.sorted
     var diff = 0

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints the formatted physical plan for every declared query — the
   * scale audit loop: check pushed filters, pruned read schemas,
   * broadcast vs shuffle joins, and WholeStageCodegen coverage.
@@ -12,12 +10,7 @@ object ExplainAudit {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.session()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"\n===================== $name =====================")

@@ -13,6 +13,31 @@ import graft.ops.{AsOf, Bucketing, Classifier, Cluster, Curation, Dedup, Graph, 
   */
 object SparkEntry {
 
+  /** Local cores for the mains' sessions: `SPARK_GRAFT_CPUS`, default 4. */
+  private[graft] def envCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(4)
+
+  /** The one session every main and the test suite run on: `cpus`
+    * local cores and as many shuffle partitions, UTC, no UI, and
+    * trusted write-time bucket sorts
+    * (`spark.sql.legacy.bucketedTableScan.outputOrdering`: a
+    * single-file bucket reads back sort-free; Spark keeps planning the
+    * Sort for appended, multi-file buckets). Without that conf a
+    * bucketed join plans an extra Sort (BucketingSpec), so a main
+    * that skipped it would run or print a plan the others never run.
+    * `conf` adds or overrides settings. */
+  def session(cpus: Int = envCpus,
+              conf: Map[String, String] = Map.empty): SparkSession = {
+    val base = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
+    val s = conf.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
   /** Flagship: the full mapwarper transform pipeline (SURVEY §3.2) —
     * validate → dead-letter route → st:Map objects + st:in relations +
     * logs — over the embedded reference-shaped fixture, unioned with a

@@ -153,18 +153,25 @@ object Dedup {
     * (q92) wants banded candidates at a LOWER est-Jaccard floor than
     * near-dup dedup — an asymmetric pair bands on its shared tokens
     * but its symmetric Jaccard sits well under a dedup threshold. */
-  def minhashCandidatePairsOf(docs: DataFrame, minEst: Double): DataFrame = {
-    val signed = swapSigCache(withMinhash(docs)
-      .select(col("doc_id"), col("sig"), col("bands")))
-    val cands = bandedPairs(signed)
-    cands
+  def minhashCandidatePairsOf(docs: DataFrame, minEst: Double): DataFrame =
+    scoredPairs(swapSigCache(withMinhash(docs)
+      .select(col("doc_id"), col("sig"), col("bands"))), minEst)
+
+  /** The est-scored LSH core over an already-signed frame carrying
+    * (doc_id, sig, bands): [[bandedPairs]] (with its [[MaxBucket]] cap), the
+    * two signature rejoins, then `est_jaccard` (rounded to 4 places)
+    * ≥ `minEst`. Returns (id_a, id_b, est_jaccard), id_a < id_b.
+    * `signed` is read three times, so the caller caches it:
+    * [[minhashCandidatePairsOf]] through [[swapSigCache]], a
+    * streaming trigger by its own persist. */
+  private[graft] def scoredPairs(signed: DataFrame, minEst: Double): DataFrame =
+    bandedPairs(signed)
       .join(signed.select(col("doc_id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
       .join(signed.select(col("doc_id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
         round(graft.functions.NativeExprs.sigMatches(col("sig_a"), col("sig_b"))
           .cast("double") / SigLen, 4).as("est_jaccard"))
       .filter(col("est_jaccard") >= minEst)
-  }
 
   /** Distinct banded candidate id pairs (id_a < id_b) from a frame
     * carrying (doc_id, bands) — the LSH core shared by the est-scored

@@ -60,8 +60,7 @@ object Graph {
     * instead of shuffle-joined. 2²¹ nodes ≈ a few tens of MB framed —
     * comfortably inside executor memory and far under Spark's 8 GB /
     * 512M-row broadcast cap (guide §3.1: "a few hundred MB is usually
-    * fine"). Overridable via spark.graft.pagerank.broadcastNodes; a
-    * 100 TB host graph (≥10⁸ nodes) exceeds any sane setting and takes
+    * fine"). A 100 TB host graph (≥10⁸ nodes) exceeds it and takes
     * the shuffle path unchanged. */
   val BroadcastNodeLimit: Long = 1L << 21
 
@@ -85,11 +84,8 @@ object Graph {
     // measured 5.3 s warm without the checkpoints, 3.5 s with them
     val nodesC = ckpt(nodes)
     val n = nodesC.count()
-    val bcastNodes = nodes.sparkSession.conf
-      .getOption("spark.graft.pagerank.broadcastNodes")
-      .map(_.toLong).getOrElse(BroadcastNodeLimit)
     def nodeSide(df: DataFrame): DataFrame =
-      if (n <= bcastNodes) broadcast(df) else df
+      if (n <= BroadcastNodeLimit) broadcast(df) else df
     val trans = mkTrans(nodeSide)
     var rank = nodesC.select(col("id"), lit(1.0 / n).as("r"))
     for (_ <- 1 to PrIters) {

@@ -21,11 +21,12 @@ private[graft] object IndexTables {
   /** md5-prefix slice key (q63's deterministic split rule). */
   def hashBucket(c: Column): Column = substring(md5(c), 1, 2)
 
-  /** File-listing fingerprint of a source table — same discipline as
-    * the IVF index ([[Ivf]]): (name, length, mtime) per file, sorted,
-    * newline-joined, SHA-256/8 — so a regenerated corpus keys a FRESH
-    * index table instead of silently probing a stale one across JVMs
-    * (the warehouse outlives the in-memory catalog). */
+  /** File-listing fingerprint of a source table, shared with the IVF
+    * index dirs ([[Ivf]]): (relative path, length, mtime) per file,
+    * sorted, newline-joined, SHA-256/8 — no data read — so a
+    * regenerated corpus keys a FRESH index table instead of silently
+    * probing a stale one across JVMs (the warehouse outlives the
+    * in-memory catalog). */
   def dataFingerprint(s: SparkSession, d: String,
                       file: String = "documents.parquet"): String = {
     val p = new org.apache.hadoop.fs.Path(s"$d/$file")
@@ -50,9 +51,9 @@ private[graft] object IndexTables {
   }
 
   /** 8-hex SHA-256 digest of the RAW source-dir string — the lossless
-    * complement to the lossy name sanitization below (the Ivf
-    * indexDirName discipline, applied here round-14). */
-  private def pathDigest(d: String): String =
+    * complement to the lossy name sanitization of index names (here
+    * and in [[Ivf]]'s index dirs). */
+  private[graft] def pathDigest(d: String): String =
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(d.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .take(4).map(b => f"$b%02x").mkString

@@ -220,47 +220,17 @@ object Ivf {
   def q48IvfTopK(s: SparkSession, d: String): DataFrame =
     ivfTopK(s, d, NProbe)
 
-  /** Fingerprint of the source table's FILE LISTING — per-file (name,
-    * length, mtime), no data read, sorted for listing-order
-    * independence. Keys the index location so a REGENERATED corpus at
-    * the same path gets a fresh index instead of silently probing a
-    * stale one (the parquet bytes can't change without length/mtime
-    * changing). O(#files) driver cost, same as any scan's planning.
-    * Entries are newline-joined (a field could only contain '\n' via a
-    * file NAME, which HDFS forbids and local filesystems never emit
-    * for parquet parts) and digested with SHA-256 — distinct listings
-    * cannot alias by boundary ambiguity or by the easy polynomial
-    * collisions a 31-multiplier fold admits. */
-  private[graft] def dataFingerprint(s: SparkSession, d: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/embeddings.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val entries = scala.collection.mutable.ArrayBuffer[String]()
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val st = it.next()
-      entries += s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}"
-    }
-    val digest = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(entries.sorted.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // 16 hex chars (64 bits of SHA-256) keeps the dir name short; the
-    // collision budget is per-sf-dir (a handful of listings ever seen)
-    digest.take(8).map(b => f"$b%02x").mkString
-  }
-
-  private def indexDirName(d: String, fingerprint: String): String = {
-    // v-tag: a layout change invalidates old on-disk indexes instead
-    // of silently probing a stale format across build rounds; the
-    // data fingerprint does the same for a rewritten source table.
-    // v2 adds the 8-hex PATH digest managedIndexPath already carries
-    // (round-14 review): sanitization alone is lossy ('/a/sf0-1' and
-    // '/a/sf0_1' collide), and two sources sharing a GC prefix would
-    // collect each other's LIVE index on every alternating build.
-    val pathDigest = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(d.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .take(4).map(b => f"$b%02x").mkString
+  /** Index dir for source `d` at data fingerprint `fingerprint`
+    * ([[IndexTables.dataFingerprint]] of `embeddings.parquet`). The
+    * v-tag makes a layout change invalidate old on-disk indexes
+    * instead of silently probing a stale format; the fingerprint does
+    * the same for a rewritten source table. v2 adds the 8-hex PATH
+    * digest: sanitization alone is lossy ('/a/sf0-1' and '/a/sf0_1'
+    * collide), and two sources sharing a GC prefix would collect each
+    * other's LIVE index on every alternating build. */
+  private def indexDirName(d: String, fingerprint: String): String =
     "graft_ivf_index_v2_" + d.replaceAll("[^A-Za-z0-9.]", "_") +
-      "_" + pathDigest + "_" + fingerprint
-  }
+      "_" + IndexTables.pathDigest(d) + "_" + fingerprint
 
   /** Root for persisted/managed indexes: Spark conf `graft.index.root`
     * if set, else the JVM temp dir — the only writable scratch in this
@@ -286,15 +256,14 @@ object Ivf {
     * disk, never correctness, because live probes resolve through
     * their own fingerprint path.
     *
-    * A sibling is "this source's" only when the name is EXACTLY
-    * prefix + a fingerprint-shaped suffix (16 hex chars, the
-    * [[dataFingerprint]] width) — bare startsWith would let one
+    * A sibling is "this source's" only when it is a generation of
+    * this source's prefix ([[IndexTables.generationOf]]: EXACTLY
+    * prefix + a 16-hex fingerprint) — bare startsWith would let one
     * source dir whose sanitized name extends another's (`/data/sf0`
     * vs `/data/sf0_v2` → `..._data_sf0_` prefix-matches
     * `..._data_sf0_v2_<fp>`) GC the other's LIVE index on every
-    * build (round-11 advice). The shape test closes that class: the
-    * extended name's suffix carries its own path remnant + '_' + its
-    * 16-hex fingerprint, which can never itself be exactly 16 hex. */
+    * build (round-11 advice). The extended name's suffix carries its
+    * own path remnant + '_' + its fingerprint, which is never 16 hex. */
   private def gcStaleIndexes(s: SparkSession, d: String,
                              keepFingerprint: String): Unit =
     try {
@@ -307,14 +276,11 @@ object Ivf {
         d.replaceAll("[^A-Za-z0-9.]", "_") + "_"
       val root = new org.apache.hadoop.fs.Path(indexRoot(s))
       val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      def fpShaped(suffix: String): Boolean =
-        suffix.length == 16 && suffix.forall(c =>
-          (c >= '0' && c <= '9') || (c >= 'a' && c <= 'f'))
       fs.listStatus(root)
         .filter { st =>
           val n = st.getPath.getName
-          (n.startsWith(prefix) && n != keep && fpShaped(n.drop(prefix.length))) ||
-            (n.startsWith(retired) && fpShaped(n.drop(retired.length)))
+          (IndexTables.generationOf(prefix)(n) && n != keep) ||
+            IndexTables.generationOf(retired)(n)
         }
         .foreach(st => fs.delete(st.getPath, true))
     } catch { case scala.util.control.NonFatal(_) => () }
@@ -339,7 +305,7 @@ object Ivf {
     * returns its path. Fingerprint-keyed: a regenerated corpus gets a
     * fresh build, stale siblings are GC'd. */
   def ensureIndex(s: SparkSession, d: String): String = {
-    val fp = dataFingerprint(s, d)
+    val fp = IndexTables.dataFingerprint(s, d, "embeddings.parquet")
     val path = new org.apache.hadoop.fs.Path(
       indexRoot(s), indexDirName(d, fp)).toString
     val cFile = new org.apache.hadoop.fs.Path(path, CentroidsFile)
@@ -444,14 +410,10 @@ object Ivf {
     * sanitization alone is lossy ('/a/sf0-1' and '/a/sf0_1' collide),
     * and two sources sharing one managed dir would rebuild-thrash and
     * cross-serve each other's corpora. */
-  private def managedIndexPath(s: SparkSession, d: String): String = {
-    val digest = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(d.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .take(4).map(b => f"$b%02x").mkString
+  private def managedIndexPath(s: SparkSession, d: String): String =
     new org.apache.hadoop.fs.Path(indexRoot(s),
       "graft_ivf_managed_v1_" + d.replaceAll("[^A-Za-z0-9.]", "_") +
-        "_" + digest).toString
-  }
+        "_" + IndexTables.pathDigest(d)).toString
 
   /** Source file listing as (path, len, mtime) entries. */
   private def listSource(s: SparkSession, d: String): Seq[(String, Long, Long)] = {

@@ -1,9 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Checkpoint-lineage batch tags for the incremental-index ingest
-  * streams ([[StreamingSpans]], [[StreamingDedup]]).
+/** The checkpoint-lineage replay frame of the six replay-guarded
+  * streaming sinks ([[lineageSink]]): their durable checkpoint, the
+  * `_lineage` guard on their output dir ([[ensureLineage]]), and the
+  * per-batch tags of the incremental-index streams
+  * ([[StreamingSpans]], [[StreamingDedup]]).
   *
   * The incremental probes scope their replay self-match exclusion to
   * `src_batch === <probing batch's id>` — correct while batch ids are
@@ -28,6 +32,53 @@ import org.apache.spark.sql.SparkSession
   * streaming-layer concern.
   */
 private[graft] object StreamEpoch {
+
+  /** Starts `frame` as an append-mode stream whose every micro-batch
+    * runs `step(batch, batchId, tag)` inside one checkpoint lineage —
+    * the frame [[StreamingDedup]], [[StreamingSpans]],
+    * [[StreamingNovelty]], [[StreamingDecontam]],
+    * [[StreamingQuantiles]] and [[StreamingLedger]] share. `tag` is
+    * [[tag]] of the query id and the batch id; a step that keys its
+    * output on the raw `batchId` and does not scope an index
+    * exclusion ignores it.
+    *
+    * Restart semantics, owned here:
+    *  - The checkpoint is DURABLE by default (`<dir>/_checkpoint`,
+    *    same lifecycle as the outputs it protects). A temp checkpoint
+    *    would restart batch ids at 0 after a crash and could regroup
+    *    rows, leaving the prior run's batch-keyed outputs behind as
+    *    silent duplicates.
+    *  - Steps write per-batch outputs keyed by the batch id with
+    *    OVERWRITE semantics, so a replayed micro-batch (same id, same
+    *    rows, within one checkpoint) rewrites its own output instead
+    *    of appending duplicates.
+    *  - Batch ids are unique only per checkpoint. Every trigger
+    *    re-reads the query id and checks `dir`'s `_lineage` marker
+    *    ([[ensureLineage]]) before the step runs, so a new or wiped
+    *    checkpoint over an existing `dir` fails loudly instead of
+    *    overwriting or mis-skipping the old lineage's outputs.
+    *  - A step that appends to a table the next trigger reads calls
+    *    `spark.catalog.refreshTable` on the OUTER `spark`:
+    *    foreachBatch binds `batch` to a cloned session, whose insert
+    *    refreshes only the clone's relation cache, and a stale file
+    *    listing in the outer session would silently miss every
+    *    earlier append (StreamingNoveltySpec's cross-batch case). */
+  private[graft] def lineageSink(spark: SparkSession, frame: DataFrame,
+                                 dir: String, checkpointDir: Option[String])(
+      step: (DataFrame, Long, Long) => Unit): StreamingQuery = {
+    val cp = checkpointDir.getOrElse(s"$dir/_checkpoint")
+    frame.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", cp)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        // read per trigger, not cached: a checkpoint wiped and
+        // recreated under the same path must yield its fresh id
+        val qid = queryId(spark, cp)
+        ensureLineage(spark, dir, qid)
+        step(batch, batchId, tag(qid, batchId))
+      }
+      .start()
+  }
 
   /** The streaming query id recorded in the checkpoint's metadata
     * file — present before the first micro-batch runs (StreamExecution

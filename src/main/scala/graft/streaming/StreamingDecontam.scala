@@ -20,8 +20,9 @@ import graft.ops.IncrementalDecontam
   * foreachBatch is the right tool: the probe is a batch join against a
   * non-streaming table, which pure streaming operators can't express.
   * Unlike [[StreamingDedup]] the index is STATIC — screening a batch
-  * never mutates it — so replays are trivially idempotent on the index
-  * and the per-batch overwrite makes the sinks replay-safe too.
+  * never mutates it — so replays are trivially idempotent on the index,
+  * the step needs no batch tag and no table refresh, and the per-batch
+  * overwrite makes the sinks replay-safe too.
   */
 object StreamingDecontam {
 
@@ -29,29 +30,13 @@ object StreamingDecontam {
     * documents schema (doc_id, text, ...). Clean docs land in
     * `outDir/clean/batch_id=<id>/`; contaminated docs (joined with
     * their distinct-shingle hit counts) in
-    * `outDir/quarantine/batch_id=<id>/`.
-    *
-    * Restart semantics: both sinks are per-batch OVERWRITE into their
-    * own `batch_id=<id>/` directory, so a replayed micro-batch
-    * rewrites its directories instead of appending duplicates — but
-    * that only holds if batch ids and micro-batch BOUNDARIES replay
-    * identically, which requires a durable checkpoint: a restart on a
-    * fresh temp checkpoint restarts ids at 0 and can regroup rows,
-    * leaving the prior run's higher-numbered batch_id dirs as silent
-    * duplicates in the sink. The checkpoint therefore defaults to
-    * `outDir/_checkpoint` (same lifecycle as the sinks it protects);
-    * pass `checkpointDir` to relocate it. An outDir re-used under a
-    * NEW/wiped checkpoint fails loudly instead of stomping the prior
-    * lineage's batch dirs ([[StreamEpoch.ensureLineage]]). */
+    * `outDir/quarantine/batch_id=<id>/`. Restart semantics are
+    * [[StreamEpoch.lineageSink]]'s. */
   def screenedIngest(spark: SparkSession, streamingDocs: DataFrame,
                      indexTable: String, outDir: String,
-                     checkpointDir: Option[String] = None): StreamingQuery = {
-    val cp = checkpointDir.getOrElse(s"$outDir/_checkpoint")
-    streamingDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", cp)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        StreamEpoch.ensureLineage(spark, outDir, StreamEpoch.queryId(spark, cp))
+                     checkpointDir: Option[String] = None): StreamingQuery =
+    StreamEpoch.lineageSink(spark, streamingDocs, outDir, checkpointDir) {
+      (batch, batchId, _) =>
         val b = batch.persist()
         try {
           val hits = IncrementalDecontam.screenBatch(spark, b, indexTable)
@@ -68,7 +53,5 @@ object StreamingDecontam {
           } finally hits.unpersist()
         } finally b.unpersist()
         ()
-      }
-      .start()
-  }
+    }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.ops.IncrementalDedup
+import graft.ops.{Dedup, IncrementalDedup}
 
 /** Streaming ingest-with-dedup (ROADMAP #3): ties the persisted
   * signature index ([[graft.ops.IncrementalDedup]]) into a Structured
@@ -14,7 +14,7 @@ import graft.ops.IncrementalDedup
   *     1. probe the bucketed index for near-duplicates (index side
   *        stays unshuffled — only the batch moves);
   *     2. batch-internal dedup: keep the lowest doc_id per duplicate
-  *        group within the batch;
+  *        pair within the batch;
   *     3. append surviving uniques to the corpus sink AND the index,
   *        so later batches dedup against them.
   *
@@ -25,90 +25,66 @@ import graft.ops.IncrementalDedup
   */
 object StreamingDedup {
 
-  /** Batch-internal near-dup removal: among docs whose estimated
-    * Jaccard reaches `threshold`, keep the lowest doc_id of each
-    * connected pair (one hop — the planted-dup granularity). */
-  private def dropInternalDups(spark: SparkSession, batch: DataFrame,
-                               threshold: Double): DataFrame = {
-    val sigs = graft.ops.Dedup.withMinhash(batch)
-      .select(col("doc_id"), col("sig"), explode(col("bands")).as("bucket"))
-    val dupIds = sigs.as("a").join(sigs.as("b"), Seq("bucket"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .select(col("b.doc_id").as("dup_id"), col("a.sig").as("sa"), col("b.sig").as("sb"))
-      .filter(graft.functions.NativeExprs.sigMatches(col("sa"), col("sb"))
-        .cast("double") / graft.ops.Dedup.SigLen >= threshold)
-      .select(col("dup_id")).distinct()
-    batch.join(dupIds, batch("doc_id") === dupIds("dup_id"), "left_anti")
-  }
-
   /** Starts the deduped-ingest stream: `streamingDocs` must carry the
     * documents schema (doc_id, text, ...). Uniques land in `outDir`
-    * (one overwritten subdirectory per micro-batch) and are folded
-    * into the index table.
+    * (one overwritten `batch_id=<id>/` per micro-batch) and are
+    * folded into the index table. Restart semantics are
+    * [[StreamEpoch.lineageSink]]'s.
     *
-    * Restart semantics: the checkpoint is DURABLE by default
-    * (`outDir/_checkpoint`, the StreamingDecontam/StreamingNovelty
-    * convention — a temp checkpoint would restart batch ids at 0
-    * after a crash and leave the old batch_id dirs behind as silent
-    * corpus duplicates), and the corpus write is per-batch OVERWRITE
-    * into `batch_id=<id>/`, so a replayed micro-batch rewrites its
-    * own directory instead of appending duplicates. The index append
-    * is not transactional with the corpus write, but a replay
-    * converges: index rows carry the batch id that wrote them and
-    * probeBatch excludes exactly the SAME-batch self-matches (a batch
-    * replayed after its own appendToIndex landed would otherwise
-    * self-match at 1.0 and rewrite its dir EMPTY) and returns one row
-    * per (new_id, match_id) candidate, so doubled index rows change no
-    * dedup decision — they only waste the replayed rows' space. The
-    * batch-scoped exclusion (round-13 advice) keeps the OTHER
-    * redelivery mode covered too: an at-least-once source re-sending
-    * a doc_id in a LATER batch still matches its own earlier index
-    * entry and is dropped instead of landing in two batch dirs.
-    * The exclusion is scoped to the CHECKPOINT LINEAGE via
-    * [[StreamEpoch.tag]]: a wiped checkpoint restarts the batch
-    * id sequence, and a raw-id exclusion would let a NEW batch N
-    * claim the index rows the old lineage's batch N wrote — a doc
-    * redelivered in a same-numbered batch would skip its own earlier
-    * entries and land duplicated; the epoch tag makes it match them
-    * and be dropped, the documented redelivery semantics. */
+    * Batch-internal near-dups go through the batch pass's capped LSH
+    * core ([[Dedup.scoredPairs]]) over the cross-batch survivors'
+    * own signatures, computed once per trigger: one hop, and the
+    * higher id of every pair at est_jaccard ≥ `threshold` is dropped,
+    * so the lowest id wins. A band bucket with more than
+    * [[Dedup.MaxBucket]] members in one batch is skipped — the recall
+    * trade [[IncrementalDedup.probeBatch]] and the batch pass already
+    * make — and the estimate is rounded to 4 places as the probe's
+    * is (estimates are k/64, so no decision changes at 0.8).
+    *
+    * Same-batch self-exclusion: index rows carry the [[StreamEpoch.tag]]
+    * of the batch that wrote them, and probeBatch excludes exactly
+    * the SAME-batch self-matches. A batch replayed after its own
+    * appendToIndex landed would otherwise self-match at 1.0 and
+    * rewrite its dir EMPTY; probeBatch returns one row per (new_id,
+    * match_id), so doubled index rows change no dedup decision. An
+    * at-least-once source re-sending a doc_id in a LATER batch still
+    * matches its own earlier entry and is dropped, and after a
+    * checkpoint wipe the new lineage's tags match nothing the old
+    * one wrote, so a redelivered doc reads as the duplicate it is. */
   def dedupedIngest(spark: SparkSession, streamingDocs: DataFrame,
                     indexTable: String, outDir: String,
                     threshold: Double = 0.8,
-                    checkpointDir: Option[String] = None): StreamingQuery = {
-    val cp = checkpointDir.getOrElse(s"$outDir/_checkpoint")
-    streamingDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", cp)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val qid = StreamEpoch.queryId(spark, cp)
-        StreamEpoch.ensureLineage(spark, outDir, qid)
-        val tag = StreamEpoch.tag(qid, batchId)
+                    checkpointDir: Option[String] = None): StreamingQuery =
+    StreamEpoch.lineageSink(spark, streamingDocs, outDir, checkpointDir) {
+      (batch, batchId, tag) =>
         val b = batch.persist()
         try {
           val crossBatchDups = IncrementalDedup
             .probeBatch(spark, b, indexTable, threshold, batchId = tag)
             .select(col("new_id")).distinct()
-          val survivors = dropInternalDups(spark,
-            b.join(crossBatchDups, b("doc_id") === crossBatchDups("new_id"), "left_anti"),
-            threshold).persist()
-          // survivors' cache has its own finally: a failed corpus
-          // write or index append must not pin it for the session
+          // the cross-batch survivors with their signatures, read by
+          // the banding, both signature rejoins and the survivor
+          // filter: persisted here, never through Dedup's one-slot
+          // signature cache, which a trigger would evict from under a
+          // concurrent batch pass
+          val signed = Dedup.withMinhash(
+            b.join(crossBatchDups, b("doc_id") === crossBatchDups("new_id"), "left_anti"))
+            .persist()
           try {
-            survivors.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-            IncrementalDedup.appendToIndex(survivors, indexTable, srcBatch = tag)
-            // the StreamingNovelty discipline: foreachBatch binds the
-            // batch to a CLONED session, and the append's insertInto
-            // refresh there is not guaranteed to reach the OUTER
-            // session probeBatch reads the table through — a stale
-            // file listing would silently miss everything appended by
-            // earlier batches (a cross-batch dedup miss, the quiet
-            // failure mode). The refresh is idempotent; Novelty's spec
-            // caught this class empirically.
-            spark.catalog.refreshTable(indexTable)
-          } finally survivors.unpersist()
+            val internalDups = Dedup.scoredPairs(signed, threshold)
+              .select(col("id_b")).distinct()
+            val survivors = signed
+              .join(internalDups, signed("doc_id") === internalDups("id_b"), "left_anti")
+              .drop("sig", "bands").persist()
+            // survivors' cache has its own finally: a failed corpus
+            // write or index append must not pin it for the session
+            try {
+              survivors.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+              IncrementalDedup.appendToIndex(survivors, indexTable, srcBatch = tag)
+              spark.catalog.refreshTable(indexTable)
+            } finally survivors.unpersist()
+          } finally signed.unpersist()
         } finally b.unpersist()
         ()
-      }
-      .start()
-  }
+    }
 }

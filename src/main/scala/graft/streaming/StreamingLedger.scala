@@ -287,29 +287,21 @@ object StreamingLedger {
   /** The streaming hook: each micro-batch of `deltas` (raw rows — the
     * reduce happens inside [[applyBatch]], so the stream itself needs
     * NO stateful operator and no watermark) folds into the ledger
-    * exactly once, keyed by foreachBatch's replay-stable batch id. */
+    * exactly once, keyed by foreachBatch's replay-stable batch id.
+    *
+    * The `_applied` watermarks order RAW batch ids, so exactly-once
+    * holds only within one checkpoint lineage: a wiped checkpoint
+    * restarting at 0 would have every new batch SKIPPED as
+    * already-applied until its ids outgrow the old watermark (silent
+    * loss), and keying the watermarks by lineage instead would
+    * DOUBLE-APPLY re-served source data. [[StreamEpoch.lineageSink]]
+    * refuses both loudly; the rest of the restart semantics are its
+    * own. */
   def ledgerSink(spark: SparkSession, deltas: DataFrame, keys: Seq[String],
                  counters: Seq[String], ledgerDir: String, buckets: Int = 32,
-                 checkpointDir: Option[String] = None): StreamingQuery = {
-    val cp = checkpointDir.getOrElse(s"$ledgerDir/_checkpoint")
-    deltas.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", cp)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // exactly-once is only meaningful within ONE checkpoint
-        // lineage: the _applied watermarks order RAW batch ids, so a
-        // wiped/new checkpoint restarting at 0 against an existing
-        // ledger would have every new batch SKIPPED as already-applied
-        // until its ids outgrow the old watermark (silent data loss) —
-        // and re-served source data would DOUBLE-APPLY if we instead
-        // keyed watermarks by lineage. Both silent failure modes are
-        // wrong; refuse loudly and let the operator restore the
-        // checkpoint or start a fresh ledger (round-16 extension of
-        // the StreamingSpans/StreamingDedup lineage guard).
-        StreamEpoch.ensureLineage(spark, ledgerDir,
-          StreamEpoch.queryId(spark, cp))
+                 checkpointDir: Option[String] = None): StreamingQuery =
+    StreamEpoch.lineageSink(spark, deltas, ledgerDir, checkpointDir) {
+      (batch, batchId, _) =>
         applyBatch(spark, batch, keys, counters, ledgerDir, buckets, batchId)
-      }
-      .start()
-  }
+    }
 }

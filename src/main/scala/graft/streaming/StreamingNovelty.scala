@@ -26,28 +26,18 @@ import graft.ops.IncrementalNovelty
   * replayed batch re-screened after its own append self-attributes
   * its first occurrences and reproduces identical scores (pinned by
   * StreamingNoveltySpec's screen-after-append test), and the append's
-  * anti-join adds nothing the second time. The per-batch overwrite
-  * sink plus the durable default checkpoint (`outDir/_checkpoint`,
-  * StreamingDecontam's discipline: same lifecycle as the sinks it
-  * protects) close the remaining replay window — batch ids and
-  * boundaries replay identically, so a redone batch rewrites its own
-  * directory. */
+  * anti-join adds nothing the second time. Self-attribution is
+  * doc_id-keyed, so the INDEX is wipe-safe too: a cross-lineage
+  * redelivery reproduces its original verdicts, and the step needs
+  * no batch tag. The rest of the restart semantics are
+  * [[StreamEpoch.lineageSink]]'s. */
 object StreamingNovelty {
 
   def scoredIngest(spark: SparkSession, streamingDocs: DataFrame,
                    indexTable: String, outDir: String,
-                   checkpointDir: Option[String] = None): StreamingQuery = {
-    val cp = checkpointDir.getOrElse(s"$outDir/_checkpoint")
-    streamingDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", cp)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // an outDir re-used under a new/wiped checkpoint would have
-        // its prior lineage's scores dirs stomped by the restarted
-        // batch ids — fail loudly instead (note the INDEX itself is
-        // wipe-safe here: self-attribution is doc_id-keyed, so a
-        // cross-lineage redelivery reproduces its original verdicts)
-        StreamEpoch.ensureLineage(spark, outDir, StreamEpoch.queryId(spark, cp))
+                   checkpointDir: Option[String] = None): StreamingQuery =
+    StreamEpoch.lineageSink(spark, streamingDocs, outDir, checkpointDir) {
+      (batch, batchId, _) =>
         // shingle ONCE per trigger: the screen and the append both
         // consume the same (source, doc_id, fp) frame, and the
         // shingling explode over full text is the dominant batch-side
@@ -61,16 +51,8 @@ object StreamingNovelty {
           IncrementalNovelty.screenShingled(spark, sh, indexTable)
             .write.mode("overwrite").parquet(s"$outDir/scores/batch_id=$batchId")
           IncrementalNovelty.appendShingled(sh, indexTable)
-          // foreachBatch binds `b` to a CLONED session; the append's
-          // insertInto refreshes the CLONE's relation cache, while the
-          // outer session — which the next micro-batch's screen reads
-          // the table through — keeps its stale file listing and would
-          // silently miss everything just appended (caught by
-          // StreamingNoveltySpec's cross-batch restatement case)
           spark.catalog.refreshTable(indexTable)
         } finally sh.unpersist()
         ()
-      }
-      .start()
-  }
+    }
 }

@@ -83,28 +83,15 @@ object StreamingQuantiles {
   }
 
   /** The streaming hook: windowed HDR sketches of `events`, appended
-    * to the store as they finalize. The checkpoint defaults to a
-    * durable sibling of the store (the SnapshotStreamSpec-pinned
-    * lifecycle: checkpoint and store live and die together). */
+    * to the store as they finalize, one `batch=<id>` dir per raw batch
+    * id. Restart semantics are [[StreamEpoch.lineageSink]]'s. */
   def sketchStoreSink(spark: SparkSession, events: DataFrame,
                       storeDir: String,
-                      checkpointDir: Option[String] = None): StreamingQuery = {
-    val cp = checkpointDir.getOrElse(s"$storeDir/_checkpoint")
-    EventStream.windowedQuantileSketches(events)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", cp)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // overwrite-by-batch-id is only idempotent within one
-        // checkpoint lineage: a wiped checkpoint restarts ids at 0 and
-        // would overwrite the prior lineage's low-numbered batch= dirs
-        // with different windows (r16 lineage-guard sweep)
-        StreamEpoch.ensureLineage(spark, storeDir,
-          StreamEpoch.queryId(spark, cp))
-        persistBatch(batch, batchId, storeDir)
-      }
-      .start()
-  }
+                      checkpointDir: Option[String] = None): StreamingQuery =
+    StreamEpoch.lineageSink(spark, EventStream.windowedQuantileSketches(events),
+        storeDir, checkpointDir) { (batch, batchId, _) =>
+      persistBatch(batch, batchId, storeDir)
+    }
 
   /** Reads the persisted finalized-window sketches (win_start BIGINT
     * epoch-seconds, sk BINARY, n_events BIGINT). The `batch=<id>`

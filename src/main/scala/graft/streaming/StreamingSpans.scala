@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ops.IncrementalSpans
@@ -22,49 +21,28 @@ import graft.ops.IncrementalSpans
   * foreachBatch for the same reason as [[StreamingDedup]]: the probe
   * is a batch join against a non-streaming bucketed table. State
   * lives in the index table, not executor memory — restartable and
-  * unbounded-corpus-safe.
-  *
-  * Restart semantics (the StreamingDedup contract): durable
-  * checkpoint by default; the span write is per-batch OVERWRITE into
-  * `batch_id=<id>/`, so a replayed micro-batch rewrites its own
-  * directory; the index append is idempotent (anti-joined), and
-  * probeBatch's batch-scoped self-match exclusion keeps a
-  * replay-after-append emitting the SAME spans it emitted the first
-  * time instead of reading its own index entries as 100% staleness.
-  * The exclusion is scoped to the CHECKPOINT LINEAGE via
-  * [[StreamEpoch.tag]]: after a checkpoint wipe the restarted
-  * id sequence would otherwise collide with the ids already in the
-  * index, and a doc redelivered in a same-numbered batch would read
-  * its own historical entries as "my replay" and silently skip them —
-  * with the epoch tag it reads fully stale, the documented
-  * cross-lineage-redelivery semantics. */
+  * unbounded-corpus-safe. Restart semantics are
+  * [[StreamEpoch.lineageSink]]'s; the index append is idempotent
+  * (anti-joined), and probeBatch's same-batch self-match exclusion
+  * (scoped by [[StreamEpoch.tag]]) keeps a replay-after-append
+  * emitting the SAME spans it emitted the first time instead of
+  * reading its own index entries as 100% staleness. */
 object StreamingSpans {
 
   /** Starts the span-finding stream over `streamingDocs` (documents
     * schema: doc_id, text, ...). */
   def spanIngest(spark: SparkSession, streamingDocs: DataFrame,
                  indexTable: String, outDir: String,
-                 checkpointDir: Option[String] = None): StreamingQuery = {
-    val cp = checkpointDir.getOrElse(s"$outDir/_checkpoint")
-    streamingDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", cp)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val qid = StreamEpoch.queryId(spark, cp)
-        StreamEpoch.ensureLineage(spark, outDir, qid)
-        val tag = StreamEpoch.tag(qid, batchId)
+                 checkpointDir: Option[String] = None): StreamingQuery =
+    StreamEpoch.lineageSink(spark, streamingDocs, outDir, checkpointDir) {
+      (batch, batchId, tag) =>
         val b = batch.persist()
         try {
           IncrementalSpans.probeBatch(spark, b, indexTable, batchId = tag)
             .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
           IncrementalSpans.appendToIndex(b, indexTable, srcBatch = tag)
-          // the StreamingNovelty discipline: foreachBatch binds to a
-          // cloned session; refresh the OUTER session's listing so the
-          // next batch's probe sees this append
           spark.catalog.refreshTable(indexTable)
-        } finally { b.unpersist(); () }
+        } finally b.unpersist()
         ()
-      }
-      .start()
-  }
+    }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{Ivf, Similarity}
+import graft.ops.{IndexTables, Ivf, Similarity}
 
 class IvfSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -62,19 +62,39 @@ class IvfSpec extends AnyFunSuite {
 
   test("data fingerprint: deterministic, and a rewritten source table changes it") {
     import spark.implicits._
+    def fp(d: String) = IndexTables.dataFingerprint(spark, d, "embeddings.parquet")
     val dir = java.nio.file.Files.createTempDirectory("ivf_fp").toString
     Seq((0L, Seq(1.0, 2.0), 0)).toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val fp1 = Ivf.dataFingerprint(spark, dir)
-    assert(fp1 == Ivf.dataFingerprint(spark, dir), "fingerprint must be deterministic")
+    val fp1 = fp(dir)
+    assert(fp1 == fp(dir), "fingerprint must be deterministic")
     // overwrite = new part files (names + lengths + mtimes all move):
     // q70's index path is keyed on this, so a regenerated corpus can
     // never silently probe the stale index
     Seq((0L, Seq(9.0, 9.0), 0), (1L, Seq(1.0, 1.0), 1))
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    assert(fp1 != Ivf.dataFingerprint(spark, dir),
-      "rewritten source must change the fingerprint")
+    assert(fp1 != fp(dir), "rewritten source must change the fingerprint")
+    // two files swapping partition subdirectories, each keeping its
+    // name, length and mtime: a listing keyed on basenames reads the
+    // same, the relative paths do not
+    val swap = java.nio.file.Files.createTempDirectory("ivf_fp_swap")
+    def place(dirOfA: String, dirOfB: String): String = {
+      val root = swap.resolve("embeddings.parquet")
+      if (java.nio.file.Files.exists(root))
+        java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())
+          .forEach(p => java.nio.file.Files.delete(p))
+      Seq((dirOfA, "part-a.parquet", 10), (dirOfB, "part-b.parquet", 20)).foreach {
+        case (sub, name, len) =>
+          val f = root.resolve(sub).resolve(name)
+          java.nio.file.Files.createDirectories(f.getParent)
+          java.nio.file.Files.write(f, Array.fill[Byte](len)(1))
+          assert(f.toFile.setLastModified(1600000000000L))
+      }
+      fp(swap.toString)
+    }
+    assert(place("p=0", "p=1") != place("p=1", "p=0"),
+      "same-named files swapping subdirectories must change the fingerprint")
   }
 
   test("q70 index GC: rebuilding after a data rewrite leaves exactly one index dir") {

@@ -59,6 +59,27 @@ class SmokeSpec extends AnyFunSuite {
         s"missing mains: ${(contract -- mains).toSeq.sorted.mkString(", ")}")
   }
 
+  test("one session builder: no SparkSession.builder in src/main outside SparkEntry") {
+    // a main that built its own session drifted from the others'
+    // confs (three skipped the bucket sort-trust conf, so ExplainAudit
+    // printed plans Bench never ran); SparkEntry.session is the one
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"src/main/scala not found under ${System.getProperty("user.dir")}")
+    val files = java.nio.file.Files.walk(root)
+    val builders = try files.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.getFileName.toString == "SparkEntry.scala")
+      .flatMap { f =>
+        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if line.contains("SparkSession.builder") =>
+            s"$f:${i + 1}: ${line.trim}"
+        }
+      }.toList
+    finally files.close()
+    assert(builders.isEmpty, s"session builders outside SparkEntry:\n${builders.mkString("\n")}")
+  }
+
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name runs and returns rows at sf0.001") {
       val n = fn(spark, TestSpark.sf0001).count()

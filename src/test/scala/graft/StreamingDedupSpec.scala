@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.IncrementalDedup
+import graft.ops.{Dedup, IncrementalDedup}
 import graft.streaming.StreamingDedup
 
 class StreamingDedupSpec extends AnyFunSuite {
@@ -237,5 +237,64 @@ class StreamingDedupSpec extends AnyFunSuite {
     val got = spark.read.parquet(outDir).select("doc_id")
       .collect().map(_.getLong(0)).toSet
     assert(got == Set(300L), s"lowest id should win within a batch, got $got")
+  }
+
+  /** Builds `table` over one unrelated seed doc, then runs `docs` as
+    * ONE micro-batch of a fresh dedupedIngest; returns the survivors. */
+  private def oneTrigger(table: String, docs: org.apache.spark.sql.DataFrame): Set[Long] = {
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    val wh = new java.io.File(s"/tmp/graft-test-warehouse/$table")
+    if (wh.exists()) {
+      java.nio.file.Files.walk(wh.toPath)
+        .sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.delete(p))
+    }
+    import spark.implicits._
+    IncrementalDedup.buildIndex(
+      Seq((0L, "seed document with some words")).toDF("doc_id", "text"), table)
+    val streamDir = java.nio.file.Files.createTempDirectory(s"${table}_in").toString
+    val outDir = java.nio.file.Files.createTempDirectory(s"${table}_out").toString + "/uniques"
+    docs.coalesce(1).write.parquet(streamDir + "/f1")
+    val stream = spark.readStream.schema(docSchema)
+      .option("maxFilesPerTrigger", "1").parquet(streamDir + "/f*")
+    val q = StreamingDedup.dedupedIngest(spark, stream, table, outDir)
+    q.processAllAvailable()
+    q.stop()
+    spark.read.parquet(outDir).select("doc_id").collect().map(_.getLong(0)).toSet
+  }
+
+  test("batch-internal drops are the batch pass's id_b set: one hop, lowest id wins") {
+    import spark.implicits._
+    // a near-dup chain A~B~C with A≁C (estimates 0.84, 0.86 and 0.70
+    // under the seeded signatures), one exact pair, one singleton
+    def words(idx: Range) = idx.map(i => s"t50w$i").mkString(" ")
+    val batch = Seq(
+      (1L, words(0 until 40)),
+      (2L, words(3 until 43)),
+      (3L, words(6 until 46)),
+      (4L, "identical twins inside one single batch"),
+      (5L, "identical twins inside one single batch"),
+      (6L, "a singleton with nothing near it at all"))
+      .toDF("doc_id", "text")
+    val pass = Dedup.minhashCandidatePairsOf(batch, 0.8)
+      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pass == Set((1L, 2L), (2L, 3L), (4L, 5L)), s"planted pairs, got $pass")
+    val dropped = Set(1L, 2L, 3L, 4L, 5L, 6L) -- oneTrigger("stream_dedup_index6", batch)
+    assert(dropped == pass.map(_._2), s"stream dropped $dropped")
+  }
+
+  test("a dedup trigger leaves the batch pass's signature-cache slot in place") {
+    import spark.implicits._
+    val docs = graft.Tables.documents(spark, TestSpark.sf0001)
+    Dedup.minhashCandidatePairsOf(docs, 0.8).count()
+    // an equal plan finds the slot's registration (canonical equality)
+    def slotCached = Dedup.withMinhash(docs).select(col("doc_id"), col("sig"), col("bands"))
+      .storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    assert(slotCached, "setup: the batch pass registers its signature cache")
+    val survivors = oneTrigger("stream_dedup_index7", Seq(
+      (700L, "twins that the trigger's internal pass drops"),
+      (701L, "twins that the trigger's internal pass drops")).toDF("doc_id", "text"))
+    assert(survivors == Set(700L))
+    assert(slotCached, "a stream trigger evicted the batch pass's signature cache")
   }
 }

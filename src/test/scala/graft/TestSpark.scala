@@ -2,25 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (JVM-wide; getOrCreate). */
+/** One shared local session for all suites (JVM-wide; getOrCreate):
+  * the mains' session ([[SparkEntry.session]]) at a fixed 4 cores,
+  * whatever `SPARK_GRAFT_CPUS` says. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
-      .config("spark.ui.enabled", "false")
-      // write-sorted bucketed tables (Bucketing.writeBucketed: one
-      // sorted file per bucket) read back sort-free; Spark guards the
-      // reported ordering behind single-file-per-bucket, so appended
-      // (multi-file) buckets still plan their own Sort correctly
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = SparkEntry.session(4, Map(
+    "spark.app.name" -> "graft-test",
+    "spark.sql.warehouse.dir" -> "/tmp/graft-test-warehouse"))
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
 }
