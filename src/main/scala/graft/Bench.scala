@@ -170,7 +170,7 @@ object Bench {
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
     val deadlineSec = sys.env.get("SPARK_GRAFT_BENCH_DEADLINE_S")
       .map(_.toDouble).getOrElse(DefaultDeadlineSec)
-    val spark = SparkEntry.session(cpus)
+    val spark = SparkEntry.session()
     // session warmup: exercise codegen, shuffle, and the parquet reader
     // once so the first timed query measures the query, not JVM warmup
     spark.range(1 << 20).selectExpr("sum(id)").collect()

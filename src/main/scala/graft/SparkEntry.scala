@@ -13,8 +13,12 @@ import graft.ops.{AsOf, Bucketing, Classifier, Cluster, Curation, Dedup, Graph, 
   */
 object SparkEntry {
 
-  /** Local cores for the mains' sessions: `SPARK_GRAFT_CPUS`, default 4. */
-  private[graft] def envCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(4)
+  /** Local cores for the mains' sessions: `SPARK_GRAFT_CPUS`, default 4.
+    * A whole number only: it also sets the shuffle partition count. */
+  private[graft] def envCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map { v =>
+    v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_CPUS must be a positive whole number of local cores, got '$v'"))
+  }.getOrElse(4)
 
   /** The one session every main and the test suite run on: `cpus`
     * local cores and as many shuffle partitions, UTC, no UI, and

@@ -160,7 +160,9 @@ object Dedup {
   /** The est-scored LSH core over an already-signed frame carrying
     * (doc_id, sig, bands): [[bandedPairs]] (with its [[MaxBucket]] cap), the
     * two signature rejoins, then `est_jaccard` (rounded to 4 places)
-    * ≥ `minEst`. Returns (id_a, id_b, est_jaccard), id_a < id_b.
+    * ≥ `minEst`. Returns (id_a, id_b, est_jaccard), id_a < id_b
+    * even where a doc_id repeats in `signed` (with one row per
+    * matching signature pair then; callers dedup on the ids).
     * `signed` is read three times, so the caller caches it:
     * [[minhashCandidatePairsOf]] through [[swapSigCache]], a
     * streaming trigger by its own persist. */
@@ -208,11 +210,14 @@ object Dedup {
     // every bucket over MaxBucket rows map-side, so no group buffers
     // more than MaxBucket ids (the skew bomb this cap exists for
     // cannot reach the aggregate) — and the i<j pairs are generated
-    // map-side from the sorted list. Same candidate set: a doc
-    // appears at most once per (band, bucket), array_sort + i<j emits
-    // exactly the id_a < id_b pairs the join produced, and the
+    // map-side from the sorted list. Same candidate set: array_sort
+    // + i<j emits the id_a <= id_b pairs the join produced, and the
     // distinct collapses cross-band repeats as before. One exchange
-    // of the exploded frame instead of two.
+    // of the exploded frame instead of two. The strict filter keeps
+    // a doc_id that occurs twice in the frame (a stream redelivering
+    // a doc inside one micro-batch) from pairing with itself: its
+    // copies would score 1.0 against each other and a caller dropping
+    // every id_b would lose the doc outright.
     inSmall
       .groupBy(col("band_idx"), col("bucket"))
       .agg(array_sort(collect_list(col("doc_id"))).as("ids"))
@@ -220,6 +225,7 @@ object Dedup {
         transform(slice(col("ids"), i + lit(2), size(col("ids"))), b =>
           struct(a.as("id_a"), b.as("id_b")))))).as("pair"))
       .select(col("pair.id_a"), col("pair.id_b"))
+      .filter(col("id_a") < col("id_b"))
       .distinct()
   }
 

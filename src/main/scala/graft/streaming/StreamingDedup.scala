@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -31,15 +32,25 @@ object StreamingDedup {
     * folded into the index table. Restart semantics are
     * [[StreamEpoch.lineageSink]]'s.
     *
-    * Batch-internal near-dups go through the batch pass's capped LSH
-    * core ([[Dedup.scoredPairs]]) over the cross-batch survivors'
-    * own signatures, computed once per trigger: one hop, and the
-    * higher id of every pair at est_jaccard ≥ `threshold` is dropped,
-    * so the lowest id wins. A band bucket with more than
-    * [[Dedup.MaxBucket]] members in one batch is skipped — the recall
-    * trade [[IncrementalDedup.probeBatch]] and the batch pass already
-    * make — and the estimate is rounded to 4 places as the probe's
-    * is (estimates are k/64, so no decision changes at 0.8).
+    * Batch-internal near-dups: exact copies of the cross-batch
+    * survivors (equal signatures, so est_jaccard 1.0) first collapse
+    * to their lowest doc_id in one linear window over the signature;
+    * the representatives then go through the batch pass's capped LSH
+    * core ([[Dedup.scoredPairs]]) over their own signatures, computed
+    * once per trigger: one hop, and the higher id of every pair at
+    * est_jaccard ≥ `threshold` is dropped, so the lowest id wins. A
+    * band bucket with more than [[Dedup.MaxBucket]] representatives
+    * in one batch is skipped — the recall trade
+    * [[IncrementalDedup.probeBatch]] and the batch pass already make
+    * — and the estimate is rounded to 4 places as the probe's is
+    * (estimates are k/64, so no decision changes at 0.8). An exact
+    * flood (boilerplate, spam) never meets the cap: it collapses
+    * before banding and enters the index as one row per band. More
+    * than MaxBucket DISTINCT near-copies sharing a band bucket do
+    * meet it: they all land, their index rows take that bucket over
+    * probeBatch's cap, and later batches skip the bucket as well. A
+    * doc_id repeated within one batch is never paired with itself,
+    * so every copy of it lands.
     *
     * Same-batch self-exclusion: index rows carry the [[StreamEpoch.tag]]
     * of the batch that wrote them, and probeBatch excludes exactly
@@ -62,19 +73,21 @@ object StreamingDedup {
           val crossBatchDups = IncrementalDedup
             .probeBatch(spark, b, indexTable, threshold, batchId = tag)
             .select(col("new_id")).distinct()
-          // the cross-batch survivors with their signatures, read by
-          // the banding, both signature rejoins and the survivor
-          // filter: persisted here, never through Dedup's one-slot
-          // signature cache, which a trigger would evict from under a
-          // concurrent batch pass
-          val signed = Dedup.withMinhash(
-            b.join(crossBatchDups, b("doc_id") === crossBatchDups("new_id"), "left_anti"))
+          // the cross-batch survivors' exact-copy representatives with
+          // their signatures, read by the banding, both signature
+          // rejoins and the survivor filter: persisted here, never
+          // through Dedup's one-slot signature cache, which a trigger
+          // would evict from under a concurrent batch pass
+          val reps = Dedup.withMinhash(
+              b.join(crossBatchDups, b("doc_id") === crossBatchDups("new_id"), "left_anti"))
+            .withColumn("keep_id", min(col("doc_id")).over(Window.partitionBy(col("sig"))))
+            .filter(col("doc_id") === col("keep_id")).drop("keep_id")
             .persist()
           try {
-            val internalDups = Dedup.scoredPairs(signed, threshold)
+            val internalDups = Dedup.scoredPairs(reps, threshold)
               .select(col("id_b")).distinct()
-            val survivors = signed
-              .join(internalDups, signed("doc_id") === internalDups("id_b"), "left_anti")
+            val survivors = reps
+              .join(internalDups, reps("doc_id") === internalDups("id_b"), "left_anti")
               .drop("sig", "bands").persist()
             // survivors' cache has its own finally: a failed corpus
             // write or index append must not pin it for the session
@@ -83,7 +96,7 @@ object StreamingDedup {
               IncrementalDedup.appendToIndex(survivors, indexTable, srcBatch = tag)
               spark.catalog.refreshTable(indexTable)
             } finally survivors.unpersist()
-          } finally signed.unpersist()
+          } finally reps.unpersist()
         } finally b.unpersist()
         ()
     }

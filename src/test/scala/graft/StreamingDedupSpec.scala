@@ -239,9 +239,11 @@ class StreamingDedupSpec extends AnyFunSuite {
     assert(got == Set(300L), s"lowest id should win within a batch, got $got")
   }
 
-  /** Builds `table` over one unrelated seed doc, then runs `docs` as
-    * ONE micro-batch of a fresh dedupedIngest; returns the survivors. */
-  private def oneTrigger(table: String, docs: org.apache.spark.sql.DataFrame): Set[Long] = {
+  /** Builds `table` over one unrelated seed doc, then runs `batches`
+    * as consecutive micro-batches of a fresh dedupedIngest; returns
+    * the survivors' doc_ids, one entry per landed row. */
+  private def triggers(table: String,
+                       batches: org.apache.spark.sql.DataFrame*): Seq[Long] = {
     spark.sql(s"DROP TABLE IF EXISTS $table")
     val wh = new java.io.File(s"/tmp/graft-test-warehouse/$table")
     if (wh.exists()) {
@@ -254,14 +256,18 @@ class StreamingDedupSpec extends AnyFunSuite {
       Seq((0L, "seed document with some words")).toDF("doc_id", "text"), table)
     val streamDir = java.nio.file.Files.createTempDirectory(s"${table}_in").toString
     val outDir = java.nio.file.Files.createTempDirectory(s"${table}_out").toString + "/uniques"
-    docs.coalesce(1).write.parquet(streamDir + "/f1")
+    batches.zipWithIndex.foreach { case (docs, i) =>
+      docs.coalesce(1).write.parquet(s"$streamDir/f${i + 1}") }
     val stream = spark.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", "1").parquet(streamDir + "/f*")
     val q = StreamingDedup.dedupedIngest(spark, stream, table, outDir)
     q.processAllAvailable()
     q.stop()
-    spark.read.parquet(outDir).select("doc_id").collect().map(_.getLong(0)).toSet
+    spark.read.parquet(outDir).select("doc_id").collect().map(_.getLong(0)).toSeq
   }
+
+  private def oneTrigger(table: String, docs: org.apache.spark.sql.DataFrame): Set[Long] =
+    triggers(table, docs).toSet
 
   test("batch-internal drops are the batch pass's id_b set: one hop, lowest id wins") {
     import spark.implicits._
@@ -296,5 +302,35 @@ class StreamingDedupSpec extends AnyFunSuite {
       (701L, "twins that the trigger's internal pass drops")).toDF("doc_id", "text"))
     assert(survivors == Set(700L))
     assert(slotCached, "a stream trigger evicted the batch pass's signature cache")
+  }
+
+  test("a doc_id repeated within one trigger lands: its copies never pair with each other") {
+    import spark.implicits._
+    // an at-least-once source re-sending a doc inside the same
+    // micro-batch: both copies band into the same buckets, and a
+    // self-pair would score 1.0 and drop the doc outright
+    val landed = triggers("stream_dedup_index8", Seq(
+      (800L, "a document the source delivered twice in one batch"),
+      (800L, "a document the source delivered twice in one batch"),
+      (801L, "an unrelated neighbour that keeps its own place")).toDF("doc_id", "text"))
+    assert(landed.toSet == Set(800L, 801L), s"got $landed")
+    assert(landed.count(_ == 800L) == 2, s"every copy of a repeated doc_id lands, got $landed")
+  }
+
+  test("an exact flood over MaxBucket in one trigger keeps its lowest id and stays one index entry") {
+    import spark.implicits._
+    // more identical docs than the band-bucket cap admits: banded
+    // alone, every bucket they share is skipped and all of them land
+    val text = "the same boilerplate footer pasted into every page"
+    val flood = (1000L until 1000L + Dedup.MaxBucket + 50).map(i => (i, text))
+    val table = "stream_dedup_index9"
+    val landed = triggers(table,
+      flood.toDF("doc_id", "text"),
+      Seq((5000L, text), (5001L, "a fresh page with its own words")).toDF("doc_id", "text"))
+    assert(landed.sorted == Seq(1000L, 5001L),
+      s"got ${landed.size} rows, first ${landed.sorted.take(5)}")
+    val indexed = spark.table(table).select("doc_id").distinct()
+      .collect().map(_.getLong(0)).toSet
+    assert(indexed == Set(0L, 1000L, 5001L), s"the flood must enter the index once, got $indexed")
   }
 }
