@@ -1,6 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** Bucketed (pre-partitioned, pre-sorted) tables: the co-located join
   * path for repeated fact-fact joins at 100 TB — both sides hash-
@@ -24,22 +26,48 @@ object Bucketing {
     * 100 TB sides at read time, the exact cost this module claims is
     * paid once at write. repartition(n, col) and bucketBy share the
     * same murmur3 pmod placement, so task i holds exactly bucket i and
-    * each bucket lands as one sorted file. (Every append to a
-    * bucketed table re-opens the multi-file case. The appending
-    * indexes align the batch to the bucket layout first — by this
-    * repartition (IncrementalDedup) or through the exchange of a merge
-    * anti-join against the index (IncrementalSpans, IncrementalNovelty)
-    * — so an append adds one file per bucket it touches rather than
-    * one per write task and bucket; they pin merge-join shape with an
-    * explicit hint and don't rely on the file-level sort.) */
+    * each bucket lands as one sorted file. [[appendBucketed]] keeps
+    * the placement, not the single file. */
   def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
-    df.repartition(buckets, org.apache.spark.sql.functions.col(key))
+    df.repartition(buckets, col(key))
       .write
       .mode("overwrite")
       .bucketBy(buckets, key)
       .sortBy(key)
       .format("parquet")
       .saveAsTable(table)
+
+  /** `df` repartitioned on `key` to `table`'s CURRENT bucket count
+    * (read on every call, so an index rebuilt with another count is
+    * followed) — the [[writeBucketed]] placement, so partition i holds
+    * exactly bucket i. A name with no bucket spec (a view, a missing
+    * or unbucketed table) returns `df` as is: still correct, only not
+    * aligned. Aligning a probe batch before its `key` window lets the
+    * window and the bucket-colocated merge join share one exchange;
+    * without it the window shuffles to spark.sql.shuffle.partitions
+    * and the join re-shuffles to the bucket count. An already aligned
+    * frame costs nothing: Spark drops a repartition its child's
+    * partitioning already satisfies. */
+  def alignTo(df: DataFrame, table: String, key: String): DataFrame =
+    PlanBridge.numBuckets(df.sparkSession, table)
+      .map(b => df.repartition(b, col(key))).getOrElse(df)
+
+  /** Appends `df` to a bucketed table: [[alignTo]], then an insert, so
+    * write task i holds exactly bucket i and the append adds ONE FILE
+    * PER BUCKET it touches. Unaligned, each write task emits a file
+    * for every bucket it holds and every later probe opens them all.
+    * Only the appended rows shuffle; the table is never read.
+    *
+    * Every append re-opens the multi-file bucket, so Spark stops
+    * trusting the write-time sort: readers plan a Sort (BucketingSpec
+    * pins it) and pin merge-join shape with an explicit hint.
+    * Appended tables are append-MUTABLE, so they carry NO Bloom
+    * sidecar (unlike the static decontam index): a filter built at
+    * build time goes stale on the first append, and a stale filter
+    * drops keys that would have joined — silently missed matches.
+    * Compaction and replace-by-key land here when they come. */
+  def appendBucketed(df: DataFrame, table: String, key: String): Unit =
+    alignTo(df, table, key).write.mode("append").format("parquet").insertInto(table)
 
   /** Joins two bucketed tables on their bucket key. The MERGE hint pins
     * SortMergeJoin so the bucket layout (not a runtime broadcast) is
@@ -77,7 +105,6 @@ object Bucketing {
     * for the join you run every day. PlanShapeSpec pins
     * exchange-free + sort-free; the oracle is the plain SQL join. */
   def q197BucketedJoin(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.functions._
     val tOrders = IndexTables.ensureTable(s, "graft_bkt_orders_v1_", d)(
       t => writeBucketed(
         graft.Tables.orders(s, d).withColumnRenamed("o_custkey", "custkey"),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental DECONTAMINATION against a persisted test-set fingerprint
@@ -32,14 +32,14 @@ object IncrementalDecontam {
 
   /** Sidecar Bloom filter file for an index table — lives next to the
     * table directory in the warehouse under the same name prefix, so
-    * [[gcIndexTables]]' sweep collects it with its table. Resolved
+    * [[IndexTables.gcTables]]' sweep collects it with its table. Resolved
     * through the Hadoop FileSystem (like [[Ivf]]'s centroid file), so
     * an hdfs:// or s3a:// warehouse works the same as file:. */
   private def bloomSidecarPath(s: SparkSession, table: String): org.apache.hadoop.fs.Path = {
     val raw = new org.apache.hadoop.fs.Path(
       s.conf.get("spark.sql.warehouse.dir"), table + "_bloom.bin")
     // makeQualified so the path's STRING form matches what listStatus
-    // returns: bloomCache is keyed on it, and gcIndexTables evicts by
+    // returns: bloomCache is keyed on it, and IndexTables.gcTables evicts by
     // the listed path — an unqualified warehouse dir (no scheme) would
     // otherwise leave GC'd filters cached for the JVM lifetime
     // (r8 ADVICE)
@@ -179,9 +179,6 @@ object IncrementalDecontam {
 
   // ------------------------------------------------------------- q78
 
-  /** q63/q72's train/test hash-split rule (substr(md5(id),1,2)). */
-  private def hashBucket(c: Column): Column = IndexTables.hashBucket(c)
-
   // Lifecycle (data fingerprint, fingerprint-keyed naming,
   // collision-safe GC of tables + bloom sidecars) is the shared
   // [[IndexTables]] discipline; the sweep hook evicts this family's
@@ -210,6 +207,7 @@ object IncrementalDecontam {
     * invariant, StreamingDecontamSpec the screenBatch semantics. */
   def q78DecontamProbeIndex(s: SparkSession, d: String): DataFrame = {
     import graft.Tables.documents
+    import IndexTables.hashBucket
     val table = IndexTables.tableName(TablePrefix, d,
       IndexTables.dataFingerprint(s, d))
     // a table whose bloom sidecar is missing, corrupt, or an older

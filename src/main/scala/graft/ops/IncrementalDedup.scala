@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.functions.NativeExprs
 
@@ -16,22 +15,14 @@ import graft.functions.NativeExprs
   * the probe join against a batch's buckets is shuffle-free on the
   * index side — the index (the 100 TB side) never moves. Only the
   * batch (the small side) shuffles: into the probe join's alignment,
-  * and into the bucket layout before an append, so each append adds
-  * one file per bucket it touches, not one per (write task, bucket).
+  * and into the bucket layout before an append
+  * ([[Bucketing.appendBucketed]], which also says why there is no
+  * Bloom sidecar here, unlike IncrementalDecontam).
   *
   * The batch id enters every plan as [[graft.functions.RuntimeLong]],
   * not as a literal: streaming ids are unique per trigger, and a
   * literal would recompile the probe's and the append's whole-stage
   * classes on every batch.
-  *
-  * Deliberately NO Bloom sidecar here (unlike IncrementalDecontam):
-  * this index is append-MUTABLE (appendToIndex), so a filter built at
-  * build time goes stale on the first append — and a stale Bloom
-  * produces false NEGATIVES (batch band keys wrongly dropped before
-  * the join), i.e. silently missed duplicates. The decontam index is
-  * static so its sidecar can never under-match there. The upside is
-  * also small: a probe moves ~bands-per-doc (4) keys per batch doc,
-  * not the ~hundreds of shingle fingerprints decontamination moves.
   */
 object IncrementalDedup {
 
@@ -46,15 +37,14 @@ object IncrementalDedup {
     * records WHICH micro-batch wrote the row — what lets probeBatch
     * distinguish a replay of the same batch (must not self-match, see
     * there) from a cross-batch redelivery of the same doc_id (must). */
-  private def explodedSigs(docs: DataFrame, srcBatch: Long): DataFrame =
-    withMinhash(docs)
-      .select(col("doc_id"), col("sig"), explode(col("bands")).as("bucket"),
-              NativeExprs.runtimeLong(srcBatch).as("src_batch"))
+  private def explodedSigs(signed: DataFrame, srcBatch: Long): DataFrame =
+    signed.select(col("doc_id"), col("sig"), explode(col("bands")).as("bucket"),
+      NativeExprs.runtimeLong(srcBatch).as("src_batch"))
 
   /** (Re)builds the persisted index as a bucketed managed table. */
   def buildIndex(docs: DataFrame, table: String, buckets: Int = 32,
                  srcBatch: Long = NoBatch): Unit =
-    Bucketing.writeBucketed(explodedSigs(docs, srcBatch), table, "bucket", buckets)
+    Bucketing.writeBucketed(explodedSigs(withMinhash(docs), srcBatch), table, "bucket", buckets)
 
   /** Dedupes a new batch against the index: returns (new_id, match_id,
     * est_jaccard) for batch docs whose estimated Jaccard against an
@@ -82,7 +72,15 @@ object IncrementalDedup {
                  threshold: Double = 0.8,
                  maxBucket: Int = Dedup.MaxBucket,
                  batchId: Long = NoBatch,
-                 bandsUsed: Int = Dedup.Bands): DataFrame = {
+                 bandsUsed: Int = Dedup.Bands): DataFrame =
+    probeSigned(spark, withMinhash(batch), table, threshold, maxBucket, batchId, bandsUsed)
+
+  /** [[probeBatch]] over a batch already carrying [[Dedup.withMinhash]]'s
+    * `sig` and `bands`, so a caller that also appends the batch signs
+    * it once. */
+  private[graft] def probeSigned(spark: SparkSession, signed: DataFrame, table: String,
+                                 threshold: Double, maxBucket: Int, batchId: Long,
+                                 bandsUsed: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(bandsUsed >= 1 && bandsUsed <= Dedup.Bands,
       s"bandsUsed must be in [1, ${Dedup.Bands}], got $bandsUsed")
@@ -96,7 +94,7 @@ object IncrementalDedup {
     // a band-0 batch key can also collide with a DIFFERENT band's
     // index bucket, but such cross-band candidates die in the
     // sigMatches filter like any other false candidate).
-    val batchSigs = withMinhash(batch)
+    val batchSigs = signed
       .select(col("doc_id").as("new_id"), col("sig").as("new_sig"),
               explode(slice(col("bands"), 1, bandsUsed)).as("bucket"))
     // r20: Int.MaxValue is the UNCAPPED sentinel (q199's exact probe
@@ -149,23 +147,15 @@ object IncrementalDedup {
     cands.groupBy("new_id", "match_id").agg(max("est_jaccard").as("est_jaccard"))
   }
 
-  /** Appends a batch's signatures to the index (after dedup decisions).
-    *
-    * The batch is first repartitioned to the table's CURRENT bucket
-    * layout (read on every append, so an index rebuilt with another
-    * count is followed) — the murmur3 pmod placement bucketBy uses,
-    * as in [[Bucketing.writeBucketed]] — so write task i holds
-    * exactly bucket i and the append adds one file per bucket it
-    * touches. Unaligned, each write task emits a file for every
-    * bucket it holds and every later probe opens them all. Only the
-    * batch shuffles; a name with no bucket spec is written as is. */
+  /** Appends a batch's signatures to the index (after dedup
+    * decisions) through [[Bucketing.appendBucketed]]. */
   def appendToIndex(docs: DataFrame, table: String,
-                    srcBatch: Long = NoBatch): Unit = {
-    val sigs = explodedSigs(docs, srcBatch)
-    PlanBridge.numBuckets(docs.sparkSession, table)
-      .map(b => sigs.repartition(b, col("bucket"))).getOrElse(sigs)
-      .write.mode("append").format("parquet").insertInto(table)
-  }
+                    srcBatch: Long = NoBatch): Unit =
+    appendSigned(withMinhash(docs), table, srcBatch)
+
+  /** [[appendToIndex]] over an already-signed batch; see [[probeSigned]]. */
+  private[graft] def appendSigned(signed: DataFrame, table: String, srcBatch: Long): Unit =
+    Bucketing.appendBucketed(explodedSigs(signed, srcBatch), table, "bucket")
 
   // ------------------------------------------------- q189 (bench form)
 
@@ -197,20 +187,15 @@ object IncrementalDedup {
     * `< 'c0'` corpus slice, built once per (source dir, fingerprint);
     * returns (batch slice, table name). */
   private def ensureQ189Index(s: SparkSession, d: String): (DataFrame, String) = {
-    import graft.Tables.documents
-    import IndexTables.hashBucket
+    val (corpus, batch) = IndexTables.corpusAndBatch(
+      graft.Tables.documents(s, d).select(col("doc_id"), col("text")))
     val table = IndexTables.ensureTable(s, TablePrefix, d) { t =>
       // retired schema generation (pre-src_batch); gcTables is
       // prefix-scoped, so the old family needs its own sweep or a
       // prior session's v1 table leaks warehouse disk forever
       IndexTables.gcTables(s, "graft_dedup_idx_v1_", d)
-      buildIndex(documents(s, d)
-        .filter(hashBucket(col("doc_id").cast("string")) < "c0")
-        .select(col("doc_id"), col("text")), t)
+      buildIndex(corpus, t)
     }
-    val batch = documents(s, d)
-      .filter(hashBucket(col("doc_id").cast("string")) >= "c0")
-      .select(col("doc_id"), col("text"))
     (batch, table)
   }
 
@@ -265,8 +250,7 @@ object IncrementalDedup {
       sort_array(array_distinct(split(c, " ")))
     val newTexts = batch.select(col("doc_id").as("new_id"),
       col("text").as("text_new"))
-    val trainTexts = graft.Tables.documents(s, d)
-      .filter(IndexTables.hashBucket(col("doc_id").cast("string")) < "c0")
+    val trainTexts = IndexTables.corpusAndBatch(graft.Tables.documents(s, d))._1
       .select(col("doc_id").as("match_id"), col("text").as("text_match"))
     broadcast(newTexts.join(broadcast(cands), Seq("new_id")))
       .join(trainTexts, Seq("match_id"))

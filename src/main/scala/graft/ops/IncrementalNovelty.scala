@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Incremental first-occurrence novelty against a persisted shingle
@@ -12,14 +11,8 @@ import org.apache.spark.sql.functions._
   * the corpus has already seen, then its own new shingles join the
   * index.
   *
-  * Index layout: the distinct seen-shingle fps, written bucketed +
-  * sorted on `fp` (Bucketing.writeBucketed) — the probe's anti-join
-  * and the append's dedup anti-join both merge-join WITHOUT shuffling
-  * the index side (the 100 TB side never moves; only the batch
-  * aligns). Like [[IncrementalDedup]] — and unlike the static
-  * decontam index — this index is append-mutable, so NO Bloom
-  * sidecar: a stale filter would report arriving shingles as unseen
-  * and silently inflate novelty.
+  * Index layout: the shared [[FirstSeenIndex]], one `(fp, first_doc)`
+  * row per distinct seen shingle.
   *
   * Exact-replay contract (pinned by IncrementalNoveltySpec): feeding
   * doc_id-ordered batches through screen-then-append reproduces
@@ -41,72 +34,41 @@ object IncrementalNovelty {
       explode(array_distinct(graft.functions.NativeExprs.shingleHashes(
         split(col("text"), " "), Text.NoveltyN))).as("fp"))
 
-  /** A corpus reduced to the index layout: one `(fp, first_doc)` row
-    * per distinct shingle. Carrying the claiming doc id (not a bare fp
-    * set) is what makes screening IDEMPOTENT under at-least-once
-    * replay: a batch re-screened after its own append still
-    * self-attributes its first occurrences ([[screenBatch]]). */
-  private def fpOwners(docs: DataFrame): DataFrame =
-    docShingles(docs).groupBy(col("fp"))
-      .agg(min(col("doc_id")).as("first_doc"))
-
   /** (Re)builds the persisted seen-shingle index from a corpus. */
   def buildIndex(docs: DataFrame, table: String, buckets: Int = 32): Unit =
-    Bucketing.writeBucketed(fpOwners(docs), table, "fp", buckets)
+    FirstSeenIndex.build(docShingles(docs), table, buckets)
 
   /** Scores a batch against the index: `(source, doc_id, total,
     * novel, novelty)` where `novel` counts the doc's distinct
     * shingles that are first-occurring (min doc_id) within the batch
     * AND either unseen by the index or already claimed by THIS doc
     * (the self-attribution that makes a replayed screen-after-append
-    * return identical scores). ONE shingling pass: the seen test is a
-    * left-outer merge join against the bucketed index (no index-side
-    * exchange), safe from row multiplication because the index is
-    * invariantly distinct on fp — buildIndex aggregates per fp and
-    * appendToIndex only appends anti-joined survivors; the min window
-    * partitions by fp over the BATCH only. */
+    * return identical scores). ONE shingling pass, probed through
+    * [[FirstSeenIndex.seen]]. */
   def screenBatch(spark: SparkSession, batch: DataFrame, table: String): DataFrame =
     screenShingled(spark, docShingles(batch), table)
 
   /** [[screenBatch]] over a pre-shingled `(source, doc_id, fp)` frame
     * ([[docShingles]] output — possibly persisted by the caller). */
   private[graft] def screenShingled(spark: SparkSession, shingles: DataFrame,
-                                    table: String): DataFrame = {
-    // pre-align the batch to the index's bucket layout so the fp
-    // window and the bucket-colocated join share ONE exchange (the
-    // IncrementalSpans.probeBatch rationale; without it the batch
-    // shingles shuffle twice whenever shuffle.partitions ≠ buckets)
-    val aligned = org.apache.spark.sql.graftbridge.PlanBridge
-      .numBuckets(spark, table)
-      .map(b => shingles.repartition(b, col("fp"))).getOrElse(shingles)
-    aligned
-      .withColumn("first_doc",
-        min(col("doc_id")).over(Window.partitionBy(col("fp"))))
-      .join(spark.table(table).hint("MERGE")
-          .select(col("fp"), col("first_doc").as("idx_first")),
-        Seq("fp"), "left_outer")
+                                    table: String): DataFrame =
+    FirstSeenIndex.seen(spark, shingles, table)
       .groupBy(col("source"), col("doc_id"))
       .agg(count(lit(1)).as("total"),
-        sum(when(col("first_doc") === col("doc_id") &&
-            (col("idx_first").isNull || col("idx_first") === col("doc_id")), 1L)
+        sum(when(col("batch_first") === col("doc_id") &&
+            (col("idx_first_doc").isNull || col("idx_first_doc") === col("doc_id")), 1L)
           .otherwise(0L)).as("novel"))
       .withColumn("novelty",
         round(col("novel").cast("double") / col("total"), 4))
-  }
 
-  /** Appends a batch's shingles to the index, deduplicated against it
-    * (one merge anti-join; the index side stays in place). Idempotent:
-    * a replayed append finds its own fps present and adds nothing. */
+  /** Appends a batch's shingles to the index
+    * ([[FirstSeenIndex.append]]). */
   def appendToIndex(batch: DataFrame, table: String): Unit =
     appendShingled(docShingles(batch), table)
 
   /** [[appendToIndex]] over a pre-shingled frame; see [[docShingles]]. */
-  private[graft] def appendShingled(shingles: DataFrame, table: String): Unit = {
-    val s = shingles.sparkSession
-    shingles.groupBy(col("fp")).agg(min(col("doc_id")).as("first_doc"))
-      .join(s.table(table).hint("MERGE"), Seq("fp"), "left_anti")
-      .write.mode("append").format("parquet").insertInto(table)
-  }
+  private[graft] def appendShingled(shingles: DataFrame, table: String): Unit =
+    FirstSeenIndex.append(shingles, table)
 
   // ------------------------------------------------- q186 (bench form)
 
@@ -132,13 +94,8 @@ object IncrementalNovelty {
     * doc). IncrementalNoveltySpec still pins the batch-replay ≡ q180
     * contract and the no-shuffle-on-index-side plan invariant. */
   def q186NoveltyProbeIndex(s: SparkSession, d: String): DataFrame = {
-    import graft.Tables.documents
-    import IndexTables.hashBucket
-    val table = IndexTables.ensureTable(s, TablePrefix, d)(t =>
-      buildIndex(documents(s, d)
-        .filter(hashBucket(col("doc_id").cast("string")) < "c0"), t))
-    val batch = documents(s, d)
-      .filter(hashBucket(col("doc_id").cast("string")) >= "c0")
+    val (corpus, batch) = IndexTables.corpusAndBatch(graft.Tables.documents(s, d))
+    val table = IndexTables.ensureTable(s, TablePrefix, d)(buildIndex(corpus, _))
     screenBatch(s, batch, table).orderBy(col("doc_id"))
   }
 

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.NativeExprs
@@ -36,13 +35,8 @@ import graft.functions.NativeExprs
   * ingestion order and id order coincide. Spec-pinned
   * ("arrival-order contract" test).
   *
-  * Index layout: one `(fp, first_doc, src_batch)` row per DISTINCT
-  * shingle fp ever seen, written bucketed + sorted on `fp`
-  * ([[Bucketing.writeBucketed]]) — the probe's left join and the
-  * append's dedup anti-join both merge-join WITHOUT shuffling the
-  * index side (the 100 TB side never moves; only the batch aligns).
-  * Append-mutable, so NO Bloom sidecar (the [[IncrementalDedup]]
-  * rule: a stale filter under-matches and silently misses spans).
+  * Index layout: the shared [[FirstSeenIndex]], one
+  * `(fp, first_doc, src_batch)` row per DISTINCT shingle fp ever seen.
   *
   * `src_batch` follows the q189 replay discipline: a micro-batch
   * replayed AFTER its own append landed must not self-match the
@@ -62,8 +56,9 @@ object IncrementalSpans {
 
   import Dedup.SpanN
 
-  /** Batch id for index rows written outside any micro-batch. */
-  val NoBatch = -1L
+  /** Batch id for index rows written outside any micro-batch: the
+    * one sentinel, [[IncrementalDedup.NoBatch]]. */
+  val NoBatch: Long = IncrementalDedup.NoBatch
 
   /** One row per shingle OCCURRENCE: `(doc_id, pos, fp)` — q188's
     * posexplode kernel (positions matter; no array_distinct). */
@@ -72,57 +67,31 @@ object IncrementalSpans {
       posexplode(NativeExprs.shingleHashes(
         split(col("text"), " "), n)).as(Seq("pos", "fp")))
 
-  /** A corpus reduced to the index layout: one `(fp, first_doc,
-    * src_batch)` row per distinct shingle. Carrying the claiming doc
-    * id + writing batch is what makes the replay discipline above
-    * expressible. */
-  private def fpOwners(docs: DataFrame, n: Int, srcBatch: Long): DataFrame =
-    occurrences(docs, n).groupBy(col("fp"))
-      .agg(min(col("doc_id")).as("first_doc"))
-      .withColumn("src_batch", NativeExprs.runtimeLong(srcBatch))
+  /** The writing batch's tag on every index row it adds. */
+  private def srcBatchTag(srcBatch: Long) =
+    NativeExprs.runtimeLong(srcBatch).as("src_batch")
 
   /** (Re)builds the persisted seen-shingle occurrence index. */
   def buildIndex(docs: DataFrame, table: String, buckets: Int = 32,
                  n: Int = SpanN, srcBatch: Long = NoBatch): Unit =
-    Bucketing.writeBucketed(fpOwners(docs, n, srcBatch), table, "fp", buckets)
+    FirstSeenIndex.build(occurrences(docs, n), table, buckets, srcBatchTag(srcBatch))
 
   /** STALE SPANS of an arriving batch: per batch doc, the maximal
     * token runs already seen by the index or by a smaller-doc_id doc
     * of the same batch — same output schema as q188
     * (doc_id, span_idx, start_tok, end_tok, span_tokens,
     * n_dup_shingles), islands merged by the shared
-    * [[Dedup.islandSpans]] kernel.
-    *
-    * One batch shingling pass; the seen test is a left-outer merge
-    * join against the bucketed index (no index-side exchange; safe
-    * from row multiplication because the index is invariantly
-    * distinct on fp — buildIndex aggregates per fp, appendToIndex
-    * only appends anti-joined survivors); the within-batch min
-    * window partitions by fp over the BATCH only. */
+    * [[Dedup.islandSpans]] kernel over the [[FirstSeenIndex.seen]]
+    * hits. */
   def probeBatch(spark: SparkSession, batch: DataFrame, table: String,
                  n: Int = SpanN, batchId: Long = NoBatch): DataFrame = {
-    // pre-align the batch to the index's bucket layout: the fp window
-    // and the bucket-colocated join then SHARE one exchange — without
-    // this the window shuffles to spark.sql.shuffle.partitions and
-    // the join re-shuffles to the bucket count (two full passes over
-    // the batch's occurrence rows whenever the two numbers differ)
-    val occ0 = occurrences(batch, n)
-    val aligned = org.apache.spark.sql.graftbridge.PlanBridge
-      .numBuckets(spark, table)
-      .map(b => occ0.repartition(b, col("fp"))).getOrElse(occ0)
-    val occ = aligned
-      .withColumn("batch_first",
-        min(col("doc_id")).over(Window.partitionBy(col("fp"))))
-    val idx = spark.table(table).hint("MERGE")
-      .select(col("fp"), col("first_doc").as("idx_first"),
-              col("src_batch").as("idx_batch"))
-    val hits = occ.join(idx, Seq("fp"), "left_outer")
+    val hits = FirstSeenIndex.seen(spark, occurrences(batch, n), table)
       .filter(
         // index hit, excluding ONLY the claiming entry this very
         // batch wrote (replay-after-append; see object scaladoc).
-        (col("idx_first").isNotNull &&
-          !(col("idx_first") === col("doc_id") &&
-            col("idx_batch") === NativeExprs.runtimeLong(batchId))) ||
+        (col("idx_first_doc").isNotNull &&
+          !(col("idx_first_doc") === col("doc_id") &&
+            col("idx_src_batch") === NativeExprs.runtimeLong(batchId))) ||
         // or duplicated within the batch by an earlier doc
         col("batch_first") < col("doc_id"))
       .select(col("doc_id"), col("pos"))
@@ -130,17 +99,11 @@ object IncrementalSpans {
       .orderBy(col("doc_id"), col("span_idx"))
   }
 
-  /** Appends a batch's first-seen shingles to the index, deduplicated
-    * against it (merge anti-join; index side stays in place).
-    * Idempotent: a replayed append finds its own fps present and adds
-    * nothing. */
+  /** Appends a batch's first-seen shingles to the index
+    * ([[FirstSeenIndex.append]]). */
   def appendToIndex(batch: DataFrame, table: String,
-                    n: Int = SpanN, srcBatch: Long = NoBatch): Unit = {
-    val s = batch.sparkSession
-    fpOwners(batch, n, srcBatch)
-      .join(s.table(table).hint("MERGE").select(col("fp")), Seq("fp"), "left_anti")
-      .write.mode("append").format("parquet").insertInto(table)
-  }
+                    n: Int = SpanN, srcBatch: Long = NoBatch): Unit =
+    FirstSeenIndex.append(occurrences(batch, n), table, srcBatchTag(srcBatch))
 
   // ------------------------------------------------- q198 (bench form)
 
@@ -157,15 +120,9 @@ object IncrementalSpans {
     * stale rule (fp in train slice ∨ smaller-doc_id batch doc) and
     * the island merge are plain SQL; spans are pure integers. */
   def q198SpanProbeIndex(s: SparkSession, d: String): DataFrame = {
-    import graft.Tables.documents
-    import IndexTables.hashBucket
-    val table = IndexTables.ensureTable(s, TablePrefix, d)(t =>
-      buildIndex(documents(s, d)
-        .filter(hashBucket(col("doc_id").cast("string")) < "c0")
-        .select(col("doc_id"), col("text")), t))
-    val batch = documents(s, d)
-      .filter(hashBucket(col("doc_id").cast("string")) >= "c0")
-      .select(col("doc_id"), col("text"))
+    val (corpus, batch) = IndexTables.corpusAndBatch(
+      graft.Tables.documents(s, d).select(col("doc_id"), col("text")))
+    val table = IndexTables.ensureTable(s, TablePrefix, d)(buildIndex(corpus, _))
     probeBatch(s, batch, table)
   }
 

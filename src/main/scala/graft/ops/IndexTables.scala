@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Shared lifecycle for the persisted-index query families (q78
@@ -20,6 +20,13 @@ private[graft] object IndexTables {
 
   /** md5-prefix slice key (q63's deterministic split rule). */
   def hashBucket(c: Column): Column = substring(md5(c), 1, 2)
+
+  /** The md5 slices the q186/q189/q198/q199 probes share: (existing
+    * corpus, doc hash `< 'c0'`, ~3/4; arriving batch, `>= 'c0'`). */
+  def corpusAndBatch(docs: DataFrame): (DataFrame, DataFrame) = {
+    val b = hashBucket(col("doc_id").cast("string"))
+    (docs.filter(b < "c0"), docs.filter(b >= "c0"))
+  }
 
   /** File-listing fingerprint of a source table, shared with the IVF
     * index dirs ([[Ivf]]): (relative path, length, mtime) per file,

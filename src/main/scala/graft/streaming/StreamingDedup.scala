@@ -68,18 +68,19 @@ object StreamingDedup {
                     checkpointDir: Option[String] = None): StreamingQuery =
     StreamEpoch.lineageSink(spark, streamingDocs, outDir, checkpointDir) {
       (batch, batchId, tag) =>
-        val b = batch.persist()
+        // signed once per trigger: the probe, the representatives and
+        // the index append all read this frame's sig and bands
+        val b = Dedup.withMinhash(batch).persist()
         try {
           val crossBatchDups = IncrementalDedup
-            .probeBatch(spark, b, indexTable, threshold, batchId = tag)
+            .probeSigned(spark, b, indexTable, threshold, Dedup.MaxBucket, tag, Dedup.Bands)
             .select(col("new_id")).distinct()
-          // the cross-batch survivors' exact-copy representatives with
-          // their signatures, read by the banding, both signature
-          // rejoins and the survivor filter: persisted here, never
-          // through Dedup's one-slot signature cache, which a trigger
-          // would evict from under a concurrent batch pass
-          val reps = Dedup.withMinhash(
-              b.join(crossBatchDups, b("doc_id") === crossBatchDups("new_id"), "left_anti"))
+          // the cross-batch survivors' exact-copy representatives, read
+          // by the banding, both signature rejoins and the survivor
+          // filter: persisted here, never through Dedup's one-slot
+          // signature cache, which a trigger would evict from under a
+          // concurrent batch pass
+          val reps = b.join(crossBatchDups, b("doc_id") === crossBatchDups("new_id"), "left_anti")
             .withColumn("keep_id", min(col("doc_id")).over(Window.partitionBy(col("sig"))))
             .filter(col("doc_id") === col("keep_id")).drop("keep_id")
             .persist()
@@ -88,12 +89,13 @@ object StreamingDedup {
               .select(col("id_b")).distinct()
             val survivors = reps
               .join(internalDups, reps("doc_id") === internalDups("id_b"), "left_anti")
-              .drop("sig", "bands").persist()
+              .persist()
             // survivors' cache has its own finally: a failed corpus
             // write or index append must not pin it for the session
             try {
-              survivors.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-              IncrementalDedup.appendToIndex(survivors, indexTable, srcBatch = tag)
+              survivors.drop("sig", "bands")
+                .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+              IncrementalDedup.appendSigned(survivors, indexTable, tag)
               spark.catalog.refreshTable(indexTable)
             } finally survivors.unpersist()
           } finally reps.unpersist()

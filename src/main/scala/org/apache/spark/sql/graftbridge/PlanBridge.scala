@@ -53,15 +53,12 @@ object PlanBridge {
     }
 
   /** Bucket count of a catalog table, if it is bucketed (bucketSpec
-    * lives on the private[sql] session catalog's table metadata). The
-    * incremental-index probes use it to pre-align their batch side to
-    * the index layout — one fp exchange shared by the batch window
-    * and the bucket-colocated join, instead of one each. */
+    * lives on the private[sql] session catalog's table metadata);
+    * read by graft.ops.Bucketing.alignTo. */
   def numBuckets(spark: SparkSession, table: String): Option[Int] =
     // Try, not throw: a temp-view-backed or missing name has no
     // catalog metadata — the caller's own spark.table() read is the
-    // right place for that error to surface (and a view-backed probe
-    // is still CORRECT unaligned, just not exchange-fused)
+    // right place for that error to surface
     scala.util.Try(
       spark.asInstanceOf[classic.SparkSession].sessionState.catalog
         .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))

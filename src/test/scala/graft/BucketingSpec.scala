@@ -99,6 +99,60 @@ class BucketingSpec extends AnyFunSuite {
       s"multi-file buckets are untrusted for ordering, a Sort MUST appear:\n$plan")
     assert(joined.count() == before * 2)
   }
+
+  test("first-seen probes and appends over 4 shuffle partitions at 32 buckets: exchange counts, none on the index side") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    import graft.ops.{IncrementalNovelty, IncrementalSpans}
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    // the plan as planned, before AQE's runtime changes
+    def planned(p: SparkPlan): SparkPlan =
+      p.transformDown { case a: AdaptiveSparkPlanExec => a.initialPlan }
+    def exchanges(p: SparkPlan): Int = p.collect { case e: Exchange => e }.size
+    def indexSideUnshuffled(p: SparkPlan, table: String): Unit = {
+      val indexSides = p.collect { case j: SortMergeJoinExec => Seq(j.left, j.right) }
+        .flatten.filter(_.toString.contains(table))
+      assert(indexSides.nonEmpty, s"the index must feed a merge join:\n$p")
+      indexSides.foreach(side => assert(side.collect { case e: Exchange => e }.isEmpty,
+        s"index side must stay unshuffled:\n$side"))
+    }
+    val docs = Tables.documents(spark, TestSpark.sf0001).select("doc_id", "source", "text")
+    val batch = docs.filter(col("doc_id") >= 200 && col("doc_id") < 260)
+    // (probe bound, append bound, build, probe, append) per family, each
+    // index at the default 32 buckets; the bounds are the counts the
+    // families' own append copies planned
+    val families = Seq(
+      ("spans_plan_count_idx", 3, 1,
+        (t: String) => IncrementalSpans.buildIndex(docs.filter(col("doc_id") < 200), t),
+        (t: String) => IncrementalSpans.probeBatch(spark, batch, t),
+        (t: String) => IncrementalSpans.appendToIndex(batch, t)),
+      ("novelty_plan_count_idx", 2, 1,
+        (t: String) => IncrementalNovelty.buildIndex(docs.filter(col("doc_id") < 200), t),
+        (t: String) => IncrementalNovelty.screenBatch(spark, batch, t),
+        (t: String) => IncrementalNovelty.appendToIndex(batch, t)))
+    families.foreach { case (t, probeBound, appendBound, build, probe, append) =>
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val dir = new java.io.File(s"/tmp/graft-test-warehouse/$t")
+      if (dir.exists()) {
+        java.nio.file.Files.walk(dir.toPath)
+          .sorted(java.util.Comparator.reverseOrder())
+          .forEach(p => java.nio.file.Files.delete(p))
+      }
+      build(t)
+      val probed = probe(t)
+      probed.collect()
+      val probePlan = planned(probed.queryExecution.executedPlan)
+      val appendPlans = GeneratedSource.insertPlans(spark, t)(append(t)).map(planned)
+      assert(appendPlans.size == 1, s"$t: expected one insert, got ${appendPlans.size}")
+      assert(exchanges(probePlan) <= probeBound, s"$t probe:\n$probePlan")
+      assert(exchanges(appendPlans.head) <= appendBound, s"$t append:\n${appendPlans.head}")
+      indexSideUnshuffled(probePlan, t)
+      indexSideUnshuffled(appendPlans.head, t)
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+    }
+  }
 }
 
 /** Writes fresh bucketed twins of orders/customer for one test — the

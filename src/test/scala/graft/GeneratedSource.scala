@@ -28,10 +28,18 @@ object GeneratedSource {
       .collectFirst { case (x, y) if x != y => s"$x\n  vs\n$y" }
 
   /** Sources of the plan `f` runs to insert into catalog table
+    * `table`; see [[insertPlans]]. */
+  def ofInsert(spark: SparkSession, table: String)(f: => Unit): Seq[String] = {
+    val captured = insertPlans(spark, table)(f).map(sources).filter(_.nonEmpty)
+    assert(captured.nonEmpty, s"no insert into $table with generated code reached the listener")
+    captured.flatten.sorted
+  }
+
+  /** The physical plans `f` runs to insert into catalog table
     * `table` — a DataFrameWriter write, whose plan only a listener
     * sees. Listener events arrive asynchronously (and may include
     * other queries' late events), so this waits for the insert's. */
-  def ofInsert(spark: SparkSession, table: String)(f: => Unit): Seq[String] = {
+  def insertPlans(spark: SparkSession, table: String)(f: => Unit): Seq[SparkPlan] = {
     val plans = new ConcurrentLinkedQueue[SparkPlan]()
     // an insert that shuffles runs under AQE, whose stages hide the
     // command node from a plain tree walk
@@ -54,10 +62,8 @@ object GeneratedSource {
     try {
       f
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      def captured = plans.toArray(Array.empty[SparkPlan]).toSeq.map(sources).filter(_.nonEmpty)
-      while (captured.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(captured.nonEmpty, s"no insert into $table with generated code reached the listener")
-      captured.flatten.sorted
+      while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      plans.toArray(Array.empty[SparkPlan]).toSeq
     } finally spark.listenerManager.unregister(listener)
   }
 }

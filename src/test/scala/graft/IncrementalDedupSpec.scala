@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.IncrementalDedup
+import graft.ops.{IncrementalDedup, IncrementalNovelty, IncrementalSpans}
 
 class IncrementalDedupSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -209,32 +210,50 @@ class IncrementalDedupSpec extends AnyFunSuite {
   }
 
   test("an append adds at most one file per bucket, following a rebuilt index's bucket count") {
-    dropIndex("dedup_files_idx")
-    val dir = new java.io.File("/tmp/graft-test-warehouse/dedup_files_idx")
-    def partFiles(): Int = Option(dir.listFiles()).toSeq.flatten
-      .count(_.getName.startsWith("part-"))
-    val docs = Tables.documents(spark, TestSpark.sf0001).select("doc_id", "text")
+    // every appendable family: dedup, spans and novelty all append
+    // through Bucketing.appendBucketed
+    case class Family(table: String,
+                      build: (DataFrame, String, Int) => Unit,
+                      append: (DataFrame, String) => Unit,
+                      // does a renamed copy of an appended doc hit it?
+                      seesAppended: (DataFrame, String) => Boolean)
+    val families = Seq(
+      Family("dedup_files_idx", IncrementalDedup.buildIndex(_, _, _),
+        IncrementalDedup.appendToIndex(_, _),
+        (planted, t) => IncrementalDedup.probeBatch(spark, planted, t)
+          .filter(col("match_id") === 300L && col("est_jaccard") === 1.0).count() == 1L),
+      Family("spans_files_idx", IncrementalSpans.buildIndex(_, _, _),
+        IncrementalSpans.appendToIndex(_, _),
+        (planted, t) => IncrementalSpans.probeBatch(spark, planted, t).count() > 0L),
+      Family("novelty_files_idx", IncrementalNovelty.buildIndex(_, _, _),
+        IncrementalNovelty.appendToIndex(_, _),
+        (planted, t) => IncrementalNovelty.screenBatch(spark, planted, t)
+          .filter(col("total") > 0 && col("novel") === 0L).count() == 1L))
+    val docs = Tables.documents(spark, TestSpark.sf0001).select("doc_id", "source", "text")
     val corpus = docs.filter(col("doc_id") < 300)
     // 4 write tasks, each holding rows of every bucket: unaligned, the
     // append would write 4 x 4 files
     val batch = docs.filter(col("doc_id") >= 300 && col("doc_id") < 500).repartition(4)
-    IncrementalDedup.buildIndex(corpus, "dedup_files_idx", buckets = 4)
-    val built = partFiles()
-    IncrementalDedup.appendToIndex(batch, "dedup_files_idx")
-    assert(partFiles() - built <= 4, s"4-bucket append added ${partFiles() - built} files")
-
-    // rebuilt with another bucket count: the next append aligns to 8
-    IncrementalDedup.buildIndex(corpus, "dedup_files_idx", buckets = 8)
-    val rebuilt = partFiles()
-    IncrementalDedup.appendToIndex(batch, "dedup_files_idx")
-    assert(partFiles() - rebuilt <= 8, s"8-bucket append added ${partFiles() - rebuilt} files")
-    // and the appended rows are where a probe looks: a renamed copy of
-    // an appended doc matches it at est 1.0
     val planted = batch.filter(col("doc_id") === 300)
-      .select(lit(99999L).as("doc_id"), col("text"))
-    val hits = IncrementalDedup.probeBatch(spark, planted, "dedup_files_idx")
-      .filter(col("match_id") === 300L && col("est_jaccard") === 1.0).count()
-    assert(hits == 1L, "the planted copy must match the appended doc")
-    spark.sql("DROP TABLE IF EXISTS dedup_files_idx")
+      .select(lit(99999L).as("doc_id"), col("source"), col("text"))
+    families.foreach { f =>
+      dropIndex(f.table)
+      val dir = new java.io.File(s"/tmp/graft-test-warehouse/${f.table}")
+      def partFiles(): Int = Option(dir.listFiles()).toSeq.flatten
+        .count(_.getName.startsWith("part-"))
+      f.build(corpus, f.table, 4)
+      val built = partFiles()
+      f.append(batch, f.table)
+      assert(partFiles() - built <= 4, s"${f.table}: 4-bucket append added ${partFiles() - built} files")
+
+      // rebuilt with another bucket count: the next append aligns to 8
+      f.build(corpus, f.table, 8)
+      val rebuilt = partFiles()
+      f.append(batch, f.table)
+      assert(partFiles() - rebuilt <= 8, s"${f.table}: 8-bucket append added ${partFiles() - rebuilt} files")
+      // and the appended rows are where a probe looks
+      assert(f.seesAppended(planted, f.table), s"${f.table}: the planted copy must hit the appended doc")
+      spark.sql(s"DROP TABLE IF EXISTS ${f.table}")
+    }
   }
 }

@@ -80,6 +80,32 @@ class SmokeSpec extends AnyFunSuite {
     assert(builders.isEmpty, s"session builders outside SparkEntry:\n${builders.mkString("\n")}")
   }
 
+  test("one append path: insertInto and numBuckets only in Bucketing (plus IndexTables' audit)") {
+    // a bucketed index that appends through its own insert drifts from
+    // the one alignment step (one file per bucket); the catalog's
+    // bucket count is read by Bucketing.alignTo and by the audit
+    val roots = Seq("ops", "streaming").map(p => java.nio.file.Paths.get("src/main/scala/graft", p))
+    assert(roots.forall(java.nio.file.Files.isDirectory(_)),
+      s"graft/ops or graft/streaming not found under ${System.getProperty("user.dir")}")
+    val stray = roots.flatMap { dir =>
+      val files = java.nio.file.Files.walk(dir)
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally files.close()
+    }.filterNot(_.getFileName.toString == "Bucketing.scala").flatMap { f =>
+      val auditFile = f.getFileName.toString == "IndexTables.scala"
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if line.contains("insertInto(") ||
+            (line.contains("numBuckets(") && !auditFile) =>
+          s"$f:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(stray.isEmpty, s"bucketed-table writes or reads outside Bucketing:\n${stray.mkString("\n")}")
+    val auditReads = java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get("src/main/scala/graft/ops/IndexTables.scala")).asScala
+      .count(_.contains("numBuckets("))
+    assert(auditReads <= 1, s"IndexTables reads numBuckets $auditReads times; only audit may")
+  }
+
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name runs and returns rows at sf0.001") {
       val n = fn(spark, TestSpark.sf0001).count()

@@ -333,4 +333,65 @@ class StreamingDedupSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet
     assert(indexed == Set(0L, 1000L, 5001L), s"the flood must enter the index once, got $indexed")
   }
+
+  test("one trigger signs its documents once: one MinHashSig across the trigger's plans") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import spark.implicits._
+    // the probe, the batch-internal step and the index append all
+    // need signatures; signing each time put three MinHashSig passes
+    // in every trigger
+    val table = "stream_dedup_index10"
+    // the trigger's corpus write and index append: an AQE write hides
+    // its command node inside the adaptive plan
+    def triggerWrite(p: SparkPlan): Boolean = p.exists {
+      case a: AdaptiveSparkPlanExec => triggerWrite(a.executedPlan)
+      case q: QueryStageExec => triggerWrite(q.plan)
+      case w: DataWritingCommandExec => w.cmd match {
+        case i: InsertIntoHadoopFsRelationCommand =>
+          i.outputPath.toString.contains("batch_id=") ||
+            i.catalogTable.exists(_.identifier.table == table)
+        case _ => false
+      }
+      case _ => false
+    }
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        if (triggerWrite(qe.executedPlan)) writes.add(qe.executedPlan)
+      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val landed = triggers(table, Seq(
+        (1000L, "a fresh document about maps and their layers"),
+        (1001L, "seed document with some words"), // dup of the index's seed
+        (1002L, "twins that the trigger's internal pass drops"),
+        (1003L, "twins that the trigger's internal pass drops")).toDF("doc_id", "text"))
+      assert(landed.toSet == Set(1000L, 1002L), s"got $landed")
+      // listener events arrive asynchronously
+      def plans = writes.toArray(Array.empty[SparkPlan]).toSeq
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (plans.size < 2 && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(plans.size == 2, s"expected the trigger's two writes, got ${plans.size}")
+      // each cached plan counted once, however many plans read it
+      val cached = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+      def signings(p: SparkPlan): Int = p match {
+        case a: AdaptiveSparkPlanExec => signings(a.executedPlan)
+        case q: QueryStageExec => signings(q.plan)
+        case m: InMemoryTableScanExec =>
+          val c = m.relation.cacheBuilder.cachedPlan
+          if (cached.exists(_ eq c)) 0 else { cached += c; signings(c) }
+        case other =>
+          other.expressions.map(_.collect { case m: graft.functions.MinHashSig => m }.size).sum +
+            other.children.map(signings).sum
+      }
+      val n = plans.map(signings).sum
+      assert(n == 1, s"one trigger ran $n MinHashSig passes")
+    } finally spark.listenerManager.unregister(listener)
+  }
 }
