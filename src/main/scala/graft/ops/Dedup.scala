@@ -13,8 +13,9 @@ import graft.Tables._
   * SimHash) are fixed-size per document regardless of text length, so
   * the shuffle for candidate generation moves O(n · bands · 8 bytes) —
   * never the corpus text and never the O(n²) pair space. Candidate
-  * pairs come from bucket-colliding band self-joins; exact similarity
-  * is recomputed only for candidates.
+  * pairs come from one banded-LSH core ([[Dedup.bandedPairs]]), which
+  * the embedding family shares; exact similarity is recomputed only
+  * for candidates.
   *
   * Everything is array/lambda expressions (codegen'd); no UDFs.
   */
@@ -157,76 +158,81 @@ object Dedup {
     scoredPairs(swapSigCache(withMinhash(docs)
       .select(col("doc_id"), col("sig"), col("bands"))), minEst)
 
+  /** The MinHash Jaccard estimate of two signatures: matching slots
+    * over [[SigLen]], rounded to 4 places. Estimates are multiples of
+    * 1/64, so the rounding moves no threshold decision at 4 places. */
+  def estJaccard(a: Column, b: Column): Column =
+    round(graft.functions.NativeExprs.sigMatches(a, b).cast("double") / SigLen, 4)
+
   /** The est-scored LSH core over an already-signed frame carrying
     * (doc_id, sig, bands): [[bandedPairs]] (with its [[MaxBucket]] cap), the
-    * two signature rejoins, then `est_jaccard` (rounded to 4 places)
-    * ≥ `minEst`. Returns (id_a, id_b, est_jaccard), id_a < id_b
+    * two signature rejoins, then [[estJaccard]] ≥ `minEst`. Returns
+    * (id_a, id_b, est_jaccard), id_a < id_b
     * even where a doc_id repeats in `signed` (with one row per
     * matching signature pair then; callers dedup on the ids).
     * `signed` is read three times, so the caller caches it:
     * [[minhashCandidatePairsOf]] through [[swapSigCache]], a
     * streaming trigger by its own persist. */
   private[graft] def scoredPairs(signed: DataFrame, minEst: Double): DataFrame =
-    bandedPairs(signed)
+    bandedPairs(signed).distinct()
       .join(signed.select(col("doc_id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
       .join(signed.select(col("doc_id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(graft.functions.NativeExprs.sigMatches(col("sig_a"), col("sig_b"))
-          .cast("double") / SigLen, 4).as("est_jaccard"))
+      .select(col("id_a"), col("id_b"), estJaccard(col("sig_a"), col("sig_b")).as("est_jaccard"))
       .filter(col("est_jaccard") >= minEst)
 
-  /** Distinct banded candidate id pairs (id_a < id_b) from a frame
-    * carrying (doc_id, bands) — the LSH core shared by the est-scored
-    * near-dup path above and the containment path (which skips the
-    * signature rejoin entirely, see [[containmentCandidates]]).
+  /** The one banded-LSH candidate generator, shared by the MinHash,
+    * SimHash and embedding pair families. From a frame carrying
+    * (doc_id, bands, payload...) it returns (id_a, id_b, p_a, p_b for
+    * each payload column p) with id_a < id_b, one row per band the
+    * pair collides in. Callers project what they need from a pair,
+    * may filter, and then `distinct` on their own, so any payload
+    * moves once per unique pair and a verdict computed from the
+    * payload (SimHash's Hamming filter) runs before the distinct's
+    * exchange.
     *
+    *  - the explode is posexplode_OUTER plus a non-null filter: an
+    *    inner explode lets Catalyst infer `size(bands) > 0 AND
+    *    isnotnull(bands)` and push it below the Project that computes
+    *    `bands`, which then signs every row twice more. The filter
+    *    drops a doc with no bands, as the inner explode did;
     *  - bucket-size cap as groupBy-count + broadcast ANTI-join on the
     *    OVER-cap keys, not a count window: degenerate buckets are
     *    dropped MAP-SIDE and their rows never shuffle (a count window
     *    would haul every hot-bucket row into one window task, the
     *    exact skew this cap exists to prevent) — and the broadcast
     *    side is the set of DEGENERATE bucket keys, which is tiny BY
-    *    DEFINITION at any corpus size. The round-13 review caught the
-    *    original inner-join-on-the-UNDER-cap form: that broadcast was
-    *    ~one key per (doc, band) — linear in the corpus — and would
-    *    OOM the driver at the billions-of-docs scale this cap is
-    *    designed for;
-    *  - distinct BEFORE any payload rejoin, so downstream payloads
-    *    move once per unique pair, not once per colliding band. */
-  private def bandedPairs(signed: DataFrame): DataFrame = {
-    val ex = signed.select(col("doc_id"),
-        posexplode(col("bands")).as(Seq("band_idx", "bucket")))
+    *    DEFINITION at any corpus size (an inner join on the UNDER-cap
+    *    keys would broadcast ~one key per (doc, band) and OOM the
+    *    driver at billions of docs);
+    *  - ONE aggregation gathers each surviving bucket's sorted member
+    *    list (bounded state: no group holds more than MaxBucket
+    *    members) and the pairs are generated map-side from it, one
+    *    exchange of the exploded frame where a bucket-key self-join
+    *    takes two;
+    *  - the STRICT id_a < id_b filter keeps a doc_id that occurs twice
+    *    in the frame (a stream redelivering a doc inside one
+    *    micro-batch) from pairing with itself: its copies would score
+    *    1.0 against each other and a caller dropping every id_b would
+    *    lose the doc outright. */
+  private[graft] def bandedPairs(signed: DataFrame, payload: String*): DataFrame = {
+    val members = col("doc_id") +: payload.map(col)
+    val ex = signed.select(members :+
+        posexplode_outer(col("bands")).as(Seq("band_idx", "bucket")): _*)
+      .filter(col("band_idx").isNotNull)
     val big = ex.groupBy(col("band_idx"), col("bucket"))
       .agg(count(lit(1)).as("bucket_n"))
       .filter(col("bucket_n") > MaxBucket)
       .select(col("band_idx"), col("bucket"))
-    val inSmall = ex.join(broadcast(big), Seq("band_idx", "bucket"), "left_anti")
-      .select(col("band_idx"), col("bucket"), col("doc_id"))
-    // r20 (guide §2.4): the intra-bucket pairs came from a bucket-key
-    // SELF-JOIN, whose two sides each re-derived (and, at scale,
-    // re-shuffled) the exploded (band, bucket, doc_id) frame. ONE
-    // aggregation now gathers each surviving bucket's member list —
-    // bounded state by construction: the cap above already dropped
-    // every bucket over MaxBucket rows map-side, so no group buffers
-    // more than MaxBucket ids (the skew bomb this cap exists for
-    // cannot reach the aggregate) — and the i<j pairs are generated
-    // map-side from the sorted list. Same candidate set: array_sort
-    // + i<j emits the id_a <= id_b pairs the join produced, and the
-    // distinct collapses cross-band repeats as before. One exchange
-    // of the exploded frame instead of two. The strict filter keeps
-    // a doc_id that occurs twice in the frame (a stream redelivering
-    // a doc inside one micro-batch) from pairing with itself: its
-    // copies would score 1.0 against each other and a caller dropping
-    // every id_b would lose the doc outright.
-    inSmall
+    def pair(a: Column, b: Column): Column =
+      struct(a("doc_id").as("id_a") +: b("doc_id").as("id_b") +:
+        payload.flatMap(p => Seq(a(p).as(s"${p}_a"), b(p).as(s"${p}_b"))): _*)
+    ex.join(broadcast(big), Seq("band_idx", "bucket"), "left_anti")
       .groupBy(col("band_idx"), col("bucket"))
-      .agg(array_sort(collect_list(col("doc_id"))).as("ids"))
-      .select(explode(flatten(transform(col("ids"), (a, i) =>
-        transform(slice(col("ids"), i + lit(2), size(col("ids"))), b =>
-          struct(a.as("id_a"), b.as("id_b")))))).as("pair"))
-      .select(col("pair.id_a"), col("pair.id_b"))
+      .agg(array_sort(collect_list(struct(members: _*))).as("ms"))
+      .select(explode(flatten(transform(col("ms"), (a, i) =>
+        transform(slice(col("ms"), i + lit(2), size(col("ms"))), b => pair(a, b))))).as("p"))
+      .select(col("p.*"))
       .filter(col("id_a") < col("id_b"))
-      .distinct()
   }
 
   /** Exact token-set Jaccard for a bounded id range — the ground truth
@@ -382,7 +388,7 @@ object Dedup {
     // in-session cache entirely.
     val signed = swapSigCache(
       withMinhash(docs).select(col("doc_id"), col("bands")))
-    containmentScoresHashed(docs, bandedPairs(signed))
+    containmentScoresHashed(docs, bandedPairs(signed).distinct())
       .filter(greatest(col("cont_a_in_b"), col("cont_b_in_a")) >= minCont)
   }
 
@@ -437,10 +443,12 @@ object Dedup {
     * Hamming verification).
     *
     * Scale shape: exchanges carry (band key, id, 8-byte simhash) —
-    * never text; candidates are equi-join collisions on the 16-bit
-    * band keys with the [[MaxBucket]] degenerate-bucket cap applied
-    * MAP-SIDE via broadcast (the bandedPairs discipline); verification
-    * is one codegen'd bit_count(xor) per distinct candidate pair.
+    * never text; candidates come from [[bandedPairs]] over the 16-bit
+    * band keys, with the simhash as payload, so the Hamming verdict
+    * (one codegen'd bit_count(xor) per colliding pair) runs map-side
+    * and the distinct's exchange carries only pairs that passed it.
+    * Hamming is a function of the pair, so filter-then-distinct
+    * returns what distinct-then-verify would.
     * Rows-only (simhash64 is this engine's own hash — no cross-engine
     * oracle can recompute it); DedupSpec pins the exact characterization
     * result == { pairs sharing an under-cap band with hamming ≤ max }
@@ -448,51 +456,19 @@ object Dedup {
     * guarantee. */
   def q167SimhashPairs(s: SparkSession, d: String): DataFrame =
     simhashPairs(documents(s, d), SimhashMaxHamming)
+      .orderBy(col("id_a"), col("id_b"))
 
   def simhashPairs(docs: DataFrame, maxHamming: Int): DataFrame = {
     val sh = docs.select(col("doc_id"),
       graft.functions.NativeExprs.simhash64(split(col("text"), " ")).as("sh"))
-    val banded = sh.select(col("doc_id"), col("sh"),
-      posexplode(array((0 until SimhashBands).map(i =>
-        shiftrightunsigned(col("sh"), i * 16).bitwiseAND(lit(0xFFFFL))): _*))
-        .as(Seq("band_idx", "key")))
-    // over-cap ANTI-join, not under-cap inner: the broadcast side must
-    // be the DEGENERATE keys (tiny by definition), never the ~one-key-
-    // per-(doc, band) under-cap set — see the bandedPairs doc
-    val big = banded.groupBy(col("band_idx"), col("key"))
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") > MaxBucket)
-      .select(col("band_idx"), col("key"))
-    val inSmall = banded.join(broadcast(big), Seq("band_idx", "key"), "left_anti")
-      .select(col("band_idx"), col("key"), col("doc_id"), col("sh"))
-    // r20 (the bandedPairs + probeBatch disciplines, guide §2.3/§2.4):
-    // the intra-bucket pairs came from a band-key SELF-JOIN (two
-    // derivations — at scale two shuffles — of the banded frame), and
-    // the hamming verdict ran only AFTER a distinct whose exchange
-    // carried every colliding candidate. Now ONE aggregation gathers
-    // each surviving bucket's (doc_id, sh) members — bounded state by
-    // construction, the over-cap anti-join above already dropped
-    // degenerate buckets map-side — pairs AND their hamming verdicts
-    // are generated map-side from the sorted list, and the distinct
-    // exchange carries only pairs that already passed the hamming
-    // filter. hamming is a deterministic function of the pair, so
-    // distinct-after-filter ≡ the old distinct-then-verify; a doc
-    // appears once per (band, key), so sorted i<j enumeration emits
-    // exactly the join's id_a < id_b candidate set (DedupSpec's
-    // brute-force characterization pins the equality).
-    inSmall
-      .groupBy(col("band_idx"), col("key"))
-      .agg(array_sort(collect_list(struct(col("doc_id"), col("sh")))).as("ms"))
-      .select(explode(flatten(transform(col("ms"), (a, i) =>
-        transform(slice(col("ms"), i + lit(2), size(col("ms"))), b =>
-          struct(a.getField("doc_id").as("id_a"), b.getField("doc_id").as("id_b"),
-                 a.getField("sh").as("sh_a"), b.getField("sh").as("sh_b"))))))
-        .as("p"))
-      .select(col("p.id_a"), col("p.id_b"),
-        expr("bit_count(p.sh_a ^ p.sh_b)").cast("int").as("hamming"))
+    val signed = sh.select(col("doc_id"), col("sh"),
+      array((0 until SimhashBands).map(i =>
+        shiftrightunsigned(col("sh"), i * 16).bitwiseAND(lit(0xFFFFL))): _*).as("bands"))
+    bandedPairs(signed, "sh")
+      .select(col("id_a"), col("id_b"),
+        expr("bit_count(sh_a ^ sh_b)").cast("int").as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
-      .orderBy(col("id_a"), col("id_b"))
   }
 
   /** Exact 3-gram (word-shingle) Jaccard for a bounded id range — the
@@ -541,8 +517,7 @@ object Dedup {
     val b = sk.select(col("source").as("src_b"), col("sketch").as("sk_b"))
     a.join(b, col("src_a") < col("src_b"))
       .select(col("src_a"), col("src_b"),
-        round(graft.functions.NativeExprs.sigMatches(col("sk_a"), col("sk_b"))
-          .cast("double") / SigLen, 4).as("est_jaccard"))
+        estJaccard(col("sk_a"), col("sk_b")).as("est_jaccard"))
       .orderBy(col("src_a"), col("src_b"))
   }
 
@@ -1140,15 +1115,14 @@ object Dedup {
     val lab = (id: String) => Curation.splitLabel(col(id))
     val signed = swapSigCache(withMinhash(docs)
       .select(col("doc_id"), col("sig"), col("bands")))
-    val crossCands = bandedPairs(signed)
+    val crossCands = bandedPairs(signed).distinct()
       .select(col("id_a"), col("id_b"), lab("id_a").as("sp_a"), lab("id_b").as("sp_b"))
       .filter((col("sp_a") === "train" && col("sp_b") === "test") ||
         (col("sp_a") === "test" && col("sp_b") === "train"))
     val cross = crossCands
       .join(signed.select(col("doc_id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
       .join(signed.select(col("doc_id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
-      .filter(graft.functions.NativeExprs.sigMatches(col("sig_a"), col("sig_b"))
-        .cast("double") / SigLen >= ContainmentMinEst)
+      .filter(estJaccard(col("sig_a"), col("sig_b")) >= ContainmentMinEst)
       .select(
         when(col("sp_a") === "test", col("id_a")).otherwise(col("id_b")).as("test_id"),
         when(col("sp_a") === "test", col("id_b")).otherwise(col("id_a")).as("train_id"))

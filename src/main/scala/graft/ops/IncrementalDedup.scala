@@ -26,7 +26,7 @@ import graft.functions.NativeExprs
   */
 object IncrementalDedup {
 
-  import Dedup.{withMinhash, SigLen}
+  import Dedup.withMinhash
 
   /** Batch id recorded on index rows written outside any micro-batch
     * (initial builds, ad-hoc appends). Spark streaming batch ids start
@@ -36,10 +36,14 @@ object IncrementalDedup {
   /** One row per (band bucket, doc): the probe index. `src_batch`
     * records WHICH micro-batch wrote the row — what lets probeBatch
     * distinguish a replay of the same batch (must not self-match, see
-    * there) from a cross-batch redelivery of the same doc_id (must). */
+    * there) from a cross-batch redelivery of the same doc_id (must).
+    * explode_outer plus the non-null filter, not explode, for the
+    * reason on [[Dedup.bandedPairs]]: an inner explode signs each
+    * document three times. */
   private def explodedSigs(signed: DataFrame, srcBatch: Long): DataFrame =
-    signed.select(col("doc_id"), col("sig"), explode(col("bands")).as("bucket"),
+    signed.select(col("doc_id"), col("sig"), explode_outer(col("bands")).as("bucket"),
       NativeExprs.runtimeLong(srcBatch).as("src_batch"))
+      .filter(col("bucket").isNotNull)
 
   /** (Re)builds the persisted index as a bucketed managed table. */
   def buildIndex(docs: DataFrame, table: String, buckets: Int = 32,
@@ -138,8 +142,7 @@ object IncrementalDedup {
       // exactly 1× for q199's bandsUsed = 1) against orders of
       // magnitude less shuffle at index scale.
       .select(col("new_id"), col("doc_id").as("match_id"),
-        round(NativeExprs.sigMatches(col("new_sig"), col("sig"))
-          .cast("double") / SigLen, 4).as("est_jaccard"))
+        Dedup.estJaccard(col("new_sig"), col("sig")).as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
     // one row per (new_id, match_id): appendToIndex does not dedupe
     // doc_ids, so a doc re-appended with changed text holds two

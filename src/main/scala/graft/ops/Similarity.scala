@@ -179,7 +179,7 @@ object Similarity {
   def q42Sql: String =
     s"""$lshSigSqlPrefix, big AS (
       | SELECT band_idx, band_val FROM sig
-      | GROUP BY band_idx, band_val HAVING count(*) > $MaxBucket
+      | GROUP BY band_idx, band_val HAVING count(*) > ${Dedup.MaxBucket}
       |), small AS (
       | SELECT s.band_idx, s.band_val, s.vec_id FROM sig s
       | WHERE NOT EXISTS (SELECT 1 FROM big b
@@ -234,30 +234,13 @@ object Similarity {
       .limit(10)
   }
 
-  val MaxBucket = 200 // skip degenerate buckets (same guard as Dedup.MaxBucket)
-
-  /** All-pairs near-duplicate candidate pairs via LSH banding, in the
-    * shape that survives 100 TB (mirrors Dedup.q43MinhashPairs):
-    * bucket-size cap (a degenerate embedding corpus makes one hot
-    * bucket a quadratic skew bomb), candidate ids only through the
-    * self-join, distinct pairs BEFORE re-joining the vectors. */
-  def embedNearDupPairs(signed: DataFrame, maxBucket: Int): DataFrame = {
-    val ex = signed.select(col("vec_id"), col("e"),
-        posexplode(col("bands")).as(Seq("band_idx", "band_val")))
-    // over-cap ANTI-join (the round-13 bandedPairs fix): the broadcast
-    // side is the DEGENERATE keys — tiny by definition — never the
-    // ~one-key-per-(vec, band) under-cap set, which is corpus-sized
-    val big = ex.groupBy(col("band_idx"), col("band_val"))
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") > maxBucket)
-      .select(col("band_idx"), col("band_val"))
-    val inSmall = ex.select(col("band_idx"), col("band_val"), col("vec_id"))
-      .join(broadcast(big), Seq("band_idx", "band_val"), "left_anti")
-    val cands = inSmall.select(col("band_idx"), col("band_val"), col("vec_id").as("id_a"))
-      .join(inSmall.select(col("band_idx"), col("band_val"), col("vec_id").as("id_b")),
-            Seq("band_idx", "band_val"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
+  /** All-pairs near-duplicate candidate pairs over a [[withSignature]]
+    * frame: the banded candidates of [[Dedup.bandedPairs]] (its
+    * [[Dedup.MaxBucket]] cap keeps a degenerate embedding corpus's hot
+    * bucket from going quadratic) over the ids only, distinct pairs,
+    * then the vectors rejoined for the exact cosine. */
+  def embedNearDupPairs(signed: DataFrame): DataFrame = {
+    val cands = Dedup.bandedPairs(signed.select(col("vec_id").as("doc_id"), col("bands")))
       .distinct()
     val vecs = signed.select(col("vec_id"), col("e"))
     cands
@@ -271,7 +254,7 @@ object Similarity {
     * [[q42Sql]]; the capped-bucket blowup guard is additionally
     * pinned by SimilaritySpec's planted-hot-bucket test). */
   def q42EmbedNearDup(s: SparkSession, d: String): DataFrame =
-    embedNearDupPairs(withSignature(emb(s, d)), MaxBucket)
+    embedNearDupPairs(withSignature(emb(s, d)))
       .orderBy(col("cos_sim").desc, col("id_a").asc, col("id_b").asc)
       .limit(20)
 

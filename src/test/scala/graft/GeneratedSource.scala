@@ -35,10 +35,13 @@ object GeneratedSource {
     captured.flatten.sorted
   }
 
-  /** The physical plans `f` runs to insert into catalog table
-    * `table` — a DataFrameWriter write, whose plan only a listener
-    * sees. Listener events arrive asynchronously (and may include
-    * other queries' late events), so this waits for the insert's. */
+  /** The physical plans `f` runs to write catalog table `table` — an
+    * insertInto append or a saveAsTable build, whose plans only a
+    * listener sees. A build's insert carries no catalog table (it
+    * runs inside the create), so it is matched by its managed
+    * location, `<warehouse>/<table>`. Listener events arrive
+    * asynchronously (and may include other queries' late events), so
+    * this waits for the write's. */
   def insertPlans(spark: SparkSession, table: String)(f: => Unit): Seq[SparkPlan] = {
     val plans = new ConcurrentLinkedQueue[SparkPlan]()
     // an insert that shuffles runs under AQE, whose stages hide the
@@ -48,7 +51,8 @@ object GeneratedSource {
       case q: QueryStageExec => insertsInto(q.plan)
       case w: DataWritingCommandExec => w.cmd match {
         case i: InsertIntoHadoopFsRelationCommand =>
-          i.catalogTable.exists(_.identifier.table == table)
+          i.catalogTable.exists(_.identifier.table == table) ||
+            i.outputPath.getName.equalsIgnoreCase(table)
         case _ => false
       }
       case _ => false

@@ -209,6 +209,41 @@ class IncrementalDedupSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS dedup_compile_idx")
   }
 
+  test("build and append sign each document once: one MinHashSig per write plan") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import spark.implicits._
+    // an inner explode of `bands` let Catalyst infer size(bands) > 0
+    // AND isnotnull(bands) and push it below the signing Project,
+    // inlining minhash_sig twice more into a Filter
+    val t = "dedup_sign_once_idx"
+    dropIndex(t)
+    // per row: a scan's data filters repeat the Filter's for pushdown
+    // and are not evaluated again
+    def signings(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => signings(a.executedPlan)
+      case q: QueryStageExec => signings(q.plan)
+      case _: FileSourceScanExec => 0
+      case other =>
+        other.expressions.map(_.collect { case m: graft.functions.MinHashSig => m }.size).sum +
+          other.children.map(signings).sum
+    }
+    val docs = Tables.documents(spark, TestSpark.sf0001).select("doc_id", "text")
+    val built = GeneratedSource.insertPlans(spark, t)(
+      IncrementalDedup.buildIndex(docs.filter(col("doc_id") < 200), t, buckets = 4))
+    assert(built.nonEmpty, "the build's write plan did not reach the listener")
+    assert(built.map(signings) == Seq(1), s"build signings per plan: ${built.map(signings)}")
+    val appended = GeneratedSource.insertPlans(spark, t)(IncrementalDedup.appendToIndex(
+      docs.filter(col("doc_id") >= 200 && col("doc_id") < 260), t))
+    assert(appended.nonEmpty, "the append's write plan did not reach the listener")
+    assert(appended.map(signings) == Seq(1), s"append signings per plan: ${appended.map(signings)}")
+    // a doc with no text still writes no index row (an outer explode
+    // alone would write it under a null bucket)
+    IncrementalDedup.appendToIndex(Seq((9999L, null: String)).toDF("doc_id", "text"), t)
+    assert(spark.table(t).filter(col("doc_id") === 9999L).count() == 0L)
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
   test("an append adds at most one file per bucket, following a rebuilt index's bucket count") {
     // every appendable family: dedup, spans and novelty all append
     // through Bucketing.appendBucketed

@@ -124,12 +124,32 @@ class SimilaritySpec extends AnyFunSuite {
     val rest = Seq.fill(30)(Seq.fill(64)(rnd.nextGaussian()))
     val df = (dup ++ rest).zipWithIndex
       .map { case (v, i) => (i.toLong, v) }.toDF("vec_id", "e")
-    val pairs = Similarity.embedNearDupPairs(
-      Similarity.withSignature(df), maxBucket = 200)
+    val pairs = Similarity.embedNearDupPairs(Similarity.withSignature(df))
     val n = pairs.count()
     // uncapped, the 400 identical rows alone yield 79,800 pairs; the
     // cap must skip their buckets entirely
     assert(n < 1000, s"hot bucket leaked $n candidate pairs")
+  }
+
+  test("q42 plan: one member-list aggregation, no bucket-key self-join, hyperplane_sig at most twice") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
+    import org.apache.spark.sql.catalyst.plans.Inner
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    // over parquet, not a local relation the optimizer would sign
+    // at planning time
+    val plan = Similarity.q42EmbedNearDup(spark, TestSpark.sf0001).queryExecution.optimizedPlan
+    val exprs = plan.collect { case n => n.expressions }.flatten
+    val lists = exprs.map(_.collect { case c: CollectList => c }.size).sum
+    assert(lists == 1, s"expected one member-list aggregation, got $lists in:\n$plan")
+    val bucketJoins = plan.collect {
+      case j: Join if j.joinType == Inner &&
+          j.condition.exists(_.references.exists(_.name == "band_idx")) => j
+    }
+    assert(bucketJoins.isEmpty, s"bucket-key self-join in:\n$plan")
+    // one signing for the over-cap count, one for the pairs; an inner
+    // explode let Catalyst inline two more into an inferred Filter
+    val signs = exprs.map(_.collect { case h: graft.functions.HyperplaneSig => h }.size).sum
+    assert(signs <= 2, s"hyperplane_sig evaluated $signs times per vector in:\n$plan")
   }
 
   test("cosine null semantics: zero norm and length mismatch yield null") {

@@ -106,6 +106,34 @@ class SmokeSpec extends AnyFunSuite {
     assert(auditReads <= 1, s"IndexTables reads numBuckets $auditReads times; only audit may")
   }
 
+  test("one banded-LSH core: the bucket cap and the pair slice only in Dedup.bandedPairs") {
+    // a family with its own copy of the cap or the i < j enumeration
+    // drifts from the one cap policy
+    val roots = Seq("ops", "streaming").map(p => java.nio.file.Paths.get("src/main/scala/graft", p))
+    assert(roots.forall(java.nio.file.Files.isDirectory(_)),
+      s"graft/ops or graft/streaming not found under ${System.getProperty("user.dir")}")
+    val marks = Seq("\"bucket_n\"", "i + lit(2)")
+    val dedup = java.nio.file.Paths.get("src/main/scala/graft/ops/Dedup.scala")
+    val dedupLines = java.nio.file.Files.readAllLines(dedup).asScala
+    val start = dedupLines.indexWhere(_.contains("def bandedPairs("))
+    val end = dedupLines.indexWhere(_ == "  }", start)
+    assert(start >= 0 && end > start, "Dedup.bandedPairs not found")
+    val core = dedupLines.slice(start, end + 1)
+    marks.foreach(m => assert(core.exists(_.contains(m)), s"$m is not in Dedup.bandedPairs"))
+    val stray = roots.flatMap { dir =>
+      val files = java.nio.file.Files.walk(dir)
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally files.close()
+    }.flatMap { f =>
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if marks.exists(line.contains) &&
+            !(f.endsWith("Dedup.scala") && f.getParent.endsWith("ops") && i >= start && i <= end) =>
+          s"$f:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(stray.isEmpty, s"banded-LSH copies outside Dedup.bandedPairs:\n${stray.mkString("\n")}")
+  }
+
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name runs and returns rows at sf0.001") {
       val n = fn(spark, TestSpark.sf0001).count()
