@@ -159,9 +159,9 @@ object Dedup {
       .select(col("doc_id"), col("sig"), col("bands"))), minEst)
 
   /** The MinHash Jaccard estimate of two signatures: matching slots
-    * over [[SigLen]], rounded to 4 places. Estimates are multiples of
-    * 1/64, so the rounding moves no threshold decision at 4 places. */
-  def estJaccard(a: Column, b: Column): Column =
+    * over [[SigLen]], rounded to 4 places — the one estimate every
+    * MinHash pair output and threshold uses. */
+  private[graft] def estJaccard(a: Column, b: Column): Column =
     round(graft.functions.NativeExprs.sigMatches(a, b).cast("double") / SigLen, 4)
 
   /** The est-scored LSH core over an already-signed frame carrying
