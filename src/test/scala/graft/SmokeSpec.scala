@@ -127,7 +127,7 @@ class SmokeSpec extends AnyFunSuite {
     }.flatMap { f =>
       java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
         case (line, i) if marks.exists(line.contains) &&
-            !(f.endsWith("Dedup.scala") && f.getParent.endsWith("ops") && i >= start && i <= end) =>
+            !(f == dedup && i >= start && i <= end) =>
           s"$f:${i + 1}: ${line.trim}"
       }
     }
