@@ -38,13 +38,34 @@ class CodegenSpec extends AnyFunSuite {
     }
   }
 
+  // Every kernel function NativeExprs exposes, by SQL name
+  // (cosineSimI8 -> cosine_sim_i8), plus CountMinAgg's probe: a new
+  // function left out of a select list below fails that test.
+  private val kernelNames: Set[String] =
+    NativeExprs.getClass.getMethods.toSeq
+      .filter(m => m.getReturnType == classOf[org.apache.spark.sql.Column] && !m.getName.contains("$"))
+      .map(_.getName.replaceAll("([A-Z])", "_$1").toLowerCase)
+      .toSet + "cms_estimate"
+
+  private def assertCoversKernels(df: org.apache.spark.sql.DataFrame): Unit = {
+    val selected = df.queryExecution.analyzed.expressions
+      .flatMap(_.collect { case e if e.getClass.getPackageName == "graft.functions" => e.prettyName })
+      .toSet
+    assert(Set("minhash_sig", "cosine_sim_i8", "norm_l2").subsetOf(kernelNames), kernelNames)
+    val missing = kernelNames -- selected
+    assert(missing.isEmpty, s"kernels missing from the select list: ${missing.toSeq.sorted.mkString(", ")}")
+  }
+
   test("all native expressions evaluate under CODEGEN_ONLY with fallback disabled") {
     withCodegenOnly {
       import spark.implicits._
       val cents = Array(Array(0.0, 0.0), Array(10.0, 10.0))
+      val bloom = org.apache.spark.util.sketch.BloomFilter.create(10, 0.03)
+      bloom.putLong(3L)
       val df = Seq(
-        (Seq(1.0, 2.0), Seq(2.0, 4.0), Seq("a", "b", "c"), Seq(1L, 2L, 3L), Seq(1L, 9L, 3L)))
-        .toDF("a", "b", "toks", "sigA", "sigB")
+        (Seq(1.0, 2.0), Seq(2.0, 4.0), Seq("a", "b", "c"), Seq(1L, 2L, 3L), Seq(1L, 9L, 3L),
+          3L, "abab", Seq.tabulate(8)(_.toLong)))
+        .toDF("a", "b", "toks", "sigA", "sigB", "x", "s", "cms")
       val sel = df.select(
         NativeExprs.cosineSim(col("a"), col("b")).as("cos"),
         NativeExprs.minhashSig(col("toks"), 16).as("mh"),
@@ -60,8 +81,20 @@ class CodegenSpec extends AnyFunSuite {
         NativeExprs.shingleHashes(col("toks"), 2).as("shg"),
         NativeExprs.sampleDistSums(col("a"),
           Array(Array(Array(1.0, 2.0), Array(4.0, 6.0)), Array(Array(1.0, 6.0)))).as("sds"),
-        NativeExprs.runtimeLong(8123456789L).as("rl")
+        NativeExprs.runtimeLong(8123456789L).as("rl"),
+        NativeExprs.sigBandKeys(col("sigA"), 3).as("bk"),
+        NativeExprs.bloomContainsLong(col("x"), bloom).as("bc"),
+        NativeExprs.deflateLen(col("s")).as("dl"),
+        NativeExprs.dotCols(col("a"), col("b")).as("dc"),
+        NativeExprs.normL2(col("b")).as("nl"),
+        NativeExprs.dotW(col("a"), Array(0.5, -2.0)).as("dw"),
+        NativeExprs.centroidDists(col("a"), cents, sqrt = false).as("cd"),
+        NativeExprs.minSqDist(col("a"), cents).as("msd"),
+        NativeExprs.intersectCountLong(col("sigA"), col("sigB")).as("icl"),
+        NativeExprs.applyBpeMerges(col("toks"), Seq(("a", "b"), ("ab", "c"))).as("bpe"),
+        graft.functions.CountMinAgg.cmsEstimate(col("cms"), col("s"), 2, 4).as("cmse")
       )
+      assertCoversKernels(sel)
       val row = sel.head()
       // the projection ran as generated code, which reads the runtime
       // value by reference instead of inlining it
@@ -82,6 +115,19 @@ class CodegenSpec extends AnyFunSuite {
       val sds = row.getSeq[Double](row.fieldIndex("sds"))
       assert(sds.length == 2 && math.abs(sds(0) - 5.0) < 1e-12 &&
         math.abs(sds(1) - 4.0) < 1e-12, s"sample_dist_sums: $sds")
+      assert(row.getSeq[Long](row.fieldIndex("bk")).length == 3)
+      assert(row.getAs[Boolean]("bc"))
+      assert(row.getAs[Int]("dl") > 0)
+      assert(row.getAs[Double]("dc") == 10.0)
+      assert(math.abs(row.getAs[Double]("nl") - math.sqrt(20.0)) < 1e-12)
+      assert(row.getAs[Double]("dw") == -3.5)
+      assert(row.getSeq[Double](row.fieldIndex("cd")) == Seq(5.0, 145.0))
+      assert(row.getAs[Double]("msd") == 5.0)
+      assert(row.getAs[Int]("icl") == 2)
+      assert(row.getSeq[String](row.fieldIndex("bpe")) == Seq("abc"))
+      // every counter i holds i, so the estimate is the smaller of the
+      // key's two cell indices (row 1's offset by the width)
+      assert(row.getAs[Long]("cmse") >= 0 && row.getAs[Long]("cmse") < 4)
     }
   }
 
@@ -102,12 +148,18 @@ class CodegenSpec extends AnyFunSuite {
     val lut = Array(Array(1.0, -0.5), Array(0.25, 2.0))
     val bloom = org.apache.spark.util.sketch.BloomFilter.create(100, 0.03)
     Seq(7L, 42L, 99L).foreach(bloom.putLong)
+    val merges = Seq(("a", "b"), ("ab", "c"), ("x", "y"))
+    val weights = Array(0.5, -2.0)
+    // c is 2-dim in row 1 and 3-dim in row 2: dot_cols' length
+    // mismatch and the centroid kernels' dimension mismatch
     def resultRows(): Seq[String] = {
       val df = Seq(
-        (Seq(1.0, 2.0), Seq(2.0, 4.0), Seq("a", "b", "c", "a"), Seq(1L, 2L, 3L), Seq(1L, 9L, 3L), 42L, "abcabcabc"),
-        (Seq(-0.5, 0.75), Seq(0.1, -0.9), Seq("x", "y"), Seq(5L, 6L, 7L), Seq(5L, 6L, 7L), 8L, "zzzz"))
-        .toDF("a", "b", "toks", "sigA", "sigB", "x", "s")
-      df.select(
+        (Seq(1.0, 2.0), Seq(2.0, 4.0), Seq("a", "b", "c", "a"), Seq(1L, 2L, 3L), Seq(1L, 9L, 3L), 42L, "abcabcabc",
+          Seq(3.0, -1.0), Seq.tabulate(8)(i => (i * 7 % 5).toLong)),
+        (Seq(-0.5, 0.75), Seq(0.1, -0.9), Seq("x", "y"), Seq(5L, 6L, 7L), Seq(5L, 6L, 7L), 8L, "zzzz",
+          Seq(0.5, 1.5, -2.5), Seq.tabulate(8)(i => (i * 3 % 4).toLong)))
+        .toDF("a", "b", "toks", "sigA", "sigB", "x", "s", "c", "cms")
+      val sel = df.select(
         NativeExprs.cosineSim(col("a"), col("b")).as("cos"),
         NativeExprs.minhashSig(col("toks"), 16).as("mh"),
         NativeExprs.simhash64(col("toks")).as("sh"),
@@ -124,8 +176,20 @@ class CodegenSpec extends AnyFunSuite {
         NativeExprs.pqAdc(NativeExprs.pqEncode(col("a"), books), lut).as("pqa"),
         NativeExprs.deflateLen(col("s")).as("dl"),
         NativeExprs.bloomContainsLong(col("x"), bloom).as("bc"),
-        (col("x") + NativeExprs.runtimeLong(-7L)).as("rl"))
-        .collect().map { r =>
+        (col("x") + NativeExprs.runtimeLong(-7L)).as("rl"),
+        NativeExprs.dotCols(col("a"), col("b")).as("dc"),
+        NativeExprs.dotCols(col("a"), col("c")).as("dcNull"),
+        NativeExprs.normL2(col("c")).as("nl"),
+        NativeExprs.dotW(col("c"), weights).as("dw"),
+        NativeExprs.centroidDists(col("a"), cents, sqrt = true).as("cd"),
+        NativeExprs.centroidDists(col("c"), cents, sqrt = false).as("cdNull"),
+        NativeExprs.minSqDist(col("a"), cents).as("msd"),
+        NativeExprs.minSqDist(col("c"), cents).as("msdNull"),
+        NativeExprs.intersectCountLong(col("sigA"), col("sigB")).as("icl"),
+        NativeExprs.applyBpeMerges(col("toks"), merges).as("bpe"),
+        graft.functions.CountMinAgg.cmsEstimate(col("cms"), col("s"), 2, 4).as("cmse"))
+      assertCoversKernels(sel)
+      sel.collect().map { r =>
           // render binary columns hex so Row.toString is value-faithful
           (0 until r.length).map { i =>
             r.get(i) match {
@@ -155,6 +219,12 @@ class CodegenSpec extends AnyFunSuite {
     val codegen = withCodegenOnly(resultRows())
     assert(interpreted == codegen,
       s"codegen and interpreted paths diverge:\n interp: $interpreted\ncodegen: $codegen")
+    // the mismatch columns (dcNull, cdNull, msdNull among the last
+    // eleven, dc .. cmse) took their null branch on row 2 only
+    val tail = interpreted.map(_.split('|').takeRight(11).toSeq)
+    assert(Seq(1, 5, 7).map(tail(1)) == Seq("null", "null", "null") &&
+      !tail(0).contains("null"),
+      s"dcNull/cdNull/msdNull must be null on row 2 only: ${interpreted.mkString(" / ")}")
   }
 
   test("CosineSim null branches survive CODEGEN_ONLY (isNull codegen path)") {
