@@ -4,11 +4,16 @@ import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.sketch.BloomFilter
 
-/** JVM kernels for the sketch expressions. Top-level object ⇒ static
-  * forwarders, so generated Java (whole-stage codegen) calls these
-  * directly: the expressions keep their operators inside one codegen
-  * stage instead of a CodegenFallback interpreted-eval boundary. */
+/** JVM kernels for the native expressions: each [[NativeKernel]]
+  * declaration names one method here, which both its interpreted eval
+  * and its generated code call. Top-level object ⇒ static forwarders,
+  * so generated Java (whole-stage codegen) calls these directly: the
+  * expressions keep their operators inside one codegen stage instead
+  * of a CodegenFallback interpreted-eval boundary. A kernel's null rule
+  * lives here too — a null reference or NaN result, or a boolean guard
+  * such as [[sameLength]] — so the two paths cannot disagree on it. */
 object SketchKernels {
 
   /** Null array elements hash as the empty string across every token
@@ -100,10 +105,12 @@ object SketchKernels {
     * Two signatures land in the same (band, bucket) iff that band's
     * slots are all equal (modulo 64-bit hash collision), exactly the
     * banded-LSH collision structure; no comma-joined strings are
-    * materialized. slots must divide evenly into bands (callers pass
-    * SigLen/Bands constants; the expression nulls out otherwise). */
+    * materialized. Null when the slots do not divide evenly into bands
+    * (callers pass SigLen/Bands constants; a silent truncated-band key
+    * would merge buckets wrongly). */
   def sigBandKeys(sig: ArrayData, bands: Int): ArrayData = {
     val slots = sig.numElements()
+    if (slots % bands != 0) return null
     val rows = slots / bands
     val out = new Array[Long](bands)
     var b = 0
@@ -198,10 +205,15 @@ object SketchKernels {
 
   /** Product-quantization encode: the L2-normalized vector is split
     * into `codebooks.length` subvectors; each maps to the index of its
-    * nearest subspace centroid. 64-dim double vector → m bytes. */
+    * nearest subspace centroid. 64-dim double vector → m bytes. Null
+    * when the input's length is not the dimensionality the codebooks
+    * were trained at (a malformed embedding must not kill the scan or
+    * get a plausible-but-wrong code from stale/overflowing subspace
+    * indexing). */
   def pqEncode(e: ArrayData, codebooks: Array[Array[Array[Double]]]): Array[Byte] = {
     val dim = e.numElements()
     val m = codebooks.length
+    if (dim != (if (m > 0 && codebooks(0).nonEmpty) m * codebooks(0)(0).length else 0)) return null
     val dsub = dim / m
     var norm = 0.0
     var i = 0
@@ -234,13 +246,15 @@ object SketchKernels {
   }
 
   /** Shape guard for [[pqAdc]]: the code must carry exactly m bytes
-    * and every byte must index inside the k-entry tables — a foreign
+    * and every byte must index inside the k-entry tables of the m × k
+    * `lut` — a foreign
     * binary column (say a 64-byte int8 vector against an 8-subspace
     * LUT, or codes trained with a larger k) otherwise dies mid-scan
     * with an ArrayIndexOutOfBoundsException where every sibling
     * expression nulls (round-14 review). */
-  def pqAdcValid(code: Array[Byte], m: Int, k: Int): Boolean = {
-    if (code.length != m) return false
+  def pqAdcValid(code: Array[Byte], lut: Array[Array[Double]]): Boolean = {
+    val k = lut(0).length
+    if (code.length != lut.length) return false
     var s = 0
     while (s < code.length) {
       if ((code(s) & 0xFF) >= k) return false
@@ -263,9 +277,58 @@ object SketchKernels {
     acc
   }
 
-  /** Cosine over two int8-quantized vectors (integer dot + norms). */
+  /** Cosine of two array<double> vectors: dot and both norms in one
+    * pass. NaN (null) when the lengths differ or either norm is zero. */
+  def cosine(a: ArrayData, b: ArrayData): Double = {
+    val n = a.numElements()
+    if (n != b.numElements()) return Double.NaN
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val x = a.getDouble(i); val y = b.getDouble(i)
+      dot += x * y; na += x * x; nb += y * y
+      i += 1
+    }
+    val denom = math.sqrt(na) * math.sqrt(nb)
+    if (denom == 0.0) Double.NaN else dot / denom
+  }
+
+  /** a·b of two equal-length array<double> columns, left fold from 0.0
+    * ((0 + a₀b₀) + a₁b₁ + …, the HOF aggregate/zip_with order);
+    * callers guard with [[sameLength]]. */
+  def dotCols(a: ArrayData, b: ArrayData): Double = {
+    val n = a.numElements()
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += a.getDouble(i) * b.getDouble(i); i += 1 }
+    s
+  }
+
+  /** ‖a‖₂ in the HOF fold's order: sqrt((0 + a₀²) + a₁² + …). */
+  def normL2(a: ArrayData): Double = {
+    val n = a.numElements()
+    var s = 0.0
+    var i = 0
+    while (i < n) { val x = a.getDouble(i); s += x * x; i += 1 }
+    math.sqrt(s)
+  }
+
+  /** Guard of the pairwise kernels ([[sigMatches]], [[dotCols]]): a
+    * truncated count or sum over min(len) would read as a plausible
+    * value. */
+  def sameLength(a: ArrayData, b: ArrayData): Boolean = a.numElements() == b.numElements()
+
+  /** Guard of the centroid kernels: the input has the centroids'
+    * dimensionality (a min-length distance would assign a
+    * plausible-but-wrong cluster to a malformed embedding). */
+  def fitsDim(e: ArrayData, centroids: Array[Array[Double]]): Boolean =
+    e.numElements() == (if (centroids.nonEmpty) centroids(0).length else 0)
+
+  /** Cosine over two int8-quantized vectors (integer dot + norms). NaN
+    * (null) on length mismatch or zero norm, like [[cosine]]. */
   def cosineI8(a: Array[Byte], b: Array[Byte]): Double = {
-    val n = math.min(a.length, b.length)
+    if (a.length != b.length) return Double.NaN
+    val n = a.length
     var dot = 0L; var na = 0L; var nb = 0L
     var i = 0
     while (i < n) {
@@ -455,10 +518,13 @@ object SketchKernels {
     * loop over K×m expression-static vectors (a few hundred — rides
     * the serialized plan like the centroids) replaces K×m interpreted
     * HOF evaluations per row. Returns sums (not means) so the caller
-    * can self-exclude a sampled row from its own cluster's mean. */
+    * can self-exclude a sampled row from its own cluster's mean. Null
+    * when the input's dimensionality is not the sampled vectors'. */
   def sampleDistSums(e: ArrayData,
                      samples: Array[Array[Array[Double]]]): ArrayData = {
     val dim = e.numElements()
+    val sampledDim = samples.find(_.nonEmpty).fold(0)(_(0).length)
+    if (sampledDim > 0 && sampledDim != dim) return null
     val out = new Array[Double](samples.length)
     var c = 0
     while (c < samples.length) {
@@ -491,8 +557,16 @@ object SketchKernels {
   }
 
   /** Point estimate: min over the depth rows of the flattened
-    * depth×width counter array (CMS guarantee: true ≤ est). */
+    * depth×width counter array (CMS guarantee: true ≤ est). A register
+    * array that is not exactly depth×width longs can only mean the
+    * probe is wired to a different build: it fails with the wiring
+    * spelled out rather than return a value that reads as a count. */
   def cmsEstimate(sketch: ArrayData, s: UTF8String, depth: Int, width: Int): Long = {
+    if (sketch.numElements() != depth * width)
+      throw new IllegalArgumentException(
+        s"cms_estimate layout mismatch: probe declared ${depth}x$width " +
+          s"(${depth * width} registers) but the sketch has ${sketch.numElements()} — " +
+          "build and probe must share one (depth, width) pair")
     val key = if (s == null) UTF8String.EMPTY_UTF8 else s
     var est = Long.MaxValue
     var r = 0
@@ -503,6 +577,10 @@ object SketchKernels {
     }
     est
   }
+
+  /** Bloom-filter membership of a BIGINT key (false positives
+    * possible, false negatives not). */
+  def bloomContainsLong(x: Long, filter: BloomFilter): Boolean = filter.mightContainLong(x)
 
   def hyperplane(e: ArrayData, planes: Array[Array[Double]],
                  bitsPerBand: Int): ArrayData = {

@@ -52,18 +52,6 @@ object Cluster {
   private def emb(s: SparkSession, d: String): DataFrame =
     graft.Tables.embeddingVectors(s, d)
 
-  /** Squared L2 distance from an array<double> column to the nearest
-    * of the literal centroids — codegen'd kernel
-    * ([[graft.functions.MinSqDist]]). r19 optimization: the previous
-    * HOF form (one aggregate/zip_with chain per centroid folded
-    * through `least`) evaluated K interpreted lambda chains per row in
-    * every seeding pass, every Lloyd iteration, and the final scoring
-    * — the fit's hottest expression. The kernel keeps the identical
-    * per-element fold order and `least` NaN semantics, so the values
-    * are bit-identical (ClusterSpec pins fit determinism). */
-  private def minSqDist(e: Column, cents: Array[Array[Double]]): Column =
-    graft.functions.NativeExprs.minSqDist(e, cents)
-
   /** Farthest-point seeding: seed 1 is the min-content-hash vector
     * (layout-unbiased, like Ivf.sampleVectors); each further seed is
     * the vector farthest from the chosen set (hash tie-break). k−1
@@ -74,7 +62,7 @@ object Cluster {
     val seeds = scala.collection.mutable.ArrayBuffer(first)
     while (seeds.length < k) {
       val next = vecs
-        .select(col("e"), minSqDist(col("e"), seeds.toArray).as("d2"))
+        .select(col("e"), graft.functions.NativeExprs.minSqDist(col("e"), seeds.toArray).as("d2"))
         .orderBy(col("d2").desc, xxhash64(col("e")).asc)
         .limit(1).collect()(0)
       if (next.getDouble(1) == 0.0) return seeds.toArray // < k distinct vectors
@@ -140,7 +128,7 @@ object Cluster {
     while (it < iters) {
       val assigned = clean.select(
         graft.functions.NativeExprs.nearestCentroid(col("e"), cents).as("c"),
-        minSqDist(col("e"), cents).as("d2"),
+        graft.functions.NativeExprs.minSqDist(col("e"), cents).as("d2"),
         col("e"))
       val rows = assigned
         .select(col("c"), col("d2"), posexplode(col("e")).as(Seq("dim", "x")))
@@ -176,7 +164,7 @@ object Cluster {
     val m = kmeansDistributed(vecs)
     vecs.select(
       graft.functions.NativeExprs.nearestCentroid(col("e"), m.centroids).as("cluster"),
-      minSqDist(col("e"), m.centroids).as("d2"))
+      graft.functions.NativeExprs.minSqDist(col("e"), m.centroids).as("d2"))
       .groupBy(col("cluster"))
       .agg(count(lit(1)).as("n_vecs"), round(avg(col("d2")), 6).as("mean_sq_dist"))
       .orderBy(col("cluster"))

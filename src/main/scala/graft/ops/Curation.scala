@@ -42,16 +42,11 @@ import graft.Tables._
   * suite (SURVEY §2.9).
   */
 object Curation {
+  import IndexTables.hashBucket
 
   /** Whitespace tokens — same convention as Text.q32 (`str_split(text,
     * ' ')` on the oracle side). */
   private def nTokens(c: Column): Column = size(split(c, " ")).cast("bigint")
-
-  /** First two md5 hex chars of a string column: a uniform bucket in
-    * '00'..'ff' (256 buckets) that DuckDB computes byte-identically —
-    * string comparison against a hex literal IS the threshold test, no
-    * hex→int conversion needed (DuckDB has no `conv`). */
-  private def hashBucket(c: Column): Column = substring(md5(c), 1, 2)
 
   // ---------------------------------------------------------------- q63
 

@@ -18,7 +18,11 @@ import org.apache.spark.sql.functions._
   * nested source-dir name (`v2_<fp>`) can never satisfy. */
 private[graft] object IndexTables {
 
-  /** md5-prefix slice key (q63's deterministic split rule). */
+  /** First two md5 hex chars of a string column (q63's deterministic
+    * split rule): a uniform bucket in '00'..'ff' (256 buckets) that
+    * DuckDB computes byte-identically — string comparison against a
+    * hex literal IS the threshold test, no hex→int conversion needed
+    * (DuckDB has no `conv`). */
   def hashBucket(c: Column): Column = substring(md5(c), 1, 2)
 
   /** The md5 slices the q186/q189/q198/q199 probes share: (existing

@@ -217,8 +217,12 @@ object Similarity {
     * recall@10 ≥ 0.6 additionally pinned in SimilaritySpec. */
   def q41AnnLsh(s: SparkSession, d: String): DataFrame = {
     val signed = withSignature(emb(s, d))
+    // outer explode + filter, as in Dedup.bandedPairs: an inner
+    // posexplode lets Catalyst push an inferred size/isnotnull(bands)
+    // filter below the signing Project, signing every vector twice more
     val exploded = signed.select(col("vec_id"), col("e"),
-        posexplode(col("bands")).as(Seq("band_idx", "band_val")))
+        posexplode_outer(col("bands")).as(Seq("band_idx", "band_val")))
+      .filter(col("band_idx").isNotNull)
     // the query side (1 row) fans out to 8 bands × 37 probe buckets —
     // a 296-row broadcast; the corpus side is untouched
     val qProbes = exploded.filter(col("vec_id") === 0)

@@ -2,9 +2,14 @@ package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.QueryPlan
+import org.apache.spark.sql.execution.{DataSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.execution.debug.codegenStringSeq
@@ -21,6 +26,29 @@ object GeneratedSource {
 
   /** Sources of an already-executed DataFrame (AQE's final plan). */
   def of(df: DataFrame): Seq[String] = sources(df.queryExecution.executedPlan)
+
+  /** How many times `plans` evaluate expression class `T` per row, a
+    * count of the occurrences in the plans' nodes: a scan's data
+    * filters repeat a Filter's predicates for pruning and are not
+    * evaluated again, so scan nodes are skipped; a cached plan counts
+    * once, however many of the plans read it. Works on logical and
+    * physical plans alike. */
+  def exprCount[T <: Expression: ClassTag](plans: QueryPlan[_]*): Int = {
+    val cached = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+    def cachedOnce(c: SparkPlan): Int =
+      if (cached.exists(_ eq c)) 0 else { cached += c; count(c) }
+    def count(p: QueryPlan[_]): Int = p match {
+      case a: AdaptiveSparkPlanExec => count(a.executedPlan)
+      case q: QueryStageExec => count(q.plan)
+      case _: DataSourceScanExec => 0
+      case m: InMemoryTableScanExec => cachedOnce(m.relation.cacheBuilder.cachedPlan)
+      case r: InMemoryRelation => cachedOnce(r.cacheBuilder.cachedPlan)
+      case other =>
+        other.expressions.map(_.collect { case e: T => e }.size).sum +
+          other.children.map(c => count(c.asInstanceOf[QueryPlan[_]])).sum
+    }
+    plans.map(count).sum
+  }
 
   /** The first line at which two source sets differ, if any. */
   def firstDifference(a: Seq[String], b: Seq[String]): Option[String] =

@@ -210,24 +210,14 @@ class IncrementalDedupSpec extends AnyFunSuite {
   }
 
   test("build and append sign each document once: one MinHashSig per write plan") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.SparkPlan
     import spark.implicits._
     // an inner explode of `bands` let Catalyst infer size(bands) > 0
     // AND isnotnull(bands) and push it below the signing Project,
     // inlining minhash_sig twice more into a Filter
     val t = "dedup_sign_once_idx"
     dropIndex(t)
-    // per row: a scan's data filters repeat the Filter's for pushdown
-    // and are not evaluated again
-    def signings(p: SparkPlan): Int = p match {
-      case a: AdaptiveSparkPlanExec => signings(a.executedPlan)
-      case q: QueryStageExec => signings(q.plan)
-      case _: FileSourceScanExec => 0
-      case other =>
-        other.expressions.map(_.collect { case m: graft.functions.MinHashSig => m }.size).sum +
-          other.children.map(signings).sum
-    }
+    def signings(p: SparkPlan): Int = GeneratedSource.exprCount[graft.functions.MinHashSig](p)
     val docs = Tables.documents(spark, TestSpark.sf0001).select("doc_id", "text")
     val built = GeneratedSource.insertPlans(spark, t)(
       IncrementalDedup.buildIndex(docs.filter(col("doc_id") < 200), t, buckets = 4))

@@ -138,8 +138,7 @@ class SimilaritySpec extends AnyFunSuite {
     // over parquet, not a local relation the optimizer would sign
     // at planning time
     val plan = Similarity.q42EmbedNearDup(spark, TestSpark.sf0001).queryExecution.optimizedPlan
-    val exprs = plan.collect { case n => n.expressions }.flatten
-    val lists = exprs.map(_.collect { case c: CollectList => c }.size).sum
+    val lists = GeneratedSource.exprCount[CollectList](plan)
     assert(lists == 1, s"expected one member-list aggregation, got $lists in:\n$plan")
     val bucketJoins = plan.collect {
       case j: Join if j.joinType == Inner &&
@@ -148,8 +147,18 @@ class SimilaritySpec extends AnyFunSuite {
     assert(bucketJoins.isEmpty, s"bucket-key self-join in:\n$plan")
     // one signing for the over-cap count, one for the pairs; an inner
     // explode let Catalyst inline two more into an inferred Filter
-    val signs = exprs.map(_.collect { case h: graft.functions.HyperplaneSig => h }.size).sum
+    val signs = GeneratedSource.exprCount[graft.functions.HyperplaneSig](plan)
     assert(signs <= 2, s"hyperplane_sig evaluated $signs times per vector in:\n$plan")
+  }
+
+  test("q41 plan: hyperplane_sig once per side, no inferred filter re-signing") {
+    // the corpus and the query vector each sign once; an inner
+    // posexplode let Catalyst infer size(bands) > 0 AND
+    // isnotnull(bands) and push it below the signing Project, which
+    // signed each vector twice more in a Filter
+    val plan = Similarity.q41AnnLsh(spark, TestSpark.sf0001).queryExecution.optimizedPlan
+    val signs = GeneratedSource.exprCount[graft.functions.HyperplaneSig](plan)
+    assert(signs <= 2, s"hyperplane_sig evaluated $signs times in:\n$plan")
   }
 
   test("cosine null semantics: zero norm and length mismatch yield null") {

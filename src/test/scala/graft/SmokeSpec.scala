@@ -134,6 +134,31 @@ class SmokeSpec extends AnyFunSuite {
     assert(stray.isEmpty, s"banded-LSH copies outside Dedup.bandedPairs:\n${stray.mkString("\n")}")
   }
 
+  test("one kernel shape: doGenCode and nullSafeEval only in NativeKernel and RuntimeLong") {
+    // a kernel expression that hand-writes its eval or its generated
+    // Java carries a second copy of its kernel, which can drift from
+    // the first; every scalar kernel declares itself on NativeKernel
+    val dir = java.nio.file.Paths.get("src/main/scala/graft/functions")
+    assert(java.nio.file.Files.isDirectory(dir),
+      s"graft/functions not found under ${System.getProperty("user.dir")}")
+    val exprs = dir.resolve("Expressions.scala")
+    val exprLines = java.nio.file.Files.readAllLines(exprs).asScala
+    val start = exprLines.indexWhere(_.startsWith("case class RuntimeLong("))
+    val end = exprLines.indexWhere(_ == "}", start)
+    assert(start >= 0 && end > start, "RuntimeLong not found in Expressions.scala")
+    val files = java.nio.file.Files.list(dir)
+    val sources = try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally files.close()
+    val found = sources.filterNot(_.getFileName.toString == "NativeKernel.scala").flatMap { f =>
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if (line.contains("doGenCode") || line.contains("nullSafeEval")) &&
+            !(f == exprs && i >= start && i <= end) =>
+          s"$f:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(found.isEmpty, s"hand-written eval or codegen outside NativeKernel:\n${found.mkString("\n")}")
+  }
+
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name runs and returns rows at sf0.001") {
       val n = fn(spark, TestSpark.sf0001).count()

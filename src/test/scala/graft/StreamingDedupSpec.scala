@@ -337,7 +337,6 @@ class StreamingDedupSpec extends AnyFunSuite {
   test("one trigger signs its documents once: one MinHashSig across the trigger's plans") {
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.command.DataWritingCommandExec
     import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
     import org.apache.spark.sql.util.QueryExecutionListener
@@ -378,19 +377,7 @@ class StreamingDedupSpec extends AnyFunSuite {
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
       while (plans.size < 2 && System.nanoTime() < deadline) Thread.sleep(20)
       assert(plans.size == 2, s"expected the trigger's two writes, got ${plans.size}")
-      // each cached plan counted once, however many plans read it
-      val cached = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
-      def signings(p: SparkPlan): Int = p match {
-        case a: AdaptiveSparkPlanExec => signings(a.executedPlan)
-        case q: QueryStageExec => signings(q.plan)
-        case m: InMemoryTableScanExec =>
-          val c = m.relation.cacheBuilder.cachedPlan
-          if (cached.exists(_ eq c)) 0 else { cached += c; signings(c) }
-        case other =>
-          other.expressions.map(_.collect { case m: graft.functions.MinHashSig => m }.size).sum +
-            other.children.map(signings).sum
-      }
-      val n = plans.map(signings).sum
+      val n = GeneratedSource.exprCount[graft.functions.MinHashSig](plans: _*)
       assert(n == 1, s"one trigger ran $n MinHashSig passes")
     } finally spark.listenerManager.unregister(listener)
   }
