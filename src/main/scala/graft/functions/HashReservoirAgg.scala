@@ -1,34 +1,46 @@
 package graft.functions
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The one bounded-sorted-buffer mechanic both reservoir aggregates
-  * share: insert keeping ascending-by-`wins` order, capped at k. The
-  * common case on a big group — a row losing to an already-full
-  * reservoir's worst entry — is one comparison. Shared so a fix to
-  * the buffer mechanics can never land in one sibling and miss the
-  * other (round-12 review). */
-private[functions] object Reservoir {
-  def insert[E](buf: scala.collection.mutable.ArrayBuffer[E], e: E, k: Int,
-                wins: (E, E) => Boolean): Unit = {
+/** The bounded sorted buffer both reservoir declarations keep: the k
+  * (key, id) entries that win, in winning order, merged as a sorted
+  * k-truncated union (associative and commutative, so the result does
+  * not depend on the partitioning). */
+sealed abstract class Reservoir[K](k: Int) extends Sketch[ArrayBuffer[(K, Long)]] {
+  require(k >= 1, s"reservoir size must be >= 1, got $k")
+
+  /** Whether entry `a` wins over entry `b`: a total order. */
+  protected def wins(a: (K, Long), b: (K, Long)): Boolean
+
+  /** Inserts keeping winning order, capped at k. The common case on a
+    * big group — a row losing to a full reservoir's worst entry — is
+    * one comparison. */
+  def insert(buf: ArrayBuffer[(K, Long)], e: (K, Long)): Unit = {
     if (buf.length == k && !wins(e, buf.last)) return
     var i = buf.length
     while (i > 0 && wins(e, buf(i - 1))) i -= 1
     buf.insert(i, e)
     if (buf.length > k) buf.remove(buf.length - 1)
   }
+
+  def dataType: DataType = ArrayType(LongType, containsNull = false)
+  def create(): ArrayBuffer[(K, Long)] = ArrayBuffer.empty
+  def merge(b1: ArrayBuffer[(K, Long)], b2: ArrayBuffer[(K, Long)]): ArrayBuffer[(K, Long)] = {
+    b2.foreach(insert(b1, _))
+    b1
+  }
+  def eval(buf: ArrayBuffer[(K, Long)]): Any = new GenericArrayData(buf.map(_._2).toArray)
 }
 
-/** Deterministic bounded sampling as a Catalyst
-  * TypedImperativeAggregate: per group, keep the k ids with the
-  * SMALLEST (rank, id) — rank being any deterministic hash string
-  * (q84's md5 recipe) — and return them in rank order.
+/** `hash_reservoir(rank, id)`: deterministic bounded sampling — per
+  * group, keep the k ids with the SMALLEST (rank, id) — rank being any
+  * deterministic hash string (q84's md5 recipe) — and return them in
+  * rank order.
   *
   * Honest comparison with q84's window form on Spark 4: the optimizer
   * already inserts a PARTIAL WindowGroupLimit below the exchange
@@ -49,127 +61,48 @@ private[functions] object Reservoir {
   * randomness discipline), ties break on id, and both sides of the
   * comparison are binary UTF8 — the same order DuckDB gives hex
   * varchars. */
-case class HashReservoirAgg(rank: Expression, id: Expression, k: Int,
-                            mutableAggBufferOffset: Int = 0,
-                            inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[scala.collection.mutable.ArrayBuffer[(UTF8String, Long)]] {
+case class HashReservoir(k: Int) extends Reservoir[UTF8String](k) {
+  def prettyName: String = "hash_reservoir"
+  def accepts(in: Seq[DataType]): Boolean = in == Seq(StringType, LongType)
+  def typeError(got: String): String =
+    s"$prettyName expects (string rank, bigint id), got $got"
 
-  require(k >= 1, s"reservoir size must be >= 1, got $k")
-
-  type Buf = scala.collection.mutable.ArrayBuffer[(UTF8String, Long)]
-
-  override def children: Seq[Expression] = Seq(rank, id)
-
-  // analysis-time validation: update() casts straight to
-  // UTF8String/Long, which would otherwise surface as a per-row
-  // ClassCastException at execution (round-12 review)
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (rank.dataType, id.dataType) match {
-      case (org.apache.spark.sql.types.StringType, LongType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (r, i) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"hash_reservoir expects (string rank, bigint id), got " +
-            s"(${r.catalogString}, ${i.catalogString})")
-    }
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "hash_reservoir"
-
-  override def createAggregationBuffer(): Buf =
-    scala.collection.mutable.ArrayBuffer.empty
-
-  private def lt(a: (UTF8String, Long), b: (UTF8String, Long)): Boolean = {
+  protected def wins(a: (UTF8String, Long), b: (UTF8String, Long)): Boolean = {
     val c = a._1.compareTo(b._1)
     c < 0 || (c == 0 && a._2 < b._2)
   }
 
-  override def update(buf: Buf, input: InternalRow): Buf = {
-    val r = rank.eval(input)
-    val v = id.eval(input)
-    if (r != null && v != null)
-      // clone: the evaluated UTF8String may point into a reused row buffer
-      Reservoir.insert(buf, (r.asInstanceOf[UTF8String].clone(), v.asInstanceOf[Long]), k, lt)
+  def update(buf: ArrayBuffer[(UTF8String, Long)], in: Array[Any],
+             types: Seq[DataType]): ArrayBuffer[(UTF8String, Long)] = {
+    // clone: the evaluated UTF8String may point into a reused row buffer
+    insert(buf, (in(0).asInstanceOf[UTF8String].clone(), in(1).asInstanceOf[Long]))
     buf
   }
 
-  override def merge(b1: Buf, b2: Buf): Buf = {
-    b2.foreach(Reservoir.insert(b1, _, k, lt))
-    b1
-  }
-
-  override def eval(buf: Buf): Any =
-    new GenericArrayData(buf.map(_._2).toArray)
-
-  override def serialize(buf: Buf): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val out = new java.io.DataOutputStream(bos)
-    out.writeInt(buf.length)
-    buf.foreach { case (r, v) =>
-      val b = r.getBytes
-      out.writeInt(b.length); out.write(b); out.writeLong(v)
+  def toBytes(buf: ArrayBuffer[(UTF8String, Long)]): Array[Byte] =
+    SketchCodec.write(buf) { case (out, (r, v)) =>
+      SketchCodec.putBytes(out, r.getBytes)
+      out.writeLong(v)
     }
-    out.flush(); bos.toByteArray
-  }
 
-  override def deserialize(bytes: Array[Byte]): Buf = {
-    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val buf = createAggregationBuffer()
-    var i = 0
-    while (i < n) {
-      val len = in.readInt()
-      val b = new Array[Byte](len)
-      in.readFully(b)
-      buf += ((UTF8String.fromBytes(b), in.readLong()))
-      i += 1
-    }
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(o: Int): HashReservoirAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): HashReservoirAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): HashReservoirAgg =
-    copy(rank = cs(0), id = cs(1))
+  def fromBytes(bytes: Array[Byte]): ArrayBuffer[(UTF8String, Long)] =
+    ArrayBuffer.from(SketchCodec.read(bytes)(in =>
+      (UTF8String.fromBytes(SketchCodec.getBytes(in)), in.readLong())))
 }
 
-/** [[HashReservoirAgg]]'s WEIGHTED sibling — Efraimidis–Spirakis A-ES
-  * sampling as a mergeable aggregate: keep the k ids with the LARGEST
-  * (priority, −id) where priority = u^(1/w) (q103's deterministic
-  * md5-derived form). Same bounded sorted-buffer state, same
+/** [[HashReservoir]]'s WEIGHTED sibling, `weighted_reservoir(prio,
+  * id)` — Efraimidis–Spirakis A-ES sampling as a mergeable aggregate:
+  * keep the k ids with the LARGEST (priority, −id) where priority =
+  * u^(1/w) (q103's deterministic md5-derived form). Same bounded sorted-buffer state, same
   * partitioning-independent k-truncated merge, same shuffle shape;
   * the only differences are the double rank and the descending order
   * (a larger priority wins; ties still break on the SMALLER id,
   * matching q103's `ORDER BY prio DESC, doc_id`). */
-case class WeightedReservoirAgg(prio: Expression, id: Expression, k: Int,
-                                mutableAggBufferOffset: Int = 0,
-                                inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[scala.collection.mutable.ArrayBuffer[(Double, Long)]] {
-
-  require(k >= 1, s"reservoir size must be >= 1, got $k")
-
-  type Buf = scala.collection.mutable.ArrayBuffer[(Double, Long)]
-
-  override def children: Seq[Expression] = Seq(prio, id)
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (prio.dataType, id.dataType) match {
-      case (org.apache.spark.sql.types.DoubleType, LongType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (r, i) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"weighted_reservoir expects (double priority, bigint id), got " +
-            s"(${r.catalogString}, ${i.catalogString})")
-    }
-
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "weighted_reservoir"
-
-  override def createAggregationBuffer(): Buf =
-    scala.collection.mutable.ArrayBuffer.empty
+case class WeightedReservoir(k: Int) extends Reservoir[Double](k) {
+  def prettyName: String = "weighted_reservoir"
+  def accepts(in: Seq[DataType]): Boolean = in == Seq(DoubleType, LongType)
+  def typeError(got: String): String =
+    s"$prettyName expects (double priority, bigint id), got $got"
 
   /** "a wins over b": larger priority, then smaller id — via
     * Double.compare's TOTAL order, so NaN (which IEEE `>` makes
@@ -179,67 +112,36 @@ case class WeightedReservoirAgg(prio: Expression, id: Expression, k: Int,
     * deterministically greatest. q179's priorities are u^(1/w) with
     * u ∈ (0,1), which cannot produce NaN; a caller feeding NaN gets
     * deterministic, partitioning-independent behavior, not silence. */
-  private def wins(a: (Double, Long), b: (Double, Long)): Boolean = {
+  protected def wins(a: (Double, Long), b: (Double, Long)): Boolean = {
     val c = java.lang.Double.compare(a._1, b._1)
     c > 0 || (c == 0 && a._2 < b._2)
   }
 
-  override def update(buf: Buf, input: InternalRow): Buf = {
-    val p = prio.eval(input)
-    val v = id.eval(input)
-    if (p != null && v != null)
-      Reservoir.insert(buf, (p.asInstanceOf[Double], v.asInstanceOf[Long]), k, wins)
+  def update(buf: ArrayBuffer[(Double, Long)], in: Array[Any],
+             types: Seq[DataType]): ArrayBuffer[(Double, Long)] = {
+    insert(buf, (in(0).asInstanceOf[Double], in(1).asInstanceOf[Long]))
     buf
   }
 
-  override def merge(b1: Buf, b2: Buf): Buf = {
-    b2.foreach(Reservoir.insert(b1, _, k, wins))
-    b1
-  }
+  def toBytes(buf: ArrayBuffer[(Double, Long)]): Array[Byte] =
+    SketchCodec.write(buf) { case (out, (p, v)) =>
+      out.writeDouble(p)
+      out.writeLong(v)
+    }
 
-  override def eval(buf: Buf): Any =
-    new GenericArrayData(buf.map(_._2).toArray)
-
-  override def serialize(buf: Buf): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val out = new java.io.DataOutputStream(bos)
-    out.writeInt(buf.length)
-    buf.foreach { case (p, v) => out.writeDouble(p); out.writeLong(v) }
-    out.flush(); bos.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): Buf = {
-    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val buf = createAggregationBuffer()
-    var i = 0
-    while (i < n) { buf += ((in.readDouble(), in.readLong())); i += 1 }
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(o: Int): WeightedReservoirAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): WeightedReservoirAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): WeightedReservoirAgg =
-    copy(prio = cs(0), id = cs(1))
+  def fromBytes(bytes: Array[Byte]): ArrayBuffer[(Double, Long)] =
+    ArrayBuffer.from(SketchCodec.read(bytes)(in => (in.readDouble(), in.readLong())))
 }
 
 object HashReservoirAgg {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
-
   /** Aggregate Column: the k ids with the smallest (rank, id), in
     * rank order — the shuffle-light form of per-group exact-k
     * deterministic sampling. */
   def hashReservoir(rank: Column, id: Column, k: Int): Column =
-    ColumnBridge.column(HashReservoirAgg(
-      ColumnBridge.expression(rank), ColumnBridge.expression(id), k)
-      .toAggregateExpression())
+    SketchAgg.column(HashReservoir(k), rank, id)
 
   /** Aggregate Column: the k ids with the LARGEST (priority, −id) —
     * A-ES weighted sampling without replacement as an aggregate. */
   def weightedReservoir(prio: Column, id: Column, k: Int): Column =
-    ColumnBridge.column(WeightedReservoirAgg(
-      ColumnBridge.expression(prio), ColumnBridge.expression(id), k)
-      .toAggregateExpression())
+    SketchAgg.column(WeightedReservoir(k), prio, id)
 }

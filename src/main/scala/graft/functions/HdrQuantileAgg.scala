@@ -1,15 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.types.{ArrayType, BinaryType, ByteType, DataType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types._
 
-/** Mergeable QUANTILE sketch as a Catalyst TypedImperativeAggregate —
-  * the quantile member of the suite's sketch family (HLL distincts,
+/** Mergeable QUANTILE sketch, declared on [[SketchAgg]] — the
+  * quantile member of the suite's sketch family (HLL distincts,
   * Count-Min frequencies, SpaceSaving heavy hitters, hash reservoirs;
   * quantiles were the gap). Spark's percentile_approx answers one
   * query but its state is not a PERSISTABLE column, so it cannot play
@@ -71,6 +67,13 @@ private[graft] object Hdr {
     }
 
   def update(buf: Array[Long], v: Long): Unit = buf(indexOf(v)) += 1L
+
+  /** The readout's type: one lower bound per requested quantile. */
+  val QuantilesType: DataType = ArrayType(LongType, containsNull = false)
+
+  def checkQuantiles(qs: Seq[Double]): Unit =
+    require(qs.nonEmpty && qs.forall(q => q > 0.0 && q <= 1.0),
+      s"quantiles must sit in (0, 1], got $qs")
 
   def mergeInto(b1: Array[Long], b2: Array[Long]): Array[Long] = {
     require(b1.length == b2.length,
@@ -185,151 +188,78 @@ private[graft] object Hdr {
   }
 }
 
-/** Shared histogram lifecycle of the three HDR aggregates (the
-  * round-14 dedup of the twins' checkInputDataTypes/update/merge/
-  * serialize blocks — the HllAggBase pattern): fixed [[Hdr.Size]]
-  * counter array, element-wise-add merge, validated byte
-  * serialization. Subclasses choose only what [[update]] consumes
-  * (raw longs vs stored sketch bytes) and what [[eval]] emits
-  * (quantile readout vs bytes) — one definition, so the persisted
-  * rollup identity (HdrSpec) cannot drift between twins. */
-private[functions] trait HdrAggBase extends TypedImperativeAggregate[Array[Long]] {
-  def child: Expression
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](Hdr.Size)
-  override def merge(b1: Array[Long], b2: Array[Long]): Array[Long] =
-    Hdr.mergeInto(b1, b2)
-  override def serialize(buf: Array[Long]): Array[Byte] = Hdr.toBytes(buf)
-  override def deserialize(bytes: Array[Byte]): Array[Long] = Hdr.fromBytes(bytes)
+/** The histogram the three HDR declarations share: [[Hdr.Size]]
+  * counters, element-wise-add merge, the validated sparse byte form.
+  * One definition, so the persisted rollup identity (HdrSpec) cannot
+  * drift between them. */
+sealed abstract class HdrCounts extends Sketch[Array[Long]] {
+  def create(): Array[Long] = new Array[Long](Hdr.Size)
+  def merge(b1: Array[Long], b2: Array[Long]): Array[Long] = Hdr.mergeInto(b1, b2)
+  def toBytes(buf: Array[Long]): Array[Byte] = Hdr.toBytes(buf)
+  def fromBytes(bytes: Array[Byte]): Array[Long] = Hdr.fromBytes(bytes)
 }
 
-/** The sketch-BUILDING side (raw integral values in): the
-  * integral-only analysis gate + the bucket update, shared by the
-  * estimating and emitting twins. */
-private[functions] trait HdrBuildingAgg extends HdrAggBase {
-  // analysis-time guard: a non-integral child would otherwise fail
-  // per-row at execution (ClassCastException) — or WORSE, a double
-  // would silently truncate 3.7→3 and skew every quantile readout
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ByteType | ShortType | IntegerType | LongType =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects an integral column (cast explicitly — a " +
-        s"silent double truncation would skew quantiles), got ${other.catalogString}")
+/** The sketch-BUILDING side (raw integral values in) of
+  * `hdr_quantiles` and `hdr_sketch`. A non-integral child would
+  * otherwise fail per row (ClassCastException) — or WORSE, a double
+  * would silently truncate 3.7→3 and skew every quantile readout. */
+sealed abstract class HdrBuild extends HdrCounts {
+  def accepts(in: Seq[DataType]): Boolean = in.head match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
   }
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) Hdr.update(buf, v.asInstanceOf[Number].longValue())
+  def typeError(got: String): String = s"$prettyName expects an integral column (cast " +
+    s"explicitly — a silent double truncation would skew quantiles), got $got"
+  def update(buf: Array[Long], in: Array[Any], types: Seq[DataType]): Array[Long] = {
+    Hdr.update(buf, in(0).asInstanceOf[Number].longValue())
     buf
   }
 }
 
-/** The quantile-READOUT side: validated (0, 1] targets, array-of-
-  * lower-bounds eval — shared by the direct and merge aggregates. */
-private[functions] trait HdrQuantileReadout extends HdrAggBase {
-  def qs: Seq[Double]
-  require(qs.nonEmpty && qs.forall(q => q > 0.0 && q <= 1.0),
-    s"quantiles must sit in (0, 1], got $qs")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def eval(buf: Array[Long]): Any =
-    new GenericArrayData(Hdr.quantiles(buf, qs))
+/** `hdr_quantiles(x, [q…])` → ARRAY<BIGINT> of bucket-lower-bound
+  * values, one per requested quantile. */
+case class HdrQuantiles(qs: Seq[Double]) extends HdrBuild {
+  Hdr.checkQuantiles(qs)
+  def prettyName: String = "hdr_quantiles"
+  def dataType: DataType = Hdr.QuantilesType
+  def eval(buf: Array[Long]): Any = new GenericArrayData(Hdr.quantiles(buf, qs))
 }
 
-/** Estimating aggregate: `hdr_quantiles(x, [q…])` → ARRAY<BIGINT> of
-  * bucket-lower-bound values, one per requested quantile. */
-case class HdrQuantileAgg(child: Expression, qs: Seq[Double],
-                          mutableAggBufferOffset: Int = 0,
-                          inputAggBufferOffset: Int = 0)
-    extends HdrBuildingAgg with HdrQuantileReadout {
-
-  override def prettyName: String = "hdr_quantiles"
-
-  override def withNewMutableAggBufferOffset(o: Int): HdrQuantileAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): HdrQuantileAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): HdrQuantileAgg =
-    copy(child = cs.head)
+/** `hdr_sketch(x)`: the serialized histogram (BINARY) — the column a
+  * pipeline PERSISTS per (vintage, group) so later rollups merge
+  * sketches instead of re-scanning (q173's pattern, for quantiles). */
+case object HdrSketch extends HdrBuild {
+  def prettyName: String = "hdr_sketch"
+  def dataType: DataType = BinaryType
+  def eval(buf: Array[Long]): Any = Hdr.toBytes(buf)
 }
 
-/** Sketch-emitting twin: the aggregate's value is the serialized
-  * histogram (BINARY) — the column a pipeline PERSISTS per
-  * (vintage, group) so later rollups merge sketches instead of
-  * re-scanning (q173's pattern, for quantiles). */
-case class HdrSketchBytesAgg(child: Expression,
-                             mutableAggBufferOffset: Int = 0,
-                             inputAggBufferOffset: Int = 0)
-    extends HdrBuildingAgg {
-
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "hdr_sketch"
-
-  override def eval(buf: Array[Long]): Any = Hdr.toBytes(buf)
-
-  override def withNewMutableAggBufferOffset(o: Int): HdrSketchBytesAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): HdrSketchBytesAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): HdrSketchBytesAgg =
-    copy(child = cs.head)
-}
-
-/** Rollup side: merge STORED sketches (a BINARY column written by
-  * [[HdrSketchBytesAgg]]) and read out quantiles — element-wise
-  * addition makes the rolled-up histogram IDENTICAL to one built by a
-  * direct pass (HdrSpec pins the identity). */
-case class HdrMergeAgg(child: Expression, qs: Seq[Double],
-                       mutableAggBufferOffset: Int = 0,
-                       inputAggBufferOffset: Int = 0)
-    extends HdrQuantileReadout {
-
-  override def prettyName: String = "hdr_merge"
-
-  // analysis-time guard: the child must be a stored-sketch BINARY
-  // column; anything else died per-row as a ClassCastException
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"hdr_merge expects a binary sketch column (from hdr_sketch), " +
-        s"got ${other.catalogString}")
-  }
-
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    // sparse add, no dense intermediate (see Hdr.addBytesInto)
-    if (v != null) Hdr.addBytesInto(buf, v.asInstanceOf[Array[Byte]])
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(o: Int): HdrMergeAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): HdrMergeAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): HdrMergeAgg =
-    copy(child = cs.head)
+/** `hdr_merge(sk, [q…])`: quantiles of STORED sketches merged —
+  * element-wise addition makes the rolled-up histogram IDENTICAL to
+  * one built by a direct pass (HdrSpec pins the identity). */
+case class HdrMerge(qs: Seq[Double]) extends HdrCounts {
+  Hdr.checkQuantiles(qs)
+  def prettyName: String = "hdr_merge"
+  def dataType: DataType = Hdr.QuantilesType
+  def accepts(in: Seq[DataType]): Boolean = in == Seq(BinaryType)
+  def typeError(got: String): String =
+    s"$prettyName expects a binary sketch column (from hdr_sketch), got $got"
+  // sparse add, no dense intermediate (see Hdr.addBytesInto)
+  def update(buf: Array[Long], in: Array[Any], types: Seq[DataType]): Array[Long] =
+    Hdr.addBytesInto(buf, in(0).asInstanceOf[Array[Byte]])
+  def eval(buf: Array[Long]): Any = new GenericArrayData(Hdr.quantiles(buf, qs))
 }
 
 object HdrQuantileAgg {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
-
   /** Aggregate Column: quantile lower-bound values of a non-negative
     * BIGINT column, one per entry of `qs`. */
-  def hdrQuantiles(c: Column, qs: Seq[Double]): Column =
-    ColumnBridge.column(
-      HdrQuantileAgg(ColumnBridge.expression(c), qs).toAggregateExpression())
+  def hdrQuantiles(c: Column, qs: Seq[Double]): Column = SketchAgg.column(HdrQuantiles(qs), c)
 
   /** Aggregate Column: the sketch ITSELF (sparse histogram bytes) —
     * the persistable form; roll up later with [[hdrMergeQuantiles]]. */
-  def hdrSketch(c: Column): Column =
-    ColumnBridge.column(
-      HdrSketchBytesAgg(ColumnBridge.expression(c)).toAggregateExpression())
+  def hdrSketch(c: Column): Column = SketchAgg.column(HdrSketch, c)
 
   /** Aggregate Column: quantiles from MERGED stored sketches (a
     * binary column produced by [[hdrSketch]]). */
-  def hdrMergeQuantiles(c: Column, qs: Seq[Double]): Column =
-    ColumnBridge.column(
-      HdrMergeAgg(ColumnBridge.expression(c), qs).toAggregateExpression())
+  def hdrMergeQuantiles(c: Column, qs: Seq[Double]): Column = SketchAgg.column(HdrMerge(qs), c)
 }

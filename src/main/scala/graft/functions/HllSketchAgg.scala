@@ -1,21 +1,17 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
+import org.apache.spark.sql.types._
 
-/** HyperLogLog distinct-count sketch as a Catalyst
-  * TypedImperativeAggregate — the user-controlled-precision complement
-  * to Spark's built-in approx_count_distinct (ROADMAP #4).
+/** HyperLogLog distinct-count sketch — the user-controlled-precision
+  * complement to Spark's built-in approx_count_distinct (ROADMAP #4),
+  * declared on [[SketchAgg]] three ways: the estimate
+  * ([[HllDistinct]]), the persistable registers ([[HllSketch]]) and
+  * the rollup of stored registers ([[HllMerge]]).
   *
-  * Why this shape at 100 TB: the aggregation state is a fixed 2^p-byte
-  * register array (4 KiB at the default p=12) that Spark PARTIALLY
-  * aggregates map-side and merges slot-wise-max at the exchange — the
-  * shuffle moves one sketch per group per mapper, never the values.
-  * Merge is associative+commutative, so the estimate is independent of
+  * The state is a fixed 2^p-byte register array (4 KiB at the default
+  * p=12), merged slot-wise-max, so the estimate is independent of
   * partitioning (pinned by HllSpec's repartition test).
   *
   * Algorithm: standard HLL (Flajolet et al. 2007) with the small-range
@@ -23,13 +19,6 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
   * large-range correction unnecessary. Estimate standard error ≈
   * 1.04/√(2^p) — 1.6% at p=12.
   */
-/** Shared HLL register kernels: one update/merge/estimate
-  * implementation behind the estimating aggregate ([[HllSketchAgg]]),
-  * the sketch-emitting aggregate ([[HllSketchBytesAgg]]), and the
-  * stored-sketch merger ([[HllMergeAgg]]) — so a sketch PERSISTED by
-  * one and re-aggregated by another is register-for-register the
-  * sketch a direct pass would have built (HllSpec pins that identity,
-  * the property the persisted-rollup pattern rests on). */
 private[functions] object Hll {
   def updateValue(buf: Array[Byte], v: Any, dt: DataType, p: Int): Unit = {
     val h = XxHash64Function.hash(v, dt, 42L)
@@ -75,161 +64,91 @@ private[functions] object Hll {
     math.round(est)
   }
 
-  /** Analysis-time guard shared by the two sketch-building aggregates:
-    * the hasher iterates MapData in STORED ENTRY ORDER, so two
-    * logically equal maps built in different orders hash apart and
-    * inflate the distinct estimate silently — Spark bans xxhash64 /
-    * exact count-distinct on maps at analysis for exactly this reason
-    * (round-14 review). Rejects maps at any nesting depth. */
-  def checkHashable(dt: org.apache.spark.sql.types.DataType,
-                    name: String): TypeCheckResult = {
-    def hasMap(t: org.apache.spark.sql.types.DataType): Boolean = t match {
-      case _: org.apache.spark.sql.types.MapType => true
-      case org.apache.spark.sql.types.ArrayType(e, _) => hasMap(e)
-      case s: org.apache.spark.sql.types.StructType => s.fields.exists(f => hasMap(f.dataType))
-      case _ => false
-    }
-    if (hasMap(dt))
-      TypeCheckResult.TypeCheckFailure(
-        s"$name cannot hash a map-bearing column (${dt.catalogString}): " +
-          "map entry order is undefined, so equal maps would count as " +
-          "distinct — convert with map_entries + array_sort first")
-    else TypeCheckResult.TypeCheckSuccess
+  /** Whether `dt` holds a map at any nesting depth (see
+    * [[HllBuild.typeError]]). */
+  def hasMap(dt: DataType): Boolean = dt match {
+    case _: MapType => true
+    case ArrayType(e, _) => hasMap(e)
+    case s: StructType => s.fields.exists(f => hasMap(f.dataType))
+    case _ => false
   }
 }
 
-/** Shared register lifecycle of the three HLL aggregates (the round-14
-  * dedup of the twins' checkInputDataTypes/update/merge/serialize
-  * blocks): fixed 2^p buffer, slot-wise-max merge, identity
-  * serialization. Subclasses choose only what [[update]] consumes (raw
-  * values vs stored registers) and what [[eval]] emits (estimate vs
-  * registers) — one definition, so the persisted-sketch identity
-  * (HllSpec) cannot drift between twins. */
-private[functions] trait HllAggBase extends TypedImperativeAggregate[Array[Byte]] {
-  def child: Expression
-  def p: Int
+/** The registers the three HLL declarations share: 2^p bytes,
+  * slot-wise-max merge, stored as they are. One definition, so a
+  * sketch persisted by `hll_sketch` and re-aggregated by `hll_merge`
+  * is register-for-register the sketch a direct pass builds (HllSpec
+  * pins that identity, the property the persisted-rollup pattern
+  * rests on). */
+sealed abstract class HllRegisters(p: Int) extends Sketch[Array[Byte]] {
   require(p >= 4 && p <= 18, s"precision p must be in [4, 18], got $p")
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def createAggregationBuffer(): Array[Byte] = new Array[Byte](1 << p)
-  override def merge(b1: Array[Byte], b2: Array[Byte]): Array[Byte] =
-    Hll.mergeInto(b1, b2)
-  override def serialize(buf: Array[Byte]): Array[Byte] = buf
-  override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
+  def create(): Array[Byte] = new Array[Byte](1 << p)
+  def merge(b1: Array[Byte], b2: Array[Byte]): Array[Byte] = Hll.mergeInto(b1, b2)
+  def toBytes(buf: Array[Byte]): Array[Byte] = buf
+  def fromBytes(bytes: Array[Byte]): Array[Byte] = bytes
 }
 
-/** The sketch-BUILDING side (raw values in): hashability gate + the
-  * register update, shared by the estimating and emitting twins. */
-private[functions] trait HllBuildingAgg extends HllAggBase {
-  override def checkInputDataTypes(): TypeCheckResult =
-    Hll.checkHashable(child.dataType, prettyName)
-  override def update(buf: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = child.eval(input)
-    if (v != null) Hll.updateValue(buf, v, child.dataType, p)
+/** The sketch-BUILDING side (raw values in): the hashability gate and
+  * the register update of `hll_distinct` and `hll_sketch`. */
+sealed abstract class HllBuild(p: Int) extends HllRegisters(p) {
+  def accepts(in: Seq[DataType]): Boolean = !Hll.hasMap(in.head)
+  // the hasher iterates MapData in STORED ENTRY ORDER, so two logically
+  // equal maps built in different orders hash apart and inflate the
+  // distinct estimate silently — Spark bans xxhash64 / exact
+  // count-distinct on maps at analysis for exactly this reason
+  def typeError(got: String): String =
+    s"$prettyName cannot hash a map-bearing column ($got): " +
+      "map entry order is undefined, so equal maps would count as " +
+      "distinct — convert with map_entries + array_sort first"
+  def update(buf: Array[Byte], in: Array[Any], types: Seq[DataType]): Array[Byte] = {
+    Hll.updateValue(buf, in(0), types.head, p)
     buf
   }
 }
 
-case class HllSketchAgg(child: Expression, p: Int,
-                        mutableAggBufferOffset: Int = 0,
-                        inputAggBufferOffset: Int = 0)
-    extends HllBuildingAgg {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "hll_distinct"
-
-  override def eval(buf: Array[Byte]): Any = Hll.estimate(buf)
-
-  override def withNewMutableAggBufferOffset(o: Int): HllSketchAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): HllSketchAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): HllSketchAgg =
-    copy(child = cs.head)
+/** `hll_distinct(x)`: the distinct-count estimate. */
+case class HllDistinct(p: Int) extends HllBuild(p) {
+  def prettyName: String = "hll_distinct"
+  def dataType: DataType = LongType
+  def eval(buf: Array[Byte]): Any = Hll.estimate(buf)
 }
 
-/** The SKETCH-EMITTING twin of [[HllSketchAgg]]: same registers, but
-  * the aggregate's value is the register array itself (BINARY) — the
-  * column a 100 TB pipeline PERSISTS per (partition, group) so any
-  * later rollup merges kilobyte sketches instead of re-scanning the
-  * corpus. Re-aggregate stored sketches with [[HllMergeAgg]]. */
-case class HllSketchBytesAgg(child: Expression, p: Int,
-                             mutableAggBufferOffset: Int = 0,
-                             inputAggBufferOffset: Int = 0)
-    extends HllBuildingAgg {
-
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "hll_sketch"
-
+/** `hll_sketch(x)`: the registers themselves (BINARY) — the column a
+  * 100 TB pipeline PERSISTS per (partition, group) so any later rollup
+  * merges kilobyte sketches instead of re-scanning the corpus. */
+case class HllSketch(p: Int) extends HllBuild(p) {
+  def prettyName: String = "hll_sketch"
+  def dataType: DataType = BinaryType
   // clone: the buffer object is mutable aggregation state
-  override def eval(buf: Array[Byte]): Any = buf.clone()
-
-  override def withNewMutableAggBufferOffset(o: Int): HllSketchBytesAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): HllSketchBytesAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): HllSketchBytesAgg =
-    copy(child = cs.head)
+  def eval(buf: Array[Byte]): Any = buf.clone()
 }
 
-/** Merge STORED sketches (a BINARY column written by
-  * [[HllSketchBytesAgg]]) into one distinct-count estimate — the
-  * rollup side of the persisted-sketch pattern: per-vintage sketches
-  * in a tiny table answer any grouping's distinct count without
-  * touching the data they summarize. Fails fast on register-width
-  * mismatch (sketches from different precisions are not mergeable). */
-case class HllMergeAgg(child: Expression, p: Int,
-                       mutableAggBufferOffset: Int = 0,
-                       inputAggBufferOffset: Int = 0)
-    extends HllAggBase {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "hll_merge"
-
-  // analysis-time guard: the child must be a stored-register BINARY
-  // column; anything else died per-row as a ClassCastException
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"hll_merge expects a binary register column (from hll_sketch), " +
-        s"got ${other.catalogString}")
-  }
-
-  override def update(buf: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = child.eval(input)
-    if (v != null) Hll.mergeInto(buf, v.asInstanceOf[Array[Byte]])
-    buf
-  }
-
-  override def eval(buf: Array[Byte]): Any = Hll.estimate(buf)
-
-  override def withNewMutableAggBufferOffset(o: Int): HllMergeAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): HllMergeAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): HllMergeAgg =
-    copy(child = cs.head)
+/** `hll_merge(sk)`: the distinct-count estimate of STORED sketches
+  * merged — per-vintage sketches in a tiny table answer any grouping's
+  * distinct count without touching the data they summarize. Fails fast
+  * on register-width mismatch (sketches from different precisions are
+  * not mergeable). */
+case class HllMerge(p: Int) extends HllRegisters(p) {
+  def prettyName: String = "hll_merge"
+  def dataType: DataType = LongType
+  def accepts(in: Seq[DataType]): Boolean = in == Seq(BinaryType)
+  def typeError(got: String): String =
+    s"$prettyName expects a binary register column (from hll_sketch), got $got"
+  def update(buf: Array[Byte], in: Array[Any], types: Seq[DataType]): Array[Byte] =
+    Hll.mergeInto(buf, in(0).asInstanceOf[Array[Byte]])
+  def eval(buf: Array[Byte]): Any = Hll.estimate(buf)
 }
 
 object HllSketchAgg {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
-
   /** Aggregate Column: approximate distinct count of `c` at 2^p
     * registers (default p=12 ⇒ ~1.6% standard error, 4 KiB state). */
-  def hllDistinct(c: Column, p: Int = 12): Column =
-    ColumnBridge.column(
-      HllSketchAgg(ColumnBridge.expression(c), p).toAggregateExpression())
+  def hllDistinct(c: Column, p: Int = 12): Column = SketchAgg.column(HllDistinct(p), c)
 
   /** Aggregate Column: the sketch ITSELF (2^p register bytes) — the
     * persistable form; roll up later with [[hllMergeEstimate]]. */
-  def hllSketch(c: Column, p: Int = 12): Column =
-    ColumnBridge.column(
-      HllSketchBytesAgg(ColumnBridge.expression(c), p).toAggregateExpression())
+  def hllSketch(c: Column, p: Int = 12): Column = SketchAgg.column(HllSketch(p), c)
 
   /** Aggregate Column: distinct-count estimate from MERGED stored
     * sketches (a binary column produced by [[hllSketch]]). */
-  def hllMergeEstimate(c: Column, p: Int = 12): Column =
-    ColumnBridge.column(
-      HllMergeAgg(ColumnBridge.expression(c), p).toAggregateExpression())
+  def hllMergeEstimate(c: Column, p: Int = 12): Column = SketchAgg.column(HllMerge(p), c)
 }

@@ -1,53 +1,57 @@
 package graft.functions
 
-import org.apache.spark.sql.Encoder
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
-/** Typed Aggregator unioning per-document MinHash signatures into one
-  * corpus-level sketch (elementwise min — the MinHash of a set union
-  * IS the slotwise min of the sets' signatures). Lets a pipeline
+/** Unions per-document MinHash signatures into one corpus-level sketch
+  * (elementwise min — the MinHash of a set union IS the slotwise min of
+  * the sets' signatures), declared on [[SketchAgg]]. Lets a pipeline
   * estimate Jaccard overlap BETWEEN WHOLE CORPORA (per source, per
-  * crawl, per language) from fixed 512-byte states: classic
-  * mergeable-sketch shape — partial aggregation does the heavy merge
-  * map-side, the shuffle carries one sketch per group per partition.
-  */
-class MinHashUnionAgg(slots: Int) extends Aggregator[Seq[Long], Array[Long], Seq[Long]] {
+  * crawl, per language) from fixed 512-byte states: partial
+  * aggregation does the heavy merge map-side, the shuffle carries one
+  * sketch per group per partition. A null signature (MinHashSig of a
+  * null-text document) contributes nothing. */
+case class MinHashUnion(slots: Int) extends Sketch[Array[Long]] {
+  require(slots >= 1, s"a signature needs slots >= 1, got $slots")
 
-  override def zero: Array[Long] = Array.fill(slots)(Long.MaxValue)
+  // the name unaliased result columns carry: minhashunionagg(sig)
+  def prettyName: String = "minhashunionagg"
+  def dataType: DataType = ArrayType(LongType, containsNull = false)
+  def accepts(in: Seq[DataType]): Boolean = in.head match {
+    case ArrayType(LongType, _) => true
+    case _ => false
+  }
+  def typeError(got: String): String =
+    s"$prettyName expects an array<bigint> signature column, got $got"
 
-  override def reduce(buf: Array[Long], sig: Seq[Long]): Array[Long] = {
-    // SQL aggregate convention (HllSketchAgg/CountMinAgg do the same):
-    // a null input contributes nothing — MinHashSig is null-in/null-out,
-    // so a null-text document reaches here as a null signature
-    if (sig == null) return buf
+  def create(): Array[Long] = Array.fill(slots)(Long.MaxValue)
+
+  def update(buf: Array[Long], in: Array[Any], types: Seq[DataType]): Array[Long] = {
+    val sig = in(0).asInstanceOf[ArrayData]
     // a SHORT signature would leave trailing slots at Long.MaxValue,
     // and sigMatches counts MaxValue==MaxValue as matching slots — a
     // slots/SigLen wiring drift must fail loudly, not inflate Jaccard
-    require(sig.length >= slots,
-      s"MinHashUnionAgg($slots) fed a ${sig.length}-slot signature")
+    require(sig.numElements() >= slots,
+      s"MinHashUnion($slots) fed a ${sig.numElements()}-slot signature")
     var i = 0
-    while (i < slots) { if (sig(i) < buf(i)) buf(i) = sig(i); i += 1 }
+    while (i < slots) { if (sig.getLong(i) < buf(i)) buf(i) = sig.getLong(i); i += 1 }
     buf
   }
 
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+  def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
     var i = 0
     while (i < slots) { if (b(i) < a(i)) a(i) = b(i); i += 1 }
     a
   }
 
-  override def finish(buf: Array[Long]): Seq[Long] = buf.toSeq
-
-  override def bufferEncoder: Encoder[Array[Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-  override def outputEncoder: Encoder[Seq[Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
+  def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
+  def toBytes(buf: Array[Long]): Array[Byte] = SketchCodec.longs(buf)
+  def fromBytes(bytes: Array[Byte]): Array[Long] = SketchCodec.fromLongs(bytes)
 }
 
 object MinHashUnionAgg {
-  /** Untyped (DataFrame groupBy/agg) form. */
-  def udafColumn(slots: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    org.apache.spark.sql.functions.udaf(
-      new MinHashUnionAgg(slots),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]())
+  /** Aggregate Column: the slotwise-min union of the `slots`-slot
+    * MinHash signatures in `sig`. */
+  def minHashUnion(sig: Column, slots: Int): Column = SketchAgg.column(MinHashUnion(slots), sig)
 }

@@ -1,20 +1,17 @@
 package graft.functions
 
-import scala.collection.mutable
+import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** SpaceSaving heavy-hitters sketch (Metwally et al. 2005) as a
-  * Catalyst TypedImperativeAggregate — the bounded-memory alternative
-  * to exact top-k term frequency, rounding out the sketch family
-  * (HLL = distinct, MinHash = set overlap, SimHash = near-dup,
-  * SpaceSaving = frequency).
+/** SpaceSaving heavy-hitters sketch (Metwally et al. 2005), declared
+  * on [[SketchAgg]] — the bounded-memory alternative to exact top-k
+  * term frequency, rounding out the sketch family (HLL = distinct,
+  * MinHash = set overlap, SimHash = near-dup, SpaceSaving = frequency).
   *
   * Why this shape at 100 TB: exact per-group top-k tokens needs the
   * full (group, token) wordcount shuffle — O(distinct tokens) state.
@@ -35,111 +32,64 @@ import org.apache.spark.unsafe.types.UTF8String
   * production Stream-Summary linked structure makes it O(1) — noted,
   * not needed at this m.
   */
-case class SpaceSavingAgg(child: Expression, m: Int,
-                          mutableAggBufferOffset: Int = 0,
-                          inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[mutable.HashMap[String, Array[Long]]] {
+case class SpaceSavingTopK(m: Int) extends Sketch[SpaceSavingKernel.Buf] {
+  SpaceSavingKernel.checkCapacity(m)
 
-  require(m >= 2, s"capacity must be >= 2, got $m")
-
-  // analysis-time type gate (the HllSketchAgg discipline from the r14
-  // sketch sweep, applied to the sibling it missed): update() keys the
-  // counter map on child.eval().toString, which is well-defined for
-  // string and atomic-numeric input (UTF8String / boxed
-  // Int/Long/Short/Byte/Boolean toString are stable, canonical
-  // renderings — topk over an int id column was always well-defined)
-  // but silently produces unsafe-representation garbage
-  // ("[0,2000000005,...]") for struct/array/map children — every such
-  // value would count as a distinct "token" with no error surfaced
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType | ByteType | ShortType | IntegerType | LongType | BooleanType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"space_saving_topk expects a string or integral column, got ${other.catalogString}" +
-          " (cast explicitly for other types — tokens are keyed on the rendered string)")
-    }
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(StructType(Seq(
+  def prettyName: String = "space_saving_topk"
+  def dataType: DataType = ArrayType(StructType(Seq(
     StructField("token", StringType, nullable = false),
     StructField("count", LongType, nullable = false),
     StructField("err", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "space_saving_topk"
 
-  override def createAggregationBuffer(): mutable.HashMap[String, Array[Long]] =
-    mutable.HashMap.empty
+  // update() keys the counter map on the value's toString, which is
+  // well-defined for string and atomic-numeric input (UTF8String /
+  // boxed Int/Long/Short/Byte/Boolean toString are stable, canonical
+  // renderings) but silently produces unsafe-representation garbage
+  // ("[0,2000000005,...]") for struct/array/map children — every such
+  // value would count as a distinct "token" with no error surfaced
+  def accepts(in: Seq[DataType]): Boolean = in.head match {
+    case StringType | ByteType | ShortType | IntegerType | LongType | BooleanType => true
+    case _ => false
+  }
+  def typeError(got: String): String = s"$prettyName expects a string or integral column, " +
+    s"got $got (cast explicitly for other types — tokens are keyed on the rendered string)"
+
+  def create(): SpaceSavingKernel.Buf = SpaceSavingKernel.empty
 
   // insert/evict and mergeable-summaries union live in
   // SpaceSavingKernel, shared verbatim with the streaming stateful
   // operator (StreamingTopK) so stream ≡ batch agreement is by
   // construction
-  override def update(buf: mutable.HashMap[String, Array[Long]],
-                      input: InternalRow): mutable.HashMap[String, Array[Long]] = {
-    val v = child.eval(input)
-    if (v != null) SpaceSavingKernel.insert(buf, v.toString, m)
+  def update(buf: SpaceSavingKernel.Buf, in: Array[Any],
+             types: Seq[DataType]): SpaceSavingKernel.Buf = {
+    SpaceSavingKernel.insert(buf, in(0).toString, m)
     buf
   }
 
-  override def merge(b1: mutable.HashMap[String, Array[Long]],
-                     b2: mutable.HashMap[String, Array[Long]]): mutable.HashMap[String, Array[Long]] =
+  def merge(b1: SpaceSavingKernel.Buf, b2: SpaceSavingKernel.Buf): SpaceSavingKernel.Buf =
     SpaceSavingKernel.merge(b1, b2, m)
 
-  override def eval(buf: mutable.HashMap[String, Array[Long]]): Any = {
-    val rows = SpaceSavingKernel.top(buf)
-      .map { case (k, c, e) => InternalRow(UTF8String.fromString(k), c, e) }
-    new GenericArrayData(rows.toArray[Any])
-  }
+  def eval(buf: SpaceSavingKernel.Buf): Any =
+    new GenericArrayData(SpaceSavingKernel.top(buf)
+      .map { case (k, c, e) => InternalRow(UTF8String.fromString(k), c, e) }.toArray[Any])
 
-  override def serialize(buf: mutable.HashMap[String, Array[Long]]): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val out = new java.io.DataOutputStream(bos)
-    out.writeInt(buf.size)
-    buf.foreach { case (k, ce) =>
-      val bytes = k.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      out.writeInt(bytes.length)
-      out.write(bytes)
+  def toBytes(buf: SpaceSavingKernel.Buf): Array[Byte] =
+    SketchCodec.write(buf) { case (out, (k, ce)) =>
+      SketchCodec.putBytes(out, k.getBytes(StandardCharsets.UTF_8))
       out.writeLong(ce(0))
       out.writeLong(ce(1))
     }
-    out.flush()
-    bos.toByteArray
-  }
 
-  override def deserialize(bytes: Array[Byte]): mutable.HashMap[String, Array[Long]] = {
-    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val buf = mutable.HashMap.empty[String, Array[Long]]
-    var i = 0
-    while (i < n) {
-      val len = in.readInt()
-      val kb = new Array[Byte](len)
-      in.readFully(kb)
-      val k = new String(kb, java.nio.charset.StandardCharsets.UTF_8)
-      val c = in.readLong()
-      val e = in.readLong()
-      buf.put(k, Array(c, e))
-      i += 1
+  def fromBytes(bytes: Array[Byte]): SpaceSavingKernel.Buf =
+    SpaceSavingKernel.empty ++= SketchCodec.read(bytes) { in =>
+      new String(SketchCodec.getBytes(in), StandardCharsets.UTF_8) ->
+        Array(in.readLong(), in.readLong())
     }
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(o: Int): SpaceSavingAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): SpaceSavingAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): SpaceSavingAgg =
-    copy(child = cs.head)
 }
 
 object SpaceSavingAgg {
-  import org.apache.spark.sql.graftbridge.ColumnBridge
-
   /** Aggregate Column: the m-counter SpaceSaving summary of `c`,
     * returned as array<struct<token, count, err>> sorted by
     * (count desc, token). */
-  def spaceSavingTopK(c: Column, m: Int): Column =
-    ColumnBridge.column(
-      SpaceSavingAgg(ColumnBridge.expression(c), m).toAggregateExpression())
+  def spaceSavingTopK(c: Column, m: Int): Column = SketchAgg.column(SpaceSavingTopK(m), c)
 }

@@ -3,7 +3,7 @@ package graft.functions
 import scala.collection.mutable
 
 /** The SpaceSaving counter logic (Metwally et al. 2005), factored out
-  * of [[SpaceSavingAgg]] so the batch aggregate and the streaming
+  * of [[SpaceSavingTopK]] so the batch aggregate and the streaming
   * stateful operator ([[graft.streaming.StreamingTopK]]) share ONE
   * implementation of the insert/evict invariant and the mergeable-
   * summaries union — the stream ≡ batch agreement test is meaningful
@@ -16,6 +16,11 @@ object SpaceSavingKernel {
   type Buf = mutable.HashMap[String, Array[Long]]
 
   def empty: Buf = mutable.HashMap.empty
+
+  /** The one capacity rule of the batch aggregate and the streaming
+    * operator: fewer than 2 counters cannot evict and keep a newcomer. */
+  def checkCapacity(m: Int): Unit =
+    require(m >= 2, s"SpaceSaving needs m >= 2 counters, got $m")
 
   def minCount(buf: Buf, m: Int): Long =
     if (buf.size < m) 0L else buf.valuesIterator.map(_(0)).min

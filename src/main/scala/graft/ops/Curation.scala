@@ -439,8 +439,7 @@ object Curation {
     * fingerprint per document (xxhash64 BIGINT, never shingle text). */
   private def shingledFps(df: DataFrame): DataFrame = df
     .select(col("source"), col("doc_id"),
-      explode(array_distinct(graft.functions.NativeExprs.shingleHashes(
-        split(col("text"), " "), DecontamN))).as("fp"))
+      explode(Dedup.shingleFps(col("text"), DecontamN)).as("fp"))
 
   /** Per-source contamination totals from per-doc hit counts: the
     * (broadcast-able) rejoin of hits onto the full train id set. */
@@ -1105,8 +1104,7 @@ object Curation {
     // n_hit 0 → clean, and its frac 0 can't move the clean bucket's
     // avg (every clean doc's frac is 0 by definition).
     def sh(df: DataFrame) = df.select(col("source"), col("doc_id"),
-      explode_outer(array_distinct(graft.functions.NativeExprs
-        .shingleHashes(split(col("text"), " "), DecontamN))).as("sfp"))
+      explode_outer(Dedup.shingleFps(col("text"), DecontamN)).as("sfp"))
     val testFps = sh(test).filter(col("sfp").isNotNull)
       .select(col("sfp")).distinct()
     // single consumption of the train shingles (r9 ADVICE: the old
@@ -1214,8 +1212,7 @@ object Curation {
     // Test docs ride the funnel unflagged like every other stage —
     // this query measures stage attrition, it doesn't route splits.
     val shingled = docs.select(col("doc_id"),
-      explode(array_distinct(graft.functions.NativeExprs
-        .shingleHashes(split(col("text"), " "), DecontamN))).as("sfp"))
+      explode(Dedup.shingleFps(col("text"), DecontamN)).as("sfp"))
     val testFps = shingled
       .filter(hashBucket(col("doc_id").cast("string")) >= "e6")
       .select(col("sfp")).distinct()

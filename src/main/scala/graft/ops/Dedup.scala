@@ -47,6 +47,12 @@ object Dedup {
     * column — not a hardcoded name). */
   def shingles(c: Column, n: Int): Column = shinglesOfTokens(split(c, " "), n)
 
+  /** A document's distinct word n-gram fingerprints: xxhash64 BIGINTs
+    * of each n-token window of a TEXT column, from the native window
+    * kernel (no shingle strings materialized). */
+  def shingleFps(text: Column, n: Int): Column =
+    array_distinct(graft.functions.NativeExprs.shingleHashes(split(text, " "), n))
+
   /** MinHash signature via the native one-pass expression
     * (graft.functions.MinHashSig: double hashing h1 + j·h2, one
     * xxhash64 pair per token instead of SigLen hashes per token). */
@@ -503,16 +509,15 @@ object Dedup {
       |FROM docs a JOIN docs b ON a.doc_id < b.doc_id
       |ORDER BY id_a, id_b""".stripMargin
 
-  /** Corpus-level overlap: per-source MinHash union sketches (typed
-    * Aggregator, mergeable map-side) → pairwise Jaccard estimates
+  /** Corpus-level overlap: per-source MinHash union sketches (a
+    * mergeable aggregate) → pairwise Jaccard estimates
     * between whole sources from 512-byte states. Rows-only; the union
     * property is unit-tested in DedupSpec. */
   def q49SourceSketch(s: SparkSession, d: String): DataFrame = {
-    val sketch = graft.functions.MinHashUnionAgg.udafColumn(SigLen)
     val sk = withMinhash(documents(s, d))
       .select(col("source"), col("sig"))
       .groupBy(col("source"))
-      .agg(sketch(col("sig")).as("sketch"))
+      .agg(graft.functions.MinHashUnionAgg.minHashUnion(col("sig"), SigLen).as("sketch"))
     val a = sk.select(col("source").as("src_a"), col("sketch").as("sk_a"))
     val b = sk.select(col("source").as("src_b"), col("sketch").as("sk_b"))
     a.join(b, col("src_a") < col("src_b"))
@@ -944,9 +949,7 @@ object Dedup {
   def sourceOverlap(docs: DataFrame): DataFrame = {
     val sh = docs
       .select(col("source"),
-        explode(array_distinct(
-          graft.functions.NativeExprs.shingleHashes(split(col("text"), " "), 4)))
-          .as("fp"))
+        explode(shingleFps(col("text"), 4)).as("fp"))
       .distinct()
     val sizes = sh.groupBy(col("source")).agg(count(lit(1)).as("n_sh"))
     val inter = sh.as("a")
@@ -1006,10 +1009,7 @@ object Dedup {
   /** q102 core over any (doc_id, source, text) frame. */
   def noveltyScores(docs: DataFrame): DataFrame = {
     val sh = docs
-      .select(col("doc_id"), col("source"),
-        explode(array_distinct(
-          graft.functions.NativeExprs.shingleHashes(split(col("text"), " "), 4)))
-          .as("fp"))
+      .select(col("doc_id"), col("source"), explode(shingleFps(col("text"), 4)).as("fp"))
     val srcCount = sh.select(col("fp"), col("source")).distinct()
       .groupBy(col("fp")).agg(count(lit(1)).as("n_src"))
     sh.join(srcCount, Seq("fp"))

@@ -26,9 +26,7 @@ object IncrementalDecontam {
   /** Per-doc distinct n-gram fingerprints: (doc_id, fp BIGINT), via the
     * native window-hash kernel (no shingle strings materialized). */
   private def docFps(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      explode(array_distinct(graft.functions.NativeExprs.shingleHashes(
-        split(col("text"), " "), DecontamN))).as("fp"))
+    docs.select(col("doc_id"), explode(Dedup.shingleFps(col("text"), DecontamN)).as("fp"))
 
   /** Sidecar Bloom filter file for an index table — lives next to the
     * table directory in the warehouse under the same name prefix, so

@@ -31,8 +31,7 @@ object IncrementalNovelty {
     * twice per trigger before (round-14 review). */
   private[graft] def docShingles(docs: DataFrame): DataFrame =
     docs.select(col("source"), col("doc_id"),
-      explode(array_distinct(graft.functions.NativeExprs.shingleHashes(
-        split(col("text"), " "), Text.NoveltyN))).as("fp"))
+      explode(Dedup.shingleFps(col("text"), Text.NoveltyN)).as("fp"))
 
   /** (Re)builds the persisted seen-shingle index from a corpus. */
   def buildIndex(docs: DataFrame, table: String, buckets: Int = 32): Unit =

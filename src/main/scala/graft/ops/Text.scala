@@ -992,8 +992,7 @@ object Text {
   def boilerplateSpans(docs: DataFrame, n: Int, minDf: Long): DataFrame = {
     val toksCol = split(col("text"), " ")
     val fpCounts = docs
-      .select(col("doc_id"),
-        explode(array_distinct(graft.functions.NativeExprs.shingleHashes(toksCol, n))).as("fp"))
+      .select(col("doc_id"), explode(Dedup.shingleFps(col("text"), n)).as("fp"))
       .groupBy(col("fp")).agg(count(lit(1)).as("n_docs"))
       .filter(col("n_docs") >= minDf)
     // r19 (guide §8 / §3.2): the old recovery pass materialized the
@@ -1066,11 +1065,9 @@ object Text {
     * this corpus-wide pass. */
   def noveltyPerDoc(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toksCol = split(col("text"), " ")
     val sh = docs
       .select(col("source"), col("doc_id"),
-        explode(array_distinct(
-          graft.functions.NativeExprs.shingleHashes(toksCol, NoveltyN))).as("fp"))
+        explode(Dedup.shingleFps(col("text"), NoveltyN)).as("fp"))
     val w = Window.partitionBy(col("fp"))
     sh.withColumn("first_doc", min(col("doc_id")).over(w))
       .groupBy(col("source"), col("doc_id"))

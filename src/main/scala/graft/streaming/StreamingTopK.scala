@@ -45,10 +45,10 @@ object StreamingTopK {
     * micro-batches via MemoryStream). Emits (event_type, key, est,
     * err, rank) for the current top k of every group that changed.
     * NULL user_ids are skipped — the batch twin's SQL-aggregate
-    * convention (SpaceSavingAgg ignores null inputs), so stream ≡
+    * convention (SketchAgg ignores null inputs), so stream ≡
     * batch holds on nullable streams too. */
   def topKPerType(events: DataFrame, m: Int, k: Int): Dataset[(String, String, Long, Long, Int)] = {
-    require(m >= 2, s"SpaceSaving needs m >= 2 counters, got $m") // as SpaceSavingAgg
+    SpaceSavingKernel.checkCapacity(m)
     require(k >= 1, s"top-k needs k >= 1, got $k")
     val spark = events.sparkSession
     import spark.implicits._

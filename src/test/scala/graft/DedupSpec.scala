@@ -235,12 +235,12 @@ class DedupSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val merged = sigs(1L).zip(sigs(2L)).map { case (x, y) => math.min(x, y) }
     assert(merged == sigs(3L))
-    // and the Aggregator computes exactly that merge
+    // and the union aggregate computes exactly that merge
     import spark.implicits._
-    val agg = graft.functions.MinHashUnionAgg.udafColumn(Dedup.SigLen)
     val out = Dedup.withMinhash(docsDf(Seq((1L, a), (2L, b))))
       .select(lit("g").as("g"), col("sig"))
-      .groupBy("g").agg(agg(col("sig")).as("sketch"))
+      .groupBy("g")
+      .agg(graft.functions.MinHashUnionAgg.minHashUnion(col("sig"), Dedup.SigLen).as("sketch"))
       .collect().head.getSeq[Long](1)
     assert(out == merged)
   }

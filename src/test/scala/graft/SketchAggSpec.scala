@@ -21,7 +21,6 @@ class SketchAggSpec extends AnyFunSuite {
 
   private val Qs = Seq(0.5, 0.9, 0.99, 1.0)
 
-  private def minHashUnion(c: Column): Column = MinHashUnionAgg.udafColumn(8)(c)
 
   /** Builder name -> its aggregate over the fixture, per group `g`. */
   private val direct: Seq[(String, Column)] = Seq(
@@ -33,7 +32,7 @@ class SketchAggSpec extends AnyFunSuite {
     "hashReservoir" -> HashReservoirAgg.hashReservoir(col("rank"), col("id"), 16),
     "weightedReservoir" -> HashReservoirAgg.weightedReservoir(col("prio"), col("id"), 16),
     "countMinSketch" -> CountMinAgg.countMinSketch(col("token"), 4, 64),
-    "minHashUnion" -> minHashUnion(col("sig")))
+    "minHashUnion" -> MinHashUnionAgg.minHashUnion(col("sig"), 8))
 
   /** The two rollups over sketches stored per (g, sub). */
   private val rolled: Seq[(String, Column)] = Seq(
@@ -150,10 +149,9 @@ class SketchAggSpec extends AnyFunSuite {
       HashReservoirAgg, CountMinAgg, MinHashUnionAgg)
     // cmsEstimate is CountMinAgg's scalar probe, not an aggregate
     val public = objects.flatMap(_.getClass.getMethods.toSeq)
-      .filter(m => m.getReturnType == classOf[Column] ||
-        m.getReturnType == classOf[org.apache.spark.sql.expressions.UserDefinedFunction])
+      .filter(_.getReturnType == classOf[Column])
       .map(_.getName).filterNot(_ == "cmsEstimate").toSet
-    val listed = builders.toSet + "udafColumn"
+    val listed = builders.toSet
     assert(public.subsetOf(listed), s"builders missing from the list: ${public -- listed}")
   }
 

@@ -159,6 +159,27 @@ class SmokeSpec extends AnyFunSuite {
     assert(found.isEmpty, s"hand-written eval or codegen outside NativeKernel:\n${found.mkString("\n")}")
   }
 
+  test("one aggregate shape: TypedImperativeAggregate only in SketchAgg, no Aggregator or udaf") {
+    // an aggregate that hand-implements Catalyst's protocol carries a
+    // second copy of what SketchAgg derives, and a typed Aggregator
+    // converts every input row through encoders; every mergeable
+    // summary declares itself on SketchAgg
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"src/main/scala not found under ${System.getProperty("user.dir")}")
+    val shape = root.resolve("graft/functions/SketchAgg.scala")
+    val walk = java.nio.file.Files.walk(root)
+    val sources = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+    val found = sources.filterNot(_ == shape).flatMap { f =>
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if Seq("extends TypedImperativeAggregate", "extends Aggregator[", "udaf(")
+            .exists(line.contains) => s"$f:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(found.isEmpty, s"aggregate outside SketchAgg:\n${found.mkString("\n")}")
+  }
+
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name runs and returns rows at sf0.001") {
       val n = fn(spark, TestSpark.sf0001).count()
