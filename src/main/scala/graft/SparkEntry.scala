@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.ops.{AsOf, Bucketing, Classifier, Cluster, Curation, Dedup, Graph, IncrementalDecontam, IncrementalDedup, IncrementalNovelty, IncrementalSpans, Ivf, Mapwarper, MapwarperFixture, Multimodal, NativeAsOf, Pca, Pq, Quality, RangeJoin, Relational, Similarity, Text}
+import graft.ops.{AsOf, Bucketing, Classifier, Cluster, Curation, Dedup, Graph, IncrementalDecontam, IncrementalDedup, IncrementalNovelty, IncrementalSpans, Ivf, Mapwarper, MapwarperFixture, Multimodal, Pca, Pq, Quality, RangeJoin, Relational, Similarity, Text}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -63,7 +63,7 @@ object SparkEntry {
     Relational.queries.map { case (n, f, sql) => (n, f, Option(sql)) } ++
       Text.queries ++ Similarity.queries ++ Dedup.queries ++
       Multimodal.queries ++ Ivf.queries ++ AsOf.queries ++ RangeJoin.queries ++
-      Pq.queries ++ NativeAsOf.queries ++ Curation.queries ++
+      Pq.queries ++ Curation.queries ++
       IncrementalDecontam.queries ++ IncrementalNovelty.queries ++
       IncrementalDedup.queries ++ IncrementalSpans.queries ++ Bucketing.queries ++
       Graph.queries ++ Cluster.queries ++ Pca.queries ++

@@ -48,7 +48,7 @@ object Tables {
     // mutates shared session conf, and two concurrent events() calls
     // (parallel suites) could interleave so one reads the schema with
     // the conf already restored — a data-dependent nanos-vintage read
-    // failure (the PlanBridge registration-race class, round-14 review)
+    // failure (a read-modify-write race on shared session state)
     s.synchronized {
       val confKey = "spark.sql.legacy.parquet.nanosAsLong"
       val prior = s.conf.getOption(confKey)

@@ -15,16 +15,8 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  override def apply(e: SparkSessionExtensions): Unit = {
+  override def apply(e: SparkSessionExtensions): Unit =
     GraftExtensions.functionEntries.foreach(e.injectFunction)
-    // whole-operator extension: plans graft.plans.GraftAsOfJoin nodes
-    // (the programmatic twin is PlanBridge.ensureStrategy, which the
-    // NativeAsOf.asOfJoin API applies itself)
-    e.injectPlannerStrategy(_ => graft.plans.GraftAsOfJoinStrategy)
-    // custom nodes are optimization barriers without this: restores
-    // filter pushdown + left column pruning through GraftAsOfJoin
-    e.injectOptimizerRule(_ => graft.plans.AsOfPushdownRule)
-  }
 }
 
 object GraftExtensions {

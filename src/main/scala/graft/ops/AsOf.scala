@@ -3,14 +3,14 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 import graft.Tables._
 
-/** As-of join (ROADMAP #1; the reference has no join machinery beyond
-  * J1, SURVEY §2.3 — this is part of the engine's general operator
-  * suite): for every left row, attach the LATEST right row with the
-  * same key and right.ts ≤ left.ts.
+/** As-of join, the engine's one (the reference has no join machinery
+  * beyond J1, SURVEY §2.3 — this is part of the engine's general
+  * operator suite): for every left row, attach the LATEST right row
+  * with the same key and right.ts ≤ left.ts.
   *
   * Composed union+window form, deliberately NOT a range join:
   * both sides union on (key, ts), one hash exchange on key, one sort
@@ -28,21 +28,32 @@ object AsOf {
 
   /** Generic as-of join. `left` and `right` must share exactly the
     * `key` and `ts` column names; their payload column sets must be
-    * disjoint. Right payload columns come back suffixed `_r` is not
-    * needed — the matched right row arrives as one struct picked
-    * atomically (no per-column tearing when a right payload value is
-    * legitimately null). Ties on ts: the right row sorts FIRST, so a
-    * right row AT the left timestamp matches (ASOF `>=` semantics).
-    * When MULTIPLE right rows share (key, ts), the struct-lexicographic
-    * MAX of (ts, payload...) wins — the window ordering includes the
-    * right struct itself, so the result is deterministic across runs
-    * and partitionings (requires orderable payload types, which also
-    * rules out MapType columns — already excluded by Spark's own
-    * union/sort constraints). NULL keys never match (SQL ASOF
-    * semantics): null-key right rows are dropped before the union,
-    * null-key left rows survive null-extended. `tolerance` requires a
-    * LongType or TimestampType ts (timestamps measure it in
-    * MICROSECONDS), matching [[NativeAsOf.asOfJoin]]. */
+    * disjoint. The right payload columns keep their names and the
+    * matched right timestamp comes back as `matched_<ts>`; the matched
+    * right row is picked as one struct, atomically (no per-column
+    * tearing when a right payload value is legitimately null). Ties on
+    * ts: the right row sorts FIRST, so a right row AT the left
+    * timestamp matches (ASOF `>=` semantics). When MULTIPLE right rows
+    * share (key, ts), the struct-lexicographic MAX of (ts, payload...)
+    * wins — the window ordering includes the right struct itself, so
+    * the result is deterministic across runs and partitionings
+    * (requires orderable payload types, which also rules out MapType
+    * columns — already excluded by Spark's own union/sort
+    * constraints). NULL keys and NULL timestamps never match (SQL ASOF
+    * semantics): such right rows are dropped before the union, such
+    * left rows survive null-extended. Key and ts types need only be
+    * union-compatible (a Long left ts against an Int right ts widens).
+    * `tolerance` requires a Long, Timestamp or TimestampNTZ left ts;
+    * both timestamp types measure it in MICROSECONDS.
+    *
+    * Cost and what it does not do:
+    *  - every left and right row crosses one exchange on the key, and
+    *    the union sorts once; a small right side is NOT broadcast, so
+    *    the left (fact) side always shuffles;
+    *  - a filter on a left payload column written ABOVE the join stays
+    *    above the window, so every left row is still shuffled — filter
+    *    the left side before the join. Unused left columns are pruned
+    *    through the union and the window. */
   def asOfJoin(left: DataFrame, right: DataFrame,
                key: String, ts: String,
                tolerance: Option[Long] = None): DataFrame = {
@@ -58,6 +69,9 @@ object AsOf {
       "column names _side and _r are reserved by asOfJoin")
     require(rPayload.forall(!_.contains(".")),
       s"right payload names must not contain dots: ${rPayload.filter(_.contains("."))}")
+    val tsType = left.schema(ts).dataType
+    require(tolerance.isEmpty || Seq(LongType, TimestampType, TimestampNTZType).contains(tsType),
+      s"tolerance requires a Long, Timestamp or TimestampNTZ $ts column, got $tsType")
 
     val rStructFields = (ts +: rPayload)
     val rStructType = StructType(right.select(rStructFields.map(col): _*).schema.fields)
@@ -70,8 +84,7 @@ object AsOf {
     // before the union. A null key would land in the null partition
     // and "match" null-key left rows; a null TS sorts FIRST in the
     // window order and would become the match for any left row with
-    // no earlier real right row (round-13 review — the native execs
-    // skip both classes identically). Null-ts LEFT rows then fall out
+    // no earlier real right row. Null-ts LEFT rows then fall out
     // naturally: they sort before every remaining right row, so
     // last(_r) sees nothing and they emit null-extended.
     val rT = right.filter(col(key).isNotNull && col(ts).isNotNull).select(
@@ -93,13 +106,16 @@ object AsOf {
       .filter(col("_side") === 1)
     // merge_asof-style tolerance: a match staler than `tolerance` ts
     // units is discarded; the row survives with a null match — this is
-    // per-row masking, not a join-shape change. TimestampType compares
-    // via unix_micros (tolerance in µs, same unit as the native exec's
-    // physical-long subtraction)
+    // per-row masking, not a join-shape change. Both timestamp types
+    // measure the gap in µs: TIMESTAMP through unix_micros (the
+    // physical gap, also across a DST shift), TIMESTAMP_NTZ through
+    // timestamp_diff, which reads NTZ wall-clock values without the
+    // session time zone (unix_micros rejects NTZ, and NTZ - NTZ is a
+    // DAY TO SECOND interval that cannot compare to a Long)
     val bounded = tolerance.fold(picked) { tol =>
-      val diff = left.schema(ts).dataType match {
-        case org.apache.spark.sql.types.TimestampType =>
-          unix_micros(col(ts)) - unix_micros(col(s"_r.$ts"))
+      val diff = tsType match {
+        case TimestampType => unix_micros(col(ts)) - unix_micros(col(s"_r.$ts"))
+        case TimestampNTZType => timestamp_diff("MICROSECOND", col(s"_r.$ts"), col(ts))
         case _ => col(ts) - col(s"_r.$ts")
       }
       picked.withColumn("_r", when(col("_r").isNotNull && diff <= tol, col("_r")))
@@ -142,7 +158,11 @@ object AsOf {
       |  ON p.user_id = c.user_id AND p.ts_us >= c.ts_us
       |ORDER BY p.event_id""".stripMargin
 
+  /** q61 and q62 keep their published names and run q51's query
+    * against q51's oracle. */
   val queries: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = Seq(
     ("q51_asof_join", q51AsofJoin _, Some(q51Sql)),
+    ("q61_asof_native", q51AsofJoin _, Some(q51Sql)),
+    ("q62_asof_broadcast", q51AsofJoin _, Some(q51Sql)),
   )
 }

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.PlanBridge
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Bucketed (pre-partitioned, pre-sorted) tables: the co-located join
   * path for repeated fact-fact joins at 100 TB — both sides hash-
@@ -49,7 +49,7 @@ object Bucketing {
     * frame costs nothing: Spark drops a repartition its child's
     * partitioning already satisfies. */
   def alignTo(df: DataFrame, table: String, key: String): DataFrame =
-    PlanBridge.numBuckets(df.sparkSession, table)
+    ColumnBridge.numBuckets(df.sparkSession, table)
       .map(b => df.repartition(b, col(key))).getOrElse(df)
 
   /** Appends `df` to a bucketed table: [[alignTo]], then an insert, so

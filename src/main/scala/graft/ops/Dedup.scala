@@ -633,7 +633,7 @@ object Dedup {
     *  - each round is `localCheckpoint()`ed: lineage stays O(1)
     *    instead of re-planning a growing join chain every round;
     *  - round N-1's checkpoint blocks are released eagerly
-    *    (PlanBridge.releaseLocalCheckpoint) so peak storage is two
+    *    (ColumnBridge.releaseLocalCheckpoint) so peak storage is two
     *    rounds of (id, label) pairs regardless of round count.
     *
     * @param nodes one row per node, column `id`. CONTRACT: every
@@ -692,7 +692,7 @@ object Dedup {
     * edge-incident subgraph. */
   private def propagationCC(p: DataFrame): DataFrame = {
     import org.apache.spark.sql.Observation
-    import org.apache.spark.sql.graftbridge.PlanBridge
+    import org.apache.spark.sql.graftbridge.ColumnBridge
     // The edge set is LOCAL-CHECKPOINTED, not merely cached: every loop
     // stage that scans a cached frame serializes the frame's FULL
     // upstream RDD lineage (the whole LSH candidate pipeline in q69)
@@ -749,13 +749,13 @@ object Dedup {
           sum(when(col("label") =!= col("old"), 1L).otherwise(0L)),
           lit(0L)).as("changed")))
       changed = obs.get("changed").asInstanceOf[Long]
-      if (prevChk != null) PlanBridge.releaseLocalCheckpoint(prevChk)
+      if (prevChk != null) ColumnBridge.releaseLocalCheckpoint(prevChk)
       prevChk = chk
       labels = chk.select(col("id"), col("label"), col("label").as("old"))
       rounds += 1
     }
-    PlanBridge.releaseLocalCheckpoint(edges)
-    PlanBridge.releaseLocalCheckpoint(incident)
+    ColumnBridge.releaseLocalCheckpoint(edges)
+    ColumnBridge.releaseLocalCheckpoint(incident)
     require(changed == 0, s"label propagation did not converge in $rounds rounds")
     // operational visibility: round count IS the scalability story
     // (graph-diameter/2 materialized rounds) — surface it in logs so a

@@ -193,7 +193,7 @@ private[graft] object IndexTables {
         s"no index for current fingerprint ($c) — next probe builds")
     })
     current.filter(catalogGens.contains).foreach { c =>
-      rows += (org.apache.spark.sql.graftbridge.PlanBridge.numBuckets(s, c) match {
+      rows += (org.apache.spark.sql.graftbridge.ColumnBridge.numBuckets(s, c) match {
         case Some(b) => ("bucket_spec", "ok", s"buckets=$b")
         case None => ("bucket_spec", "fail",
           s"$c has NO bucket spec — probes will shuffle the index side")

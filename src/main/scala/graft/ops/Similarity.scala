@@ -784,7 +784,7 @@ object Similarity {
       val rows = out.collect().toSeq
       s.createDataFrame(s.sparkContext.parallelize(rows, 1), out.schema)
     } finally
-      org.apache.spark.sql.graftbridge.PlanBridge.releaseLocalCheckpoint(topk)
+      org.apache.spark.sql.graftbridge.ColumnBridge.releaseLocalCheckpoint(topk)
   }
 
   val queries: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = Seq(

@@ -4,25 +4,28 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Column ↔ Expression bridge. Spark 4's Column API is connect-agnostic
-  * and the classic accessors (ExpressionUtils) are private[sql], so this
-  * lives inside the org.apache.spark.sql namespace — the documented
-  * extension seam for engines that define custom Catalyst expressions.
+/** The engine's one bridge into Spark-private API. Spark 4's Column
+  * API is connect-agnostic and the classic accessors (ExpressionUtils,
+  * Dataset.ofRows, the session catalog, the cache manager) are
+  * private[sql], so this lives inside the org.apache.spark.sql
+  * namespace — the documented extension seam for engines that define
+  * custom Catalyst expressions.
   *
   * VERSION PIN (r20, closing the r19 verdict's private-API note): this
-  * file and [[PlanBridge]] compile against the `classic` shim that
-  * exists in Spark 4.0+ (`org.apache.spark.sql.classic.{SparkSession,
-  * Dataset, ExpressionUtils}` — SPARK-49700's sql/api split; the repo
-  * builds against the 4.1.x jars under /opt/spark/jars). The coupling
-  * is COMPILE-TIME, not reflective: any Spark upgrade that moves or
-  * re-privatizes these accessors fails `sbt compile` in this one file
-  * rather than misbehaving at runtime, and every entry point below is
-  * a thin one-liner with an obvious public-API fallback documented on
-  * it (ofRows → wrap via SparkSession.internalCreateDataFrame or a
+  * file compiles against the `classic` shim that exists in Spark 4.0+
+  * (`org.apache.spark.sql.classic.{SparkSession, Dataset,
+  * ExpressionUtils}` — SPARK-49700's sql/api split; the repo builds
+  * against the 4.1.x jars that build.sbt's `unmanagedBase` names).
+  * The coupling is COMPILE-TIME, not reflective: any Spark upgrade
+  * that moves or re-privatizes these accessors fails `sbt compile` in
+  * this one file rather than misbehaving at runtime, and every entry
+  * point below is a thin one-liner with an obvious public-API fallback
+  * documented on it (ofRows → wrap via SparkSession.internalCreateDataFrame or a
   * temp view; uncacheByPlan → Dataset.unpersist on a re-wrapped
-  * Dataset). Five query families ride ofRows (the AQE-off iterative
-  * fits), so treat a compile break here as "re-derive the bridge for
-  * the new minor", not "delete the optimization". */
+  * Dataset; numBuckets → `DESCRIBE TABLE EXTENDED`). Five query
+  * families ride ofRows (the AQE-off iterative fits), so treat a
+  * compile break here as "re-derive the bridge for the new minor",
+  * not "delete the optimization". */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -61,4 +64,29 @@ object ColumnBridge {
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     classic.sharedState.cacheManager.uncacheQuery(classic, plan, cascade = false)
   }
+
+  /** Frees the storage blocks behind a `localCheckpoint()`ed DataFrame.
+    * `Dataset.unpersist` only clears CacheManager entries; a local
+    * checkpoint lives as a persisted RDD under a LogicalRDD leaf, which
+    * only ContextCleaner GC would ever release. Iterative algorithms
+    * (label propagation, k-means) that checkpoint each round need to
+    * release round N-1 eagerly or blocks accumulate per iteration. */
+  def releaseLocalCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.analyzed.foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
+
+  /** Bucket count of a catalog table, if it is bucketed (bucketSpec
+    * lives on the private[sql] session catalog's table metadata);
+    * read by graft.ops.Bucketing.alignTo. */
+  def numBuckets(spark: org.apache.spark.sql.SparkSession, table: String): Option[Int] =
+    // Try, not throw: a temp-view-backed or missing name has no
+    // catalog metadata — the caller's own spark.table() read is the
+    // right place for that error to surface
+    scala.util.Try(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.catalog
+        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
+        .bucketSpec).toOption.flatten.map(_.numBuckets)
 }

@@ -367,7 +367,7 @@ class IncrementalSpansSpec extends AnyFunSuite {
   }
 
   test("index rebuilt between micro-batches with a DIFFERENT bucket count: probe re-aligns, stream continues") {
-    // PlanBridge.numBuckets is read per batch from live catalog
+    // ColumnBridge.numBuckets is read per batch from live catalog
     // metadata — a maintenance rebuild (e.g. re-bucketing for growth)
     // between batches must be picked up by the next probe, both for
     // correctness and for the exchange fusion (round-15 verdict sweep
@@ -398,7 +398,7 @@ class IncrementalSpansSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS spans_idx_rebkt")
     IncrementalSpans.buildIndex(
       seed.union(docsDf(100L -> doc1)), "spans_idx_rebkt", buckets = 8)
-    assert(org.apache.spark.sql.graftbridge.PlanBridge
+    assert(org.apache.spark.sql.graftbridge.ColumnBridge
       .numBuckets(spark, "spans_idx_rebkt").contains(8))
 
     // batch 2 repeats batch 1's run — found via the rebuilt 8-bucket

@@ -23,7 +23,7 @@ class SmokeSpec extends AnyFunSuite {
     // deployment settings (paths, CPU counts, output files) stay with
     // the top-level mains; an operator package reading the environment
     // fails here
-    val pkgs = Seq("ops", "streaming", "functions", "geo", "plans", "model")
+    val pkgs = Seq("ops", "streaming", "functions", "geo", "model")
       .map(p => java.nio.file.Paths.get("src/main/scala/graft", p))
     val missing = pkgs.filterNot(java.nio.file.Files.isDirectory(_))
     assert(missing.isEmpty, s"operator packages not found under " +
@@ -178,6 +178,28 @@ class SmokeSpec extends AnyFunSuite {
       }
     }
     assert(found.isEmpty, s"aggregate outside SketchAgg:\n${found.mkString("\n")}")
+  }
+
+  test("no custom Catalyst operator: no planner strategy, physical plan, optimizer rule or their injection") {
+    // a custom operator reaches Spark-private planner API and is an
+    // optimization barrier unless a second rule restores pushdown; the
+    // engine composes public DataFrame operators and injects only SQL
+    // functions (GraftExtensions)
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"src/main/scala not found under ${System.getProperty("user.dir")}")
+    val operator = """\b(extends|with)\s+(SparkStrategy\b|SparkPlan\b|\w*ExecNode\b|Rule\[LogicalPlan\])""".r
+    val seams = Seq("extraStrategies", "extraOptimizations", "injectPlannerStrategy", "injectOptimizerRule")
+    val walk = java.nio.file.Files.walk(root)
+    val sources = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+    val found = sources.flatMap { f =>
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if operator.findFirstIn(line).nonEmpty || seams.exists(line.contains) =>
+          s"$f:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(found.isEmpty, s"custom Catalyst operator or its injection:\n${found.mkString("\n")}")
   }
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
