@@ -1,347 +1,94 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{AsOf, NativeAsOf}
+import graft.ops.AsOf
 
+/** The as-of contracts of `AsOf.asOfJoin` on other inputs than
+  * AsOfSpec's: a String key with a TIMESTAMP ts, the tolerance
+  * boundary, and ties and atomicity over a two-column right payload.
+  * (The suite keeps the name it had when these contracts pinned a
+  * native as-of operator; the composed form is now the only one.) */
 class NativeAsOfSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   test("native as-of semantics: latest at-or-before, equal-ts inclusive, null when none") {
     import spark.implicits._
     val left = Seq(
-      (1L, 10L, "a"),   // right rows at 5 and 10 → matches 10 (equal-ts)
-      (1L, 7L, "b"),    // → matches 5
-      (1L, 3L, "c"),    // before any right row → null
-      (2L, 100L, "d"))  // key with no right rows at all → null
-      .toDF("k", "t", "tag")
+      ("u1", 10L, "a"),   // right rows at 5 and 10 → matches 10 (equal-ts)
+      ("u1", 7L, "b"),    // → matches 5
+      ("u1", 3L, "c"),    // before any right row → null
+      ("u2", 100L, "d"))  // key with no right rows at all → null
+      .toDF("k", "s", "tag")
+      .select(col("k"), timestamp_seconds(col("s")).as("t"), col("tag"))
     val right = Seq(
-      (1L, 5L, 1.0),
-      (1L, 10L, 2.0),
-      (1L, 12L, 3.0))   // after every left row → never matched
-      .toDF("k", "t", "v")
-    val got = NativeAsOf.asOfJoin(left, right, "k", "t")
+      ("u1", 5L, 1.0),
+      ("u1", 10L, 2.0),
+      ("u1", 12L, 3.0),   // after every left row → never matched
+      ("u3", 1L, 4.0))    // key absent on the left → never matched
+      .toDF("k", "s", "v")
+      .select(col("k"), timestamp_seconds(col("s")).as("t"), col("v"))
+    val got = AsOf.asOfJoin(left, right, "k", "t")
       .select("k", "t", "tag", "matched_t", "v")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2),
-        if (r.isNullAt(3)) -1L else r.getLong(3),
-        if (r.isNullAt(4)) -1.0 else r.getDouble(4))).toSet
-    assert(got == Set(
-      (1L, 10L, "a", 10L, 2.0),
-      (1L, 7L, "b", 5L, 1.0),
-      (1L, 3L, "c", -1L, -1.0),
-      (2L, 100L, "d", -1L, -1.0)))
-  }
-
-  test("the custom strategy actually plans AsOfJoinExec (no fallback, no product join)") {
-    import spark.implicits._
-    val left = Seq((1L, 10L)).toDF("k", "t")
-    val right = Seq((1L, 5L, 1.0)).toDF("k", "t", "v")
-    val plan = NativeAsOf.asOfJoin(left, right, "k", "t")
-      .queryExecution.executedPlan.toString
-    // SparkPlan.nodeName strips the Exec suffix in plan strings
-    assert(plan.contains("AsOfJoin"), s"expected the native operator in:\n$plan")
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"))
-  }
-
-  test("native ≡ composed on the full sf0.001 events as-of query") {
-    val native = NativeAsOf.q61AsofNative(spark, TestSpark.sf0001).collect().map(_.toString)
-    val composed = AsOf.q51AsofJoin(spark, TestSpark.sf0001).collect().map(_.toString)
-    assert(native.length == composed.length && native.length > 0)
-    native.zip(composed).foreach { case (a, b) => assert(a == b) }
+      .collect().map(r => (r.getString(0), r.getTimestamp(1).getTime / 1000, r.getString(2),
+        if (r.isNullAt(3)) -1L else r.getTimestamp(3).getTime / 1000,
+        if (r.isNullAt(4)) -1.0 else r.getDouble(4)))
+    assert(got.length == 4, "every left row appears once")
+    assert(got.toSet == Set(
+      ("u1", 10L, "a", 10L, 2.0),
+      ("u1", 7L, "b", 5L, 1.0),
+      ("u1", 3L, "c", -1L, -1.0),
+      ("u2", 100L, "d", -1L, -1.0)))
   }
 
   test("tolerance masks stale matches without dropping left rows") {
     import spark.implicits._
-    val left = Seq((1L, 100L), (1L, 12L)).toDF("k", "t")
+    val left = Seq((1L, 15L), (1L, 16L), (1L, 100L), (2L, 15L)).toDF("k", "t")
     val right = Seq((1L, 10L, 5.0)).toDF("k", "t", "v")
-    val got = NativeAsOf.asOfJoin(left, right, "k", "t", tolerance = Some(5L))
-      .collect().map(r => (r.getLong(1), r.isNullAt(2))).toMap
-    assert(got(12L) == false, "match within tolerance (12-10=2 <= 5) must survive")
-    assert(got(100L) == true, "stale match (100-10=90 > 5) must be masked, row kept")
+    val got = AsOf.asOfJoin(left, right, "k", "t", tolerance = Some(5L))
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.isNullAt(r.fieldIndex("v"))).toMap
+    assert(got.size == 4, s"no left row may be dropped, got $got")
+    assert(got((1L, 15L)) == false, "a gap equal to the tolerance (15-10=5) must match")
+    assert(got((1L, 16L)) == true, "a gap one past the tolerance (16-10=6) must mask")
+    assert(got((1L, 100L)) == true, "stale match (100-10=90 > 5) must be masked, row kept")
+    assert(got((2L, 15L)) == true, "a key with no right rows stays null-extended")
   }
 
   test("right-side (key, ts) ties resolve to the lexicographic-max payload, deterministically") {
     import spark.implicits._
     val left = Seq((1L, 10L)).toDF("k", "t")
-    val rightRows = Seq((1L, 5L, 2.0), (1L, 5L, 9.0), (1L, 5L, 7.0))
+    // four right rows at the SAME (key, ts): the winner is the max of
+    // (v, w) compared left to right — v=9.0 twice, so w decides ("c")
+    val rightRows = Seq((1L, 5L, 9.0, "a"), (1L, 5L, 9.0, "c"), (1L, 5L, 7.0, "z"),
+      (1L, 5L, 2.0, "zz"))
+    val schema = Seq((1L, 0L, 0.0, "")).toDF("k", "t", "v", "w").schema
     (1 to 4).foreach { nPart =>
       val right = spark.createDataFrame(
-        spark.sparkContext.parallelize(rightRows, nPart)
-          .map(r => org.apache.spark.sql.Row(r._1, r._2, r._3)),
-        Seq((1L, 0L, 0.0)).toDF("k", "t", "v").schema)
-      val r = NativeAsOf.asOfJoin(left, right, "k", "t").collect().head
-      assert(r.getAs[Double]("v") == 9.0,
-        s"tie must resolve to max payload at $nPart partitions (same contract as composed)")
+        spark.sparkContext.parallelize(rightRows, nPart).map(r => Row(r._1, r._2, r._3, r._4)),
+        schema)
+      val r = AsOf.asOfJoin(left, right, "k", "t").collect().head
+      assert((r.getAs[Double]("v"), r.getAs[String]("w")) == (9.0, "c"),
+        s"tie must resolve to the max payload at $nPart partitions, got $r")
     }
   }
 
   test("matched right row arrives atomically (null payload not smuggled from older rows)") {
     import spark.implicits._
-    val left = Seq((1L, 10L)).toDF("k", "t")
-    val right = Seq((1L, 5L, Option(7.0)), (1L, 9L, None)).toDF("k", "t", "v")
-    val r = NativeAsOf.asOfJoin(left, right, "k", "t").collect().head
-    assert(r.getAs[Long]("matched_t") == 9L)
-    assert(r.isNullAt(r.fieldIndex("v")))
-  }
-
-  test("broadcast probe ≡ sort-merge on semantics: ties, tolerance, null-payload atomicity") {
-    import spark.implicits._
-    val left = Seq((1L, 10L, "a"), (1L, 7L, "b"), (1L, 3L, "c"), (2L, 100L, "d"))
-      .toDF("k", "t", "tag")
+    val left = Seq((1L, 10L), (2L, 10L)).toDF("k", "t")
+    // the latest right row of each key has one NULL payload column; the
+    // match must report that row whole, its null included, not a value
+    // taken from the older row of the same key
     val right = Seq(
-      (1L, 5L, Option(1.0)), (1L, 5L, Option(9.0)),  // tie → max payload
-      (1L, 10L, None),                                // matched null payload arrives as null
-      (1L, 12L, Option(3.0))).toDF("k", "t", "v")
-    val a = NativeAsOf.asOfJoin(left, right, "k", "t", broadcast = Some(true))
-      .orderBy("k", "t").collect().map(_.toString)
-    val b = NativeAsOf.asOfJoin(left, right, "k", "t", broadcast = Some(false))
-      .orderBy("k", "t").collect().map(_.toString)
-    assert(a.length == 4)
-    a.zip(b).foreach { case (x, y) => assert(x == y) }
-
-    // tolerance masks stale matches on the broadcast path too
-    val tl = Seq((1L, 100L), (1L, 12L)).toDF("k", "t")
-    val tr = Seq((1L, 10L, 5.0)).toDF("k", "t", "v")
-    val got = NativeAsOf.asOfJoin(tl, tr, "k", "t",
-        tolerance = Some(5L), broadcast = Some(true))
-      .collect().map(r => (r.getLong(1), r.isNullAt(2))).toMap
-    assert(got(12L) == false && got(100L) == true)
-  }
-
-  test("broadcast plan: no shuffle, no sort — map-only over the left side") {
-    import spark.implicits._
-    val left = (0 until 100).map(i => ((i % 7).toLong, i.toLong, i * 2.0))
-      .toDF("k", "t", "lv").repartition(5)
-    val right = Seq((1L, 5L, 1.0), (2L, 3L, 2.0)).toDF("k", "t", "rv")
-    val df = NativeAsOf.asOfJoin(left, right, "k", "t", broadcast = Some(true))
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastAsOfJoin"), s"expected broadcast exec in:\n$plan")
-    assert(!plan.contains("Sort "), s"no sort should appear in:\n$plan")
-    // the only exchange is the right-side broadcast — the left (fact)
-    // side must not shuffle beyond its pre-existing repartition
-    assert(!plan.split("BroadcastExchange").head.contains("Exchange hashpartitioning"),
-      s"left side must not hash-exchange in:\n$plan")
-    assert(df.count() == 100)
-  }
-
-  test("broadcast ≡ sort-merge on the full sf0.001 events as-of query") {
-    val bc = NativeAsOf.q62AsofBroadcast(spark, TestSpark.sf0001).collect().map(_.toString)
-    val sm = NativeAsOf.q61AsofNative(spark, TestSpark.sf0001).collect().map(_.toString)
-    assert(bc.length == sm.length && bc.length > 0)
-    bc.zip(sm).foreach { case (a, b) => assert(a == b) }
-  }
-
-  test("auto mode picks broadcast for a dimension-sized right side (stats gate)") {
-    import spark.implicits._
-    val left = Seq((1L, 10L)).toDF("k", "t")
-    val right = Seq((1L, 5L, 1.0)).toDF("k", "t", "v")
-    val plan = NativeAsOf.asOfJoin(left, right, "k", "t")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastAsOfJoin"),
-      s"tiny right side should auto-broadcast in:\n$plan")
-  }
-
-  test("optimizer rule pushes left-only filters below the join, into the scan") {
-    import graft.plans.GraftAsOfJoin
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter}
-    val df = NativeAsOf.q61AsofNative(spark, TestSpark.sf0001)
-      .filter(col("value") > 50.0)
-    val opt = df.queryExecution.optimizedPlan
-    val j = opt.collectFirst { case n: GraftAsOfJoin => n }.get
-    assert(j.left.collectFirst {
-      case f: LFilter if f.condition.references.map(_.name).exists(_ == "value") => f
-    }.nonEmpty, s"left-side filter must sit below the join:\n$opt")
-    // nothing left to filter above the join
-    assert(opt.collectFirst {
-      case f: LFilter if f.child.isInstanceOf[GraftAsOfJoin] => f
-    }.isEmpty, s"filter must not remain above the join:\n$opt")
-  }
-
-  test("optimizer rule prunes unused left columns (right payload kept for tie contract)") {
-    import graft.plans.GraftAsOfJoin
-    val df = NativeAsOf.q61AsofNative(spark, TestSpark.sf0001)
-      .select("event_id", "user_id")
-    val opt = df.queryExecution.optimizedPlan
-    val j = opt.collectFirst { case n: GraftAsOfJoin => n }.get
-    val leftCols = j.left.output.map(_.name).toSet
-    assert(!leftCols.contains("value"),
-      s"unused left payload must be pruned, got $leftCols in:\n$opt")
-    assert(leftCols == Set("user_id", "ts_us", "event_id"))
-  }
-
-  test("TimestampType ts with tolerance (µs): native, broadcast, and composed agree") {
-    import spark.implicits._
-    val left = Seq((1L, 100_000_000L), (1L, 12_000_000L)).toDF("k", "us")
-      .select(col("k"), timestamp_micros(col("us")).as("t"))
-    val right = Seq((1L, 10_000_000L, 5.0)).toDF("k", "us", "v")
-      .select(col("k"), timestamp_micros(col("us")).as("t"), col("v"))
-    // tolerance 5s = 5e6 µs: the 12s probe matches (2s stale), the
-    // 100s probe is masked (90s stale) but the row survives
-    def check(df: org.apache.spark.sql.DataFrame, label: String): Unit = {
-      val got = df.collect()
-        .map(r => (r.getTimestamp(1).getTime, r.isNullAt(r.fieldIndex("v")))).toMap
-      assert(got(12_000L) == false, s"$label: in-tolerance match must survive")
-      assert(got(100_000L) == true, s"$label: stale match must mask, row kept")
-    }
-    check(NativeAsOf.asOfJoin(left, right, "k", "t",
-      tolerance = Some(5_000_000L), broadcast = Some(false)), "sort-merge")
-    check(NativeAsOf.asOfJoin(left, right, "k", "t",
-      tolerance = Some(5_000_000L), broadcast = Some(true)), "broadcast")
-    check(AsOf.asOfJoin(left, right, "k", "t",
-      tolerance = Some(5_000_000L)), "composed")
-  }
-
-  test("TimestampNTZType ts with tolerance (µs): both native forms accept and mask") {
-    import spark.implicits._
-    // NTZ shares TimestampType's physical long-micros representation,
-    // so the exec's tolerance subtraction is identical; this pins the
-    // API gate actually admitting it (doc/check consistency)
-    val left = Seq((1L, 100_000_000L), (1L, 12_000_000L)).toDF("k", "us")
-      .select(col("k"), col("us"),
-        timestamp_micros(col("us")).cast("timestamp_ntz").as("t"))
-    val right = Seq((1L, 10_000_000L, 5.0)).toDF("k", "rus", "v")
-      .select(col("k"),
-        timestamp_micros(col("rus")).cast("timestamp_ntz").as("t"), col("v"))
-    def check(df: org.apache.spark.sql.DataFrame, label: String): Unit = {
-      val got = df.collect()
-        .map(r => (r.getLong(r.fieldIndex("us")), r.isNullAt(r.fieldIndex("v")))).toMap
-      assert(got(12_000_000L) == false, s"$label: in-tolerance match must survive")
-      assert(got(100_000_000L) == true, s"$label: stale match must mask, row kept")
-    }
-    check(NativeAsOf.asOfJoin(left, right, "k", "t",
-      tolerance = Some(5_000_000L), broadcast = Some(false)), "sort-merge")
-    check(NativeAsOf.asOfJoin(left, right, "k", "t",
-      tolerance = Some(5_000_000L), broadcast = Some(true)), "broadcast")
-  }
-
-  test("NULL keys never match on any form: left null-extended, right excluded") {
-    import spark.implicits._
-    val left = Seq((Option(1L), 10L, "a"), (Option.empty[Long], 10L, "b"))
-      .toDF("k", "t", "tag")
-    val right = Seq((Option(1L), 5L, 1.0), (Option.empty[Long], 5L, 99.0))
-      .toDF("k", "t", "v")
-    def check(df: org.apache.spark.sql.DataFrame, label: String): Unit = {
-      val got = df.collect()
-        .map(r => r.getString(2) ->
-          (if (r.isNullAt(r.fieldIndex("v"))) None else Some(r.getDouble(r.fieldIndex("v")))))
-        .toMap
-      assert(got("a") == Some(1.0), s"$label: non-null key must match normally")
-      assert(got("b") == None, s"$label: null-key left row must come back null-extended")
-    }
-    check(NativeAsOf.asOfJoin(left, right, "k", "t", broadcast = Some(false)), "sort-merge")
-    check(NativeAsOf.asOfJoin(left, right, "k", "t", broadcast = Some(true)), "broadcast")
-    check(AsOf.asOfJoin(left, right, "k", "t"), "composed")
-  }
-
-  test("NULL timestamps never match on any form: null-ts right rows excluded, null-ts left rows null-extended") {
-    import spark.implicits._
-    // SQL ASOF: NULL ≤ x and x ≤ NULL are both unknown. Pre-fix the
-    // native execs matched the null-ts right row (it sorts FIRST, so
-    // tsOrd.compare ≤ held for every probe and the zeroed null slot
-    // even survived tolerance masking), and the composed window form
-    // picked it as last(_r) whenever no real right row preceded.
-    val left = Seq((1L, Option(4L), "a"),   // only the null-ts right row "precedes" → must be null
-                   (1L, Option(6L), "b"),   // real match at 5
-                   (1L, Option.empty[Long], "c")) // null-ts left → null-extended
-      .toDF("k", "t", "tag")
-    val right = Seq((1L, Option.empty[Long], 99.0), (1L, Option(5L), 1.0))
-      .toDF("k", "t", "v")
-    def check(df: org.apache.spark.sql.DataFrame, label: String): Unit = {
-      val got = df.collect()
-        .map(r => r.getString(r.fieldIndex("tag")) ->
-          (if (r.isNullAt(r.fieldIndex("v"))) None else Some(r.getDouble(r.fieldIndex("v")))))
-        .toMap
-      assert(got("a") == None, s"$label: a null-ts right row must never match")
-      assert(got("b") == Some(1.0), s"$label: the real row still matches")
-      assert(got("c") == None, s"$label: a null-ts left row is null-extended")
-    }
-    check(NativeAsOf.asOfJoin(left, right, "k", "t", broadcast = Some(false)), "sort-merge")
-    check(NativeAsOf.asOfJoin(left, right, "k", "t", broadcast = Some(true)), "broadcast")
-    check(AsOf.asOfJoin(left, right, "k", "t"), "composed")
-    // and with a tolerance, the zeroed null slot must not slip through
-    check(NativeAsOf.asOfJoin(left, right, "k", "t", tolerance = Some(100L),
-      broadcast = Some(false)), "sort-merge+tol")
-    check(NativeAsOf.asOfJoin(left, right, "k", "t", tolerance = Some(100L),
-      broadcast = Some(true)), "broadcast+tol")
-  }
-
-  test("mismatched key/ts types fail at construction, not with garbage comparisons") {
-    import spark.implicits._
-    val left = Seq((1L, 10L, "a")).toDF("k", "t", "tag")
-    val right = Seq((1, 5, 1.0)).toDF("k", "t", "v") // INT key + ts
-    val e = intercept[IllegalArgumentException] {
-      NativeAsOf.asOfJoin(left, right, "k", "t").collect()
-    }
-    assert(e.getMessage.contains("types differ"))
-  }
-
-  test("rightUnique prunes unreferenced right columns; results unchanged on unique input") {
-    import graft.plans.GraftAsOfJoin
-    import spark.implicits._
-    val left = Seq((1L, 10L, "a"), (2L, 7L, "b")).toDF("k", "t", "tag")
-    val right = Seq((1L, 5L, 1.0, "x1"), (1L, 9L, 2.0, "x2"), (2L, 3L, 3.0, "x3"))
+      (1L, 5L, Option(7.0), Option("old")), (1L, 9L, None, Option("new")),
+      (2L, 5L, Option(1.0), Option("old")), (2L, 9L, Option(2.0), None))
       .toDF("k", "t", "v", "w")
-    val q = NativeAsOf.asOfJoin(left, right, "k", "t", rightUnique = true)
-      .select("tag", "v") // w unreferenced → prunable under uniqueness
-    val j = q.queryExecution.optimizedPlan
-      .collectFirst { case n: GraftAsOfJoin => n }.get
-    val rightCols = j.right.output.map(_.name).toSet
-    assert(!rightCols.contains("w"),
-      s"unreferenced right payload must prune under rightUnique, got $rightCols")
-    assert(rightCols.contains("_graft_rk") && rightCols.contains("matched_t"))
-    // without the assertion the tie contract keeps every right column
-    val jDefault = NativeAsOf.asOfJoin(left, right, "k", "t").select("tag", "v")
-      .queryExecution.optimizedPlan
-      .collectFirst { case n: GraftAsOfJoin => n }.get
-    assert(jDefault.right.output.map(_.name).toSet.contains("w"),
-      "generic Catalyst pruning must not narrow the right side sans uniqueness")
-    // and the reason it must not: with ties, pruning the EARLIER payload
-    // column flips the observable winner of a LATER one. (v=9,w=a) wins
-    // the (v,w)-lexicographic tie; a w-only right side would pick w=z.
-    val tiedRight = Seq((1L, 5L, 9.0, "a"), (1L, 5L, 1.0, "z")).toDF("k", "t", "v", "w")
-    val wOnly = NativeAsOf.asOfJoin(Seq((1L, 10L)).toDF("k", "t"), tiedRight, "k", "t")
-      .select("w").collect().head.getString(0)
-    assert(wOnly == "a", s"tie must resolve over the FULL payload, got w=$wOnly")
-    // and on genuinely unique right input the results are identical
-    val a = NativeAsOf.asOfJoin(left, right, "k", "t", rightUnique = true)
-      .orderBy("k", "t").collect().map(_.toString)
-    val b = NativeAsOf.asOfJoin(left, right, "k", "t")
-      .orderBy("k", "t").collect().map(_.toString)
-    a.zip(b).foreach { case (x, y) => assert(x == y) }
-    assert(a.length == 2)
-  }
-
-  test("broadcast probe builds its per-key index once per executor, not once per task") {
-    import graft.plans.BroadcastAsOfJoinExec
-    import spark.implicits._
-    val left = (0 until 1000).map(i => ((i % 13).toLong, i.toLong, i * 1.5))
-      .toDF("k", "t", "lv").repartition(16) // 16 tasks share one JVM = one "executor"
-    val right = (0 until 50).map(i => ((i % 13).toLong, (i * 3).toLong, i * 2.0))
-      .toDF("k", "t", "rv").groupBy("k", "t").agg(max("rv").as("rv"))
-    val before = BroadcastAsOfJoinExec.indexBuilds.get()
-    val n = NativeAsOf.asOfJoin(left, right, "k", "t", broadcast = Some(true)).count()
-    assert(n == 1000)
-    val builds = BroadcastAsOfJoinExec.indexBuilds.get() - before
-    assert(builds == 1L,
-      s"16 tasks over one broadcast must share ONE index build, got $builds")
-  }
-
-  test("many keys, many partitions: native ≡ composed under shuffling (property sweep)") {
-    import spark.implicits._
-    // deterministic synthetic data: 40 keys, interleaved event times
-    val left = (0 until 400).map { i => ((i % 40).toLong, (i * 7 % 97).toLong, i.toLong) }
-      .toDF("k", "t", "lid")
-    val right = (0 until 300).map { i => ((i % 40).toLong, (i * 11 % 89).toLong, i / 2.0) }
-      .toDF("k", "t", "rv")
-    // composed form requires unique right (key, ts) for determinism —
-    // native resolves ties to max payload; pre-aggregate so both agree
-    val rightU = right.groupBy("k", "t").agg(max("rv").as("rv"))
-    val a = NativeAsOf.asOfJoin(left, rightU, "k", "t")
-      .orderBy("k", "t", "lid").collect().map(_.toString)
-    val b = AsOf.asOfJoin(left, rightU, "k", "t")
-      .orderBy("k", "t", "lid").collect().map(_.toString)
-    assert(a.length == b.length && a.length == 400)
-    a.zip(b).foreach { case (x, y) => assert(x == y) }
+    val got = AsOf.asOfJoin(left, right, "k", "t").collect()
+      .map(r => r.getLong(0) -> (r.getAs[Long]("matched_t"),
+        Option(r.getAs[java.lang.Double]("v")).map(_.doubleValue), Option(r.getAs[String]("w"))))
+      .toMap
+    assert(got(1L) == (9L, None, Some("new")))
+    assert(got(2L) == (9L, Some(2.0), None))
   }
 }
